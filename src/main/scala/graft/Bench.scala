@@ -90,7 +90,7 @@ object Bench {
     // 0-second "total" artifact indistinguishable from a real run
     require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.defaultCores
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     // 7 s (round 17, was 5): with scratch on tmpfs and the co-purchase
     // stores prepared, the quiet-host cold passes of the graph family,
@@ -179,17 +179,9 @@ object Bench {
       }
       Runtime.getRuntime.addShutdownHook(new Thread(() => rm(dir)))
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        scratchRoot.map(_ + "/spark-local")
-          .getOrElse(sys.props.getOrElse("java.io.tmpdir", "/tmp")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus, Map("spark.local.dir" ->
+      scratchRoot.map(_ + "/spark-local")
+        .getOrElse(sys.props.getOrElse("java.io.tmpdir", "/tmp"))))
     // absorb JVM/codegen/scan warmup outside the timed region
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
@@ -221,7 +213,7 @@ object Bench {
     def sentinel(): Double = median((1 to 3).map { _ =>
       val t0 = System.nanoTime()
       // bit_xor, not sum: a 100M-term long sum overflows under ANSI mode
-      spark.range(0, 100000000L, 1, cpus.toInt)
+      spark.range(0, 100000000L, 1, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS h").collect()
       (System.nanoTime() - t0) / 1e9
     })

@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
 /** Run INDEPENDENT Spark actions from a small driver-side pool
   * (optimization guide §2.6: actions are only sequential because the
   * driver calls them sequentially — Spark's scheduler happily runs
@@ -16,31 +20,44 @@ package graft.etl
   *
   * A few jobs in flight is plenty (enough to hide each job's
   * driver-side commit/plan tail, not so many that tiny local jobs fight
-  * for task slots); failures propagate — the first thrown action fails
-  * the whole batch, matching the sequential contract. */
+  * for task slots). Results come back in input order. Every action runs
+  * to completion before awaitAll returns or throws; if any failed, the
+  * first failure (in input order) is rethrown with every later one
+  * attached via `addSuppressed`, so no error is silently dropped. */
 object Concurrent {
-  def awaitAll(parallelism: Int)(actions: Seq[() => Unit]): Unit = {
+
+  /** How long cleanup waits for in-flight actions after an interrupt. */
+  private val drainSeconds = 60L
+
+  def awaitAll[T](parallelism: Int)(actions: Seq[() => T]): Seq[T] = {
     require(parallelism >= 1, "parallelism must be >= 1")
-    if (actions.size <= 1 || parallelism == 1) actions.foreach(_.apply())
+    if (actions.size <= 1 || parallelism == 1) actions.map(_.apply())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, actions.size))
+      val pool = Executors.newFixedThreadPool(math.min(parallelism, actions.size))
       try {
-        import scala.jdk.CollectionConverters._
-        val tasks = actions.map { a =>
-          new java.util.concurrent.Callable[Unit] { def call(): Unit = a() }
+        val tasks = actions.map(a => new Callable[T] { def call(): T = a() })
+        // invokeAll waits for every task, so each outcome below is final
+        val outcomes = pool.invokeAll(tasks.asJava).asScala.toSeq.map { f =>
+          try Right(f.get())
+          catch { case e: ExecutionException => Left(cause(e)) }
         }
-        // invokeAll waits for every task; surface the FIRST failure (get
-        // rethrows the wrapped cause) so error behavior matches the
-        // sequential form
-        pool.invokeAll(tasks.asJava).asScala.foreach { f =>
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
+        val failures = outcomes.collect { case Left(t) => t }
+        failures.headOption.foreach { first =>
+          failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
         }
-      } finally { pool.shutdown(); () }
+        outcomes.collect { case Right(v) => v }
+      } finally {
+        // on the interrupt path invokeAll returns with actions still in
+        // flight: cancel them and wait, so no action outlives awaitAll
+        pool.shutdownNow()
+        pool.awaitTermination(drainSeconds, TimeUnit.SECONDS)
+        ()
+      }
     }
   }
+
+  /** The action's own exception, or the wrapper when it carries none. */
+  private[graft] def cause(e: ExecutionException): Throwable =
+    Option(e.getCause).getOrElse(e)
 }

@@ -15,10 +15,10 @@ import org.apache.spark.sql.types._
   * single codegen'd passes. `train` is untouched — its op sequence and
   * rounding pipeline are pinned (round-19 verdict: hash-fragile).
   *
-  * Value identity is load-bearing and verified three ways (CheckPq over
-  * the whole corpus, PqNativeSpec in `sbt test`, the DuckDB oracle over
-  * every PQ key): fold order, strict-< tie-breaking, and the 6-dp
-  * HALF_UP round are replicated exactly. */
+  * Value identity is load-bearing and verified two ways (PqNativeSpec
+  * in `sbt test`, the DuckDB oracle over every PQ key): fold order,
+  * strict-< tie-breaking, and the 6-dp HALF_UP round are replicated
+  * exactly. */
 object PqUtil {
 
   /** `round(x, 6)` exactly as Spark's `Round` evaluates doubles:

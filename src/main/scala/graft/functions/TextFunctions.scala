@@ -111,18 +111,6 @@ object TextFunctions {
       .otherwise(graft.expressions.HashExpressions.lshBandKeysNative(sig, k, rowsPerBand))
   }
 
-  /** The composed catalyst form [[lshBands]] replaced — kept (test scope
-    * reachable) as the equivalence baseline LshBandKeysSpec compares the
-    * native expression against. */
-  private[graft] def lshBandsComposed(sig: Column, k: Int, rowsPerBand: Int): Column = {
-    require(k % rowsPerBand == 0,
-      s"rowsPerBand=$rowsPerBand must divide k=$k (trailing minhashes would be dropped)")
-    array((0 until k / rowsPerBand).map { b =>
-      md5(concat_ws("#",
-        (0 until rowsPerBand).map(r => element_at(sig, b * rowsPerBand + r + 1).cast("string")): _*))
-    }: _*)
-  }
-
   /** Jaccard similarity of two (distinct-element) arrays — exact in both
     * engines: integer sizes, one IEEE division. */
   def jaccard(a: Column, b: Column): Column =

@@ -635,7 +635,7 @@ object Dedup {
       // both gram arrays are sorted distinct strings (containmentGramFrame),
       // so |A∩B| is a linear native merge — value-identical to
       // size(array_intersect(...)) without the per-pair hash-set build
-      // (CheckNativeGrams pins the count equality over corpus pairs)
+      // (NativeGramsSpec pins the count equality over edge-row pairs)
       .select(col("block"), col("id_p"), col("id_x"),
         (graft.expressions.HashExpressions
           .sortedStringIntersectCount(col("g_p"), col("g_x")).cast("double") /
@@ -655,7 +655,7 @@ object Dedup {
     * for instrumentation. Built by the fused native expression
     * (round 20): `sortedDistinctNgramsNative` is value-identical to
     * `array_sort(array_distinct(wordNgrams(text, n)))` (NativeGramsSpec
-    * pins it at n=2,3; CheckNativeGrams sweeps the corpus) in one pass
+    * pins it at n=2,3 over edge rows) in one pass
     * over the text bytes instead of the interpreted 3-op HOF chain. */
   def containmentGramFrame(df: DataFrame, textCol: String, idCol: String,
                            blockCol: String, n: Int = 3): DataFrame =

@@ -128,7 +128,7 @@ object ProductQuant {
     * functions, m·k struct allocations per row) are fused into the ONE
     * native [[graft.expressions.PqEncodeCodes]] loop — same entry order,
     * same round-6 scores, same strict-< lowest-cid tie rule, so the codes
-    * are value-identical (PqNativeSpec + CheckPq + the oracle prove it;
+    * are value-identical (PqNativeSpec + the oracle prove it;
     * `train` keeps the catalyst [[argminCode]] untouched — its plan is
     * pinned). A null vector still fails loudly, as the `-1` sentinel
     * raise did. */

@@ -1012,7 +1012,9 @@ object RelationalQueries {
       }
       // the two bucketed sides are independent managed tables — overlap
       // their build jobs (guide §2.6; graft.etl.Concurrent): the big
-      // lineitem write's tasks back-fill the orders write's commit tail
+      // lineitem write's tasks back-fill the orders write's commit tail.
+      // Overlapping two DDL+writes in one session is only safe under the
+      // in-memory catalog; a Hive/Derby metastore must run them in turn.
       graft.etl.Concurrent.awaitAll(2)(Seq(
         () => graft.sinks.BucketedSink.writeBucketed(
           t(s, d, "orders").select(col("o_orderkey"), col("o_orderpriority")),

@@ -436,20 +436,18 @@ object SimQueries {
       // eager multi-job stages; overlap them (guide §2.6;
       // graft.etl.Concurrent) — each side's own op sequence, and so its
       // hash, is untouched
-      var drops: org.apache.spark.sql.DataFrame = null
-      var cb: org.apache.spark.sql.DataFrame = null
-      graft.etl.Concurrent.awaitAll(2)(Seq(
+      val Seq(drops, cb) = graft.etl.Concurrent.awaitAll(2)(Seq(
         () => {
           val pairs = graft.operators.RandomProjection
             .rpLshPairs(corpus, "v", "vec_id", dims = 64, threshold = 0.9)
             .select("id_a", "id_b")
           // min-id representative per cluster: every clustered
           // non-minimum drops
-          drops = graft.operators.Components.run(pairs, "id_a", "id_b")
+          graft.operators.Components.run(pairs, "id_a", "id_b")
             .labels.filter(col("id") =!= col("comp"))
             .select(col("id").as("vec_id"))
         },
-        () => cb = graft.operators.ProductQuant.train(
+        () => graft.operators.ProductQuant.train(
           corpus, "v", "vec_id", m = 4, k = 8, dims = 64, iters = 2)))
       val survivors = corpus.join(drops, Seq("vec_id"), "left_anti")
       val codeSum = graft.operators.ProductQuant

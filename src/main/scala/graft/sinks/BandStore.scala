@@ -364,9 +364,8 @@ object BandStore {
           // fence — overlap route + rewrite per table (guide §2.6);
           // results keep the fixed bands-then-docs order
           val branches = Seq("bands" -> bandsDir(path), "docs" -> docsDir(path))
-          val branchOut = new Array[Seq[(String, Long)]](branches.size)
-          graft.etl.Concurrent.awaitAll(2)(branches.zipWithIndex.map {
-            case ((table, dir), bi) => () => {
+          val rewritten = graft.etl.Concurrent.awaitAll(2)(branches.map {
+            case (table, dir) => () => {
               val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
               val targets: Seq[Long] =
                 if (table == "docs") {
@@ -385,10 +384,9 @@ object BandStore {
                   targets.map(b => s"$Prefix$b"),
                   spark.read.parquet(dir).filter(col("bucket").isin(targets: _*))
                     .join(tsb, Seq(idCol), "left_anti"))
-              branchOut(bi) = targets.map(table -> _)
+              targets.map(table -> _)
             }
-          })
-          val rewritten = branchOut.toSeq.flatten
+          }).flatten
           // the sidecar drops last: every earlier crash leaves a masked,
           // consistent store; reaching here means the rows are gone
           rootFs.delete(new Path(tombstoneDir(path)), true)
@@ -633,9 +631,8 @@ object BandStore {
       // independent dirs under the one held fence — overlap the two
       // table compactions (guide §2.6); fixed bands-then-docs order out
       val branches = Seq("bands" -> bandsDir(path), "docs" -> docsDir(path))
-      val branchOut = new Array[Seq[(String, Long)]](branches.size)
-      graft.etl.Concurrent.awaitAll(2)(branches.zipWithIndex.map {
-        case ((table, dir), bi) => () => {
+      graft.etl.Concurrent.awaitAll(2)(branches.map {
+        case (table, dir) => () => {
           val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
           PartitionSwap.recoverSwap(fs, dir, Prefix, Tags)
           val targets = PartitionSwap.fragmented(fs, dir, Prefix, maxFiles)
@@ -649,10 +646,9 @@ object BandStore {
               // never fooled — it is duplicate-blind by construction)
               spark.read.parquet(dir).filter(col("bucket").isin(targets: _*))
                 .distinct())
-          branchOut(bi) = targets.map(table -> _)
+          targets.map(table -> _)
         }
-      })
-      branchOut.toSeq.flatten
+      }).flatten
     }
   }
 

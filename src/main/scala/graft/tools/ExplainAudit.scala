@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: for every SparkEntry query, count exchanges (shuffles),
   * broadcast joins, and scan-level pushdown/pruning, so plan regressions
   * are visible as data — and a GATE, not just a report: any
@@ -17,13 +15,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val cartesianKeys = scala.collection.mutable.ListBuffer[String]()
     val errorKeys = scala.collection.mutable.ListBuffer[String]()
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of named SparkEntry queries to files —
   * the evidence trail behind plans/r19/<key>_{before,after}.txt: the
   * optimization rounds' plan-diff claims ("2 Exchange → 1",
@@ -20,14 +18,7 @@ object ExplainDump {
     val keys = args.drop(3).toSeq
     val unknown = keys.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, dir)

@@ -9,14 +9,8 @@ import org.apache.spark.sql.functions._
 object ExtSmoke {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions") // deployment path
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(confs = Map(
+      "spark.sql.extensions" -> "graft.GraftExtensions")) // deployment path
     import spark.implicits._
 
     // SQL surface via extensions (no register() call in this session)

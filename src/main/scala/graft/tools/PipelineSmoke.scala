@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.etl.ReferencePipeline
 import graft.etl.ReferencePipeline.Config
@@ -12,12 +11,7 @@ import graft.operators.Similarity
 object PipelineSmoke {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val tmp = java.nio.file.Files.createTempDirectory("pipesmoke").toString
 
     // listings-shaped wide table from customer⋈nation, through a real CSV

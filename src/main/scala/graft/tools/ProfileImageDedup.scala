@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-by-stage wall-clock breakdown of `mm_image_dedup` — the bench's
@@ -10,14 +9,7 @@ import org.apache.spark.sql.functions._
   * `sbt "runMain graft.tools.ProfileImageDedup [sfDir]"`. */
 object ProfileImageDedup {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     def timed[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

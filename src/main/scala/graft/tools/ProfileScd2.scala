@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Incremental-SCD2 scale evidence: time `Scd2.mergeHistory` of a small
@@ -13,11 +12,7 @@ import org.apache.spark.sql.functions._
 object ProfileScd2 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime(); val n = f
       println(f"[prof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Where dedup_simhash_pairs' time goes (guide §1): the wide-simhash
@@ -9,11 +9,7 @@ import org.apache.spark.sql.functions._
 object ProfileSimhash {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text")).localCheckpoint()
     def noop(df: DataFrame): Unit =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.expressions.HashExpressions
@@ -18,11 +18,7 @@ import graft.functions.TextFunctions
 object ProfileSketch {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val par = spark.sparkContext.defaultParallelism
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .filter(col("doc_id") % 3 =!= 0).repartition(par)

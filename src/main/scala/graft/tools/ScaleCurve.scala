@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -26,36 +26,35 @@ import graft.operators.Dedup
   * alpha -> 2 means the candidate generator degenerated to all-pairs).
   */
 object ScaleCurve {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val par = spark.sparkContext.defaultParallelism
+  private val alphabet = "abcdefghijklmnopqrstuvwxyz"
 
-    val alphabet = "abcdefghijklmnopqrstuvwxyz"
-    def blowUp(docs: DataFrame, factor: Int): DataFrame = {
-      // shift = k % 26 means copies k and k+26 would share a Caesar map and
-      // reintroduce the quadratic cross-copy dup mass this tool exists to
-      // avoid — refuse factors the 26-cycle can't keep disjoint
-      require(factor <= 26, s"blowUp: factor $factor > 26 would reuse Caesar maps")
-      (0 until factor).map { k =>
-        val shift = k % 26
-        docs.select((col("doc_id") * factor + k).as("doc_id"),
-          translate(col("text"), alphabet,
-            alphabet.drop(shift) + alphabet.take(shift)).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _)
-    }
+  /** `factor` Caesar-shifted copies of `docs` (copy k rotates the
+    * lowercase letters by k, ids become `doc_id * factor + k`): the
+    * copies share no n-grams, so the corpus grows without adding
+    * cross-copy duplicates. Output is `doc_id`, `text`, then `kept`. */
+  def blowUp(docs: DataFrame, factor: Int, kept: String*): DataFrame = {
+    // copies k and k+26 would share a Caesar map and reintroduce the
+    // quadratic cross-copy dup mass the blow-up exists to avoid —
+    // refuse factors the 26-cycle can't keep disjoint
+    require(factor <= 26, s"blowUp: factor $factor > 26 would reuse Caesar maps")
+    (0 until factor).map { k =>
+      docs.select(Seq((col("doc_id") * factor + k).as("doc_id"),
+        translate(col("text"), alphabet,
+          alphabet.drop(k) + alphabet.take(k)).as("text")) ++ kept.map(col): _*)
+    }.reduce(_ unionByName _)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = graft.Session.local()
+    val par = spark.sparkContext.defaultParallelism
 
     val base01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val base1 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val datasets: Seq[(String, DataFrame)] = Seq(
       "sf0.01" -> base01,
       "sf0.1" -> base1,
-      "sf0.1x4" -> blowUp(base1, 4),
-      "sf0.1x10" -> blowUp(base1, 10))
+      "sf0.1x4" -> blowUp(base1, 4, "lang", "source", "n_chars"),
+      "sf0.1x10" -> blowUp(base1, 10, "lang", "source", "n_chars"))
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)

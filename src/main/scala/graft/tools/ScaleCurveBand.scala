@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.sinks.BandStore
@@ -23,23 +23,8 @@ import graft.sinks.BandStore
   */
 object ScaleCurveBand {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val par = spark.sparkContext.defaultParallelism
-
-    val alphabet = "abcdefghijklmnopqrstuvwxyz"
-    def blowUp(docs: DataFrame, factor: Int): DataFrame = {
-      require(factor <= 26, s"blowUp: factor $factor > 26 would reuse Caesar maps")
-      (0 until factor).map { k =>
-        val shift = k % 26
-        docs.select((col("doc_id") * factor + k).as("doc_id"),
-          translate(col("text"), alphabet,
-            alphabet.drop(shift) + alphabet.take(shift)).as("text"))
-      }.reduce(_ unionByName _)
-    }
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     // fixed batch: shift-0 Caesar copies of it exist in every history
@@ -61,7 +46,7 @@ object ScaleCurveBand {
     var probePts = Vector[(Long, Double)]()
     var resketchPts = Vector[(Long, Double)]()
     Seq(1, 4, 10).foreach { f =>
-      val hist = blowUp(histBase, f).repartition(par).localCheckpoint()
+      val hist = ScaleCurve.blowUp(histBase, f).repartition(par).localCheckpoint()
       val nH = hist.count()
       val path = s"$root/index_x$f"
       // ingest = write + compact: a 32-task write leaves up to 32 files

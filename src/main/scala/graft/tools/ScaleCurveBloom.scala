@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Bloom
 
@@ -20,23 +20,9 @@ import graft.operators.Bloom
   */
 object ScaleCurveBloom {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import graft.functions.TextFunctions.{hash31, wordNgrams}
 
-    val alphabet = "abcdefghijklmnopqrstuvwxyz"
-    def blowUp(docs: DataFrame, factor: Int): DataFrame = {
-      require(factor <= 26, s"blowUp: factor $factor > 26 would reuse Caesar maps")
-      (0 until factor).map { k =>
-        val shift = k % 26
-        docs.select((col("doc_id") * factor + k).as("doc_id"),
-          translate(col("text"), alphabet,
-            alphabet.drop(shift) + alphabet.take(shift)).as("text"))
-      }.reduce(_ unionByName _)
-    }
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
@@ -48,8 +34,8 @@ object ScaleCurveBloom {
     val sets = Seq(
       "sf0.01" -> base01.localCheckpoint(),
       "sf0.1" -> base1.localCheckpoint(),
-      "sf0.1x4" -> blowUp(base1, 4).localCheckpoint(),
-      "sf0.1x10" -> blowUp(base1, 10).localCheckpoint())
+      "sf0.1x4" -> ScaleCurve.blowUp(base1, 4).localCheckpoint(),
+      "sf0.1x10" -> ScaleCurve.blowUp(base1, 10).localCheckpoint())
 
     def grams(df: DataFrame) = df.select(col("doc_id"),
       explode(array_distinct(transform(wordNgrams(col("text"), 3), hash31(_)))).as("gh"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** BPE artifact cost curve (round-14 verdict item): per-row scoring cost
@@ -39,12 +38,7 @@ object ScaleCurveBpe {
     // per-query submit cost, and at sf0.01's 500 docs it doesn't
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     // the 1024-merge artifact's prefixes: slicing keeps rank order valid
     // (a BPE table's first k merges ARE the k-merge table of the same
     // trainer run)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, ProductQuant}
 
@@ -30,11 +30,7 @@ import graft.operators.{Dedup, ProductQuant}
   */
 object ScaleCurveHam {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val par = spark.sparkContext.defaultParallelism
     val m = graft.multimodal.Multimodal
 

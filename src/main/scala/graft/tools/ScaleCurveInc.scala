@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -27,24 +27,8 @@ import graft.operators.Dedup
   */
 object ScaleCurveInc {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val par = spark.sparkContext.defaultParallelism
-
-    val alphabet = "abcdefghijklmnopqrstuvwxyz"
-    def blowUp(docs: DataFrame, factor: Int): DataFrame = {
-      require(factor <= 26, s"blowUp: factor $factor > 26 would reuse Caesar maps")
-      (0 until factor).map { k =>
-        val shift = k % 26
-        docs.select((col("doc_id") * factor + k).as("doc_id"),
-          translate(col("text"), alphabet,
-            alphabet.drop(shift) + alphabet.take(shift)).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _)
-    }
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val batchBase = base.filter(col("doc_id") % 10 === 0)
@@ -57,8 +41,8 @@ object ScaleCurveInc {
     val sb = new StringBuilder
     var pts = Vector[(Long, Long)]()
     Seq(1, 4, 10).foreach { f =>
-      val hist = blowUp(histBase, f).localCheckpoint()
-      val batch = blowUp(batchBase, f).localCheckpoint()
+      val hist = ScaleCurve.blowUp(histBase, f, "lang", "source", "n_chars").localCheckpoint()
+      val batch = ScaleCurve.blowUp(batchBase, f, "lang", "source", "n_chars").localCheckpoint()
       val nH = hist.count(); val nB = batch.count()
       val mh = Dedup.minhashed(hist.repartition(par), "text", "doc_id")
         .filter(size(col("hs")) > 0).cache()

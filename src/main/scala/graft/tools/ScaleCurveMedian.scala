@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-curve evidence for `graft_median_long` (round 19, verdict item
@@ -30,11 +30,7 @@ import org.apache.spark.sql.functions._
   * `sbt "runMain graft.tools.ScaleCurveMedian"`. */
 object ScaleCurveMedian {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     graft.GraftFunctions.register(spark)
 
     def timed[A](f: => A): (A, Double) = {

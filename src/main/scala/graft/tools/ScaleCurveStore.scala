@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sinks.{AnnStore, BandStore}
 import graft.operators.Similarity
@@ -52,25 +52,12 @@ object ScaleCurveStore {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val par = spark.sparkContext.defaultParallelism
     val root = java.nio.file.Files.createTempDirectory("graft_storecurve").toString
     val sb = new StringBuilder
 
     // ---------- BandStore ----------
-    val alphabet = "abcdefghijklmnopqrstuvwxyz"
-    def blowUpDocs(docs: DataFrame, factor: Int): DataFrame = {
-      require(factor <= 26, s"factor $factor > 26 would reuse Caesar maps")
-      (0 until factor).map { k =>
-        docs.select((col("doc_id") * factor + k).as("doc_id"),
-          translate(col("text"), alphabet,
-            alphabet.drop(k % 26) + alphabet.take(k % 26)).as("text"))
-      }.reduce(_ unionByName _)
-    }
     val docsBase = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val probeBatch = docsBase.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id"), col("text")).localCheckpoint()
@@ -79,8 +66,8 @@ object ScaleCurveStore {
 
     var bandProbe = Map[Int, Double]()
     Seq(1, 10).foreach { f =>
-      val hist = blowUpDocs(histBase, f).repartition(par).localCheckpoint()
-      val app = blowUpDocs(appBase, f).repartition(par).localCheckpoint()
+      val hist = ScaleCurve.blowUp(histBase, f).repartition(par).localCheckpoint()
+      val app = ScaleCurve.blowUp(appBase, f).repartition(par).localCheckpoint()
       val nHist = hist.count(); val nApp = app.count()
       val path = s"$root/band_x$f"
       val (_, wWrite) = timed(BandStore.write(hist, "text", "doc_id", path))

@@ -79,14 +79,10 @@ object ScaleCurveZ {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // the scan-node metric read below needs the executed plan's leaves,
-      // not an AdaptiveSparkPlanExec shell; nothing here needs AQE
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
+    // the scan-node metric read below needs the executed plan's leaves,
+    // not an AdaptiveSparkPlanExec shell; nothing here needs AQE
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val par = spark.sparkContext.defaultParallelism
     val conf = spark.sparkContext.hadoopConfiguration
 

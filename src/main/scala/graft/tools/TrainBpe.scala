@@ -30,12 +30,7 @@ object TrainBpe {
     val numMerges = args.lift(2).map(_.toInt).getOrElse(40)
     val recipe = args.lift(3).getOrElse("docs")
     val emitFile = args.contains("--emit-merges")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val freqs = wordFreqs(spark, dir, topN, recipe)
     val merges = graft.functions.Bpe.train(freqs, numMerges)
     val body = merges.grouped(4).map(_.map { case (a, b) => s"""("$a", "$b")""" }

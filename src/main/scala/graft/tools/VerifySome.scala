@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-
 /** Selective Verify: like [[graft.Verify]] but only for the named queries —
   * fast iteration on one operator without re-running the whole inventory.
   * `sbt "runMain graft.tools.VerifySome <sfDir> <outDir> <name> [name...]"`
@@ -12,32 +9,13 @@ object VerifySome {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     new java.io.File(outDir).mkdirs()
     graft.SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable => System.err.println(s"[verify] $name failed: ${e.getMessage}") }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql.filter(kv => names(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.writeOracleSql(outDir, names)
     spark.stop()
   }
 }

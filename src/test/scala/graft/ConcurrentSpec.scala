@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * sim_ann_merge). The contract the callers rely on: every action runs
   * exactly once, completion of awaitAll means ALL actions completed
   * (the commit markers / promote renames that follow it must see every
-  * write landed), and a failing action fails the whole batch with the
-  * original exception — the sequential error contract. */
+  * write landed), results come back in input order, and a failing
+  * action fails the whole batch with the original exception — every
+  * other failure attached as suppressed, none dropped. */
 class ConcurrentSpec extends AnyFunSuite {
 
   test("runs every action exactly once and returns only after all complete") {
@@ -51,5 +52,36 @@ class ConcurrentSpec extends AnyFunSuite {
     assert(order === List(2, 1))
     graft.etl.Concurrent.awaitAll(4)(Seq(() => order ::= 3))
     assert(order.head === 3)
+  }
+
+  test("results come back in input order, whatever order actions finish in") {
+    // earlier actions sleep longer, so completion order is reversed
+    val out = graft.etl.Concurrent.awaitAll(3)((0 until 6).map(i => () => {
+      Thread.sleep((6 - i) * 10L)
+      s"r$i"
+    }))
+    assert(out === (0 until 6).map(i => s"r$i"))
+  }
+
+  test("every failure surfaces: the first rethrown, the rest suppressed on it") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[IllegalStateException] {
+      graft.etl.Concurrent.awaitAll(2)(Seq(
+        () => throw new IllegalStateException("first"),
+        () => { ran.incrementAndGet(); () },
+        () => throw new IllegalArgumentException("second"),
+        () => throw new UnsupportedOperationException("third")))
+    }
+    assert(e.getMessage === "first")
+    assert(e.getSuppressed.map(_.getMessage).toSet === Set("second", "third"))
+    assert(ran.get() === 1)
+  }
+
+  test("an ExecutionException without a cause is rethrown itself") {
+    val bare = new java.util.concurrent.ExecutionException("no cause", null)
+    assert(graft.etl.Concurrent.cause(bare) eq bare)
+    val boom = new IllegalStateException("boom")
+    assert(graft.etl.Concurrent.cause(
+      new java.util.concurrent.ExecutionException(boom)) eq boom)
   }
 }

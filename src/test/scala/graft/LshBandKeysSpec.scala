@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.expressions.HashExpressions
@@ -18,6 +19,17 @@ class LshBandKeysSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** The composed catalyst form [[TextFunctions.lshBands]] replaced —
+    * kept here, its only use, as the equivalence baseline. */
+  private def lshBandsComposed(sig: Column, k: Int, rowsPerBand: Int): Column = {
+    require(k % rowsPerBand == 0,
+      s"rowsPerBand=$rowsPerBand must divide k=$k (trailing minhashes would be dropped)")
+    array((0 until k / rowsPerBand).map { b =>
+      md5(concat_ws("#",
+        (0 until rowsPerBand).map(r => element_at(sig, b * rowsPerBand + r + 1).cast("string")): _*))
+    }: _*)
+  }
+
   test("native band keys == composed over the corpus sketch chain") {
     // the real production shape: shingle hashes -> k=128 signature ->
     // 16 bands, INCLUDING short/empty texts (all-null signatures)
@@ -27,7 +39,7 @@ class LshBandKeysSpec extends SparkSpec {
       .withColumn("sig", HashExpressions.minhashSigNative(col("hs"), 128))
     val mismatches = staged.filter(
       !(TextFunctions.lshBands(col("sig"), 128, 8) ===
-        TextFunctions.lshBandsComposed(col("sig"), 128, 8))).count()
+        lshBandsComposed(col("sig"), 128, 8))).count()
     assert(mismatches === 0L)
   }
 
@@ -47,7 +59,7 @@ class LshBandKeysSpec extends SparkSpec {
     Seq(4, 8).foreach { r =>
       val bad = df.filter(
         !(TextFunctions.lshBands(col("sig"), k, r) ===
-          TextFunctions.lshBandsComposed(col("sig"), k, r))).count()
+          lshBandsComposed(col("sig"), k, r))).count()
       assert(bad === 0L, s"rowsPerBand=$r")
     }
   }
@@ -56,7 +68,7 @@ class LshBandKeysSpec extends SparkSpec {
     val df = Seq(Tuple1(null: Seq[java.lang.Long])).toDF("sig")
     val got = df.select(TextFunctions.lshBands(col("sig"), 16, 8))
       .head().getSeq[String](0)
-    val want = df.select(TextFunctions.lshBandsComposed(col("sig"), 16, 8))
+    val want = df.select(lshBandsComposed(col("sig"), 16, 8))
       .head().getSeq[String](0)
     assert(got === want)
     assert(got === Seq.fill(2)("d41d8cd98f00b204e9800998ecf8427e"))

@@ -5,10 +5,11 @@ import graft.functions.TextFunctions._
 
 /** Pins the round-20 fused native gram expressions to the HOF chains
   * they replaced (value identity per field, including multi-byte UTF-8
-  * word stepping, repeated/empty words, and hash-order ties), and the
-  * rewritten ngram-Jaccard verify core to the array_intersect/array_union
-  * form it replaced — the CheckNativeGrams corpus gate, distilled to the
-  * edge rows that exercise every branch. */
+  * word stepping, repeated/empty words, and hash-order ties) over edge
+  * rows that exercise every branch, the two merge-intersect counts to
+  * `size(array_intersect)` over every pair of those rows, and the
+  * rewritten ngram-Jaccard and containment cores to the
+  * array_intersect/array_union forms they replaced over the corpus. */
 class NativeGramsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -51,6 +52,21 @@ class NativeGramsSpec extends SparkSpec {
         he.sortedDistinctNgramsNative(col("text"), n),
         array_sort(array_distinct(wordNgrams(col("text"), n)))) === 0L, s"n=$n")
     }
+  }
+
+  test("merge-intersect counts equal size(array_intersect) over every edge-row pair") {
+    val g = edge.select(col("doc_id"),
+      he.hashOrderedGramsNative(col("text"), 3).as("gs"),
+      he.sortedDistinctNgramsNative(col("text"), 3).as("ls"))
+    val pairs = g.select(col("gs").as("a1"), col("ls").as("b1"))
+      .crossJoin(g.select(col("gs").as("a2"), col("ls").as("b2")))
+    assert(pairs.filter(
+      he.hashOrderedIntersectCount(col("a1"), col("a2")) =!=
+        size(array_intersect(transform(col("a1"), _.getField("g")),
+          transform(col("a2"), _.getField("g")))).cast("long")).count() === 0L)
+    assert(pairs.filter(
+      he.sortedStringIntersectCount(col("b1"), col("b2")) =!=
+        size(array_intersect(col("b1"), col("b2"))).cast("long")).count() === 0L)
   }
 
   test("hash-keyed candidates + merge-intersect verify reproduces the r19 string-keyed core") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Pins the round-20 native PQ serve-side expressions (PqEncodeCodes,
   * AdcSum) to the interpreted catalyst folds they replaced — fold order,
   * strict-< lowest-cid ties, and 6-dp HALF_UP rounding must reproduce
-  * exactly (the CheckPq corpus gate, in-suite at sf0.001). */
+  * exactly, over the whole sf0.001 embeddings corpus. */
 class PqNativeSpec extends SparkSpec {
 
   private val pq = graft.operators.ProductQuant
