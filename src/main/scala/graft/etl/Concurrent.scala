@@ -20,10 +20,12 @@ import scala.jdk.CollectionConverters._
   *
   * A few jobs in flight is plenty (enough to hide each job's
   * driver-side commit/plan tail, not so many that tiny local jobs fight
-  * for task slots). Results come back in input order. Every action runs
-  * to completion before awaitAll returns or throws; if any failed, the
-  * first failure (in input order) is rethrown with every later one
-  * attached via `addSuppressed`, so no error is silently dropped. */
+  * for task slots). Results come back in input order. On the pooled
+  * path every action runs to completion before awaitAll returns or
+  * throws; if any failed, the first failure (in input order) is rethrown
+  * with every later one attached via `addSuppressed`, so no error is
+  * silently dropped. The sequential path (`parallelism == 1` or a single
+  * action) runs in input order and stops at the first failure. */
 object Concurrent {
 
   /** How long cleanup waits for in-flight actions after an interrupt. */

@@ -10,7 +10,7 @@ package graft.tools
   * InventorySpec runs the same checks inside `sbt test`. */
 object Inventory {
   def main(args: Array[String]): Unit = {
-    val failed = failures(println)
+    val failed = failures()
     if (failed.nonEmpty) {
       println(s"inventory: ${failed.size} doc-drift failure(s)")
       sys.exit(1)
@@ -18,16 +18,16 @@ object Inventory {
     println("inventory: docs and code agree")
   }
 
-  /** Runs every check from the repo root, reporting each outcome line to
-    * `log`; returns the failed checks' messages (empty = docs agree). */
-  def failures(log: String => Unit): List[String] = {
+  /** Runs every check from the repo root, printing each outcome line;
+    * returns the failed checks' messages (empty = docs agree). */
+  def failures(): List[String] = {
     var failures = List.empty[String]
     def check(ok: Boolean, good: String, bad: => String): Unit =
-      if (ok) log(good) else { log(bad); failures ::= bad }
+      if (ok) println(good) else { println(bad); failures ::= bad }
 
     val queries = graft.SparkEntry.queries.keySet
     val oracles = graft.SparkEntry.oracleSql.keySet
-    log(s"queries=${queries.size} oracles=${oracles.size} " +
+    println(s"queries=${queries.size} oracles=${oracles.size} " +
       s"rows_only=${(queries -- oracles).toSeq.sorted.mkString(",")}")
     val survey = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("SURVEY.md")), "UTF-8")

@@ -49,7 +49,7 @@ object ScaleCurveBand {
       val hist = ScaleCurve.blowUp(histBase, f).repartition(par).localCheckpoint()
       val nH = hist.count()
       val path = s"$root/index_x$f"
-      // ingest = write + compact: a 32-task write leaves up to 32 files
+      // ingest = write + compact: a `par`-task write leaves up to `par` files
       // per bucket, and the probe's footer overhead would price that
       // fragmentation, not the operator — production ingest compacts on
       // cadence, so the curve measures the compacted steady state

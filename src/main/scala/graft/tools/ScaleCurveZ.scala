@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 import graft.etl.ZOrder
 
