@@ -174,10 +174,8 @@ object Bench {
       dir.mkdirs()
       require(dir.isDirectory && dir.canWrite, s"scratch root $root not writable")
       System.setProperty("java.io.tmpdir", root)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rm(dir)))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        org.apache.commons.io.FileUtils.deleteQuietly(dir)))
     }
     val spark = Session.local(cpus, Map("spark.local.dir" ->
       scratchRoot.map(_ + "/spark-local")

@@ -36,8 +36,8 @@ object Graph {
     * block-store blocks that `Dataset.unpersist` never releases (see
     * GraftShim.unpersistCheckpoint) and the operator cannot know when a
     * caller is done reading, so every RESULT pin is tracked here and
-    * [[releaseResults]] frees them in bulk — `RelationalQueries
-    * .clearMemos` calls it between bench passes, tools call it between
+    * [[releaseResults]] frees them in bulk — `SparkEntry.clearMemos`
+    * calls it between bench passes, tools call it between
     * measurement points. Without the registry each cold pass leaked one
     * m-row checkpoint until ContextCleaner GC happened to collect it. */
   private val resultPins =

@@ -358,8 +358,7 @@ object EtlQueries {
     // ZOrderTableSpec + ScaleCurveZ
     "etl_zorder_optimize" -> ((s, d) => {
       import graft.sinks.ZOrderTable
-      val path = refPipeDir(s, d) + "/ztab"
-      deleteRecursively(new java.io.File(path))
+      val path = Scratch.lifecycle(s, d, "zorder_optimize") + "/ztab"
       val o = t(s, d, "orders").select(
         col("o_orderkey"), col("o_custkey").as("ck"),
         datediff(col("o_orderdate"), to_date(lit("1992-01-01")))
@@ -482,10 +481,9 @@ object EtlQueries {
     // (integer cents for money) — exact cross-engine by construction.
     "pipeline_reference_etl" -> ((s, d) => {
       import graft.etl.ReferencePipeline
-      val scratch = refPipeDir(s, d)
+      val scratch = Scratch.lifecycle(s, d, "reference_etl")
       val out = scratch + "/out"
       val csvBase = scratch + "/csv"
-      Seq(out, csvBase).foreach(p => deleteRecursively(new java.io.File(p)))
 
       // listings-shaped wide table from customer⋈nation: money strings
       // (with a real thousands comma for the parse to strip), over-long
@@ -732,71 +730,30 @@ object EtlQueries {
     })
   )
 
-  /** Two parquet snapshot generations of `orders` with DIFFERENT schemas
-    * (written once per (application, sf dir) — same memo discipline as
-    * `SimQueries.annStoreCache`; one shutdown hook sweeps the temp
-    * dirs). */
-  private val snapshotCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val snapshotTmp =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
-  private lazy val snapshotHook: Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => snapshotTmp.forEach(rm)))
-  }
-
-  /** Documents as JSON lines, written once per (application, sf dir) —
-    * same memo + sweep discipline as [[snapshotDir]]. */
+  /** Documents as JSON lines, a [[Scratch]] kept dir written once per
+    * (application, sf dir). */
   private def jsonlDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    snapshotCache.computeIfAbsent("jsonl|" + s.sparkContext.applicationId + "|" + d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft_jsonl")
-      snapshotHook
-      snapshotTmp.add(base.toFile)
-      t(s, d, "documents").write.mode("overwrite").json(base.toString + "/docs")
-      base.toString + "/docs"
-    })
+    Scratch.kept(s, d, "jsonl") { dir =>
+      t(s, d, "documents").write.mode("overwrite").json(dir + "/docs")
+    } + "/docs"
 
-  /** Fragmented orders store for `etl_compact_files`, written once per
-    * (application, sf dir) — 64 deliberately tiny files, the shape an
-    * incremental writer leaves behind. Compaction then runs IN PLACE on
-    * it per invocation (pass 1 collapses 64 → few; later passes rewrite
-    * the already-compacted store at the same target — the result rows,
-    * which the oracle hashes, are pass-invariant either way). */
+  /** Fragmented orders store for `etl_compact_files`, a kept dir written
+    * once per (application, sf dir) — 64 deliberately tiny files, the
+    * shape an incremental writer leaves behind. Compaction then runs IN
+    * PLACE on it per invocation (pass 1 collapses 64 → few; later passes
+    * rewrite the already-compacted store at the same target — the result
+    * rows, which the oracle hashes, are pass-invariant either way). */
   private def fragmentedDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    snapshotCache.computeIfAbsent("frag|" + s.sparkContext.applicationId + "|" + d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft_frag")
-      snapshotHook
-      snapshotTmp.add(base.toFile)
+    Scratch.kept(s, d, "frag") { dir =>
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .repartition(64).write.mode("overwrite").parquet(base.toString + "/orders")
-      base.toString
-    })
+        .repartition(64).write.mode("overwrite").parquet(dir + "/orders")
+    }
 
-  /** Scratch root for `pipeline_reference_etl`'s loaded stores — one temp
-    * dir per (application, sf dir), swept at JVM exit; the key clears its
-    * own subdirs per invocation so every pass runs the full cold
-    * lifecycle. */
-  private def refPipeDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    snapshotCache.computeIfAbsent("refpipe|" + s.sparkContext.applicationId + "|" + d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft_refpipe")
-      snapshotHook
-      snapshotTmp.add(base.toFile)
-      base.toString
-    })
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
-
+  /** Two parquet snapshot generations of `orders` with DIFFERENT schemas,
+    * a kept dir written once per (application, sf dir). */
   private def snapshotDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    snapshotCache.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft_snap")
-      snapshotHook
-      snapshotTmp.add(base.toFile)
+    Scratch.kept(s, d, "snap") { base =>
       val o = t(s, d, "orders")
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -805,8 +762,7 @@ object EtlQueries {
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_orderstatus"), col("o_orderpriority"))
         .write.mode("overwrite").parquet(s"$base/snap=2")
-      base.toString
-    })
+    }
 
   val oracle: Map[String, String] = Map(
     // the melt replayed as the N-scan UNION ALL the operator avoids

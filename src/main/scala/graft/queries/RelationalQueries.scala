@@ -878,27 +878,20 @@ object RelationalQueries {
     * PageRank, node Jaccard), exactly like the testdata parquet itself:
     * at 100 TB the co-purchase graph is a maintained lake table, not a
     * per-query re-derivation of the lineitem basket expansion. The
-    * store SURVIVES clearMemos (only the in-memory result pins release;
-    * round-16's localCheckpoint memo was rebuilt per bench pass, which
-    * billed the 2-shuffle derivation to every graph query's cold
-    * median). Deliberately NOT bucketed: the consumers re-key to BOTH
+    * store is a [[Scratch]] kept dir and SURVIVES clearMemos (only the
+    * in-memory result pins release; round-16's localCheckpoint memo was
+    * rebuilt per bench pass, which billed the 2-shuffle derivation to
+    * every graph query's cold median). Deliberately NOT bucketed: the consumers re-key to BOTH
     * endpoints (degree/adjacency unions of u and v), so no single
     * bucketing co-locates their shuffles — the win is skipping the
     * derivation, and a plain sorted parquet scan delivers it. */
   private def copurchaseEdges(s: org.apache.spark.sql.SparkSession, d: String,
-                              minSupport: Long): org.apache.spark.sql.DataFrame = {
-    val path = copurchaseStore.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d + "|" + minSupport, _ => {
-        val base = java.nio.file.Files.createTempDirectory("graft_copurchase")
-        copurchaseHook
-        copurchaseTmp.add(base.toFile)
-        copurchaseEdgesUncached(s, d, minSupport)
-          .sortWithinPartitions("u", "v") // run-length-friendly pages
-          .write.mode("overwrite").parquet(base.toString + "/edges")
-        base.toString + "/edges"
-      })
-    s.read.parquet(path)
-  }
+                              minSupport: Long): org.apache.spark.sql.DataFrame =
+    s.read.parquet(Scratch.kept(s, d, s"copurchase$minSupport") { dir =>
+      copurchaseEdgesUncached(s, d, minSupport)
+        .sortWithinPartitions("u", "v") // run-length-friendly pages
+        .write.mode("overwrite").parquet(dir + "/edges")
+    } + "/edges")
 
   /** Pre-build the shared ingest-time stores (the co-purchase edge sets
     * at the supports the graph family uses) OUTSIDE any timed region —
@@ -927,16 +920,7 @@ object RelationalQueries {
       .filter(col("sup") >= minSupport).select("u", "v")
   }
 
-  /** Bucketed `orders`/`lineitem` managed tables (8 buckets on the join
-    * key), written once per (application, sf dir) — the ingest-time cost
-    * the co-located join amortizes; same memo discipline as
-    * `SimQueries.annStoreCache`. Managed tables land under the session's
-    * warehouse dir and are dropped+recreated per application. */
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (org.apache.spark.sql.SparkSession, String, String)]()
-
-  /** Query keys that read [[bucketCache]] — surfaced through
+  /** Query keys that read the bucketed tables — surfaced through
     * `SparkEntry.memoizedQueries` so Bench clears the memo before every
     * timed pass: the clear drops the managed bucketed tables, so the
     * median measures the COLD build+join (the build IS that operator's
@@ -957,43 +941,14 @@ object RelationalQueries {
   val prepared: Set[String] =
     Set("q_triangle_count", "q_pagerank", "q_node_jaccard")
 
-  /** The derived co-purchase graph is ONE ingest-time stage consumed by
-    * the whole graph family (triangles, PageRank, node Jaccard) — each
-    * (app, sf dir, support) edge set materializes ONCE as a parquet
-    * store (value = path) and every consumer re-reads it instead of
-    * re-running the basket expansion. Dirs are swept at JVM exit. */
-  private val copurchaseStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val copurchaseTmp =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private lazy val copurchaseHook: Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => copurchaseTmp.forEach(rm)))
-  }
-
-  /** Drop the memoized bucketed tables (managed — DROP deletes their
-    * data) and release the graph family's RESULT checkpoints (the pins
-    * Graph.triangles/pageRank hand out — without this each bench pass
-    * leaked one m-row checkpoint). The co-purchase parquet STORE is an
-    * ingest-time artifact and deliberately survives: cold passes re-READ
-    * it (the production amortized shape), they don't re-derive it. Same
-    * single-threaded-caller contract as the other clearMemos. */
-  def clearMemos(): Unit = {
-    bucketCache.values.forEach { case (s, ot, lt) =>
-      Seq(ot, lt).foreach { tbl =>
-        try s.sql(s"DROP TABLE IF EXISTS $tbl")
-        catch { case _: Throwable => () } // a stopped session: nothing to drop
-      }
-    }
-    bucketCache.clear()
-    graft.operators.Graph.releaseResults()
-  }
-
+  /** Bucketed `orders`/`lineitem` managed tables (8 buckets on the join
+    * key), a [[Scratch]] memo written once per (application, sf dir) —
+    * the ingest-time cost the co-located join amortizes. Managed tables
+    * land under the session's warehouse dir; clear drops them (DROP
+    * deletes their data). */
   private def bucketedTables(s: org.apache.spark.sql.SparkSession,
-                             d: String): (String, String) = {
-    val (_, ot, lt) = bucketCache.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ => {
+                             d: String): (String, String) =
+    Scratch.memo(s, d, "bucketed") {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
       val (ot, lt) = (s"graft_bkt_orders_$tag", s"graft_bkt_lineitem_$tag")
       // a previous JVM's managed-table LOCATION survives while the
@@ -1005,10 +960,7 @@ object RelationalQueries {
         // space (legal on disk, illegal in a URI) must not throw here
         val loc = new java.io.File(
           s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), tbl)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (loc.exists()) rm(loc)
+        org.apache.commons.io.FileUtils.deleteQuietly(loc)
       }
       // the two bucketed sides are independent managed tables — overlap
       // their build jobs (guide §2.6; graft.etl.Concurrent): the big
@@ -1023,10 +975,13 @@ object RelationalQueries {
           t(s, d, "lineitem").select(col("l_orderkey").as("o_orderkey"),
             cents(col("l_quantity")).as("qc")),
           lt, "o_orderkey", 8)))
-      (s, ot, lt)
-    })
-    (ot, lt)
-  }
+      (ot, lt)
+    } { case (ot, lt) =>
+      Seq(ot, lt).foreach { tbl =>
+        try s.sql(s"DROP TABLE IF EXISTS $tbl")
+        catch { case _: Throwable => () } // a stopped session: nothing to drop
+      }
+    }
 
   val oracle: Map[String, String] = Map(
     // bucketing changes the physical plan, never the rows

@@ -11,120 +11,48 @@ import Common._
   */
 object SimQueries {
 
-  /** Query keys that read [[annStoreCache]] — the store is the production
-    * shape (assign once at ingest, query many). Bench clears the memo
-    * before each timed pass via [[clearMemos]], so the artifact's median
-    * measures the full build+search cost; the warm (store-prebuilt) search
-    * time is recorded separately as a `warm` entry. */
+  /** Query keys that read the ANN or PQ store memo — the store is the
+    * production shape (assign once at ingest, query many). Bench clears
+    * the memos before each timed pass, so the artifact's median measures
+    * the full build+search cost; the warm (store-prebuilt) search time is
+    * recorded separately as a `warm` entry. */
   val memoized: Set[String] = Set("sim_ann_pruned", "sim_ann_filtered", "sim_ivfpq_search")
-
-  /** One centroid-partitioned [[graft.sinks.AnnStore]] per (application,
-    * sf dir), built on first use — same memo discipline as
-    * `TextQueries.pairGraphCache` (keyed by appId so a restarted session
-    * rebuilds; `computeIfAbsent` is atomic per key, so concurrent callers
-    * on one dir share a single write). */
-  private val annStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Temp dirs holding ANN stores built this JVM. ONE shutdown hook sweeps
-    * whatever is still live at exit (the store is a full copy of the
-    * embeddings table: without cleanup every Verify/Bench JVM would leave
-    * one behind); [[clearMemos]] deletes eagerly between bench passes —
-    * per-build hooks would accumulate one thread per rebuild. */
-  private val annTmpDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private lazy val annHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      annTmpDirs.forEach(d => deleteRecursively(d.toFile))))
-  }
 
   private def centroids(s: org.apache.spark.sql.SparkSession, d: String) =
     t(s, d, "embeddings").filter(col("vec_id") < 8).withColumnRenamed("vec_id", "cid")
 
+  /** One centroid-partitioned [[graft.sinks.AnnStore]] per (application,
+    * sf dir), built on first use (a [[Scratch]] memo dir: the store is a
+    * full copy of the embeddings table, deleted on clear). */
   private def annStore(s: org.apache.spark.sql.SparkSession, d: String): String =
-    annStoreCache.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ => {
+    Scratch.memoDir(s, d, "ann") { dir =>
       // label rides the assignment's zero-shuffle fold into the store's
       // partition files — the serving metadata sim_ann_filtered's pushed
       // predicate reads without any join
       val assigned = Similarity.ivfAssign(t(s, d, "embeddings"), "embedding", "vec_id",
         centroids(s, d), "cid", keepVec = true, metaCols = Seq("label"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann")
-      annHook
-      annTmpDirs.add(dir)
-      val path = dir.toString + "/store"
-      graft.sinks.AnnStore.write(assigned, path)
-      path
-    })
+      graft.sinks.AnnStore.write(assigned, dir + "/store")
+    } + "/store"
 
   /** One centroid-partitioned PQ-code store (+ its codebook) per
     * (application, sf dir) — the `sim_ivfpq_search` serving index:
     * codebook trained, corpus encoded, codes laid out by their coarse
     * cluster ([[graft.sinks.AnnStore.writePq]]), codebook persisted next
     * to them (it is part of the index — a query must not retrain it).
-    * Same memo/sweep discipline as [[annStore]]: Bench clears the memo
-    * per pass so the artifact's median is the cold index build, and the
-    * `warm` entry records the serving-only cost — the production
-    * build-once-query-many shape. */
+    * A memo dir like [[annStore]]: Bench clears it per pass so the
+    * artifact's median is the cold index build, and the `warm` entry
+    * records the serving-only cost — the production build-once-query-many
+    * shape. */
   private def pqStore(s: org.apache.spark.sql.SparkSession, d: String): String =
-    annStoreCache.computeIfAbsent("pq|" + s.sparkContext.applicationId + "|" + d, _ => {
+    Scratch.memoDir(s, d, "pq") { dir =>
       val e = t(s, d, "embeddings")
       val pq = graft.operators.ProductQuant
       val cb = pq.train(e, "embedding", "vec_id", m = 4, k = 8, dims = 64, iters = 2)
       val codes = pq.encode(e, "embedding", "vec_id", cb, m = 4, dims = 64)
       val assigned = Similarity.ivfAssign(e, "embedding", "vec_id", centroids(s, d), "cid")
-      val dir = java.nio.file.Files.createTempDirectory("graft_pq")
-      annHook
-      annTmpDirs.add(dir)
-      graft.sinks.AnnStore.writePq(assigned, codes, "vec_id", dir.toString + "/store")
-      cb.write.mode("overwrite").parquet(dir.toString + "/codebook")
-      dir.toString
-    })
-
-  /** ONE reusable temp dir per (application, sf dir, lifecycle key):
-    * each lifecycle invocation rebuilds its store from scratch (the
-    * keys' contract is a COLD write+…+search), but into the SAME dir
-    * after deleting the previous copy — so repeated bench passes in one
-    * long-lived JVM hold at most one store copy on disk instead of
-    * accumulating one per invocation until shutdown. */
-  private def scratchDir(s: org.apache.spark.sql.SparkSession, d: String,
-                         tag: String): String =
-    annStoreCache.computeIfAbsent(tag + "|" + s.sparkContext.applicationId + "|" + d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_" + tag)
-      annHook
-      annTmpDirs.add(dir)
-      dir.toString
-    })
-
-  private def annUpsertDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    scratchDir(s, d, "upsert")
-
-  private def annCompactDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    scratchDir(s, d, "compact")
-
-  private def annDeleteDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    scratchDir(s, d, "delete")
-
-  private def annReclusterDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    scratchDir(s, d, "recluster")
-
-  private def annMergeDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    scratchDir(s, d, "merge")
-
-  /** Drop the memoized ANN store (and delete its files): the next
-    * `sim_ann_pruned` call pays the full ingest-time build again. Bench
-    * calls this before each timed pass of a memoized key so the artifact
-    * records cold operator cost (round-6 verdict item #1). Not safe
-    * against a concurrently-running query on the store — callers own
-    * sequencing (Bench is single-threaded). */
-  def clearMemos(): Unit = {
-    annStoreCache.clear()
-    annTmpDirs.forEach { d => deleteRecursively(d.toFile); annTmpDirs.remove(d) }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
+      graft.sinks.AnnStore.writePq(assigned, codes, "vec_id", dir + "/store")
+      cb.write.mode("overwrite").parquet(dir + "/codebook")
+    }
 
   val defs: Map[String, QFn] = Map(
     // scale path: IVF-assign each vector to its nearest centroid (zero
@@ -392,10 +320,8 @@ object SimQueries {
     "sim_ann_merge" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val cents = centroids(s, d)
-      val dst = annMergeDir(s, d) + "/dst"
-      val src = annMergeDir(s, d) + "/src"
-      deleteRecursively(new java.io.File(dst))
-      deleteRecursively(new java.io.File(src))
+      val scratch = Scratch.lifecycle(s, d, "ann_merge")
+      val (dst, src) = (scratch + "/dst", scratch + "/src")
       def assign(part: org.apache.spark.sql.DataFrame) =
         Similarity.ivfAssign(part, "embedding", "vec_id", cents, "cid", keepVec = true)
       // parity split: both shards are non-empty at every scale factor;
@@ -474,10 +400,7 @@ object SimQueries {
     "sim_ann_upsert" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val cents = centroids(s, d)
-      val path = annUpsertDir(s, d) + "/store"
-      // previous invocation's copy goes first: disk stays bounded at one
-      // store however many passes a bench JVM runs
-      deleteRecursively(new java.io.File(path))
+      val path = Scratch.lifecycle(s, d, "ann_upsert") + "/store"
       def assign(part: org.apache.spark.sql.DataFrame) =
         Similarity.ivfAssign(part, "embedding", "vec_id", cents, "cid", keepVec = true)
       graft.sinks.AnnStore.write(assign(e.filter(col("vec_id") >= 100)), path)
@@ -499,8 +422,7 @@ object SimQueries {
     "sim_ann_compact" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val cents = centroids(s, d)
-      val path = annCompactDir(s, d) + "/store"
-      deleteRecursively(new java.io.File(path))
+      val path = Scratch.lifecycle(s, d, "ann_compact") + "/store"
       def assign(part: org.apache.spark.sql.DataFrame) =
         Similarity.ivfAssign(part, "embedding", "vec_id", cents, "cid", keepVec = true)
       graft.sinks.AnnStore.write(assign(e.filter(col("vec_id") >= 100)), path)
@@ -527,8 +449,7 @@ object SimQueries {
     "sim_ann_delete" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val cents = centroids(s, d)
-      val path = annDeleteDir(s, d) + "/store"
-      deleteRecursively(new java.io.File(path))
+      val path = Scratch.lifecycle(s, d, "ann_delete") + "/store"
       graft.sinks.AnnStore.write(
         Similarity.ivfAssign(e, "embedding", "vec_id", cents, "cid", keepVec = true), path)
       graft.sinks.AnnStore.delete(
@@ -550,8 +471,7 @@ object SimQueries {
     // against the trained centroids from day one
     "sim_ann_recluster" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val path = annReclusterDir(s, d) + "/store"
-      deleteRecursively(new java.io.File(path))
+      val path = Scratch.lifecycle(s, d, "ann_recluster") + "/store"
       val bad = e.filter(col("vec_id") < 2).withColumnRenamed("vec_id", "cid")
       graft.sinks.AnnStore.write(
         Similarity.ivfAssign(e, "embedding", "vec_id", bad, "cid", keepVec = true), path)

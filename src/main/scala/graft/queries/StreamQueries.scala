@@ -236,7 +236,8 @@ object StreamQueries {
 
     "stream_replay_merge" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val store = sweptTempDir("graft_replay") + "/docs"
+      // a lifecycle dir: every call replays into a fresh, empty store
+      val store = Scratch.lifecycle(s, d, "replay") + "/docs"
       val sink = graft.sinks.DocStoreSink.appendRecordsInto(
         store, "user_id", Seq("event_id"), "events", Nil) _
       val ev = t(s, d, "events").select(col("user_id"), col("event_id"))
@@ -475,25 +476,4 @@ object StreamQueries {
                 CAST(sum(late_ns) AS BIGINT) AS sum_late_ns
          FROM l GROUP BY 1"""
   )
-
-  /** Fresh-per-invocation ephemeral store root, registered in a JVM-exit
-    * sweep — the same snapshotTmp/copurchaseTmp discipline every other
-    * family uses. stream_replay_merge needs a FRESH store per pass (the
-    * cold exactly-once lifecycle is the point), so the dir can't be
-    * memoized; without the sweep a 3-pass bench leaked three full replay
-    * stores per run for the JVM lifetime (and forever in ad-hoc runs). */
-  private val replayTmp =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
-  private lazy val replayHook: Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => replayTmp.forEach(rm)))
-  }
-  private def sweptTempDir(prefix: String): String = {
-    val base = java.nio.file.Files.createTempDirectory(prefix)
-    replayHook
-    replayTmp.add(base.toFile)
-    base.toString
-  }
 }

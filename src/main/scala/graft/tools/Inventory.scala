@@ -4,10 +4,12 @@ package graft.tools
   * `SparkEntry` (the same map the driver iterates), cross-checks that
   * every key named in SURVEY.md §2 exists and vice versa, and asserts the
   * headline counts (README's query count, SURVEY's spec count) against the
-  * tree. Any drift EXITS NONZERO — a stale doc is a build failure, not a
-  * printout to skim past (round-3 verdict: the header was stale for two
-  * consecutive rounds; round-6 item #9 asked for the hard failure) — and
-  * InventorySpec runs the same checks inside `sbt test`. */
+  * tree, and that no engine module but `queries/Scratch.scala` makes its
+  * own temp dirs or JVM-exit hooks. Any drift EXITS NONZERO — a stale doc
+  * is a build failure, not a printout to skim past (round-3 verdict: the
+  * header was stale for two consecutive rounds; round-6 item #9 asked for
+  * the hard failure) — and InventorySpec runs the same checks inside
+  * `sbt test`. */
 object Inventory {
   def main(args: Array[String]): Unit = {
     val failed = failures()
@@ -71,6 +73,24 @@ object Inventory {
           s"SURVEY STALE: says ${m.group(1)} test cases, tree defines $treeSpecs")
       case None =>
         check(ok = false, "", "SURVEY: no 'N ScalaTest test cases' line found")
+    }
+    // ONE OWNER FOR ENGINE SCRATCH STATE: temp dirs and JVM-exit hooks in
+    // the engine modules belong to graft.queries.Scratch alone — a module
+    // growing its own copy again is a build failure, not a review note
+    locally {
+      import scala.jdk.CollectionConverters._
+      val owner = java.nio.file.Paths.get("src/main/scala/graft/queries/Scratch.scala")
+      val copies = Seq("queries", "operators", "sinks", "etl").flatMap { m =>
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft", m))
+        try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        finally walk.close()
+      }.filter { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        f != owner && (src.contains("Runtime.getRuntime.addShutdownHook") ||
+          src.contains("Files.createTempDirectory"))
+      }.map(_.toString).sorted
+      check(copies.isEmpty, "scratch: only queries/Scratch.scala makes temp dirs or exit hooks",
+        s"SCRATCH COPIES (use graft.queries.Scratch): ${copies.mkString(", ")}")
     }
     // PLAN-AUDIT FRESHNESS (round-17 verdict item: the cartesian gate is
     // only as good as its last committed run — round 17 shipped a

@@ -70,11 +70,7 @@ object ProfileBandStore {
       spark, pathRb, batch, "text", "doc_id", threshold = 0.8))
     println(s"[prof] rb probe rows: ${outRb.count()}")
 
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     spark.stop()
   }
 }

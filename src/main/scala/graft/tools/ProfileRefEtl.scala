@@ -26,10 +26,7 @@ object ProfileRefEtl {
     val csvBase = scratch + "/csv"
     (1 to 2).foreach { pass =>
       println(s"[profile] ---- pass $pass ----")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      Seq(out, csvBase).foreach(p => rm(new java.io.File(p)))
+      Seq(out, csvBase).foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
       // same planted-work construction as the query
       def moneyStr(v: org.apache.spark.sql.Column) = {
         val dec = v.cast("decimal(18,2)").cast("string")
@@ -137,10 +134,7 @@ object ProfileRefEtl {
         ).reduce(_ unionAll _).count()
       }
     }
-    def rm2(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm2)); f.delete(); ()
-    }
-    rm2(new java.io.File(scratch))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
     spark.stop()
   }
 }

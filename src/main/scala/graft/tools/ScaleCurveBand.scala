@@ -109,8 +109,7 @@ object ScaleCurveBand {
     java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
       sb.toString.getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    def rm(x: java.io.File): Unit = { Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); () }
-    rm(new java.io.File(root))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     spark.stop()
   }
 }

@@ -112,14 +112,10 @@ object ScaleCurveSweep {
       // every scratch store (warm-up + the three factors, hundreds of MB
       // at factor 10) registers here and dies with the JVM — the sweep
       // must not leak gigabytes of temp parquet across runs (round-18
-      // advisory; same rule as StreamQueries.sweptTempDir)
+      // advisory)
       val scratch = scala.collection.mutable.ListBuffer[java.nio.file.Path]()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-        }
-        scratch.foreach(p => rm(p.toFile))
-      }))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        scratch.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))))
       def store(f: Int): String = {
         val base = java.nio.file.Files.createTempDirectory("graft_curve_frag")
         scratch += base

@@ -21,13 +21,9 @@ class AnnStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private val storeDirs = scala.collection.mutable.ListBuffer[java.io.File]()
 
-  override def afterAll(): Unit = {
-    // each store is a full embeddings copy — don't leave them in /tmp
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    storeDirs.foreach(rm)
-  }
+  // each store is a full embeddings copy — don't leave them in /tmp
+  override def afterAll(): Unit =
+    storeDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
 
   private def buildStore(): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_annspec").toFile

@@ -23,12 +23,8 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private val storeDirs = scala.collection.mutable.ListBuffer[java.io.File]()
 
-  override def afterAll(): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    storeDirs.foreach(rm)
-  }
+  override def afterAll(): Unit =
+    storeDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
 
   private def newPath(): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_bandspec").toFile

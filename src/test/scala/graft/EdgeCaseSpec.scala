@@ -226,12 +226,7 @@ class EdgeCaseSpec extends SparkSpec {
         "an empty tombstone batch purges to nothing")
       assert(graft.sinks.AnnStore.tombstones(spark, path).isEmpty,
         "purge clears even an all-noop sidecar")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
     // video/set-dedup degenerate inputs: empty corpus and empty element
     // sets produce empty well-formed frames, never a crash
     assert(graft.multimodal.Multimodal.frameHashes(
