@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *    substring) emits O(d²) keys per name — LINEAR in |s|, the scheme
   *    for product titles and sentence-length keys where the d = 2
   *    neighborhood's ~|s|²/2 variants per name would dominate
-  *    (ScaleCurveFuzzy's length sweep prices the crossover).
+  *    (`tools.ScaleCurve fuzzy`'s length sweep prices the crossover).
   *
   * Neither scheme ever ships name text through the quadratic part of the
   * exchange: names are interned once as 16-byte content keys (two

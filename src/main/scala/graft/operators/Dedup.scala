@@ -801,7 +801,7 @@ object Dedup {
 
   /** [[hammingPairs64]]'s CANDIDATE stage — the distinct chunk-join
     * collisions with their verified hamming distance, before the
-    * distance cut. Exposed so the scale harness (tools/ScaleCurveHam)
+    * distance cut. Exposed so the scale harness (`tools.ScaleCurve ham`)
     * can measure candidate volume directly: this count is the quantity
     * that must stay ~linear in corpus size for the chunk join to
     * survive 100 TB (α→2 would mean the generator degenerated to

@@ -355,7 +355,7 @@ object EtlQueries {
     // directly: the hash passes iff write, every append, BOTH swap ops,
     // and the resolved read are lossless row-for-row. Physical claims
     // (decay/restoration/collapse, files, crash windows) live in
-    // ZOrderTableSpec + ScaleCurveZ
+    // ZOrderTableSpec + `tools.ScaleCurve z`
     "etl_zorder_optimize" -> ((s, d) => {
       import graft.sinks.ZOrderTable
       val path = Scratch.lifecycle(s, d, "zorder_optimize") + "/ztab"

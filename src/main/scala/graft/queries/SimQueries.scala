@@ -169,7 +169,8 @@ object SimQueries {
     // corpus-to-corpus twin: per sampled point (1/16 of the corpus,
     // deterministic), hits of the 2-probe blocked graph's top-5 vs the
     // exact self-excluded top-5. Truth is brute force by definition,
-    // but bounded: the SAMPLE rides one broadcast, scoring is map-side
+    // but bounded: the SAMPLE rides one broadcast (hinted at the cross
+    // join, the one place it is the build side), scoring is map-side
     // — sample-size × corpus work, never corpus². Explicit-zero rows
     // for sampled points the blocked graph misses entirely
     "sim_knn_recall" -> ((s, d) => {
@@ -180,13 +181,13 @@ object SimQueries {
           k = 5, nProbe = 2)
         .filter(col("vec_id") % 16 === 0)
         .select(col("vec_id").as("q_id"), col("nbr_id"))
-      val sample = broadcast(e.filter(col("vec_id") % 16 === 0)
+      val sample = e.filter(col("vec_id") % 16 === 0)
         .select(col("vec_id").as("q_id"),
-          transform(col("embedding"), _.cast("double")).as("q_v")))
+          transform(col("embedding"), _.cast("double")).as("q_v"))
       val exact = e
         .select(col("vec_id").as("nbr_id"),
           transform(col("embedding"), _.cast("double")).as("v"))
-        .crossJoin(sample)
+        .crossJoin(broadcast(sample))
         .filter(col("nbr_id") =!= col("q_id"))
         .select(col("q_id"), col("nbr_id"),
           round(Similarity.cosine(col("v"), col("q_v")), 6).as("cos"))

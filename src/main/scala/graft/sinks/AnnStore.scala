@@ -21,7 +21,7 @@ object AnnStore {
   /** Align the assignment with the store's cluster layout before a
     * `partitionBy("centroid_id")` write: without it every upstream task
     * holding rows of cluster c commits its own file into c — files =
-    * task-count × cluster-count (round-15 `ScaleCurveStore`: ~500 files
+    * task-count × cluster-count (round-15 `tools.ScaleCurve store`: ~500 files
     * for a 16-cluster store from a 32-task assign, corpus-size-
     * independent; a 100 TB ingest's tens of thousands of tasks would be
     * a namenode incident). One hash exchange of the (id, vector) rows

@@ -55,7 +55,7 @@ import graft.operators.Dedup
   *    ~16× stored sig bytes and the corresponding bulk-probe scan mass.
   *    Pick lean when probes are bulk (batch ~ corpus scale, e.g.
   *    backfills) or storage dominates; dense for latency-critical
-  *    small probes. Measured head-to-head in `tools/ScaleCurveBand`.
+  *    small probes. Measured head-to-head by `tools.ScaleCurve band`.
   *
   * Lifecycle mirrors [[AnnStore]] in full: write → append (new files
   * land only in their buckets; untouched partitions never rewritten) →
@@ -169,7 +169,7 @@ object BandStore {
     * WRITE PARALLELISM, not upstream-task-count × buckets: without this,
     * every upstream task holding rows of bucket b commits its own file
     * into b — a 32-task local write left ~4k files per lifecycle
-    * (round-15 `ScaleCurveStore` measurement: task-count × bucket-count,
+    * (round-15 `tools.ScaleCurve store` measurement: task-count × bucket-count,
     * corpus-size-independent), and a 100 TB ingest's tens of thousands of
     * tasks would turn the store into a namenode incident. One hash
     * exchange of the (digest-sized) sketch rows buys files =

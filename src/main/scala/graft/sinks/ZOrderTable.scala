@@ -12,7 +12,7 @@ import graft.etl.ZOrder
   * that only exists at initial-write time silently decays — every
   * appended file spans the whole (x, y) grid, so a selective
   * two-dimensional predicate degrades back toward full scans as the
-  * unclustered tail grows (`ScaleCurveZ` measures the decay AND the
+  * unclustered tail grows (`tools.ScaleCurve z` measures the decay AND the
   * restoration). This sink gives the layout the same lifecycle
   * discipline as [[AnnStore]]/[[BandStore]]: cheap raw appends, a
   * re-optimize that re-clusters ONLY the fragmented tail, writer fencing,

@@ -4,8 +4,9 @@ package graft.tools
   * `SparkEntry` (the same map the driver iterates), cross-checks that
   * every key named in SURVEY.md §2 exists and vice versa, and asserts the
   * headline counts (README's query count, SURVEY's spec count) against the
-  * tree, and that no engine module but `queries/Scratch.scala` makes its
-  * own temp dirs or JVM-exit hooks. Any drift EXITS NONZERO — a stale doc
+  * tree, that no engine module but `queries/Scratch.scala` makes its
+  * own temp dirs or JVM-exit hooks, and that no tool but the `ScaleCurve`
+  * runner writes the curve log. Any drift EXITS NONZERO — a stale doc
   * is a build failure, not a printout to skim past (round-3 verdict: the
   * header was stale for two consecutive rounds; round-6 item #9 asked for
   * the hard failure) — and InventorySpec runs the same checks inside
@@ -91,6 +92,25 @@ object Inventory {
       }.map(_.toString).sorted
       check(copies.isEmpty, "scratch: only queries/Scratch.scala makes temp dirs or exit hooks",
         s"SCRATCH COPIES (use graft.queries.Scratch): ${copies.mkString(", ")}")
+    }
+    // ONE SCALE-CURVE RUNNER: the curve log belongs to tools/ScaleCurve.scala
+    // alone (a family emits through it), and no tool cleans up from a
+    // JVM-exit hook (the runner's scratch root dies in a finally). This
+    // file names both patterns to search for them, so it is skipped.
+    locally {
+      import scala.jdk.CollectionConverters._
+      val tools = java.nio.file.Paths.get("src/main/scala/graft/tools")
+      val walk = java.nio.file.Files.list(tools)
+      val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        finally walk.close()
+      val offenders = files.filter(_ != tools.resolve("Inventory.scala")).filter { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        (f != tools.resolve("ScaleCurve.scala") && src.contains("scale_curve.jsonl")) ||
+          src.contains("Runtime.getRuntime.addShutdownHook")
+      }.map(_.toString).sorted
+      check(offenders.isEmpty,
+        "tools: only ScaleCurve.scala names scale_curve.jsonl; no tool adds exit hooks",
+        s"TOOL CURVE-LOG WRITERS OR EXIT HOOKS (use graft.tools.ScaleCurve): ${offenders.mkString(", ")}")
     }
     // PLAN-AUDIT FRESHNESS (round-17 verdict item: the cartesian gate is
     // only as good as its last committed run — round 17 shipped a

@@ -26,27 +26,30 @@ object ProfileScd2 {
     }
     // history materialized once (parquet, as a real table would be), then
     // batches of shrinking recency merged in
-    val hdir = java.nio.file.Files.createTempDirectory("graft_scd2").toString + "/h"
-    for (cutoff <- Seq("2001-07-01", "2001-01-01", "1999-01-01")) {
-      val cut = lit(cutoff).cast("timestamp")
+    val hroot = java.nio.file.Files.createTempDirectory("graft_scd2")
+    val hdir = hroot.toString + "/h"
+    try {
+      for (cutoff <- Seq("2001-07-01", "2001-01-01", "1999-01-01")) {
+        val cut = lit(cutoff).cast("timestamp")
+        graft.etl.Scd2.history(feed.filter(col("o_orderdate") < cut),
+          k._1, k._2, k._3, Seq("o_orderpriority"))
+          .write.mode("overwrite").parquet(hdir)
+        val existing = spark.read.parquet(hdir)
+        val batch = feed.filter(col("o_orderdate") >= cut)
+        val nb = batch.count()
+        time(f"mergeHistory(batch>=$cutoff, $nb batch rows)") {
+          graft.etl.Scd2.mergeHistory(existing, batch,
+            k._1, k._2, k._3, Seq("o_orderpriority")).count()
+        }
+      }
+      val cut = lit("2001-07-01").cast("timestamp")
       graft.etl.Scd2.history(feed.filter(col("o_orderdate") < cut),
         k._1, k._2, k._3, Seq("o_orderpriority"))
         .write.mode("overwrite").parquet(hdir)
-      val existing = spark.read.parquet(hdir)
-      val batch = feed.filter(col("o_orderdate") >= cut)
-      val nb = batch.count()
-      time(f"mergeHistory(batch>=$cutoff, $nb batch rows)") {
-        graft.etl.Scd2.mergeHistory(existing, batch,
-          k._1, k._2, k._3, Seq("o_orderpriority")).count()
-      }
-    }
-    val cut = lit("2001-07-01").cast("timestamp")
-    graft.etl.Scd2.history(feed.filter(col("o_orderdate") < cut),
-      k._1, k._2, k._3, Seq("o_orderpriority"))
-      .write.mode("overwrite").parquet(hdir)
-    graft.etl.Scd2.mergeHistory(spark.read.parquet(hdir),
-      feed.filter(col("o_orderdate") >= cut),
-      k._1, k._2, k._3, Seq("o_orderpriority")).explain("formatted")
+      graft.etl.Scd2.mergeHistory(spark.read.parquet(hdir),
+        feed.filter(col("o_orderdate") >= cut),
+        k._1, k._2, k._3, Seq("o_orderpriority")).explain("formatted")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(hroot.toFile)
     spark.stop()
   }
 }

@@ -1,13 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
-/** Scale-curve evidence for the dedup family: measures corpus size,
-  * CANDIDATE-pair volume (the quantity that must stay ~linear for the
-  * plan to survive 100 TB), verified-pair volume, and wall time at
-  * sf0.01, sf0.1, and salted blow-ups of sf0.1.
+/** Scale-curve evidence, one family per JVM:
+  * `sbt "runMain graft.tools.ScaleCurve <family>"`. No argument or an
+  * unknown one prints the family names and exits nonzero.
+  *
+  * Each family measures the candidate / pair / file / byte volumes (and
+  * wall) of one candidate generator or store as its input grows, fits a
+  * scaling exponent α (volume ~ n^α: α ≈ 1 is the pass bar, α → 2 means
+  * a generator degenerated toward all-pairs) and `require`s its bounds.
+  * The runner owns what every family shares: the session, the timer, the
+  * two α fits, the output (each JSON line goes to stdout; the run is
+  * appended to `scale_curve.jsonl` once the family returns, so a failed
+  * gate appends nothing), one scratch root deleted however the family
+  * ends, and the Caesar blow-up with its sf0.01 → sf0.1 → ×4 → ×10
+  * ladder.
   *
   * The blow-up applies a per-copy Caesar substitution to the text: a
   * bijective character map preserves every within-copy shingle/gram
@@ -17,13 +30,8 @@ import graft.operators.Dedup
   * scale a near-dup benchmark. (Plain replication — or token-suffix
   * salting, which leaves char-3-grams overlapping — adds factor²
   * cross-copy near-dup pairs and measures the corpus, not the plan:
-  * the first run of this tool did exactly that and LSH "failed" with
-  * alpha=2.4 by correctly finding the quadratic duplicate mass.)
-  *
-  * Output: one JSON line per (dataset, op) on stdout; appends the whole
-  * run to `scale_curve.jsonl` and prints the fitted scaling exponent
-  * alpha where candidates ~ n_docs^alpha (alpha ≈ 1 is the pass bar;
-  * alpha -> 2 means the candidate generator degenerated to all-pairs).
+  * the first run of the dedup curve did exactly that and LSH "failed"
+  * with alpha=2.4 by correctly finding the quadratic duplicate mass.)
   */
 object ScaleCurve {
   private val alphabet = "abcdefghijklmnopqrstuvwxyz"
@@ -44,27 +52,30 @@ object ScaleCurve {
     }.reduce(_ unionByName _)
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
-    val par = spark.sparkContext.defaultParallelism
-
+  /** The sf0.01 and sf0.1 documents tables the document ladders start
+    * from. */
+  def documents(spark: SparkSession): (DataFrame, DataFrame) = {
     val base01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val base1 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    val datasets: Seq[(String, DataFrame)] = Seq(
-      "sf0.01" -> base01,
-      "sf0.1" -> base1,
-      "sf0.1x4" -> blowUp(base1, 4, "lang", "source", "n_chars"),
-      "sf0.1x10" -> blowUp(base1, 10, "lang", "source", "n_chars"))
+    (base01, base1)
+  }
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+  /** The dedup family: corpus size, CANDIDATE-pair volume (the quantity
+    * that must stay ~linear for the plan to survive 100 TB),
+    * verified-pair volume and wall time at sf0.01, sf0.1 and Caesar
+    * blow-ups of sf0.1, one JSON line per (dataset, op), then the fitted
+    * alpha where candidates ~ n_docs^alpha. */
+  def dedup(sc: Run): Unit = {
+    val spark = sc.spark
+    val par = spark.sparkContext.defaultParallelism
 
-    val sb = new StringBuilder
+    val (base01, base1) = documents(spark)
+    val datasets = ladder(base01, base1)(blowUp(_, _, "lang", "source", "n_chars"))
+
     val curves = scala.collection.mutable.Map[String, Vector[(Long, Long)]]()
       .withDefaultValue(Vector())
 
-    datasets.foreach { case (name, docs0) =>
+    datasets.foreach { case (name, _, docs0) =>
       // materialize the blow-up once so sketch time, not union codegen,
       // is what gets measured
       val docs = docs0.localCheckpoint()
@@ -139,8 +150,7 @@ object ScaleCurve {
           ("containment", candCt, pairsCt, tCt)).foreach {
         case (op, cand, pairs, t) =>
           curves(op) = curves(op) :+ (n, cand)
-          val line = f"""{"dataset":"$name","op":"$op","n_docs":$n,"candidates":$cand,"pairs":$pairs,"sec":$t%.2f}"""
-          println(line); sb.append(line).append('\n')
+          sc.emit(f"""{"dataset":"$name","op":"$op","n_docs":$n,"candidates":$cand,"pairs":$pairs,"sec":$t%.2f}""")
       }
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(docs)
     }
@@ -149,15 +159,89 @@ object ScaleCurve {
     // statistics; the sf0.01 point rides along for the record)
     curves.toSeq.sortBy(_._1).foreach { case (op, pts) =>
       val scaled = pts.filter(_._1 >= 5000)
-      val (n0, c0) = scaled.head
-      val (n1, c1) = scaled.last
-      val alpha = math.log(c1.toDouble / c0) / math.log(n1.toDouble / n0)
-      val line = f"""{"op":"$op","alpha":$alpha%.3f,"fit_range":[$n0,$n1]}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"op":"$op","alpha":${endpointAlpha(scaled)}%.3f,"fit_range":[${scaled.head._1},${scaled.last._1}]}""")
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    spark.stop()
+  }
+
+  /** The sf0.01 → sf0.1 → sf0.1×4 → sf0.1×10 ladder as
+    * (dataset, factor, frame) rows; `blow` makes `factor` disjoint copies
+    * of the sf0.1 base. */
+  def ladder[A](sf001: A, sf01: A)(blow: (A, Int) => A): Seq[(String, Int, A)] =
+    Seq(("sf0.01", 1, sf001), ("sf0.1", 1, sf01),
+      ("sf0.1x4", 4, blow(sf01, 4)), ("sf0.1x10", 10, blow(sf01, 10)))
+
+  /** What the runner hands a family: its session, a scratch root for the
+    * stores it writes, and `emit` for its JSON lines. */
+  final class Run private[ScaleCurve] (val spark: SparkSession, val scratch: String) {
+    private[ScaleCurve] val out = new StringBuilder
+    def emit(line: String): Unit = { println(line); out.append(line).append('\n') }
+  }
+
+  val families: Seq[(String, Run => Unit)] = Seq(
+    "band" -> ScaleCurveBand.run _,
+    "bloom" -> ScaleCurveBloom.run _,
+    "bpe" -> ScaleCurveBpe.run _,
+    "dedup" -> dedup _,
+    "fuzzy" -> ScaleCurveFuzzy.run _,
+    "graph" -> ScaleCurveGraph.run _,
+    "ham" -> ScaleCurveHam.run _,
+    "inc" -> ScaleCurveInc.run _,
+    "knn" -> ScaleCurveKnn.run _,
+    "median" -> ScaleCurveMedian.run _,
+    "rp" -> ScaleCurveRp.run _,
+    "span" -> ScaleCurveSpan.run _,
+    "store" -> ScaleCurveStore.run _,
+    "sweep" -> ScaleCurveSweep.run _,
+    "z" -> ScaleCurveZ.run _)
+
+  /** The family `args` names, or the usage text naming every family. */
+  def family(args: Seq[String]): Either[String, Run => Unit] =
+    families.collectFirst { case (name, run) if args == Seq(name) => run }
+      .toRight(s"usage: ScaleCurve <family>; families: ${families.map(_._1).mkString(" ")}")
+
+  def main(args: Array[String]): Unit = family(args.toSeq) match {
+    case Left(usage) =>
+      System.err.println(usage)
+      sys.exit(2)
+    case Right(run) =>
+      val spark = graft.Session.local()
+      val scratch = Files.createTempDirectory("graft_scalecurve")
+      try {
+        val r = new Run(spark, scratch.toString)
+        run(r)
+        Files.write(Paths.get("scale_curve.jsonl"), r.out.toString.getBytes(UTF_8),
+          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      } finally {
+        org.apache.commons.io.FileUtils.deleteQuietly(scratch.toFile)
+        spark.stop()
+      }
+  }
+
+  def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** α through the curve's first and last points:
+    * log(y1 / y0) / log(n1 / n0). */
+  def endpointAlpha[Y](pts: Seq[(Long, Y)])(implicit y: Numeric[Y]): Double = {
+    val (n0, y0) = pts.head; val (n1, y1) = pts.last
+    math.log(y.toDouble(y1) / y.toDouble(y0)) / math.log(n1.toDouble / n0)
+  }
+
+  /** Least-squares slope of log(wall) on log(n) over every point; walls
+    * are floored at 1 ms so a sub-resolution point cannot reach log(0). */
+  def wallAlpha(pts: Seq[(Long, Double)]): Double =
+    logLogSlope(pts.map { case (n, w) => (n, math.max(1e-3, w)) })
+
+  /** Least-squares slope of log(count) on log(n); counts floored at 1. */
+  def countAlpha(pts: Seq[(Long, Long)]): Double =
+    logLogSlope(pts.map { case (n, c) => (n, math.max(1L, c).toDouble) })
+
+  private def logLogSlope(pts: Seq[(Long, Double)]): Double = {
+    val xs = pts.map(p => math.log(p._1.toDouble))
+    val ys = pts.map(p => math.log(p._2))
+    val (mx, my) = (xs.sum / xs.size, ys.sum / ys.size)
+    xs.zip(ys).map { case (x, y) => (x - mx) * (y - my) }.sum /
+      xs.map(x => (x - mx) * (x - mx)).sum
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.sinks.BandStore
+import ScaleCurve.{blowUp, endpointAlpha, timed}
 
 /** Scale-curve evidence for the persisted band index (`BandStore` —
   * query key `dedup_band_store`). The store's AMORTIZATION claim: with
@@ -14,7 +15,7 @@ import graft.sinks.BandStore
   * its cost grows ~linearly. Both wall-time curves are fitted and
   * appended so the claim is priced, not asserted.
   *
-  * History blows up with the ScaleCurve Caesar discipline (per-copy
+  * History blows up with the `ScaleCurve.blowUp` Caesar discipline (per-copy
   * substitution maps keep copies shingle-disjoint — no cross-copy pair
   * mass); the batch stays FIXED, so any probe-side growth is index
   * overhead, not workload growth. Probe results are asserted equal to
@@ -22,8 +23,8 @@ import graft.sinks.BandStore
   * must fail here.
   */
 object ScaleCurveBand {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     val par = spark.sparkContext.defaultParallelism
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
@@ -34,19 +35,15 @@ object ScaleCurveBand {
     val histBase = base.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"), col("text"))
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     def pairSet(df: DataFrame): Set[(Long, Long)] =
       df.select(col("id_a").cast("long"), col("id_b").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val root = java.nio.file.Files.createTempDirectory("graft_bandcurve").toString
-    val sb = new StringBuilder
+    val root = sc.scratch
     var probePts = Vector[(Long, Double)]()
     var resketchPts = Vector[(Long, Double)]()
     Seq(1, 4, 10).foreach { f =>
-      val hist = ScaleCurve.blowUp(histBase, f).repartition(par).localCheckpoint()
+      val hist = blowUp(histBase, f).repartition(par).localCheckpoint()
       val nH = hist.count()
       val path = s"$root/index_x$f"
       // ingest = write + compact: a `par`-task write leaves up to `par` files
@@ -96,20 +93,9 @@ object ScaleCurveBand {
       require(probePairs == directPairs,
         s"x$f: probe produced ${probePairs.size} pairs vs ${directPairs.size} self-contained")
       probePts :+= ((nH, probeSec)); resketchPts :+= ((nH, resketchSec))
-      val line = f"""{"dataset":"sf0.1x$f","op":"band_store","n_hist":$nH,"n_batch_fixed":true,"ingest_sec":$ingestSec%.2f,"probe_sec":$probeSec%.2f,"lean_ingest_sec":$leanIngestSec%.2f,"lean_probe_sec":$leanProbeSec%.2f,"lean_bands_shrink":$bandsShrink%.2f,"resketch_sec":$resketchSec%.2f,"pairs":${probePairs.size}}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"dataset":"sf0.1x$f","op":"band_store","n_hist":$nH,"n_batch_fixed":true,"ingest_sec":$ingestSec%.2f,"probe_sec":$probeSec%.2f,"lean_ingest_sec":$leanIngestSec%.2f,"lean_probe_sec":$leanProbeSec%.2f,"lean_bands_shrink":$bandsShrink%.2f,"resketch_sec":$resketchSec%.2f,"pairs":${probePairs.size}}""")
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(hist)
     }
-    def fit(pts: Vector[(Long, Double)]): Double = {
-      val (n0, t0) = pts.head; val (n1, t1) = pts.last
-      math.log(t1 / t0) / math.log(n1.toDouble / n0)
-    }
-    val line = f"""{"op":"band_store","alpha_probe":${fit(probePts)}%.3f,"alpha_resketch":${fit(resketchPts)}%.3f,"fit_range":[${probePts.head._1},${probePts.last._1}]}"""
-    println(line); sb.append(line).append('\n')
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    spark.stop()
+    sc.emit(f"""{"op":"band_store","alpha_probe":${endpointAlpha(probePts)}%.3f,"alpha_resketch":${endpointAlpha(resketchPts)}%.3f,"fit_range":[${probePts.head._1},${probePts.last._1}]}""")
   }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Bloom
+import ScaleCurve.{blowUp, endpointAlpha, ladder, timed}
 
 /** Scale-curve evidence for the Bloom-prefiltered decontamination:
   * measures the prefilter's SURVIVOR volume (the probe side the exact
@@ -19,28 +20,20 @@ import graft.operators.Bloom
   * 2^16 filter would show at sf0.1×10 (measured in BloomSpec).
   */
 object ScaleCurveBloom {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     import graft.functions.TextFunctions.{hash31, wordNgrams}
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     val base01 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
       .select("doc_id", "text")
     val base1 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select("doc_id", "text")
-    val sets = Seq(
-      "sf0.01" -> base01.localCheckpoint(),
-      "sf0.1" -> base1.localCheckpoint(),
-      "sf0.1x4" -> ScaleCurve.blowUp(base1, 4).localCheckpoint(),
-      "sf0.1x10" -> ScaleCurve.blowUp(base1, 10).localCheckpoint())
+    val sets = ladder(base01, base1)(blowUp(_, _))
+      .map { case (name, _, docs) => (name, docs.localCheckpoint()) }
 
     def grams(df: DataFrame) = df.select(col("doc_id"),
       explode(array_distinct(transform(wordNgrams(col("text"), 3), hash31(_)))).as("gh"))
 
-    val sb = new StringBuilder
     var pts = Vector[(Long, Long)]()
     sets.foreach { case (name, docs) =>
       val n = docs.count()
@@ -61,20 +54,11 @@ object ScaleCurveBloom {
         Bloom.prefilteredOverlap(docs, bench, "text", "doc_id", n = 3, bits = bits)
           .count())
       pts = pts :+ (n, survivors)
-      val line = f"""{"dataset":"$name","op":"bloom_prefilter","n_docs":$n,"candidates":$survivors,"pairs":$flagged,"sec":$t%.2f,"bits":$bits,"bench_grams":$nBench,"true_hits":$trueHits}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"dataset":"$name","op":"bloom_prefilter","n_docs":$n,"candidates":$survivors,"pairs":$flagged,"sec":$t%.2f,"bits":$bits,"bench_grams":$nBench,"true_hits":$trueHits}""")
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(benchGrams)
     }
     val scaled = pts.filter(_._1 >= pts.map(_._1).max / 15)
-    val (n0, c0) = scaled.head
-    val (n1, c1) = scaled.last
-    val alpha = math.log(c1.toDouble / c0) / math.log(n1.toDouble / n0)
-    val line = f"""{"op":"bloom_prefilter","alpha":$alpha%.3f,"fit_range":[$n0,$n1]}"""
-    println(line); sb.append(line).append('\n')
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    sc.emit(f"""{"op":"bloom_prefilter","alpha":${endpointAlpha(scaled)}%.3f,"fit_range":[${scaled.head._1},${scaled.last._1}]}""")
     sets.foreach(s => org.apache.spark.sql.GraftShim.unpersistCheckpoint(s._2))
-    spark.stop()
   }
 }

@@ -27,23 +27,20 @@ import org.apache.spark.sql.functions._
   * stay FLAT in table size) and its intercept (per-query fixed cost —
   * grows with table bytes, amortized to noise over any real corpus: at
   * 100 TB the table ships once per task and encode dominates). Both are
-  * reported; the flatness assert is on the slope.
-  *
-  * Usage: runMain graft.tools.ScaleCurveBpe [sfDir] [reps=20]
-  * Prints one JSON line per table size (appended to scale_curve.jsonl).
+  * reported; the flatness assert is on the slope. One JSON line per
+  * table size.
   */
 object ScaleCurveBpe {
-  def main(args: Array[String]): Unit = {
-    // sf0.1 by default: the slope split needs encode time to dominate the
-    // per-query submit cost, and at sf0.01's 500 docs it doesn't
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val reps = 5
+    val spark = sc.spark
     // the 1024-merge artifact's prefixes: slicing keeps rank order valid
     // (a BPE table's first k merges ARE the k-merge table of the same
     // trainer run)
     val full = graft.functions.Bpe.LargeMerges
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    // sf0.1: the slope split needs encode time to dominate the per-query
+    // submit cost, and at sf0.01's 500 docs it doesn't
+    val docs = ScaleCurve.documents(spark)._2
       .select(col("text")).repartition(8).cache()
     val nDocs = docs.count()
     val words = docs.select(sum(size(split(col("text"), " ")))).head().getLong(0)
@@ -65,7 +62,6 @@ object ScaleCurveBpe {
       }
     val totals = scala.collection.mutable.Map[Int, Long]()
     val rates = scala.collection.mutable.Map[Int, Double]()
-    val sb = new StringBuilder
     for (m <- Seq(40, 256, 1024, 51200)) {
       val merges = tableOf(m)
       val bytes = serializedSize(graft.expressions.BpeUtil.buildTable(merges))
@@ -108,8 +104,7 @@ object ScaleCurveBpe {
       val fixedSecPerQuery =
         math.max(0.0, secSmall / reps - words * marginalSecPerWord)
       val wordsPerSec = 1.0 / marginalSecPerWord
-      val line = f"""{"op":"bpe_encode","merges":$m,"table_bytes":$bytes,"docs":$nDocs,"docs_big":$nBig,"marginal_words_per_sec":${wordsPerSec.round},"fixed_ms_per_query":${fixedSecPerQuery * 1e3}%.1f,"sweep_small_sec":$secSmall%.3f,"sweep_big_sec":$secBig%.3f}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"op":"bpe_encode","merges":$m,"table_bytes":$bytes,"docs":$nDocs,"docs_big":$nBig,"marginal_words_per_sec":${wordsPerSec.round},"fixed_ms_per_query":${fixedSecPerQuery * 1e3}%.1f,"sweep_small_sec":$secSmall%.3f,"sweep_big_sec":$secBig%.3f}""")
       rates(m) = wordsPerSec
     }
     // the claim under test: marginal encode throughput FLAT in shipped
@@ -118,11 +113,6 @@ object ScaleCurveBpe {
     require(rates(51200) >= 0.6 * rates(1024),
       s"marginal encode rate collapsed with table size: ${rates(51200).round} " +
         s"words/s at 51200 merges vs ${rates(1024).round} at 1024")
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    spark.stop()
   }
 
   private def serializedSize(o: AnyRef): Long = {

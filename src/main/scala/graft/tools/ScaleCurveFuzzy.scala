@@ -3,10 +3,11 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.etl.FuzzyLink
+import ScaleCurve.{endpointAlpha, timed}
 
 /** Scale-curve evidence for the deletion-neighborhood blocking behind
   * `etl_fuzzy_link` (d = 1, supplier names) and `etl_fuzzy_link2`
-  * (d = 2, part names) — the ScaleCurve discipline every candidate
+  * (d = 2, part names) — the scale-curve discipline every candidate
   * generator in this repo carries: candidate-pair volume, verified-pair
   * volume, and wall as the name corpus blows up ×1/×4/×10.
   *
@@ -22,13 +23,9 @@ import graft.etl.FuzzyLink
   * the corpus, α → 2 would mean it degenerated toward all-pairs.
   */
 object ScaleCurveFuzzy {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val sb = new StringBuilder
     // (maxDist, table, column, op label) — each key priced on ITS corpus
     Seq((1, "supplier", "s_name", "fuzzy_link"),
         (2, "part", "p_name", "fuzzy_link2")).foreach {
@@ -54,8 +51,7 @@ object ScaleCurveFuzzy {
             FuzzyLink.editNeighbors(names, "name", d).count())
           cands += f -> nCand; pairsM += f -> nPairs
           candPts :+= ((n, nCand.toDouble))
-          val line = f"""{"dataset":"sf0.1x$f","op":"$op","max_dist":$d,"n_names":$n,"candidates":$nCand,"pairs":$nPairs,"cand_sec":$candSec%.2f,"wall_sec":$wallSec%.2f}"""
-          println(line); sb.append(line).append('\n')
+          sc.emit(f"""{"dataset":"sf0.1x$f","op":"$op","max_dist":$d,"n_names":$n,"candidates":$nCand,"pairs":$nPairs,"cand_sec":$candSec%.2f,"wall_sec":$wallSec%.2f}""")
           org.apache.spark.sql.GraftShim.unpersistCheckpoint(names)
         }
         // cross-copy candidates are structurally impossible, so both
@@ -66,10 +62,7 @@ object ScaleCurveFuzzy {
           require(pairsM(f) == pairsM(1) * f,
             s"$op pairs not exactly x$f: ${pairsM(f)} vs ${pairsM(1)} * $f")
         }
-        val (n0, c0) = candPts.head; val (n1, c1) = candPts.last
-        val alpha = math.log(c1 / c0) / math.log(n1.toDouble / n0)
-        val line = f"""{"op":"$op","alpha_candidates":$alpha%.3f,"mass_exact_xk":true,"fit_range":[$n0,$n1]}"""
-        println(line); sb.append(line).append('\n')
+        sc.emit(f"""{"op":"$op","alpha_candidates":${endpointAlpha(candPts)}%.3f,"mass_exact_xk":true,"fit_range":[${candPts.head._1},${candPts.last._1}]}""")
     }
     // ---- cross-table fuzzy JOIN under the same blow-up discipline:
     // both sides tag-prefixed per copy (tag distance 2d+1 > 2d keeps
@@ -96,8 +89,7 @@ object ScaleCurveFuzzy {
         val (n, wallSec) = timed(
           FuzzyLink.editJoin(l, "name", r, "name", d).count())
         links += f -> n
-        val line = f"""{"dataset":"sf0.1x$f","op":"fuzzy_join","max_dist":$d,"n_left":${1000 * f},"links":$n,"wall_sec":$wallSec%.2f}"""
-        println(line); sb.append(line).append('\n')
+        sc.emit(f"""{"dataset":"sf0.1x$f","op":"fuzzy_join","max_dist":$d,"n_left":${1000 * f},"links":$n,"wall_sec":$wallSec%.2f}""")
         org.apache.spark.sql.GraftShim.unpersistCheckpoint(l)
         org.apache.spark.sql.GraftShim.unpersistCheckpoint(r)
       }
@@ -160,8 +152,7 @@ object ScaleCurveFuzzy {
             segmentBlocking = true).count())
         jLinks += f -> n
         joinPts :+= ((nB.toLong * f, wallSec))
-        val line = f"""{"op":"fuzzy_join_len","scheme":"seg","max_dist":$d,"name_len":$l,"n_left":${nB * f},"links":$n,"wall_sec":$wallSec%.2f}"""
-        println(line); sb.append(line).append('\n')
+        sc.emit(f"""{"op":"fuzzy_join_len","scheme":"seg","max_dist":$d,"name_len":$l,"n_left":${nB * f},"links":$n,"wall_sec":$wallSec%.2f}""")
         org.apache.spark.sql.GraftShim.unpersistCheckpoint(lhs)
         org.apache.spark.sql.GraftShim.unpersistCheckpoint(rhs)
       }
@@ -170,10 +161,8 @@ object ScaleCurveFuzzy {
           s"fuzzy_join_len links not exactly ${nB} x $f: ${jLinks(f)} — " +
             "a planted d=2 pair was missed (recall hole) or a spurious pair passed")
       }
-      val (n0, w0) = joinPts.head; val (n1, w1) = joinPts.last
-      val alphaJ = math.log(w1 / w0) / math.log(n1.toDouble / n0)
-      val aLine = f"""{"op":"fuzzy_join_len","alpha_wall":$alphaJ%.3f,"links_exact_xk":true,"fit_range":[$n0,$n1]}"""
-      println(aLine); sb.append(aLine).append('\n')
+      val alphaJ = endpointAlpha(joinPts)
+      sc.emit(f"""{"op":"fuzzy_join_len","alpha_wall":$alphaJ%.3f,"links_exact_xk":true,"fit_range":[${joinPts.head._1},${joinPts.last._1}]}""")
       require(alphaJ < 1.35,
         f"editJoin d=2 L=200 wall α=$alphaJ%.3f over ×10 growth — super-linear")
     }
@@ -223,8 +212,7 @@ object ScaleCurveFuzzy {
             (if (seg) FuzzyLink.editNeighborsSeg(corpus, "name", d)
             else FuzzyLink.editNeighbors(corpus, "name", d)).count())
           rows += (l, d, scheme) -> nBlocks; pairs += (l, d, scheme) -> nPairs
-          val line = f"""{"op":"fuzzy_len","scheme":"$scheme","max_dist":$d,"name_len":$l,"n_names":${3 * nBase},"block_rows":$nBlocks,"pairs":$nPairs,"wall_sec":$wallSec%.2f}"""
-          println(line); sb.append(line).append('\n')
+          sc.emit(f"""{"op":"fuzzy_len","scheme":"$scheme","max_dist":$d,"name_len":$l,"n_names":${3 * nBase},"block_rows":$nBlocks,"pairs":$nPairs,"wall_sec":$wallSec%.2f}""")
         }
       }
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(corpus)
@@ -252,10 +240,5 @@ object ScaleCurveFuzzy {
       else require(growth >= 3.0 && growth <= 6.0,
         s"d=1 neighborhood growth $growth outside the ~4x linear band")
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    spark.stop()
   }
 }

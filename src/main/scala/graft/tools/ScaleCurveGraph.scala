@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.operators.Graph
+import ScaleCurve.{endpointAlpha, timed}
 
 /** Scale-curve evidence for the triangle family (`q_triangle_count`) —
   * two measurements, each enforced by `require`:
@@ -22,13 +23,9 @@ import graft.operators.Graph
   *     full operator to pin the absolute cost.
   */
 object ScaleCurveGraph {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     import spark.implicits._
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // real co-purchase edges at sf0.01 (the q_triangle_count derivation)
     val baskets = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
@@ -51,7 +48,6 @@ object ScaleCurveGraph {
     Graph.triangleCounts(base).count()
     Graph.releaseResults()
 
-    val sb = new StringBuilder
     var pts = Vector[(Long, Long, Double)]() // (m, triangles, wall)
     val off = 10000000L
     Seq(1, 4, 10).foreach { f =>
@@ -73,8 +69,7 @@ object ScaleCurveGraph {
       }
       val ((nNodes, nTri), wall) = results.minBy(_._2)
       pts :+= ((m, nTri, wall))
-      val line = f"""{"op":"triangles","shape":"disjoint_x$f","edges":$m,"triangles":$nTri,"nodes_in_tri":$nNodes,"wall_sec":$wall%.2f}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"op":"triangles","shape":"disjoint_x$f","edges":$m,"triangles":$nTri,"nodes_in_tri":$nNodes,"wall_sec":$wall%.2f}""")
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(e)
     }
     val (m0, t0, w0) = pts.head
@@ -89,10 +84,9 @@ object ScaleCurveGraph {
     // (w10 ≥ 2·w1); otherwise record the floor itself — the ×k-exact
     // TRIANGLE COUNTS above are the load-bearing scaling evidence, and
     // the wall gate only rejects super-linear blow-up.
-    val alphaW = math.log(w1 / w0) / math.log(m1.toDouble / m0)
+    val alphaW = endpointAlpha(pts.map(p => (p._1, p._3)))
     val overheadBound = w1 < 2 * w0
-    val aLine = f"""{"op":"triangles","alpha_wall":$alphaW%.3f,"overhead_bound":$overheadBound,"fit_range":[$m0,$m1]}"""
-    println(aLine); sb.append(aLine).append('\n')
+    sc.emit(f"""{"op":"triangles","alpha_wall":$alphaW%.3f,"overhead_bound":$overheadBound,"fit_range":[$m0,$m1]}""")
     require(alphaW < 1.35,
       f"triangle wall read α=$alphaW%.3f over ×10 disjoint growth — super-linear")
 
@@ -117,16 +111,10 @@ object ScaleCurveGraph {
       require(oriented == 0L && naive >= h.toLong * (h - 1) / 2,
         s"star h=$h: oriented wedges $oriented (want 0), naive $naive")
       require(nTri == 0L, s"star graph has no triangles, got $nTri")
-      val line = f"""{"op":"triangles","shape":"star","hub_degree":$h,"naive_wedges":$naive,"oriented_wedges":$oriented,"wall_sec":$wall%.2f}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"op":"triangles","shape":"star","hub_degree":$h,"naive_wedges":$naive,"oriented_wedges":$oriented,"wall_sec":$wall%.2f}""")
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(star)
       Graph.releaseResults()
     }
 
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    spark.stop()
   }
 }

@@ -3,12 +3,13 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, ProductQuant}
+import ScaleCurve.{endpointAlpha, ladder, timed}
 
 /** Scale-curve evidence for the ROUND-10 families [[ScaleCurve]] doesn't
   * cover: the 64-bit hamming chunk join (image/audio fingerprints) and
   * PQ encode/search.
   *
-  * Hamming blow-up rule — the fingerprint analog of ScaleCurve's Caesar
+  * Hamming blow-up rule — the fingerprint analog of `ScaleCurve.blowUp`'s Caesar
   * map: each copy XORs every fingerprint with a copy-specific 64-bit
   * mask. XOR by a constant is a hamming-space ISOMETRY
   * (hamming(a^m, b^m) = hamming(a, b)), so every within-copy near-dup
@@ -24,13 +25,13 @@ import graft.operators.{Dedup, ProductQuant}
   * records rows/sec staying ~flat as the corpus grows 10×: the
   * evidence that per-row cost is constant, i.e. total cost is linear.
   *
-  * Output: same JSONL shape as ScaleCurve, appended to
-  * `scale_curve.jsonl`, with fitted α per op (candidates ~ n^α over the
-  * sf0.1 → ×10 range; α ≈ 1 is the pass bar).
+  * Output: same JSON line shape as the dedup family, with fitted α per
+  * op (candidates ~ n^α over the sf0.1 → ×10 range; α ≈ 1 is the pass
+  * bar).
   */
 object ScaleCurveHam {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     val par = spark.sparkContext.defaultParallelism
     val m = graft.multimodal.Multimodal
 
@@ -48,19 +49,12 @@ object ScaleCurveHam {
           col(col64).bitwiseXOR(lit(mask(k))).as(col64))
       }.reduce(_ unionByName _)
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-
-    val sb = new StringBuilder
     val curves = scala.collection.mutable.Map[String, Vector[(Long, Long)]]()
       .withDefaultValue(Vector())
     def record(name: String, op: String, n: Long, cand: Long, pairs: Long,
                sec: Double): Unit = {
       curves(op) = curves(op) :+ (n, cand)
-      val line =
-        f"""{"dataset":"$name","op":"$op","n_docs":$n,"candidates":$cand,"pairs":$pairs,"sec":$sec%.2f}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"dataset":"$name","op":"$op","n_docs":$n,"candidates":$cand,"pairs":$pairs,"sec":$sec%.2f}""")
     }
 
     // ---- hamming chunk join over REAL codec fingerprints ----
@@ -77,20 +71,16 @@ object ScaleCurveHam {
 
     Seq(("image_phash", "phash", imageReps _), ("audio_fp", "afp", audioReps _))
       .foreach { case (fam, hcol, reps) =>
-        val base01 = reps("sf0.01").localCheckpoint()
-        val base1 = reps("sf0.1").localCheckpoint()
-        val sets = Seq(
-          "sf0.01" -> base01, "sf0.1" -> base1,
-          "sf0.1x4" -> blowUpFp(base1, hcol, 4).localCheckpoint(),
-          "sf0.1x10" -> blowUpFp(base1, hcol, 10).localCheckpoint())
-        sets.foreach { case (name, fps) =>
+        val sets = ladder(reps("sf0.01").localCheckpoint(), reps("sf0.1").localCheckpoint())(
+          blowUpFp(_, hcol, _).localCheckpoint())
+        sets.foreach { case (name, _, fps) =>
           val n = fps.count()
           val (cand, _) = timed(Dedup.hammingCandidates64(fps, hcol, "doc_id").count())
           val (pairs, t) = timed(
             Dedup.hammingPairs64(fps, hcol, "doc_id", maxHamming = 2).count())
           record(name, fam, n, cand, pairs, t)
         }
-        sets.foreach(s => org.apache.spark.sql.GraftShim.unpersistCheckpoint(s._2))
+        sets.foreach(s => org.apache.spark.sql.GraftShim.unpersistCheckpoint(s._3))
       }
 
     // ---- PQ encode + ADC search (linear by construction; the curve
@@ -105,17 +95,15 @@ object ScaleCurveHam {
           transform(col("embedding"), x => x + lit(k * 0.001)).as("embedding"))
       }.reduce(_ unionByName _)
     val e1 = emb("sf0.1").localCheckpoint()
-    val embSets = Seq(
-      "sf0.01" -> emb("sf0.01").localCheckpoint(), "sf0.1" -> e1,
-      "sf0.1x4" -> blowUpEmb(e1, 4).localCheckpoint(),
-      "sf0.1x10" -> blowUpEmb(e1, 10).localCheckpoint())
+    val embSets = ladder(emb("sf0.01").localCheckpoint(), e1)(
+      blowUpEmb(_, _).localCheckpoint())
     // ONE codebook trained on the base corpus serves every scale —
     // the serving-path shape (train once, encode/search forever)
     val cb = ProductQuant.train(e1, "embedding", "vec_id",
       m = 4, k = 8, dims = 64, iters = 2).localCheckpoint()
     val qv = e1.filter(col("vec_id") === 0)
       .select(transform(col("embedding"), _.cast("double"))).head().getSeq[Double](0)
-    embSets.foreach { case (name, e) =>
+    embSets.foreach { case (name, _, e) =>
       val n = e.count()
       val (codes, tEnc) = timed {
         val c = ProductQuant.encode(e, "embedding", "vec_id", cb, m = 4, dims = 64)
@@ -128,19 +116,11 @@ object ScaleCurveHam {
       record(name, "pq_search", n, n, 10L, tSearch)
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(codes)
     }
-    embSets.foreach(s => org.apache.spark.sql.GraftShim.unpersistCheckpoint(s._2))
+    embSets.foreach(s => org.apache.spark.sql.GraftShim.unpersistCheckpoint(s._3))
 
     curves.toSeq.sortBy(_._1).foreach { case (op, pts) =>
       val scaled = pts.filter(_._1 >= pts.map(_._1).max / 15) // sf0.1..x10 range
-      val (n0, c0) = scaled.head
-      val (n1, c1) = scaled.last
-      val alpha = math.log(c1.toDouble / c0) / math.log(n1.toDouble / n0)
-      val line = f"""{"op":"$op","alpha":$alpha%.3f,"fit_range":[$n0,$n1]}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"op":"$op","alpha":${endpointAlpha(scaled)}%.3f,"fit_range":[${scaled.head._1},${scaled.last._1}]}""")
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    spark.stop()
   }
 }

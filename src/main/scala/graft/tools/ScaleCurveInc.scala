@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import ScaleCurve.{blowUp, endpointAlpha, timed}
 
 /** Scale-curve evidence for the INCREMENTAL near-dup path
   * (`Dedup.minhashNearDupsAgainst` — query key `dedup_incremental_near`),
@@ -10,7 +11,7 @@ import graft.operators.Dedup
   * batch × collision rate, never |history|² (the batch probes the
   * history band index; history never self-joins).
   *
-  * Measurement design (the `ScaleCurve` Caesar discipline): split sf0.1
+  * Measurement design (the `ScaleCurve.blowUp` Caesar discipline): split sf0.1
   * documents into batch (doc_id % 10 = 0) and history (the rest) BEFORE
   * blowing up, then blow BOTH sides up by the same factor with matching
   * per-copy Caesar maps — copy k of the batch shares its substitution
@@ -21,27 +22,21 @@ import graft.operators.Dedup
   * α ≈ 1 is the pass bar, α → 2 would mean the cross join degenerated
   * toward batch × history.
   *
-  * Output: one JSON line per factor + a fitted-alpha line, appended to
-  * `scale_curve.jsonl` like the sibling tools.
+  * Output: one JSON line per factor + a fitted-alpha line.
   */
 object ScaleCurveInc {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     val par = spark.sparkContext.defaultParallelism
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val batchBase = base.filter(col("doc_id") % 10 === 0)
     val histBase = base.filter(col("doc_id") % 10 =!= 0)
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-
-    val sb = new StringBuilder
     var pts = Vector[(Long, Long)]()
     Seq(1, 4, 10).foreach { f =>
-      val hist = ScaleCurve.blowUp(histBase, f, "lang", "source", "n_chars").localCheckpoint()
-      val batch = ScaleCurve.blowUp(batchBase, f, "lang", "source", "n_chars").localCheckpoint()
+      val hist = blowUp(histBase, f, "lang", "source", "n_chars").localCheckpoint()
+      val batch = blowUp(batchBase, f, "lang", "source", "n_chars").localCheckpoint()
       val nH = hist.count(); val nB = batch.count()
       val mh = Dedup.minhashed(hist.repartition(par), "text", "doc_id")
         .filter(size(col("hs")) > 0).cache()
@@ -58,19 +53,10 @@ object ScaleCurveInc {
         n
       }
       pts = pts :+ ((nH + nB, cand))
-      val line = f"""{"dataset":"sf0.1x$f","op":"incremental_near","n_hist":$nH,"n_batch":$nB,"candidates":$cand,"pairs":$pairs,"sec":$t%.2f}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"dataset":"sf0.1x$f","op":"incremental_near","n_hist":$nH,"n_batch":$nB,"candidates":$cand,"pairs":$pairs,"sec":$t%.2f}""")
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(hist)
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(batch)
     }
-    val (n0, c0) = pts.head
-    val (n1, c1) = pts.last
-    val alpha = math.log(c1.toDouble / c0) / math.log(n1.toDouble / n0)
-    val line = f"""{"op":"incremental_near","alpha":$alpha%.3f,"fit_range":[$n0,$n1]}"""
-    println(line); sb.append(line).append('\n')
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    spark.stop()
+    sc.emit(f"""{"op":"incremental_near","alpha":${endpointAlpha(pts)}%.3f,"fit_range":[${pts.head._1},${pts.last._1}]}""")
   }
 }

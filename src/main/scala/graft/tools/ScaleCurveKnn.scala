@@ -3,9 +3,10 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import ScaleCurve.{endpointAlpha, timed}
 
 /** Scale-curve evidence for the IVF-blocked kNN graph (`sim_knn_graph`)
-  * — the ScaleCurve discipline every candidate generator in this repo
+  * — the scale-curve discipline every candidate generator in this repo
   * carries, and for this one the curve IS the dial rule: candidate mass
   * is Σ_points Σ_probed-clusters |cluster| ≈ n · nProbe · (n/K), so a
   * FIXED centroid count K degenerates toward all-pairs (α → 2
@@ -24,13 +25,9 @@ import graft.operators.Similarity
   * convention the sim_* keys use.
   */
 object ScaleCurveKnn {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     import spark.implicits._
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     val dim = 32
     val nProbe = 2
@@ -53,7 +50,6 @@ object ScaleCurveKnn {
         .count()
     }
 
-    val sb = new StringBuilder
     var alphas = Map[String, Double]()
     Seq(("fixed_k", (_: Int) => 16),
         ("scaled_k", (n: Int) => math.max(16, n / 125))).foreach {
@@ -70,16 +66,13 @@ object ScaleCurveKnn {
             Similarity.knnGraph(c, "embedding", "vec_id", cents, "cid",
               k = 5, nProbe = nProbe).count())
           pts :+= ((n.toLong, nCand.toDouble))
-          val line = f"""{"op":"knn_graph","policy":"$policy","n":$n,"k_centroids":$k,"n_probe":$nProbe,"candidates":$nCand,"edges":$nEdges,"cand_sec":$candSec%.2f,"wall_sec":$wallSec%.2f}"""
-          println(line); sb.append(line).append('\n')
+          sc.emit(f"""{"op":"knn_graph","policy":"$policy","n":$n,"k_centroids":$k,"n_probe":$nProbe,"candidates":$nCand,"edges":$nEdges,"cand_sec":$candSec%.2f,"wall_sec":$wallSec%.2f}""")
           org.apache.spark.sql.GraftShim.unpersistCheckpoint(c)
           org.apache.spark.sql.GraftShim.unpersistCheckpoint(cents)
         }
-        val (n0, c0) = pts.head; val (n1, c1) = pts.last
-        val alpha = math.log(c1 / c0) / math.log(n1.toDouble / n0)
+        val alpha = endpointAlpha(pts)
         alphas += policy -> alpha
-        val line = f"""{"op":"knn_graph","policy":"$policy","alpha_candidates":$alpha%.3f,"fit_range":[$n0,$n1]}"""
-        println(line); sb.append(line).append('\n')
+        sc.emit(f"""{"op":"knn_graph","policy":"$policy","alpha_candidates":$alpha%.3f,"fit_range":[${pts.head._1},${pts.last._1}]}""")
     }
     // the curve must EXPOSE the fixed-K trap and PROVE the scaled-K rule
     require(alphas("fixed_k") > 1.7,
@@ -87,10 +80,5 @@ object ScaleCurveKnn {
     require(alphas("scaled_k") < 1.2,
       f"scaled-K curve read α=${alphas("scaled_k")}%.3f — the documented dial rule does not hold")
 
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    spark.stop()
   }
 }

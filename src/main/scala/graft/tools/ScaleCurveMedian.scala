@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import ScaleCurve.{timed, wallAlpha}
 
 /** Scale-curve evidence for `graft_median_long` (round 19, verdict item
   * 6): the SQL-surface exact median must scale like the aggregate it
@@ -25,26 +26,13 @@ import org.apache.spark.sql.functions._
   *              rows. Measured for the record — the absolute wall gap
   *              at ×10 is the scale-killer made visible.
   *
-  * Output: one JSON line per (shape, n) + fitted α lines; paste into
-  * scale_curve.jsonl. Run on a QUIET host:
-  * `sbt "runMain graft.tools.ScaleCurveMedian"`. */
+  * Output: one JSON line per (shape, n) + fitted α lines. Run on a QUIET
+  * host: `sbt "runMain graft.tools.ScaleCurve median"`. */
 object ScaleCurveMedian {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     graft.GraftFunctions.register(spark)
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def alpha(pts: Vector[(Long, Double)]): Double = {
-      val xs = pts.map(p => math.log(p._1.toDouble))
-      val ys = pts.map(p => math.log(math.max(1e-3, p._2)))
-      val (mx, my) = (xs.sum / xs.size, ys.sum / ys.size)
-      xs.zip(ys).map { case (x, y) => (x - mx) * (y - my) }.sum /
-        xs.map(x => (x - mx) * (x - mx)).sum
-    }
 
     // 3 groups, 100k distinct values — the return-flag/money-cents shape
     def data(n: Long): DataFrame = spark.range(n)
@@ -89,9 +77,9 @@ object ScaleCurveMedian {
         require(out.length == 3, s"$name: expected 3 groups, got ${out.length}")
         medians((name, n)) = out.map(r => r.getLong(0) -> r.getDouble(1)).toMap
         pts :+= (n, wall)
-        println(f"""{"op":"median_by_group","shape":"$name","n":$n,"wall_sec":$wall%.2f}""")
+        sc.emit(f"""{"op":"median_by_group","shape":"$name","n":$n,"wall_sec":$wall%.2f}""")
       }
-      println(f"""{"op":"median_by_group","shape":"$name","alpha_wall":${alpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
+      sc.emit(f"""{"op":"median_by_group","shape":"$name","alpha_wall":${wallAlpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
     }
     // the curve is only evidence if the three constructions compute the
     // SAME statistic: per n, all shapes must return identical per-group
@@ -100,7 +88,6 @@ object ScaleCurveMedian {
       val ms = shapes.map { case (name, _) => medians((name, n)) }
       require(ms.forall(_ == ms.head), s"median mismatch at n=$n: $ms")
     }
-    println(s"""{"op":"median_by_group","shapes_agree":true,"n_checked":${ns.size}}""")
-    spark.stop()
+    sc.emit(s"""{"op":"median_by_group","shapes_agree":true,"n_checked":${ns.size}}""")
   }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.RandomProjection
+import ScaleCurve.{endpointAlpha, ladder, timed}
 
 /** Scale-curve evidence for the SRP-LSH family (round-11 addition):
   * candidate volume must track the true near-dup mass (~linear in corpus
@@ -18,12 +19,12 @@ import graft.operators.RandomProjection
   * factor² identical cross-copy pairs and measure the corpus, not the
   * plan.
   *
-  * Output: same JSONL shape as ScaleCurve, appended to
-  * `scale_curve.jsonl`; α fit over the sf0.1 → ×10 range (α ≈ 1 pass bar).
+  * Output: same JSON line shape as the dedup family; α fit over the
+  * sf0.1 → ×10 range (α ≈ 1 pass bar).
   */
 object ScaleCurveRp {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
 
     val dims = 64
     def mask(k: Int): Long = k.toLong * 0x9E3779B97F4A7C15L
@@ -51,16 +52,8 @@ object ScaleCurveRp {
               .otherwise(x)).as("v"))
       }.reduce(_ unionByName _)
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-
-    val base1 = planted("sf0.1").localCheckpoint()
-    val sets = Seq(
-      "sf0.01" -> planted("sf0.01").localCheckpoint(),
-      "sf0.1" -> base1,
-      "sf0.1x4" -> blowUp(base1, 4).localCheckpoint(),
-      "sf0.1x10" -> blowUp(base1, 10).localCheckpoint())
+    val sets = ladder(planted("sf0.01").localCheckpoint(), planted("sf0.1").localCheckpoint())(
+      blowUp(_, _).localCheckpoint())
 
     // Two curves. FIXED 16-bit bands document the textbook LSH failure
     // mode: the random-collision term 3·2^-16·n²/2 overtakes the linear
@@ -70,7 +63,6 @@ object ScaleCurveRp {
     // by 2 per 4× corpus (collision 2^-bb tracks 1/n²·const) — holding
     // candidate mass ≈ true mass (α ≈ 1) at a measured, modest recall
     // cost (p^bandBits per band: 0.48 → 0.40 per band at cos ≈ 0.99).
-    val sb = new StringBuilder
     val curves = scala.collection.mutable.Map[String, Vector[(Long, Long)]]()
       .withDefaultValue(Vector())
     def run(op: String, name: String, c: DataFrame, bandBits: Int): Unit = {
@@ -81,27 +73,17 @@ object ScaleCurveRp {
       val (pairs, t) = timed(RandomProjection.rpLshPairs(
         c, "v", "vec_id", dims, 0.9, bits = bits, bandBits = bandBits).count())
       curves(op) = curves(op) :+ ((n, cand))
-      val line =
-        f"""{"dataset":"$name","op":"$op","n_docs":$n,"band_bits":$bandBits,"candidates":$cand,"pairs":$pairs,"sec":$t%.2f}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"dataset":"$name","op":"$op","n_docs":$n,"band_bits":$bandBits,"candidates":$cand,"pairs":$pairs,"sec":$t%.2f}""")
     }
-    sets.foreach { case (name, c) => run("rp_lsh_fixed", name, c, 16) }
+    sets.foreach { case (name, _, c) => run("rp_lsh_fixed", name, c, 16) }
     // log-scaled width: +2 bits per 4× corpus over the sf0.1 base
     val scaledBits = Map("sf0.01" -> 16, "sf0.1" -> 16, "sf0.1x4" -> 18, "sf0.1x10" -> 20)
-    sets.foreach { case (name, c) => run("rp_lsh_scaled", name, c, scaledBits(name)) }
+    sets.foreach { case (name, _, c) => run("rp_lsh_scaled", name, c, scaledBits(name)) }
 
     curves.toSeq.sortBy(_._1).foreach { case (op, pts) =>
       val inRange = pts.filter(_._1 >= pts.map(_._1).max / 15)
-      val (n0, c0) = inRange.head
-      val (n1, c1) = inRange.last
-      val alpha = math.log(c1.toDouble / c0) / math.log(n1.toDouble / n0)
-      val line = f"""{"op":"$op","alpha":$alpha%.3f,"fit_range":[$n0,$n1]}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"op":"$op","alpha":${endpointAlpha(inRange)}%.3f,"fit_range":[${inRange.head._1},${inRange.last._1}]}""")
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    sets.foreach(s => org.apache.spark.sql.GraftShim.unpersistCheckpoint(s._2))
-    spark.stop()
+    sets.foreach(s => org.apache.spark.sql.GraftShim.unpersistCheckpoint(s._3))
   }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import ScaleCurve.{countAlpha, ladder, timed}
 
 /** Scale-curve evidence for SPAN-level exact dedup (`dedup_substring`,
   * `Dedup.removeRepeatedSpans`) under the Caesar blow-up discipline
@@ -21,12 +22,11 @@ import graft.operators.Dedup
   * (a 12-token run of pure punctuation would be copy-identical), so it is
   * reported as `mass_exact_xk` + a WARN line rather than a hard abort.
   *
-  * Output: one JSON line per dataset + fitted α lines (volume ∝ n^α);
-  * paste into scale_curve.jsonl.
+  * Output: one JSON line per dataset + fitted α lines (volume ∝ n^α).
   */
 object ScaleCurveSpan {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     val par = spark.sparkContext.defaultParallelism
     val winLen = 12
 
@@ -51,17 +51,13 @@ object ScaleCurveSpan {
       .select("doc_id", "text")
     val base1 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select("doc_id", "text")
-    val datasets: Seq[(String, DataFrame, Int)] = Seq(
-      ("sf0.01", base01, 1),
-      ("sf0.1", base1, 1),
-      ("sf0.1x4", blowUp(base1, 4), 4),
-      ("sf0.1x10", blowUp(base1, 10), 10))
+    val datasets = ladder(base01, base1)(blowUp)
 
     var baseMass = -1L
     val curves = scala.collection.mutable.Map[String, Vector[(Long, Long)]]()
       .withDefaultValue(Vector())
 
-    datasets.foreach { case (name, docs0, factor) =>
+    datasets.foreach { case (name, factor, docs0) =>
       val docs = docs0.repartition(par).localCheckpoint()
       val n = docs.count()
 
@@ -90,10 +86,8 @@ object ScaleCurveSpan {
       win.unpersist()
 
       // the operator end-to-end: removed-token mass + wall
-      val t0 = System.nanoTime()
-      val mass = Dedup.removeRepeatedSpans(docs, "text", "doc_id", winLen)
-        .agg(sum(col("n_dup_tokens"))).head().getLong(0)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (mass, wall) = timed(Dedup.removeRepeatedSpans(docs, "text", "doc_id", winLen)
+        .agg(sum(col("n_dup_tokens"))).head().getLong(0))
 
       if (name == "sf0.1") baseMass = mass
       if (factor > 1 && mass != baseMass * factor) {
@@ -101,7 +95,7 @@ object ScaleCurveSpan {
         // don't abort — the fitted alphas below are still meaningful
         println(s"""{"warn":"span_dedup mass not exactly x$factor: base $baseMass, got $mass (non-substitutable window text?)"}""")
       }
-      println(f"""{"dataset":"$name","op":"span_dedup","n_docs":$n,"windows":$nWindows,"hot_windows":$nHot,"hot_occurrences":$hotOcc,"covered_positions":$nCover,"removed_tokens":$mass,"mass_exact_xk":${factor == 1 || mass == baseMass * factor},"wall_sec":$wall%.2f}""")
+      sc.emit(f"""{"dataset":"$name","op":"span_dedup","n_docs":$n,"windows":$nWindows,"hot_windows":$nHot,"hot_occurrences":$hotOcc,"covered_positions":$nCover,"removed_tokens":$mass,"mass_exact_xk":${factor == 1 || mass == baseMass * factor},"wall_sec":$wall%.2f}""")
       if (name != "sf0.01") { // fit over the sf0.1 blow-up family only
         curves("windows") :+= (n, nWindows)
         curves("hot_occurrences") :+= (n, hotOcc)
@@ -109,16 +103,8 @@ object ScaleCurveSpan {
       }
     }
 
-    def alpha(pts: Vector[(Long, Long)]): Double = {
-      val xs = pts.map(p => math.log(p._1.toDouble))
-      val ys = pts.map(p => math.log(math.max(1L, p._2).toDouble))
-      val (mx, my) = (xs.sum / xs.size, ys.sum / ys.size)
-      xs.zip(ys).map { case (x, y) => (x - mx) * (y - my) }.sum /
-        xs.map(x => (x - mx) * (x - mx)).sum
-    }
     curves.toSeq.sortBy(_._1).foreach { case (k, pts) =>
-      println(f"""{"op":"span_dedup","alpha_$k":${alpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
+      sc.emit(f"""{"op":"span_dedup","alpha_$k":${countAlpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
     }
-    spark.stop()
   }
 }

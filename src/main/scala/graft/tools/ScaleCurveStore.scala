@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sinks.{AnnStore, BandStore}
 import graft.operators.Similarity
+import ScaleCurve.{blowUp, timed}
 
 /** The store lifecycles' 10×-above-sf0.1 point (round-15 verdict item):
   * the bench's heaviest keys run the band/ANN store
@@ -18,7 +19,7 @@ import graft.operators.Similarity
   * after write / append / compact — the numbers an operator capacity-plans
   * with.
   *
-  * Blow-up discipline: documents get the ScaleCurve Caesar substitution
+  * Blow-up discipline: documents get the `ScaleCurve.blowUp` Caesar substitution
   * (copies shingle-disjoint — no synthetic cross-copy pair mass);
   * embeddings get a per-copy array ROTATION (norm-preserving, distinct
   * vectors, same dimensionality — cluster geometry comparable across
@@ -30,10 +31,10 @@ import graft.operators.Similarity
   * batch, purge removes exactly the tombstoned ids), compact collapses to
   * the per-bucket file bound, and the probe/search stays ROUTE-BOUNDED —
   * its wall may not grow remotely like the 10× corpus (bound ≤3×; the
-  * measured growth is ~1×, see scale_curve.jsonl).
+  * measured growth is ~1×, see the committed curve log).
   *
-  * The first committed run of this tool (pre-alignment rows in
-  * scale_curve.jsonl) measured writes committing task-count ×
+  * The first committed run of this curve (pre-alignment rows in the
+  * curve log) measured writes committing task-count ×
   * bucket-count files (~4k) — the finding that motivated the round-15
   * bucket-aligned writers; under them the write-time counts it records
   * EQUAL the compacted steady state.
@@ -47,15 +48,10 @@ object ScaleCurveStore {
     walk(new java.io.File(path))
   }
 
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     val par = spark.sparkContext.defaultParallelism
-    val root = java.nio.file.Files.createTempDirectory("graft_storecurve").toString
-    val sb = new StringBuilder
+    val root = sc.scratch
 
     // ---------- BandStore ----------
     val docsBase = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
@@ -66,8 +62,8 @@ object ScaleCurveStore {
 
     var bandProbe = Map[Int, Double]()
     Seq(1, 10).foreach { f =>
-      val hist = ScaleCurve.blowUp(histBase, f).repartition(par).localCheckpoint()
-      val app = ScaleCurve.blowUp(appBase, f).repartition(par).localCheckpoint()
+      val hist = blowUp(histBase, f).repartition(par).localCheckpoint()
+      val app = blowUp(appBase, f).repartition(par).localCheckpoint()
       val nHist = hist.count(); val nApp = app.count()
       val path = s"$root/band_x$f"
       val (_, wWrite) = timed(BandStore.write(hist, "text", "doc_id", path))
@@ -97,8 +93,7 @@ object ScaleCurveStore {
         n
       }
       bandProbe += f -> wProbe
-      val line = f"""{"dataset":"sf0.1x$f","op":"store_lifecycle","store":"band","n_rows":${nHist + nApp},"write_sec":$wWrite%.2f,"append_sec":$wAppend%.2f,"compact_sec":$wCompact%.2f,"delete_sec":$wDelete%.2f,"purge_sec":$wPurge%.2f,"probe_sec":$wProbe%.2f,"files_write":$filesWrite,"files_append":$filesAppend,"files_compact":$filesCompact,"pairs":$nPairs}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"dataset":"sf0.1x$f","op":"store_lifecycle","store":"band","n_rows":${nHist + nApp},"write_sec":$wWrite%.2f,"append_sec":$wAppend%.2f,"compact_sec":$wCompact%.2f,"delete_sec":$wDelete%.2f,"purge_sec":$wPurge%.2f,"probe_sec":$wProbe%.2f,"files_write":$filesWrite,"files_append":$filesAppend,"files_compact":$filesCompact,"pairs":$nPairs}""")
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(hist)
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(app)
     }
@@ -155,18 +150,11 @@ object ScaleCurveStore {
       }
       require(nHits == 10, s"ann x$f: search returned $nHits of k=10")
       annSearch += f -> wSearch
-      val line = f"""{"dataset":"sf0.1x$f","op":"store_lifecycle","store":"ann","n_rows":${nMain + nApp},"write_sec":$wWrite%.2f,"append_sec":$wAppend%.2f,"compact_sec":$wCompact%.2f,"delete_sec":$wDelete%.2f,"purge_sec":$wPurge%.2f,"search_sec":$wSearch%.2f,"files_write":$filesWrite,"files_append":$filesAppend,"files_compact":$filesCompact}"""
-      println(line); sb.append(line).append('\n')
+      sc.emit(f"""{"dataset":"sf0.1x$f","op":"store_lifecycle","store":"ann","n_rows":${nMain + nApp},"write_sec":$wWrite%.2f,"append_sec":$wAppend%.2f,"compact_sec":$wCompact%.2f,"delete_sec":$wDelete%.2f,"purge_sec":$wPurge%.2f,"search_sec":$wSearch%.2f,"files_write":$filesWrite,"files_append":$filesAppend,"files_compact":$filesCompact}""")
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(corpus)
     }
     require(annSearch(10) <= 3.0 * math.max(0.5, annSearch(1)),
       s"ann search not route-bounded: ${annSearch(1)} s -> ${annSearch(10)} s at x10")
 
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import ScaleCurve.{timed, wallAlpha}
 
 /** Scale-curve evidence for the three round-17 operators that shipped
   * with specs but no §5 α-measurement (round-17 verdict item 7):
@@ -25,25 +26,12 @@ import org.apache.spark.sql.functions._
   *    measured-bytes bin-packing plans ceil(bytes/target) output files
   *    (asserted ×k) and the single round-robin exchange gives α ≈ 1.
   *
-  * Output: one JSON line per dataset + fitted α lines (wall ∝ n^α);
-  * paste into scale_curve.jsonl. Run on a QUIET host (the memory-file
-  * rules): `sbt "runMain graft.tools.ScaleCurveSweep"`. */
+  * Output: one JSON line per dataset + fitted α lines (wall ∝ n^α). Run
+  * on a QUIET host: `sbt "runMain graft.tools.ScaleCurve sweep"`. */
 object ScaleCurveSweep {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def alpha(pts: Vector[(Long, Double)]): Double = {
-      val xs = pts.map(p => math.log(p._1.toDouble))
-      val ys = pts.map(p => math.log(math.max(1e-3, p._2)))
-      val (mx, my) = (xs.sum / xs.size, ys.sum / ys.size)
-      xs.zip(ys).map { case (x, y) => (x - mx) * (y - my) }.sum /
-        xs.map(x => (x - mx) * (x - mx)).sum
-    }
 
     // ---- skyline: adversarial (all-frontier) + typical (hashed) ----
     locally {
@@ -61,17 +49,17 @@ object ScaleCurveSweep {
           graft.operators.Skyline.pareto2d(antiCorr(n), "x", "y").count())
         require(cnt == n, s"skyline adversarial: expected all $n on frontier, got $cnt")
         pts :+= (n, wall)
-        println(f"""{"op":"skyline","shape":"anti_correlated","n":$n,"frontier":$cnt,"wall_sec":$wall%.2f}""")
+        sc.emit(f"""{"op":"skyline","shape":"anti_correlated","n":$n,"frontier":$cnt,"wall_sec":$wall%.2f}""")
       }
-      println(f"""{"op":"skyline","shape":"anti_correlated","alpha_wall":${alpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
+      sc.emit(f"""{"op":"skyline","shape":"anti_correlated","alpha_wall":${wallAlpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
       var tp = Vector[(Long, Double)]()
       Seq(400000L, 1600000L, 4000000L).foreach { n =>
         val (cnt, wall) = timed(
           graft.operators.Skyline.pareto2d(typical(n), "x", "y").count())
         tp :+= (n, wall)
-        println(f"""{"op":"skyline","shape":"hashed","n":$n,"frontier":$cnt,"wall_sec":$wall%.2f}""")
+        sc.emit(f"""{"op":"skyline","shape":"hashed","n":$n,"frontier":$cnt,"wall_sec":$wall%.2f}""")
       }
-      println(f"""{"op":"skyline","shape":"hashed","alpha_wall":${alpha(tp)}%.3f,"fit_range":[${tp.map(_._1).min},${tp.map(_._1).max}]}""")
+      sc.emit(f"""{"op":"skyline","shape":"hashed","alpha_wall":${wallAlpha(tp)}%.3f,"fit_range":[${tp.map(_._1).min},${tp.map(_._1).max}]}""")
     }
 
     // ---- interval overlap: constant per-entity density blow-up ----
@@ -101,25 +89,19 @@ object ScaleCurveSweep {
         val (cnt, wall) = timed(peak(intervals(f)).count())
         require(cnt == 1000L * f, s"interval overlap: expected ${1000L * f} suppliers, got $cnt")
         pts :+= (n, wall)
-        println(f"""{"op":"interval_overlap","n_intervals":$n,"n_suppliers":$cnt,"wall_sec":$wall%.2f}""")
+        sc.emit(f"""{"op":"interval_overlap","n_intervals":$n,"n_suppliers":$cnt,"wall_sec":$wall%.2f}""")
       }
-      println(f"""{"op":"interval_overlap","alpha_wall":${alpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
+      sc.emit(f"""{"op":"interval_overlap","alpha_wall":${wallAlpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
     }
 
     // ---- compaction: fragments and bytes both x k, fixed target ----
     locally {
       val targetBytes = 1L << 20 // 1 MiB files
-      // every scratch store (warm-up + the three factors, hundreds of MB
-      // at factor 10) registers here and dies with the JVM — the sweep
-      // must not leak gigabytes of temp parquet across runs (round-18
-      // advisory)
-      val scratch = scala.collection.mutable.ListBuffer[java.nio.file.Path]()
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        scratch.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))))
-      def store(f: Int): String = {
-        val base = java.nio.file.Files.createTempDirectory("graft_curve_frag")
-        scratch += base
-        val p = base.toString + "/t"
+      // every store (warm-up + the three factors, hundreds of MB at
+      // factor 10) lives under the run's scratch root, which the runner
+      // deletes however the family ends
+      def store(name: String, f: Int): String = {
+        val p = s"${sc.scratch}/frag_$name"
         spark.range(400000L * f)
           .select(col("id"), expr("xxhash64(id)").as("a"),
             expr("CAST(xxhash64(id + 3) AS STRING)").as("b"))
@@ -127,13 +109,13 @@ object ScaleCurveSweep {
         p
       }
       locally { // discarded warm-up
-        val p = store(1)
+        val p = store("warm_up", 1)
         graft.sinks.Compact.filesInPlace(spark, p, targetBytes)
       }
       var pts = Vector[(Long, Double)]()
       var outBase = -1L
       Seq(1, 4, 10).foreach { f =>
-        val p = store(f)
+        val p = store(s"x$f", f)
         val rows0 = spark.read.parquet(p).count()
         val ((before, after), wall) = timed(
           graft.sinks.Compact.filesInPlace(spark, p, targetBytes))
@@ -142,11 +124,10 @@ object ScaleCurveSweep {
         require(before == 64L * f, s"expected ${64 * f} fragments, saw $before")
         if (f == 1) outBase = after
         pts :+= (rows0, wall)
-        println(f"""{"op":"compact_files","factor":$f,"rows":$rows0,"files_before":$before,"files_after":$after,"after_exact_xk":${f == 1 || after == outBase * f},"wall_sec":$wall%.2f}""")
+        sc.emit(f"""{"op":"compact_files","factor":$f,"rows":$rows0,"files_before":$before,"files_after":$after,"after_exact_xk":${f == 1 || after == outBase * f},"wall_sec":$wall%.2f}""")
       }
-      println(f"""{"op":"compact_files","alpha_wall":${alpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
+      sc.emit(f"""{"op":"compact_files","alpha_wall":${wallAlpha(pts)}%.3f,"fit_range":[${pts.map(_._1).min},${pts.map(_._1).max}]}""")
     }
 
-    spark.stop()
   }
 }

@@ -78,8 +78,8 @@ object ScaleCurveZ {
     def pred = col("ck").between(ckLo, ckHi) && col("dd").between(ddLo, ddHi)
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.local()
+  def run(sc: ScaleCurve.Run): Unit = {
+    val spark = sc.spark
     // the scan-node metric read below needs the executed plan's leaves,
     // not an AdaptiveSparkPlanExec shell; nothing here needs AQE
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -124,8 +124,7 @@ object ScaleCurveZ {
       Box("ck_dd_box", bxLo, bxHi, byLo, byHi))
 
     val numFiles = 64
-    val root = java.nio.file.Files.createTempDirectory("graft_zcurve").toString
-    val sb = new StringBuilder
+    val root = sc.scratch
     Seq(1, 4, 10).foreach { f =>
       // row replication: the (ck, dd) point cloud is unchanged, so both
       // layouts' geometry — and the touched FRACTION — must hold at ×f
@@ -173,9 +172,7 @@ object ScaleCurveZ {
           require(files(zT) * 3 <= numFiles,
             s"x$f ${box.name}: z touches ${files(zT)}/$numFiles files — no 2-D pruning?")
         }
-        val line =
-          f"""{"dataset":"sf0.1x$f","op":"zorder_read","box":"${box.name}","n_rows":$nRows,"files_total":${files(zRgs)},"z_files_touched":${files(zT)},"x_files_touched":${files(xT)},"z_rg_touched":${zT.size},"x_rg_touched":${xT.size},"z_rg_bytes":${zT.map(_.bytes).sum},"x_rg_bytes":${xT.map(_.bytes).sum},"total_bytes":${zRgs.map(_.bytes).sum},"z_exec_bytes":$zBytes,"x_exec_bytes":$xBytes,"result_rows":$zRows}"""
-        println(line); sb.append(line).append('\n')
+        sc.emit(f"""{"dataset":"sf0.1x$f","op":"zorder_read","box":"${box.name}","n_rows":$nRows,"files_total":${files(zRgs)},"z_files_touched":${files(zT)},"x_files_touched":${files(xT)},"z_rg_touched":${zT.size},"x_rg_touched":${xT.size},"z_rg_bytes":${zT.map(_.bytes).sum},"x_rg_bytes":${xT.map(_.bytes).sum},"total_bytes":${zRgs.map(_.bytes).sum},"z_exec_bytes":$zBytes,"x_exec_bytes":$xBytes,"result_rows":$zRows}""")
       }
       GraftShim.unpersistCheckpoint(df)
     }
@@ -222,9 +219,7 @@ object ScaleCurveZ {
         // executed corroboration + result stability across states
         val (rows, s, bytes) = measured(
           ZOrderTable.read(spark, tab).filter(box.pred).select(col("pay")))
-        val line =
-          f"""{"op":"zorder_lifecycle","state":"$state","box":"${box.name}","touched_frac":${f._1}%.4f,"files_touched":${f._2},"files_total":${f._3},"touched_bytes":${f._4},"exec_bytes":$bytes,"result_rows":$rows,"result_sum":$s}"""
-        println(line); sb.append(line).append('\n')
+        sc.emit(f"""{"op":"zorder_lifecycle","state":"$state","box":"${box.name}","touched_frac":${f._1}%.4f,"files_touched":${f._2},"files_total":${f._3},"touched_bytes":${f._4},"exec_bytes":$bytes,"result_rows":$rows,"result_sum":$s}""")
       }
       snapshot("decayed")
       ZOrderTable.optimize(spark, tab)
@@ -248,9 +243,7 @@ object ScaleCurveZ {
         val dec = states(("decayed", box.name))._1
         val res = states(("restored", box.name))._1
         val clp = states(("collapsed", box.name))._1
-        val line =
-          f"""{"op":"zorder_lifecycle","box":"${box.name}","init_frac":$init%.4f,"decayed_frac":$dec%.4f,"restored_frac":$res%.4f,"collapsed_frac":$clp%.4f}"""
-        println(line); sb.append(line).append('\n')
+        sc.emit(f"""{"op":"zorder_lifecycle","box":"${box.name}","init_frac":$init%.4f,"decayed_frac":$dec%.4f,"restored_frac":$res%.4f,"collapsed_frac":$clp%.4f}""")
         require(dec >= 1.5 * init,
           f"${box.name}: raw appends did not decay the layout ($dec%.3f vs init $init%.3f) — is the tail being clustered?")
         require(res <= 1.25 * init,
@@ -260,11 +253,5 @@ object ScaleCurveZ {
       }
       GraftShim.unpersistCheckpoint(df)
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_curve.jsonl"),
-      sb.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    spark.stop()
   }
 }

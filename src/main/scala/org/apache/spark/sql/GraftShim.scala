@@ -15,7 +15,7 @@ object GraftShim {
 
   /** Drain the SparkContext listener bus — `listenerBus` is
     * `private[spark]`, so measurement tools that sum task metrics via a
-    * `SparkListener` (e.g. `ScaleCurveZ`'s executed-bytes audit) reach it
+    * `SparkListener` (e.g. `tools.ScaleCurve z`'s executed-bytes audit) reach it
     * through this shim to make "query finished" imply "its task-end
     * events were delivered" before reading their accumulators. */
   def drainListenerBus(spark: SparkSession): Unit =

@@ -43,7 +43,7 @@ class AnnStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("writes are cluster-aligned: at most one file per cluster per write") {
     // round 15: the pre-write repartition on centroid_id bounds files to
-    // one per cluster per write (was tasks × clusters — ScaleCurveStore
+    // one per cluster per write (was tasks × clusters — `ScaleCurve store`
     // measured ~500 files for a 16-cluster store from a 32-task assign)
     val path = buildStore()
     def perCluster(): Seq[Int] =

@@ -48,7 +48,7 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   test("writes are bucket-aligned: files per bucket bounded by write slots, not upstream tasks") {
     // round 15: without the pre-write bucket alignment every upstream
     // task holding rows of bucket b commits its own file into b (files =
-    // tasks × buckets — the fragmentation ScaleCurveStore measured at
+    // tasks × buckets — the fragmentation `ScaleCurve store` measured at
     // ~4k files); aligned, a write commits at most ⌈par/buckets⌉ files
     // per bucket no matter how the input was partitioned
     val path = newPath()
@@ -297,7 +297,7 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // raw-width ratio is ~16x but parquet's encoding compresses the
     // repetitive sig arrays and per-file footers dominate at spec scale,
     // so the on-disk assertion is the conservative >3x (measured 3.9x
-    // here; tools/ScaleCurveBand records the sf0.1 number)
+    // here; `tools.ScaleCurve band` records the sf0.1 number)
     val bandsShrink = tableBytes(dense, "bands").toDouble / tableBytes(lean, "bands")
     assert(bandsShrink > 3.0,
       f"lean bands/ should shed the per-band sig mass, shrank only $bandsShrink%.1fx")

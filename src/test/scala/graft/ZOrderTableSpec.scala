@@ -10,7 +10,7 @@ import graft.sinks.ZOrderTable
   * like ParquetSink's in RecoverySpec), reader behavior mid-swap, and
   * the writer fence. The LAYOUT PAYOFF (decay under raw appends,
   * restoration after optimize) is measured, not asserted here —
-  * `tools/ScaleCurveZ` prices it through real parquet footers. */
+  * `tools.ScaleCurve z` prices it through real parquet footers. */
 class ZOrderTableSpec extends SparkSpec {
   import spark.implicits._
 
