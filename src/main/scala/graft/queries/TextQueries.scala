@@ -269,8 +269,10 @@ object TextQueries {
 
     // transitive dup-cluster resolution: pairwise near-dups -> disjoint
     // clusters (min-label propagation); the step between "found pairs"
-    // and "kept one representative per group"
-    "dedup_components" -> ((s, d) => preparedLabels(s, d)),
+    // and "kept one representative per group". The labels are the result
+    // here, not a join side, so their broadcast hint goes unused — drop it
+    "dedup_components" -> ((s, d) =>
+      org.apache.spark.sql.GraftShim.withoutHints(preparedLabels(s, d))),
 
     // PII scrubbing: synthesize deterministic PII (email/url/ip/id) per doc
     // so the redaction actually fires, then hash the scrubbed text and

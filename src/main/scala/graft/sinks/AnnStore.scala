@@ -64,7 +64,7 @@ object AnnStore {
     * partitions the probe names. */
   def append(assigned: DataFrame, path: String,
              fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit = {
-    // fenced (round-13 advice, BandStore.append's twin): an append racing
+    // fenced (round-13 advice; the shared PartitionSwap fence): an append racing
     // compact/purge could land files in a cluster dir the swap parks and
     // deletes, and one racing recluster writes into a tree about to be
     // replaced wholesale — either way the appended rows vanish silently.
@@ -90,14 +90,14 @@ object AnnStore {
     * store. Per-cluster swaps: clusters parked without a live twin are
     * their own last committed copy and union in via
     * [[PartitionSwap.resolvedRead]] (the live side keeps the pruned
-    * scan). Whole-store recluster: between its two renames the previous
-    * generation lives complete at `.recluster_old` and is served as-is
-    * ([[resolveRoot]]); the new tree only becomes readable when the
-    * promote rename lands. Readers stay readers — recovery is unchanged
-    * and still owned by [[recover]] / the next writer op. */
+    * scan). Whole-store recluster: the generation root resolves through
+    * [[PartitionSwap.resolveRoot]] (between the two renames the parked
+    * previous generation is served as-is; the new tree only becomes
+    * readable when the promote rename lands). Readers stay readers —
+    * recovery is still owned by [[recover]] / the next writer op. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = resolveRoot(fs, path)
+    val root = PartitionSwap.resolveRoot(fs, path, Recluster)
     // Serving the parked `.recluster_old` generation: a per-cluster swap
     // that crashed BEFORE the recluster started left its scratch beside
     // the then-live root (`path.swap_old` etc.) — the whole-store rename
@@ -106,25 +106,9 @@ object AnnStore {
     // clusters). The `.recluster_tmp` defense path stays single-layer: an
     // orphaned sibling scratch there has no owning generation to pair
     // with — run [[recover]] first.
-    val extraBases = if (root == path + ".recluster_old") Seq(path) else Nil
+    val extraBases = if (root == Recluster.old(path)) Seq(path) else Nil
     PartitionSwap.resolvedRead(spark, root, Prefix, "centroid_id", Tags,
       extraBases)
-  }
-
-  /** The newest COMMITTED generation's root: the live path when it
-    * exists; during (or after a crash in) a whole-store recluster swap,
-    * the parked previous generation — complete, tombstone sidecar and
-    * all; a committed-but-unpromoted scratch tree only when no previous
-    * generation survives (cannot arise from [[recluster]]'s rename
-    * order, kept for defense — and, being ownerless, it is served
-    * WITHOUT sibling-scratch probing; nested-crash states there need
-    * [[recover]]). */
-  private def resolveRoot(fs: FileSystem, path: String): String = {
-    if (fs.exists(new Path(path))) path
-    else if (fs.exists(new Path(path + ".recluster_old"))) path + ".recluster_old"
-    else if (fs.exists(new Path(path + ".recluster_tmp/_centroids/_SUCCESS")))
-      path + ".recluster_tmp"
-    else path
   }
 
   /** Heal a store whose writer crashed mid-swap (per-cluster compact/
@@ -136,8 +120,7 @@ object AnnStore {
   def recover(spark: SparkSession, path: String): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     PartitionSwap.withWriterLock(fs, path, "AnnStore") {
-      recoverRecluster(fs, path)
-      recoverSwap(fs, path)
+      recoverSwaps(fs, path)
     }
   }
 
@@ -202,11 +185,9 @@ object AnnStore {
     require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     PartitionSwap.withWriterLock(fs, path, "AnnStore") {
-      recoverRecluster(fs, path)
-      recoverSwap(fs, path)
-      val targets = clusterDirs(fs, new Path(path)).filter { c =>
-        fs.listStatus(c).count(s => s.isFile && s.getPath.getName.endsWith(".parquet")) > maxFiles
-      }.map(clusterId).sorted
+      recoverSwaps(fs, path)
+      val targets = PartitionSwap.fragmented(fs, path, Prefix, maxFiles)
+        .map(clusterId).sorted
       if (targets.isEmpty) Seq.empty
       else {
         swapRewrite(spark, fs, path, targets,
@@ -218,77 +199,27 @@ object AnnStore {
 
   // ---- tombstone deletes (the lifecycle's fourth stage) ----
 
-  /** The tombstone sidecar lives INSIDE the store root under an
-    * underscore name: parquet discovery ignores `_`-prefixed paths, so
-    * [[read]] never sees it, and the whole store state (data + pending
-    * deletes) travels as one directory tree. */
-  private def tombstoneDir(path: String): String = path + "/_tombstones"
-
   /** DELETE by id — the store lifecycle's fourth stage (write → append →
     * compact → delete): appends the batch's ids as 8-byte TOMBSTONE rows
-    * to the hidden sidecar and touches NO data file — at 100 TB a delete
-    * costs O(deleted ids), never a cluster rewrite (the Delta/Iceberg
-    * delete-vector shape). Readers mask tombstoned rows via [[readLive]];
-    * [[purge]] reclaims the bytes on the compaction cadence. The id
-    * column name must be the store's id column — [[readLive]]/[[purge]]
-    * join on it. Deleting an id not in the store is a recorded no-op
-    * (the anti-join never finds it), so delete is idempotent and
-    * order-free across batches.
-    *
-    * The tombstone id is CANONICALIZED to the store's own id type before
-    * it lands in the sidecar: two delete batches arriving with different
-    * caller types (INT then BIGINT) would otherwise write mixed-schema
-    * parquet into `_tombstones`, and the later sidecar read could fail
-    * or silently widen — breaking [[readLive]]/[[purge]]. One footer
-    * read prices the lookup; a batch whose id can't carry the store's
-    * type is a caller bug and raises here, not mid-purge. */
+    * to the hidden sidecar ([[PartitionSwap.appendTombstones]]: cast to
+    * the store's id type, a null id raises, fenced) and touches NO data
+    * file — at 100 TB a delete costs O(deleted ids), never a cluster
+    * rewrite (the Delta/Iceberg delete-vector shape). Readers mask
+    * tombstoned rows via [[readLive]]; [[purge]] reclaims the bytes on the
+    * compaction cadence. The id column name must be the store's id
+    * column — [[readLive]]/[[purge]] join on it. Deleting an id not in the
+    * store is a recorded no-op (the anti-join never finds it), so delete
+    * is idempotent and order-free across batches. */
   def delete(ids: DataFrame, idCol: String, path: String,
-             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit = {
-    val spark = ids.sparkSession
-    val storeType = spark.read.parquet(path).schema
-      .find(_.name == idCol)
-      .getOrElse(throw new IllegalArgumentException(
-        s"AnnStore.delete: store at $path has no column `$idCol` " +
-          "(the id column name must be the store's id column)"))
-      .dataType
-    // a null tombstone can never match a row, so the intended delete
-    // (a takedown, a GDPR erasure) would silently not happen — raise
-    // instead, the raise-on-bad-input discipline of setJaccardPairs etc.
-    val id = col(idCol).cast(storeType)
-    // fenced like BandStore.delete: purge/recluster drop the sidecar as a
-    // late step, so a tombstone appended mid-maintenance would be
-    // discarded UNAPPLIED — the takedown silently resurrects. Loud > lost.
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "AnnStore", fenceWaitMs) {
-      ids.select(org.apache.spark.sql.functions.coalesce(
-          org.apache.spark.sql.functions.when(id.isNull,
-            org.apache.spark.sql.functions.raise_error(
-              org.apache.spark.sql.functions.lit(
-                s"AnnStore.delete: null $idCol in the delete batch"))),
-          id).as(idCol))
-        .write.mode("append").parquet(tombstoneDir(path))
-    }
-  }
+             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit =
+    PartitionSwap.appendTombstones(ids, idCol, path, path, "AnnStore", fenceWaitMs)
 
-  /** Pending tombstone ids, or None when no delete has been recorded
-    * since the last [[purge]] (callers skip the mask join entirely —
-    * zero plan cost on a tombstone-free store). */
-  def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    // same generation resolution as [[read]]: mid-recluster, the parked
-    // previous generation's sidecar is the one masking ITS rows — reading
-    // data from one generation and tombstones from another could serve a
-    // deleted row
-    val rootFs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(tombstoneDir(resolveRoot(rootFs, path)))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an empty delete batch can leave a sidecar holding only _SUCCESS —
-    // count DATA files, or the read would fail schema inference
-    val hasData = fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (hasData) Some(spark.read.parquet(p.toString)) else None
-  }
+  /** Pending tombstone ids of the generation [[read]] serves, or None
+    * when no delete has been recorded since the last [[purge]] (callers
+    * skip the mask join entirely — zero plan cost on a tombstone-free
+    * store). */
+  def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
+    PartitionSwap.tombstones(spark, path, Recluster)
 
   /** Read the store MINUS tombstoned rows — the serving view after
     * deletes: the base scan keeps its partition-pruning contract (a
@@ -322,8 +253,7 @@ object AnnStore {
   def purge(spark: SparkSession, path: String, idCol: String): Seq[Long] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     PartitionSwap.withWriterLock(fs, path, "AnnStore") {
-      recoverRecluster(fs, path)
-      recoverSwap(fs, path)
+      recoverSwaps(fs, path)
       tombstones(spark, path) match {
         case None => Seq.empty
         case Some(ts) =>
@@ -341,7 +271,7 @@ object AnnStore {
                 .join(tsb, Seq(idCol), "left_anti"))
           // drop the sidecar last: every earlier crash leaves a consistent
           // (masked) store; reaching here means the rows are gone for real
-          fs.delete(new Path(tombstoneDir(path)), true)
+          PartitionSwap.dropTombstones(fs, path)
           targets
       }
     }
@@ -390,8 +320,7 @@ object AnnStore {
     val sfs = new Path(srcPath).getFileSystem(conf)
     PartitionSwap.withWriterLock(dfs, dstPath, "AnnStore") {
       PartitionSwap.withWriterLock(sfs, srcPath, "AnnStore") {
-        recoverRecluster(dfs, dstPath); recoverSwap(dfs, dstPath)
-        recoverRecluster(sfs, srcPath); recoverSwap(sfs, srcPath)
+        recoverSwaps(dfs, dstPath); recoverSwaps(sfs, srcPath)
         require(sfs.exists(new Path(srcPath)), s"AnnStore.merge: no store at $srcPath")
         require(dfs.exists(new Path(dstPath)), s"AnnStore.merge: no store at $dstPath")
         def sig(p: String) = spark.read.parquet(p).schema
@@ -414,8 +343,8 @@ object AnnStore {
         }
         val moved = PartitionSwap.mergePartitionDirs(sfs, new Path(srcPath),
           dfs, new Path(dstPath), Prefix, "AnnStore")
-        PartitionSwap.mergeSidecar(sfs, new Path(tombstoneDir(srcPath)),
-          dfs, new Path(tombstoneDir(dstPath)), "AnnStore")
+        PartitionSwap.mergeSidecar(sfs, new Path(PartitionSwap.tombstoneDir(srcPath)),
+          dfs, new Path(PartitionSwap.tombstoneDir(dstPath)), "AnnStore")
         // src drops LAST: a crash anywhere above leaves every file at
         // exactly one root and a re-run completes the move
         sfs.delete(new Path(srcPath), true)
@@ -434,7 +363,7 @@ object AnnStore {
     * centroids live wherever the caller keeps them.) */
   def centroids(spark: SparkSession, path: String): DataFrame = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(resolveRoot(fs, path) + "/_centroids")
+    spark.read.parquet(PartitionSwap.resolveRoot(fs, path, Recluster) + "/_centroids")
   }
 
   /** RE-CLUSTER the store — the committed remedy for centroid drift that
@@ -449,13 +378,11 @@ object AnnStore {
     * consistent. Tombstoned rows drop during the rewrite, and the sidecar
     * swaps away with the old tree — recluster subsumes [[purge]].
     *
-    * Crash windows (all healed by [[recover]] / the next writer op):
-    * the scratch tree commits its `_centroids` sidecar LAST, so recovery
-    * promotes the new store iff that final marker exists, else restores
-    * the original — a half-written scratch tree is never promoted, and
-    * between the two renames readers resolve the parked previous
-    * generation ([[resolveRoot]]) and keep answering — the new store
-    * becomes visible exactly when the promote rename lands. Serialized
+    * Crash windows: the swap is [[PartitionSwap.swapRoot]] with the
+    * `_centroids` sidecar as its commit marker, written LAST — recovery
+    * ([[recover]] / the next writer op) promotes the new store iff that
+    * marker exists, else restores the original, and between the two
+    * renames readers serve the parked previous generation. Serialized
     * against other writers by the writer fence.
     *
     * Scale shape: one distributed retrain + reassign + rewrite of the
@@ -472,66 +399,37 @@ object AnnStore {
                 k: Int, iters: Int = 2): DataFrame = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     PartitionSwap.withWriterLock(fs, path, "AnnStore") {
-      recoverRecluster(fs, path)
-      recoverSwap(fs, path)
-      val tmpRoot = new Path(path + ".recluster_tmp")
-      val oldRoot = new Path(path + ".recluster_old")
-      if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-      if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-      // carry EVERY non-derived column through the rewrite (round-13
-      // advice): metadata ingested via `ivfAssign(metaCols = …)` —
-      // language, license, the label column a filtered probe pushes into
-      // the pruned scan — lives in the store's files, and a recluster
-      // that rebuilds from only (id, v) deletes it with the old tree,
-      // permanently. Derived columns (centroid_id, sim) are recomputed
-      // by the reassignment; everything else rides the same zero-shuffle
-      // fold it rode at ingest.
-      val live0 = readLive(spark, path, idCol)
-      val metaCols = live0.columns.toSeq
-        .filterNot(Set(idCol, "v", "centroid_id", "sim"))
-      val live = live0.select((idCol +: "v" +: metaCols).map(col): _*)
-      val cents = graft.operators.Similarity.kmeansFit(
-        live.select(col(idCol), col("v")), "v", idCol, k, iters)
-      val assigned = graft.operators.Similarity.ivfAssign(
-        live, "v", idCol, cents.withColumnRenamed("c_v", "v"), "centroid_id",
-        keepVec = true, metaCols = metaCols)
-      assigned.repartition(k, col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(tmpRoot.toString)
-      // the COMMIT MARKER: recovery promotes the scratch tree iff this
-      // final write's _SUCCESS exists — everything before it is abandoned
-      cents.write.mode("overwrite").parquet(tmpRoot.toString + "/_centroids")
-      PartitionSwap.mv(fs, new Path(path), oldRoot)
-      PartitionSwap.mv(fs, tmpRoot, new Path(path))
-      fs.delete(oldRoot, true)
-      cents
-    }
-  }
-
-  /** Recover a crashed whole-store recluster swap: with no live store,
-    * promote the scratch tree iff its commit marker (`_centroids`'
-    * `_SUCCESS`, the last thing [[recluster]] writes before the renames)
-    * exists, else restore the original; with a live store, any scratch
-    * is leftover — drop it. Never deletes the only copy. */
-  private def recoverRecluster(fs: FileSystem, path: String): Unit = {
-    val dst = new Path(path)
-    val tmpRoot = new Path(path + ".recluster_tmp")
-    val oldRoot = new Path(path + ".recluster_old")
-    if (!fs.exists(dst)) {
-      if (fs.exists(new Path(tmpRoot, "_centroids/_SUCCESS"))) {
-        PartitionSwap.mv(fs, tmpRoot, dst)
-        if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-      } else if (fs.exists(oldRoot)) {
-        PartitionSwap.mv(fs, oldRoot, dst)
-        if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
+      recoverSwaps(fs, path)
+      PartitionSwap.swapRoot(fs, path, Recluster) { tmpRoot =>
+        // carry EVERY non-derived column through the rewrite (round-13
+        // advice): metadata ingested via `ivfAssign(metaCols = …)` —
+        // language, license, the label column a filtered probe pushes
+        // into the pruned scan — lives in the store's files, and a
+        // recluster that rebuilds from only (id, v) deletes it with the
+        // old tree, permanently. Derived columns (centroid_id, sim) are
+        // recomputed by the reassignment; everything else rides the same
+        // zero-shuffle fold it rode at ingest.
+        val live0 = readLive(spark, path, idCol)
+        val metaCols = live0.columns.toSeq
+          .filterNot(Set(idCol, "v", "centroid_id", "sim"))
+        val live = live0.select((idCol +: "v" +: metaCols).map(col): _*)
+        val cents = graft.operators.Similarity.kmeansFit(
+          live.select(col(idCol), col("v")), "v", idCol, k, iters)
+        val assigned = graft.operators.Similarity.ivfAssign(
+          live, "v", idCol, cents.withColumnRenamed("c_v", "v"), "centroid_id",
+          keepVec = true, metaCols = metaCols)
+        assigned.repartition(k, col("centroid_id"))
+          .write.mode("overwrite").partitionBy("centroid_id").parquet(tmpRoot.toString)
+        // the COMMIT MARKER lands last: everything before it is
+        // abandoned by recovery if the run dies here
+        cents.write.mode("overwrite").parquet(tmpRoot.toString + "/_centroids")
+        cents
       }
-    } else {
-      if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-      if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
     }
   }
 
-  // ---- per-cluster atomic-swap machinery (compact + purge) ----
-  // one shared definition across the partitioned sinks: [[PartitionSwap]]
+  // ---- swap machinery: the per-cluster swap (compact + purge) and the
+  // whole-store swap (recluster), both defined once in [[PartitionSwap]]
 
   private val Prefix = "centroid_id="
   // "compact" is the pre-delete-era scratch naming: a store that crashed
@@ -539,13 +437,18 @@ object AnnStore {
   // orphaned forever
   private val Tags = Seq("swap", "compact")
 
-  private def clusterDirs(fs: FileSystem, root: Path): Seq[Path] =
-    PartitionSwap.partitionDirs(fs, root, Prefix)
-
   private def clusterId(p: Path): Long = p.getName.stripPrefix(Prefix).toLong
 
-  private def recoverSwap(fs: FileSystem, path: String): Unit =
+  /** Recluster's whole-store swap: `.recluster_tmp`/`.recluster_old`,
+    * committed by its `_centroids` marker. */
+  private val Recluster = PartitionSwap.RootSwap("recluster", Some("_centroids/_SUCCESS"))
+
+  /** Heal both swap kinds, whole-store first: a per-cluster swap's
+    * scratch sits beside the root the whole-store recovery restores. */
+  private def recoverSwaps(fs: FileSystem, path: String): Unit = {
+    PartitionSwap.recoverRoot(fs, path, Recluster)
     PartitionSwap.recoverSwap(fs, path, Prefix, Tags)
+  }
 
   private def swapRewrite(spark: SparkSession, fs: FileSystem, path: String,
                           targets: Seq[Long], replacement: DataFrame): Unit =

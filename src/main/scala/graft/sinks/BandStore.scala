@@ -66,7 +66,8 @@ import graft.operators.Dedup
   * the compaction cadence). Reads are GENERATION-CONSISTENT: a probe
   * concurrent with any swap-performing op — or after a writer crash —
   * resolves the last committed generation and never raises, never sees
-  * a partial table ([[PartitionSwap.resolvedRead]] / [[resolveRoot]];
+  * a partial table ([[PartitionSwap.resolvedRead]] /
+  * [[PartitionSwap.resolveRoot]];
   * [[recover]] still heals crashed state). Writers — including
   * append/ingest/delete — are serialized by the store-root writer
   * fence ([[PartitionSwap.withWriterLock]]).
@@ -80,6 +81,9 @@ object BandStore {
 
   private val Prefix = "bucket="
   private val Tags = Seq("swap")
+  /** Rebucket's whole-store swap: `.rebucket_tmp`/`.rebucket_old`,
+    * committed by its `_params` marker. */
+  private val Rebucket = PartitionSwap.RootSwap("rebucket", Some("_params/_SUCCESS"))
 
   final case class Params(k: Int, rowsPerBand: Int, shingleN: Int, buckets: Int,
                           leanSigs: Boolean)
@@ -273,60 +277,24 @@ object BandStore {
 
   // ---- tombstone deletes (the lifecycle's delete stage) ----
 
-  /** The tombstone sidecar — the [[AnnStore]] discipline: an
-    * underscore-named dir INSIDE the store root (invisible to the
-    * bands/docs parquet discovery, travels with the store). */
-  private def tombstoneDir(path: String) = path + "/_tombstones"
-
   /** DELETE docs by id — the takedown path: appends the ids as tombstone
-    * rows to the hidden sidecar and touches NO data file, so a delete
-    * costs O(deleted ids) regardless of store size. A tombstoned doc
-    * stops being a dup source everywhere the store serves: [[probe]]
-    * masks its candidates before the sig/shingle fetches, and
-    * [[sketchTable]] masks the streaming verify side. [[purge]] reclaims
-    * the bytes on the compaction cadence. Ids are canonicalized to the
-    * store's id type (mixed-type sidecar batches would fail or silently
-    * widen on read), and a null id raises — a takedown that silently
-    * matches nothing is worse than a failure. */
+    * rows to the hidden sidecar ([[PartitionSwap.appendTombstones]]: cast
+    * to the docs table's id type, a null id raises, fenced) and touches NO
+    * data file, so a delete costs O(deleted ids) regardless of store size.
+    * A tombstoned doc stops being a dup source everywhere the store
+    * serves: [[probe]] masks its candidates before the sig/shingle
+    * fetches, and [[sketchTable]] masks the streaming verify side.
+    * [[purge]] reclaims the bytes on the compaction cadence. */
   def delete(ids: DataFrame, idCol: String, path: String,
-             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit = {
-    val spark = ids.sparkSession
-    val storeType = spark.read.parquet(docsDir(path)).schema
-      .find(_.name == idCol)
-      .getOrElse(throw new IllegalArgumentException(
-        s"BandStore.delete: store at $path has no id column `$idCol`"))
-      .dataType
-    val id = col(idCol).cast(storeType)
-    // fenced for the same reason as [[append]]: [[purge]] drops the WHOLE
-    // sidecar as its last step, so a tombstone appended mid-purge (after
-    // the rewrite planned, before the drop) would be deleted UNAPPLIED —
-    // a takedown that silently resurrects. Under the fence it throws.
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "BandStore", fenceWaitMs) {
-      ids.select(coalesce(
-          when(id.isNull, raise_error(
-            lit(s"BandStore.delete: null $idCol in the delete batch"))),
-          id).as(idCol))
-        .write.mode("append").parquet(tombstoneDir(path))
-    }
-  }
+             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit =
+    PartitionSwap.appendTombstones(ids, idCol, path, docsDir(path), "BandStore",
+      fenceWaitMs)
 
-  /** Pending tombstone ids, or None when nothing has been deleted since
-    * the last [[purge]] — callers skip the mask join entirely (zero plan
-    * cost on a tombstone-free store). */
-  def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    // generation-resolved like every read: mid-rebucket, the parked
-    // previous generation's sidecar masks ITS rows
-    val p = new Path(tombstoneDir(resolvedRoot(spark, path)))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an empty delete batch leaves a sidecar holding only _SUCCESS —
-    // count DATA files before reading, or schema inference fails
-    val hasData = fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (hasData) Some(spark.read.parquet(p.toString)) else None
-  }
+  /** Pending tombstone ids of the generation probes serve, or None when
+    * nothing has been deleted since the last [[purge]] — callers skip the
+    * mask join entirely (zero plan cost on a tombstone-free store). */
+  def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
+    PartitionSwap.tombstones(spark, path, Rebucket)
 
   /** PURGE — physically remove tombstoned docs from BOTH tables, on the
     * compaction cadence. Routing is asymmetric because only one side is
@@ -345,12 +313,7 @@ object BandStore {
   def purge(spark: SparkSession, path: String): Seq[(String, Long)] = {
     val rootFs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     PartitionSwap.withWriterLock(rootFs, path, "BandStore") {
-      Seq(bandsDir(path), docsDir(path)).foreach { dir =>
-        PartitionSwap.recoverSwap(
-          new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
-          dir, Prefix, Tags)
-      }
-      recoverRebucket(rootFs, path)
+      recoverSwaps(rootFs, path)
       tombstones(spark, path) match {
         case None => Seq.empty
         case Some(ts) =>
@@ -389,7 +352,7 @@ object BandStore {
           }).flatten
           // the sidecar drops last: every earlier crash leaves a masked,
           // consistent store; reaching here means the rows are gone
-          rootFs.delete(new Path(tombstoneDir(path)), true)
+          PartitionSwap.dropTombstones(rootFs, path)
           rewritten
       }
     }
@@ -530,13 +493,12 @@ object BandStore {
     * shingles, lean layout) never change — signatures are not
     * re-derived, so no text is needed.
     *
-    * Crash windows (healed by [[recover]] / the next writer op): the
-    * scratch tree commits its `_params` sidecar LAST, so recovery
-    * promotes the new tree iff that marker exists, else restores the
-    * original; between the two renames readers resolve the parked
-    * previous generation ([[resolveRoot]]) and keep answering — the new
-    * tree becomes visible exactly when the promote rename lands.
-    * Serialized by the store-root writer fence.
+    * Crash windows: the swap is [[PartitionSwap.swapRoot]] with the
+    * `_params` sidecar as its commit marker, written LAST — recovery
+    * ([[recover]] / the next writer op) promotes the new tree iff that
+    * marker exists, else restores the original, and between the two
+    * renames readers serve the parked previous generation. Serialized by
+    * the store-root writer fence.
     *
     * Scale shape: one distributed rewrite of the index tables —
     * O(index), not O(corpus text): band rows are ~tens of bytes (lean)
@@ -548,70 +510,37 @@ object BandStore {
     require(newBuckets >= 1, s"newBuckets must be >= 1, got $newBuckets")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     PartitionSwap.withWriterLock(fs, path, "BandStore") {
-      recoverRebucket(fs, path)
-      Seq(bandsDir(path), docsDir(path)).foreach { dir =>
-        PartitionSwap.recoverSwap(fs, dir, Prefix, Tags)
+      recoverSwaps(fs, path)
+      PartitionSwap.swapRoot(fs, path, Rebucket) { tmpRoot =>
+        val p = params(spark, path)
+        val bands = spark.read.parquet(bandsDir(path)).drop("bucket")
+          .withColumn("bucket", pmod(xxhash64(col("band")), lit(newBuckets)))
+        // the doc table's id column is whatever the caller named it at
+        // write time — everything except (hs, sig, bucket) is the id
+        val docsDf = spark.read.parquet(docsDir(path))
+        val idCol = docsDf.columns
+          .filterNot(Set("hs", "sig", "bucket")).head
+        // the two scratch-table rewrites are independent dirs under the
+        // one held fence — overlap them (guide §2.6); the commit marker
+        // below still lands strictly after BOTH complete, so the crash
+        // windows are unchanged
+        graft.etl.Concurrent.awaitAll(2)(Seq(
+          () => bands.repartition(newBuckets, col("bucket"))
+            .write.partitionBy("bucket").parquet(bandsDir(tmpRoot.toString)),
+          () => docsDf.drop("bucket")
+            .withColumn("bucket", pmod(xxhash64(col(idCol)), lit(newBuckets)))
+            .repartition(newBuckets, col("bucket"))
+            .write.partitionBy("bucket").parquet(docsDir(tmpRoot.toString))))
+        // pending tombstones are store state — they travel with the tree
+        tombstones(spark, path).foreach(
+          _.write.parquet(PartitionSwap.tombstoneDir(tmpRoot.toString)))
+        // COMMIT MARKER: _params lands last — recovery promotes the
+        // scratch tree iff this write's _SUCCESS exists
+        import spark.implicits._
+        Seq((p.k, p.rowsPerBand, p.shingleN, newBuckets, p.leanSigs))
+          .toDF("k", "rows_per_band", "shingle_n", "buckets", "lean_sigs")
+          .write.parquet(paramsDir(tmpRoot.toString))
       }
-      val p = params(spark, path)
-      val tmpRoot = new Path(path + ".rebucket_tmp")
-      val oldRoot = new Path(path + ".rebucket_old")
-      if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-      if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-      val bands = spark.read.parquet(bandsDir(path)).drop("bucket")
-        .withColumn("bucket", pmod(xxhash64(col("band")), lit(newBuckets)))
-      // the doc table's id column is whatever the caller named it at
-      // write time — everything except (hs, sig, bucket) is the id
-      val docsDf = spark.read.parquet(docsDir(path))
-      val idCol = docsDf.columns
-        .filterNot(Set("hs", "sig", "bucket")).head
-      // the two scratch-table rewrites are independent dirs under the
-      // one held fence — overlap them (guide §2.6); the commit marker
-      // below still lands strictly after BOTH complete, so the crash
-      // windows are unchanged
-      graft.etl.Concurrent.awaitAll(2)(Seq(
-        () => bands.repartition(newBuckets, col("bucket"))
-          .write.partitionBy("bucket").parquet(tmpRoot.toString + "/bands"),
-        () => docsDf.drop("bucket")
-          .withColumn("bucket", pmod(xxhash64(col(idCol)), lit(newBuckets)))
-          .repartition(newBuckets, col("bucket"))
-          .write.partitionBy("bucket").parquet(tmpRoot.toString + "/docs")))
-      // pending tombstones are store state — they travel with the tree
-      tombstones(spark, path).foreach(
-        _.write.parquet(tmpRoot.toString + "/_tombstones"))
-      // COMMIT MARKER: _params lands last — recovery promotes the
-      // scratch tree iff this write's _SUCCESS exists
-      import spark.implicits._
-      Seq((p.k, p.rowsPerBand, p.shingleN, newBuckets, p.leanSigs))
-        .toDF("k", "rows_per_band", "shingle_n", "buckets", "lean_sigs")
-        .write.parquet(tmpRoot.toString + "/_params")
-      PartitionSwap.mv(fs, new Path(path), oldRoot)
-      PartitionSwap.mv(fs, tmpRoot, new Path(path))
-      fs.delete(oldRoot, true)
-      ()
-    }
-  }
-
-  /** Recover a crashed whole-store rebucket swap (the
-    * [[AnnStore]] recluster-recovery twin): with no live store, promote
-    * the scratch tree iff its commit marker (`_params`' `_SUCCESS`, the
-    * last thing [[rebucket]] writes before the renames) exists, else
-    * restore the original; with a live store, any scratch is leftover —
-    * drop it. Never deletes the only copy. */
-  private def recoverRebucket(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val dst = new Path(path)
-    val tmpRoot = new Path(path + ".rebucket_tmp")
-    val oldRoot = new Path(path + ".rebucket_old")
-    if (!fs.exists(dst)) {
-      if (fs.exists(new Path(tmpRoot, "_params/_SUCCESS"))) {
-        PartitionSwap.mv(fs, tmpRoot, dst)
-        if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-      } else if (fs.exists(oldRoot)) {
-        PartitionSwap.mv(fs, oldRoot, dst)
-        if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-      }
-    } else {
-      if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-      if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
     }
   }
 
@@ -627,14 +556,13 @@ object BandStore {
     val rootFs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one fence at the store root serializes writers across BOTH tables
     PartitionSwap.withWriterLock(rootFs, path, "BandStore") {
-      recoverRebucket(rootFs, path)
+      recoverSwaps(rootFs, path)
       // independent dirs under the one held fence — overlap the two
       // table compactions (guide §2.6); fixed bands-then-docs order out
       val branches = Seq("bands" -> bandsDir(path), "docs" -> docsDir(path))
       graft.etl.Concurrent.awaitAll(2)(branches.map {
         case (table, dir) => () => {
           val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-          PartitionSwap.recoverSwap(fs, dir, Prefix, Tags)
           val targets = PartitionSwap.fragmented(fs, dir, Prefix, maxFiles)
             .map(_.getName.stripPrefix(Prefix).toLong).sorted
           if (targets.nonEmpty)
@@ -686,13 +614,7 @@ object BandStore {
     val sfs = new Path(srcPath).getFileSystem(conf)
     PartitionSwap.withWriterLock(dfs, dstPath, "BandStore") {
       PartitionSwap.withWriterLock(sfs, srcPath, "BandStore") {
-        recoverRebucket(dfs, dstPath); recoverRebucket(sfs, srcPath)
-        Seq(srcPath, dstPath).foreach { p =>
-          Seq(bandsDir(p), docsDir(p)).foreach { dir =>
-            PartitionSwap.recoverSwap(
-              new Path(dir).getFileSystem(conf), dir, Prefix, Tags)
-          }
-        }
+        recoverSwaps(dfs, dstPath); recoverSwaps(sfs, srcPath)
         val (sp, dp) = (params(spark, srcPath), params(spark, dstPath))
         if (sp != dp)
           throw new IllegalArgumentException(
@@ -707,8 +629,8 @@ object BandStore {
                 dfs, new Path(d0), Prefix, "BandStore")
               .map(n => table -> n.stripPrefix(Prefix).toLong)
         }
-        PartitionSwap.mergeSidecar(sfs, new Path(tombstoneDir(srcPath)),
-          dfs, new Path(tombstoneDir(dstPath)), "BandStore")
+        PartitionSwap.mergeSidecar(sfs, new Path(PartitionSwap.tombstoneDir(srcPath)),
+          dfs, new Path(PartitionSwap.tombstoneDir(dstPath)), "BandStore")
         // src drops LAST — every earlier crash point re-runs to completion
         sfs.delete(new Path(srcPath), true)
         moved
@@ -716,17 +638,22 @@ object BandStore {
     }
   }
 
-  /** Heal a crashed compact (the [[AnnStore.recover]] twin; takes the
-    * writer fence). */
+  /** Heal a store whose writer crashed mid-swap — a per-bucket
+    * compact/purge swap or a whole-store rebucket: the recovery every
+    * swap-performing op runs on entry, callable on its own (takes the
+    * writer fence). Idempotent; a no-op on a healthy store. */
   def recover(spark: SparkSession, path: String): Unit = {
     val rootFs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     PartitionSwap.withWriterLock(rootFs, path, "BandStore") {
-      recoverRebucket(rootFs, path)
-      Seq(bandsDir(path), docsDir(path)).foreach { dir =>
-        val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        PartitionSwap.recoverSwap(fs, dir, Prefix, Tags)
-      }
+      recoverSwaps(rootFs, path)
     }
+  }
+
+  /** Both swap kinds, whole-store first: the per-bucket scratch sits
+    * beside the tables of the root the whole-store recovery restores. */
+  private def recoverSwaps(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
+    PartitionSwap.recoverRoot(fs, path, Rebucket)
+    Seq(bandsDir(path), docsDir(path)).foreach(PartitionSwap.recoverSwap(fs, _, Prefix, Tags))
   }
 
   /** Clear a stale writer fence left by a crashed compact — see
@@ -735,27 +662,11 @@ object BandStore {
     PartitionSwap.breakLock(
       new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), path)
 
-  /** The newest COMMITTED generation's root (round-14 verdict item —
-    * the [[AnnStore]] resolution applied to the whole-tree rebucket
-    * swap): the live path when it exists; between rebucket's two renames
-    * — or after a crash there — the parked previous generation at
-    * `.rebucket_old`, complete with params and tombstones; a
-    * committed-but-unpromoted scratch tree only if no previous
-    * generation survives (cannot arise from [[rebucket]]'s rename order,
-    * kept for defense). Readers stay readers — recovery is unchanged and
-    * still owned by [[recover]] / the next writer op. */
-  private def resolveRoot(fs: org.apache.hadoop.fs.FileSystem,
-                          path: String): String = {
-    if (fs.exists(new Path(path))) path
-    else if (fs.exists(new Path(path + ".rebucket_old"))) path + ".rebucket_old"
-    else if (fs.exists(new Path(path + ".rebucket_tmp/_params/_SUCCESS")))
-      path + ".rebucket_tmp"
-    else path
-  }
-
+  /** The generation root every read resolves once and reads everything
+    * from ([[PartitionSwap.resolveRoot]] under the rebucket swap). */
   private def resolvedRoot(spark: SparkSession, path: String): String =
-    resolveRoot(
-      new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+    PartitionSwap.resolveRoot(
+      new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), path, Rebucket)
 
   /** [[PartitionSwap.resolvedRead]] over one of the store's bucketed
     * tables: the last committed generation of every bucket — a probe

@@ -1,6 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 /** Small-file COMPACTION — the bin-packing half of `OPTIMIZE` (the
   * z-order half lives in [[ZOrderTable]]): a streaming/incremental
@@ -22,41 +23,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so a crash mid-compaction never leaves the table half-rewritten. */
 object Compact {
 
-  /** Side/hidden files excluded from the byte/count measurements —
-    * Spark's own HiddenFileFilter convention: `_`-prefixed (_SUCCESS,
-    * _metadata) AND `.`-prefixed (RawLocalFileSystem writes .part-*.crc
-    * checksum shadows that listStatus DOES return on some filesystems;
-    * counting them would inflate measured bytes and skew the computed
-    * target file count). */
-  private def isSideFile(name: String): Boolean =
-    name.startsWith("_") || name.startsWith(".")
-
-  /** Total bytes of the parquet data files under `path` (driver-side
-    * metadata listing; `_`/`.`-prefixed side files excluded). */
-  def dataBytes(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  /** The parquet data files under `path`, recursively — one driver-side
+    * metadata walk, no data read. Side files ([[PartitionSwap.isSideFile]])
+    * are excluded: counting `.crc` shadows or `_SUCCESS` would inflate the
+    * measured bytes and skew the computed target file count. */
+  private def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(d: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(d).map { st =>
+    def walk(d: Path): Seq[FileStatus] =
+      fs.listStatus(d).toSeq.flatMap { st =>
         if (st.isDirectory) walk(st.getPath)
-        else if (isSideFile(st.getPath.getName)) 0L
-        else st.getLen
-      }.sum
+        else if (PartitionSwap.isSideFile(st.getPath.getName)) Nil
+        else Seq(st)
+      }
     walk(p)
   }
 
-  /** Number of parquet data files under `path` (same listing rules). */
-  def dataFileCount(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(d: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(d).map { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (isSideFile(st.getPath.getName)) 0L
-        else 1L
-      }.sum
-    walk(p)
-  }
+  /** Total bytes of the parquet data files under `path`. */
+  def dataBytes(spark: SparkSession, path: String): Long =
+    dataFiles(spark, path).map(_.getLen).sum
+
+  /** Number of parquet data files under `path`. */
+  def dataFileCount(spark: SparkSession, path: String): Long =
+    dataFiles(spark, path).size.toLong
 
   /** Rewrite the table at `path` IN PLACE as ~`targetFileBytes` files.
     * Returns (files before, files after). The target count comes from
@@ -67,8 +56,9 @@ object Compact {
   def filesInPlace(spark: SparkSession, path: String,
                    targetFileBytes: Long): (Long, Long) = {
     require(targetFileBytes > 0, s"targetFileBytes $targetFileBytes must be > 0")
-    val before = dataFileCount(spark, path)
-    val bytes = dataBytes(spark, path)
+    val files = dataFiles(spark, path)
+    val before = files.size.toLong
+    val bytes = files.map(_.getLen).sum
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     ParquetSink.swapWrite(spark, path, Nil) {
       case Some(cur) => cur.repartition(n)

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Parquet sinks — the reference "load" phase (Postgres upsert tables +
   * Mongo collections, `Airbnb_Listings_ETL.py:141-151,172-207`)
@@ -42,51 +43,29 @@ object ParquetSink {
       case None       => updates
     }
 
-  /** Atomic read-modify-write swap shared by every keyed sink: recover any
-    * crashed prior swap, hand the current base table (if any) to `merge`,
-    * write the result to `.tmp`, then promote it with checked renames.
-    *
-    * All directory manipulation goes through the Hadoop `FileSystem` API
-    * (`java.io.File.renameTo` is local-only and fails silently elsewhere).
-    * ATOMICITY SCOPE: the swap is crash-safe where directory rename is
-    * atomic — local filesystems and HDFS. On an S3A-style object store,
-    * rename is copy-then-delete, so a crash mid-promotion can leave a
+  /** Atomic read-modify-write swap shared by every keyed sink: hand the
+    * current base table (if any) to `merge`, write the result to `.tmp`,
+    * then promote it through [[PartitionSwap.swapRoot]] — which recovers a
+    * crashed prior swap first and clears stale `.tmp`/`.old` dirs (a stale
+    * `.old` would otherwise make the park rename fail and lose the
+    * upsert). All directory manipulation goes through the Hadoop
+    * `FileSystem` API and every rename is checked. ATOMICITY SCOPE: the
+    * swap is crash-safe where directory rename is atomic — local
+    * filesystems and HDFS. On an S3A-style object store, rename is
+    * copy-then-delete, so a crash mid-promotion can leave a
     * partially-copied dst that recovery cannot distinguish from a complete
     * one; object-store deployments need a commit-marker protocol (or a
-    * table format like Iceberg/Delta) on top.
-    * Leftover `.tmp`/`.old` dirs from a crashed prior run are cleared up
-    * front — a stale `.old` would otherwise make the dst→old rename fail
-    * and lose the upsert — and every rename result is checked. */
+    * table format like Iceberg/Delta) on top. */
   private[sinks] def swapWrite(spark: SparkSession, path: String,
                                partitionCols: Seq[String])
                               (merge: Option[DataFrame] => DataFrame): Unit =
     swapWriteWith(spark, path, partitionCols, (_, _) => ())(merge)
 
-  /** Crash recovery for a [[swapWrite]] that died mid-promotion, callable
-    * on its own: if a prior run crashed between mv(dst, old) and
-    * mv(tmp, dst), the base table exists only as `.old` and the
-    * fully-written merged result as `.tmp` — deleting them blindly would
-    * silently lose the whole base table. A `.tmp` alongside `.old` is
-    * trustworthy (renames start only after the write commits); a `.tmp`
-    * with NEITHER dst nor old is a half-written initial create, handled by
-    * the caller's cleanup. Runs BEFORE any state read that depends on dst
-    * being current — [[Scd2Sink]] consults its replay marker under dst, so
-    * it must recover first or a crashed-then-redelivered batch reads no
-    * marker and re-merges on top of itself. Idempotent; no-op when dst
-    * exists. */
-  private[sinks] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                 dst: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(dst.toString + ".tmp")
-    val old = new Path(dst.toString + ".old")
-    def mv(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"recoverSwap: rename $from -> $to failed")
-    if (!fs.exists(dst) && fs.exists(old)) {
-      if (fs.exists(tmp)) { mv(tmp, dst); fs.delete(old, true): Unit }
-      else mv(old, dst)
-    }
-  }
+  /** The keyed sinks' whole-root swap: `.tmp`/`.old` scratch, and no
+    * commit marker — a `.tmp` is trusted only beside a parked `.old`
+    * (renames start after the write commits); a `.tmp` with neither dst
+    * nor `.old` is a half-written first create and is discarded. */
+  private[sinks] val Swap = PartitionSwap.RootSwap("", marker = None)
 
   /** [[swapWrite]] plus an `afterWrite(fs, tmpDir)` hook that runs after
     * the merged result is fully written but BEFORE the promotion renames —
@@ -96,29 +75,17 @@ object ParquetSink {
     * batch whose data didn't land, nor vice versa. */
   private[sinks] def swapWriteWith(spark: SparkSession, path: String,
                                    partitionCols: Seq[String],
-                                   afterWrite: (org.apache.hadoop.fs.FileSystem,
-                                     org.apache.hadoop.fs.Path) => Unit)
+                                   afterWrite: (FileSystem, Path) => Unit)
                                   (merge: Option[DataFrame] => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
     val dst = new Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + ".tmp")
-    val old = new Path(path + ".old")
-    def mv(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"swapWrite: rename $from -> $to failed")
-    recoverSwap(fs, dst)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-    val merged = merge(if (fs.exists(dst)) Some(spark.read.parquet(path)) else None)
-    // write to a temp dir then swap: the source partition being overwritten
-    // is also an input — direct overwrite would corrupt it mid-scan
-    writePartitioned(merged, tmp.toString, partitionCols)
-    afterWrite(fs, tmp)
-    if (fs.exists(dst)) {
-      mv(dst, old)
-      mv(tmp, dst)
-      fs.delete(old, true): Unit
-    } else mv(tmp, dst)
+    PartitionSwap.swapRoot(fs, path, Swap) { tmp =>
+      val merged = merge(if (fs.exists(dst)) Some(spark.read.parquet(path)) else None)
+      // write to a temp dir then swap: the source partition being
+      // overwritten is also an input — direct overwrite would corrupt it
+      // mid-scan
+      writePartitioned(merged, tmp.toString, partitionCols)
+      afterWrite(fs, tmp)
+    }
   }
 }

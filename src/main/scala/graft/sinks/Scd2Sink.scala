@@ -58,7 +58,7 @@ object Scd2Sink {
                         partitionCols: Seq[String] = Nil): Unit = {
     val dst = new Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ParquetSink.recoverSwap(fs, dst)
+    PartitionSwap.recoverRoot(fs, path, ParquetSink.Swap)
     if (fs.exists(dst) && lastBatch(fs, dst).exists(_ >= batchId)) return
     ParquetSink.swapWriteWith(spark, path, partitionCols,
       (tmpFs, tmp) => writeMarker(tmpFs, tmp, batchId)) {

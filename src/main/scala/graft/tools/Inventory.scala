@@ -5,8 +5,10 @@ package graft.tools
   * every key named in SURVEY.md §2 exists and vice versa, and asserts the
   * headline counts (README's query count, SURVEY's spec count) against the
   * tree, that no engine module but `queries/Scratch.scala` makes its
-  * own temp dirs or JVM-exit hooks, and that no tool but the `ScaleCurve`
-  * runner writes the curve log. Any drift EXITS NONZERO — a stale doc
+  * own temp dirs or JVM-exit hooks, that no tool but the `ScaleCurve`
+  * runner writes the curve log, and that no file but
+  * `sinks/PartitionSwap.scala` renames directories or names the
+  * tombstone sidecar. Any drift EXITS NONZERO — a stale doc
   * is a build failure, not a printout to skim past (round-3 verdict: the
   * header was stale for two consecutive rounds; round-6 item #9 asked for
   * the hard failure) — and InventorySpec runs the same checks inside
@@ -111,6 +113,27 @@ object Inventory {
       check(offenders.isEmpty,
         "tools: only ScaleCurve.scala names scale_curve.jsonl; no tool adds exit hooks",
         s"TOOL CURVE-LOG WRITERS OR EXIT HOOKS (use graft.tools.ScaleCurve): ${offenders.mkString(", ")}")
+    }
+    // ONE STORE-COMMIT PROTOCOL: directory renames and the tombstone
+    // sidecar belong to sinks/PartitionSwap.scala alone — a fourth copy of
+    // the park/promote dance could drift from the spec-proven crash
+    // windows. This file names both patterns to search for them, so it is
+    // skipped.
+    locally {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get("src/main/scala/graft")
+      val allowed = Set(root.resolve("sinks/PartitionSwap.scala"),
+        root.resolve("tools/Inventory.scala"))
+      val walk = java.nio.file.Files.walk(root)
+      val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        finally walk.close()
+      val copies = files.filterNot(allowed).filter { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        src.contains(".rename(") || src.contains("_tombstones")
+      }.map(_.toString).sorted
+      check(copies.isEmpty,
+        "sinks: only PartitionSwap.scala renames directories or names the tombstone sidecar",
+        s"STORE-COMMIT COPIES (use graft.sinks.PartitionSwap): ${copies.mkString(", ")}")
     }
     // PLAN-AUDIT FRESHNESS (round-17 verdict item: the cartesian gate is
     // only as good as its last committed run — round 17 shipped a

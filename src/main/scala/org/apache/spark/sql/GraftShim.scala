@@ -45,4 +45,15 @@ object GraftShim {
         "consumer may still hold; pass the real count if all are yours")
     leaves.foreach(_.unpersist(blocking = false))
   }
+
+  /** `df` without its join hints. A hint asks the planner how to join
+    * the frame; a query that returns the frame as its result, with no
+    * join, leaves the hint unused and Spark logs a `HintErrorLogger`
+    * warning for it. */
+  def withoutHints(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    classic.Dataset.ofRows(qe.sparkSession, qe.analyzed.transformDown {
+      case h: catalyst.plans.logical.ResolvedHint => h.child
+    })
+  }
 }

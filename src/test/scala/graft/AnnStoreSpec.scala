@@ -603,6 +603,22 @@ class AnnStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       === committed, "an uncommitted scratch tree must be abandoned, the original restored")
     assert(!new java.io.File(path + ".recluster_tmp").exists()
       && !new java.io.File(path + ".recluster_old").exists())
+    // window: live root beside leftover scratch — a COMMITTED scratch
+    // tree (marker present) missing a cluster, and a stale park missing
+    // another: with a live root neither may be promoted or restored;
+    // recover drops both and the data is untouched
+    Seq(".recluster_tmp" -> "centroid_id=0", ".recluster_old" -> "centroid_id=1")
+      .foreach { case (suffix, dropped) =>
+        val copy = new java.io.File(path + suffix)
+        org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(path), copy)
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(copy, dropped))
+      }
+    AnnStore.recover(spark, path)
+    assert(AnnStore.read(spark, path)
+      .select($"vec_id", $"centroid_id".cast("long")).as[(Long, Long)].collect().toSet
+      === committed, "leftover scratch beside a live root must never replace it")
+    assert(!new java.io.File(path + ".recluster_tmp").exists()
+      && !new java.io.File(path + ".recluster_old").exists())
   }
 
   test("mid-recluster reads keep masking the old generation's tombstones") {

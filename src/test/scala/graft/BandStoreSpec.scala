@@ -506,6 +506,42 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     BandStore.recover(spark, path)
     assert(live.exists() && !tmpRoot.exists() && !oldRoot.exists())
     assert(pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8)) === before)
+    // window 3: live root beside leftover scratch — a COMMITTED tmp tree
+    // (its _params marker present) and a stale park, each missing its
+    // bands/ table: with a live root neither may be promoted or restored;
+    // recover drops both and the data is untouched
+    Seq(tmpRoot, oldRoot).foreach { copy =>
+      org.apache.commons.io.FileUtils.copyDirectory(live, copy)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(copy, "bands"))
+    }
+    BandStore.recover(spark, path)
+    assert(!tmpRoot.exists() && !oldRoot.exists())
+    assert(pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8)) === before,
+      "leftover scratch beside a live root must never replace it")
+  }
+
+  test("mid-rebucket probes keep masking the parked generation's tombstones") {
+    // data and tombstones must resolve to the SAME generation: the parked
+    // old tree still holds its pending tombstones, and serving its bands
+    // without its sidecar would resurrect a deleted dup source
+    val path = newPath()
+    BandStore.write(history, "text", "doc_id", path, buckets = 8)
+    val before = pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8))
+    assert(before.nonEmpty)
+    val victim = before.head._1
+    BandStore.delete(Seq(victim).toDF("doc_id"), "doc_id", path)
+    val masked = pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8))
+    assert(masked === before.filterNot(_._1 == victim))
+    // park the whole store as rebucket would mid-swap
+    assert(new java.io.File(path).renameTo(new java.io.File(path + ".rebucket_old")))
+    assert(BandStore.tombstones(spark, path).isDefined,
+      "the parked generation's sidecar must resolve with it")
+    assert(pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8)) === masked,
+      "the old generation's tombstones must mask its data while parked")
+    assert(BandStore.sketchTable(spark, path, "doc_id")
+      .filter($"doc_id" === victim).count() === 0)
+    BandStore.recover(spark, path)
+    assert(pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8)) === masked)
   }
 
   test("append and probe pin the store's sketch parameters, not the caller's") {
