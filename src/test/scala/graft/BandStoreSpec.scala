@@ -544,6 +544,28 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8)) === masked)
   }
 
+  test("purge of a doubly-crashed store keeps the bucket parked under the parked generation") {
+    // a per-bucket swap crashes with a bands/ bucket parked (its scratch
+    // sits inside the store root), then a rebucket crashes with the whole
+    // root parked; purge must restore the generation BEFORE the bucket,
+    // or its own swap clears the bucket's park and the rows are lost
+    val path = newPath()
+    BandStore.write(history, "text", "doc_id", path, buckets = 8)
+    val victim = pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8)).head._1
+    BandStore.delete(Seq(victim).toDF("doc_id"), "doc_id", path)
+    val masked = pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8))
+    val kept = spark.read.parquet(s"$path/bands").filter($"doc_id" =!= victim).count()
+    val bucket = new java.io.File(path, "bands").listFiles()
+      .filter(_.getName.startsWith("bucket=")).head
+    val park = new java.io.File(path, "bands.swap_old")
+    assert(park.mkdirs() && bucket.renameTo(new java.io.File(park, bucket.getName)))
+    assert(new java.io.File(path).renameTo(new java.io.File(path + ".rebucket_old")))
+    assert(BandStore.purge(spark, path).nonEmpty)
+    assert(spark.read.parquet(s"$path/bands").count() === kept,
+      "every band row but the victim's must survive the purge")
+    assert(pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8)) === masked)
+  }
+
   test("append and probe pin the store's sketch parameters, not the caller's") {
     val path = newPath()
     BandStore.write(history, "text", "doc_id", path, k = 16, rowsPerBand = 4, buckets = 8)
