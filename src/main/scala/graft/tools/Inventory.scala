@@ -127,9 +127,10 @@ object Inventory {
       val walk = java.nio.file.Files.walk(root)
       val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
         finally walk.close()
+      val commitProtocol = "\\.rename\\(|_tombstones".r
       val copies = files.filterNot(allowed).filter { f =>
         val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        src.contains(".rename(") || src.contains("_tombstones")
+        commitProtocol.findFirstIn(src).nonEmpty
       }.map(_.toString).sorted
       check(copies.isEmpty,
         "sinks: only PartitionSwap.scala renames directories or names the tombstone sidecar",
