@@ -8,14 +8,24 @@ import java.nio.file.{Files, Paths}
   * SQL is written FIRST — the per-query parquet dumps that follow are
   * already incremental, so any queries that complete before a timeout are
   * comparable — and a `[verify]` stderr line per query shows exactly where
-  * a killed run died. */
+  * a killed run died.
+  *
+  * `Verify <sfDir> <outDir> [key...]`: with keys, only those are dumped
+  * and only their oracle SQL is written (then `tools/check_oracle.py`
+  * compares just them); a key `SparkEntry` does not define fails before
+  * any session exists, so a typo cannot pass as an empty compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [key...]")
+    val Array(sfDir, outDir) = args.take(2)
+    val only = args.drop(2).toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    val keep: String => Boolean = if (only.isEmpty) _ => true else only
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    writeOracleSql(outDir, _ => true)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
+    writeOracleSql(outDir, keep)
+    val names = SparkEntry.queries.toSeq.filter(kv => keep(kv._1)).sortBy(_._1)
     val t0 = System.nanoTime()
     names.zipWithIndex.foreach { case ((name, fn), i) =>
       val q0 = System.nanoTime()

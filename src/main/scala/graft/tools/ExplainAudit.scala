@@ -11,11 +11,17 @@ package graft.tools
   * bounded broadcast of a small side (legitimate for non-equi joins —
   * every occurrence still prints, so growth is visible), a
   * CartesianProduct is the unbounded blow-up no query here may plan.
-  * Run: `sbt "runMain graft.tools.ExplainAudit /root/testdata/sf0.01"`. */
+  *
+  * With a `planDir`, the same pass also writes each key's formatted
+  * executed plan to `<planDir>/<key>.txt`, so a before/after plan diff
+  * covers every key.
+  * Run: `sbt "runMain graft.tools.ExplainAudit /root/testdata/sf0.01 [planDir]"`. */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val planDir = args.lift(1).map(java.nio.file.Paths.get(_))
     val spark = graft.Session.local()
+    planDir.foreach(java.nio.file.Files.createDirectories(_))
     val cartesianKeys = scala.collection.mutable.ListBuffer[String]()
     val errorKeys = scala.collection.mutable.ListBuffer[String]()
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -25,6 +31,8 @@ object ExplainAudit {
         val plan = df.queryExecution.executedPlan.toString
         val formatted = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
+        planDir.foreach(d => java.nio.file.Files.write(
+          d.resolve(s"$name.txt"), formatted.getBytes("UTF-8")))
         def c(p: String) = p.r.findAllIn(plan).length
         val pushed = "PushedFilters: \\[[^\\]]+\\]".r.findAllIn(formatted)
           .count(!_.contains("[]"))

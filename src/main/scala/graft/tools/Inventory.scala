@@ -1,12 +1,17 @@
 package graft.tools
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 /** Mechanical doc-sync GUARD: prints the query inventory straight from
   * `SparkEntry` (the same map the driver iterates), cross-checks that
   * every key named in SURVEY.md §2 exists and vice versa, and asserts the
   * headline counts (README's query count, SURVEY's spec count) against the
   * tree, that no engine module but `queries/Scratch.scala` makes its
   * own temp dirs or JVM-exit hooks, that no tool but the `ScaleCurve`
-  * runner writes the curve log, and that no file but
+  * runner writes the curve log, that no tool but `Profile` and
+  * `ScaleCurve` keeps its own timer or listener, and that no file but
   * `sinks/PartitionSwap.scala` renames directories or names the
   * tombstone sidecar. Any drift EXITS NONZERO — a stale doc
   * is a build failure, not a printout to skim past (round-3 verdict: the
@@ -23,6 +28,15 @@ object Inventory {
     println("inventory: docs and code agree")
   }
 
+  private def read(f: Path): String = new String(Files.readAllBytes(f), "UTF-8")
+
+  /** Every `.scala` file under `dir` (recursively) with its source. */
+  private def sources(dir: String): List[(Path, String)] = {
+    val walk = Files.walk(Paths.get(dir))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }.sorted.map(f => f -> read(f))
+
   /** Runs every check from the repo root, printing each outcome line;
     * returns the failed checks' messages (empty = docs agree). */
   def failures(): List[String] = {
@@ -34,8 +48,7 @@ object Inventory {
     val oracles = graft.SparkEntry.oracleSql.keySet
     println(s"queries=${queries.size} oracles=${oracles.size} " +
       s"rows_only=${(queries -- oracles).toSeq.sorted.mkString(",")}")
-    val survey = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("SURVEY.md")), "UTF-8")
+    val survey = read(Paths.get("SURVEY.md"))
     val inSurvey = "`([a-z0-9_]+)`".r.findAllMatchIn(survey).map(_.group(1)).toSet
     val missing = (queries -- inSurvey).toSeq.sorted
     check(missing.isEmpty, "survey: every query key mentioned",
@@ -49,8 +62,7 @@ object Inventory {
       s"STALE SURVEY ROWS (no such query): ${stale.mkString(", ")}")
     // README carries one headline count too — it drifted in the same PR
     // that added this checker (round-4 advice), so check it mechanically
-    val readme = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val readme = read(Paths.get("README.md"))
     "(\\d+) oracle-checked queries".r.findFirstMatchIn(readme) match {
       case Some(m) =>
         check(m.group(1).toInt == queries.size, "readme: headline count matches",
@@ -61,15 +73,8 @@ object Inventory {
     // SURVEY's spec count vs the tree: counted as `test("` definitions in
     // src/test (the static rule the doc line states) — a suite added
     // without bumping the doc, or a doc bump without tests, both fail
-    val specDir = java.nio.file.Paths.get("src/test/scala/graft")
-    val treeSpecs = {
-      val files = java.nio.file.Files.list(specDir).toArray.map(_.toString).filter(_.endsWith(".scala"))
-      files.map { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(f)), "UTF-8")
-        "(?m)^\\s*test\\(\"".r.findAllMatchIn(src).size
-      }.sum
-    }
+    val treeSpecs = sources("src/test/scala/graft")
+      .map { case (_, src) => "(?m)^\\s*test\\(\"".r.findAllMatchIn(src).size }.sum
     "(\\d+) ScalaTest test cases".r.findFirstMatchIn(survey) match {
       case Some(m) =>
         check(m.group(1).toInt == treeSpecs, s"survey: spec count matches tree ($treeSpecs)",
@@ -81,17 +86,12 @@ object Inventory {
     // the engine modules belong to graft.queries.Scratch alone — a module
     // growing its own copy again is a build failure, not a review note
     locally {
-      import scala.jdk.CollectionConverters._
-      val owner = java.nio.file.Paths.get("src/main/scala/graft/queries/Scratch.scala")
-      val copies = Seq("queries", "operators", "sinks", "etl").flatMap { m =>
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft", m))
-        try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-        finally walk.close()
-      }.filter { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        f != owner && (src.contains("Runtime.getRuntime.addShutdownHook") ||
-          src.contains("Files.createTempDirectory"))
-      }.map(_.toString).sorted
+      val owner = Paths.get("src/main/scala/graft/queries/Scratch.scala")
+      val copies = Seq("queries", "operators", "sinks", "etl")
+        .flatMap(m => sources(s"src/main/scala/graft/$m")).collect {
+          case (f, src) if f != owner && (src.contains("Runtime.getRuntime.addShutdownHook") ||
+            src.contains("Files.createTempDirectory")) => f.toString
+        }.sorted
       check(copies.isEmpty, "scratch: only queries/Scratch.scala makes temp dirs or exit hooks",
         s"SCRATCH COPIES (use graft.queries.Scratch): ${copies.mkString(", ")}")
     }
@@ -99,39 +99,40 @@ object Inventory {
     // alone (a family emits through it), and no tool cleans up from a
     // JVM-exit hook (the runner's scratch root dies in a finally). This
     // file names both patterns to search for them, so it is skipped.
-    locally {
-      import scala.jdk.CollectionConverters._
-      val tools = java.nio.file.Paths.get("src/main/scala/graft/tools")
-      val walk = java.nio.file.Files.list(tools)
-      val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-        finally walk.close()
-      val offenders = files.filter(_ != tools.resolve("Inventory.scala")).filter { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        (f != tools.resolve("ScaleCurve.scala") && src.contains("scale_curve.jsonl")) ||
-          src.contains("Runtime.getRuntime.addShutdownHook")
-      }.map(_.toString).sorted
-      check(offenders.isEmpty,
-        "tools: only ScaleCurve.scala names scale_curve.jsonl; no tool adds exit hooks",
-        s"TOOL CURVE-LOG WRITERS OR EXIT HOOKS (use graft.tools.ScaleCurve): ${offenders.mkString(", ")}")
+    val tools = Paths.get("src/main/scala/graft/tools")
+    val toolSources = sources(tools.toString).filter(_._1 != tools.resolve("Inventory.scala"))
+    val curveWriters = toolSources.collect {
+      case (f, src) if (f != tools.resolve("ScaleCurve.scala") && src.contains("scale_curve.jsonl")) ||
+        src.contains("Runtime.getRuntime.addShutdownHook") => f.toString
     }
+    check(curveWriters.isEmpty,
+      "tools: only ScaleCurve.scala names scale_curve.jsonl; no tool adds exit hooks",
+      s"TOOL CURVE-LOG WRITERS OR EXIT HOOKS (use graft.tools.ScaleCurve): ${curveWriters.mkString(", ")}")
+    // ONE TIMER, ONE PROFILER: wall clocks and Spark listeners in tools
+    // belong to ScaleCurve.scala (`timed`, `Run.bytesRead`) and
+    // Profile.scala alone — a hand-built timer beside a hand-typed copy
+    // of a query is how a profile drifts from the code it measures
+    val timerOwners = Set("Profile.scala", "ScaleCurve.scala").map(tools.resolve)
+    val timers = toolSources.collect {
+      case (f, src) if !timerOwners(f) &&
+        (src.contains("System.nanoTime") || src.contains("addSparkListener")) => f.toString
+    }
+    check(timers.isEmpty,
+      "tools: only Profile.scala and ScaleCurve.scala keep timers or listeners",
+      s"TOOL TIMERS OR LISTENERS (use graft.tools.ScaleCurve.timed or graft.tools.Profile): ${timers.mkString(", ")}")
     // ONE STORE-COMMIT PROTOCOL: directory renames and the tombstone
     // sidecar belong to sinks/PartitionSwap.scala alone — a fourth copy of
     // the park/promote dance could drift from the spec-proven crash
     // windows. This file names both patterns to search for them, so it is
     // skipped.
     locally {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get("src/main/scala/graft")
+      val root = Paths.get("src/main/scala/graft")
       val allowed = Set(root.resolve("sinks/PartitionSwap.scala"),
         root.resolve("tools/Inventory.scala"))
-      val walk = java.nio.file.Files.walk(root)
-      val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-        finally walk.close()
       val commitProtocol = "\\.rename\\(|_tombstones".r
-      val copies = files.filterNot(allowed).filter { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        commitProtocol.findFirstIn(src).nonEmpty
-      }.map(_.toString).sorted
+      val copies = sources(root.toString).collect {
+        case (f, src) if !allowed(f) && commitProtocol.findFirstIn(src).nonEmpty => f.toString
+      }
       check(copies.isEmpty,
         "sinks: only PartitionSwap.scala renames directories or names the tombstone sidecar",
         s"STORE-COMMIT COPIES (use graft.sinks.PartitionSwap): ${copies.mkString(", ")}")
@@ -144,8 +145,7 @@ object Inventory {
     // key set, with cart=0 and zero ERROR rows; adding a key without
     // re-running ExplainAudit is now a build failure, not a footnote.
     locally {
-      import scala.jdk.CollectionConverters._
-      val audits = java.nio.file.Files.list(java.nio.file.Paths.get("."))
+      val audits = Files.list(Paths.get("."))
         .iterator().asScala.map(_.getFileName.toString)
         .filter(_.matches("plan_audit_r\\d+\\.txt")).toSeq
         .sortBy(f => "\\d+".r.findFirstIn(f).get.toInt)
@@ -155,8 +155,7 @@ object Inventory {
         case Some(f) =>
           val rowRe = "(?m)^\\[audit\\] (\\S+)\\s+.*?cart=\\s*(\\d+)".r
           val errRe = "(?m)^\\[audit\\] (\\S+)\\s+ERROR".r
-          val txt = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(f)), "UTF-8")
+          val txt = read(Paths.get(f))
           val rows = rowRe.findAllMatchIn(txt)
             .map(m => m.group(1) -> m.group(2).toInt).toMap
           val errs = errRe.findAllMatchIn(txt).map(_.group(1)).toSeq.sorted

@@ -3,7 +3,8 @@ package graft.tools
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -171,10 +172,31 @@ object ScaleCurve {
       ("sf0.1x4", 4, blow(sf01, 4)), ("sf0.1x10", 10, blow(sf01, 10)))
 
   /** What the runner hands a family: its session, a scratch root for the
-    * stores it writes, and `emit` for its JSON lines. */
+    * stores it writes, `emit` for its JSON lines and `bytesRead` for the
+    * executed input bytes of a query. */
   final class Run private[ScaleCurve] (val spark: SparkSession, val scratch: String) {
     private[ScaleCurve] val out = new StringBuilder
     def emit(line: String): Unit = { println(line); out.append(line).append('\n') }
+
+    private lazy val taskBytes = {
+      val n = new java.util.concurrent.atomic.AtomicLong
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) { n.addAndGet(e.taskMetrics.inputMetrics.bytesRead); () }
+      })
+      n
+    }
+
+    /** `f`'s result and the task `inputMetrics.bytesRead` summed over
+      * exactly its jobs: the listener bus is drained on both sides, so
+      * "f returned" implies its task-end events were counted. */
+    def bytesRead[T](f: => T): (T, Long) = {
+      GraftShim.drainListenerBus(spark)
+      val pre = taskBytes.get()
+      val r = f
+      GraftShim.drainListenerBus(spark)
+      (r, taskBytes.get() - pre)
+    }
   }
 
   val families: Seq[(String, Run => Unit)] = Seq(

@@ -75,16 +75,12 @@ object ScaleCurveBpe {
       // warm once per corpus, then median of 3 timed sweeps of `reps`
       // encodes on BOTH corpus sizes — slope/intercept split below
       def sweep(corpus: org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        var r = 0
-        var acc = 0L
-        while (r < reps) {
-          acc ^= corpus.select(sum(graft.functions.Bpe.bpeTokenCount(col("text"), merges)))
+        val (acc, s) = ScaleCurve.timed((1 to reps).foldLeft(0L) { (a, _) =>
+          a ^ corpus.select(sum(graft.functions.Bpe.bpeTokenCount(col("text"), merges)))
             .head().getLong(0)
-          r += 1
-        }
+        })
         require(acc != -1, "keep the fold alive")
-        (System.nanoTime() - t0) / 1e9
+        s
       }
       sweep(docs); sweep(big)
       val secSmall = Seq.fill(3)(sweep(docs)).sorted.apply(1)

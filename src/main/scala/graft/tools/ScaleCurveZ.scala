@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 import graft.etl.ZOrder
@@ -25,9 +24,9 @@ import graft.etl.ZOrder
   *     Spark's parquet reader runs, so touched-row-group compressed
   *     bytes IS the planned read set.
   *   - EXECUTED SCAN: the same predicate run as a real
-  *     filter→aggregate query, task `inputMetrics.bytesRead` summed via
-  *     a listener (drained through `GraftShim.drainListenerBus` before
-  *     reading). Executed bytes corroborate the footer math — including
+  *     filter→aggregate query, task `inputMetrics.bytesRead` summed by
+  *     the runner's `bytesRead` listener (drained before and after the
+  *     query). Executed bytes corroborate the footer math — including
   *     effects the footer audit can't see (every task still reads each
   *     file's footer; page-index pruning may read LESS).
   *
@@ -86,21 +85,12 @@ object ScaleCurveZ {
     val par = spark.sparkContext.defaultParallelism
     val conf = spark.sparkContext.hadoopConfiguration
 
-    val taskBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          { taskBytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead); () }
-    })
     /** Run `df` to completion and return (rows, sum(pay), executed task
       * bytesRead for exactly this query). */
     def measured(df: DataFrame): (Long, Long, Long) = {
-      GraftShim.drainListenerBus(spark)
-      val pre = taskBytes.get()
-      val row = df.agg(count(lit(1)).as("n"), sum(col("pay")).as("s")).collect()(0)
-      GraftShim.drainListenerBus(spark)
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1),
-        taskBytes.get() - pre)
+      val (row, bytes) = sc.bytesRead(
+        df.agg(count(lit(1)).as("n"), sum(col("pay")).as("s")).collect()(0))
+      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1), bytes)
     }
 
     val base = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
