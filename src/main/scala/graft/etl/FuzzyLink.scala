@@ -178,20 +178,6 @@ object FuzzyLink {
     }): _*))
   }
 
-  /** The segment blocking stage alone (candidates before verify), for
-    * the scale curve. */
-  private[graft] def segmentCandidatePairs(df: DataFrame, nameCol: String,
-                                           maxDist: Int): DataFrame = {
-    val keyed = keyedNames(df, nameCol)
-    val idx = keyed.select(col("nk"), explode(idxKeyArray(maxDist)).as("bk"))
-    val probe = keyed.select(col("nk"), explode(probeKeyArray(maxDist)).as("bk"))
-    candidatesFromBlocks(idx, probe)
-      .join(keyed.select(col("nk").as("ka"), col("n").as("na")), Seq("ka"))
-      .join(keyed.select(col("nk").as("kb"), col("n").as("nb")), Seq("kb"))
-      .select(least(col("na"), col("nb")).as("name_a"),
-        greatest(col("na"), col("nb")).as("name_b"))
-  }
-
   /** Distinct name pairs (name_a < name_b) within edit distance
     * `maxDist` via segment-pigeonhole blocking + exact verify —
     * OUTPUT-IDENTICAL to [[editNeighbors]] (spec-proven), with blocking

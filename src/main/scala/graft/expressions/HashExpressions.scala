@@ -49,7 +49,8 @@ object HashUtil {
     * HOF pipeline (substring transform, distinct, hash transform, sort)
     * and its per-shingle string allocations. Value-identical to
     * `array_sort(array_distinct(transform(shingles, md5prefix31)))` over
-    * `charShingles(text, n)`.
+    * the text's char n-grams (TextSimSpec pins it against that composed
+    * form).
     *
     * Allocation profile (this sits under ~10M calls per 5k docs): the
     * text's bytes are materialized ONCE, each shingle is digested straight

@@ -114,8 +114,9 @@ case class L2Norm(child: Expression) extends UnaryExpression {
 
 /** One-pass SimHash over pre-hashed tokens (array<bigint> of 60-bit
   * hashes): bit b of the output is set iff tokens with bit b set are the
-  * (weak) majority — identical semantics to the 60-fold composed form in
-  * `TextFunctions.simhash60`, evaluated in a single traversal instead of 60.
+  * (weak) majority — identical semantics to the 60-fold composed form
+  * SketchParitySpec keeps as its oracle, evaluated in a single traversal
+  * instead of 60.
   */
 case class SimHash60(child: Expression) extends UnaryExpression {
 

@@ -21,15 +21,6 @@ object TextFunctions {
     * newline-separated words stay fused — normalize first. */
   def tokens(c: Column): Column = split(c, " ")
 
-  /** Character n-gram shingles (positions 1..len-n+1); empty array below
-    * n; NULL text stays NULL (matching the native `ShingleHashes31`'s
-    * null-propagating UnaryExpression semantics — the old
-    * `.otherwise(array())` silently turned NULL docs into empty docs). */
-  def charShingles(c: Column, n: Int): Column =
-    when(length(c) >= n,
-      transform(sequence(lit(1), length(c) - lit(n - 1)), i => c.substr(i, lit(n))))
-      .otherwise(when(c.isNotNull, array()))
-
   /** Word n-grams joined with '_'; empty array below n words.
     *
     * The token array is bound as a lambda variable (via a one-element
@@ -50,14 +41,6 @@ object TextFunctions {
   def hash31(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("bigint") % lit(2147483647L)
 
-  /** Distinct 31-bit hashes of the shingle set — the representation all
-    * downstream minhash/jaccard work runs on (ints, not strings: one md5
-    * per shingle total, and set intersections over longs). Uses the
-    * native [[graft.expressions.Md5Prefix31]] (value-identical to
-    * `hash31`, no hex-string round trip). */
-  def shingleHashes(shingles: Column): Column =
-    array_distinct(transform(shingles, graft.expressions.HashExpressions.md5prefix31(_)))
-
   // Fixed universal-hash parameters, mod p = 2^31-1: h_j(x) = (A(j)*x + B(j))
   // mod p. Pure arithmetic — identical in any engine (the DuckDB oracle SQL
   // is *generated* from these same values). First 16 are hand-picked; the
@@ -74,17 +57,6 @@ object TextFunctions {
     Vector(12345L, 67891L, 24691L, 13579L, 97531L, 86421L, 75319L, 64207L,
       53195L, 42083L, 31971L, 20869L, 19757L, 8645L, 75331L, 64219L) ++
       (16 until 128).map(j => (40503L * j + 987654321L) % MinhashP)
-
-  /** One MinHash value over pre-hashed shingles: min of the j-th universal
-    * hash. Per-row compute only — signatures of a 100 TB corpus need zero
-    * shuffles (contrast: explode+groupBy would shuffle every shingle). */
-  def minhash(hashes: Column, seed: Int): Column =
-    array_min(transform(hashes,
-      h => (lit(MinhashA(seed)) * h + lit(MinhashB(seed))) % lit(2147483647L)))
-
-  /** k-element MinHash signature as an array column. */
-  def minhashSignature(hashes: Column, k: Int): Column =
-    array((0 until k).map(minhash(hashes, _)): _*)
 
   /** LSH band keys: md5 over `rowsPerBand` consecutive signature values.
     * Docs sharing any band key are near-dup candidates. `rowsPerBand`
@@ -121,31 +93,6 @@ object TextFunctions {
     * engines (DuckDB: `CAST('0x'||substr(md5(x),1,15) AS BIGINT)`). */
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("bigint")
-
-  /** Companion 60-bit hash from md5 hex chars 16..30 — disjoint digest
-    * bits from [[hash60]], so the two behave as independent hash functions
-    * (used for the 120-bit wide simhash). */
-  def hash60b(c: Column): Column =
-    conv(substring(md5(c), 16, 15), 16, 10).cast("bigint")
-
-  /** SimHash over 60-bit token hashes: bit b of the result is set iff
-    * tokens with bit b set are the majority. Pure per-row fold —
-    * no shuffle, no UDF. (SURVEY §2.D `dedup_simhash`.)
-    */
-  def simhash60(tokenHashes: Column): Column = {
-    val n = size(tokenHashes)
-    val bits = (0 until 60).map { b =>
-      val cnt = aggregate(tokenHashes, lit(0L), (acc, h) => acc + (shiftright(h, b).bitwiseAND(lit(1L))))
-      when(cnt * 2 >= n, lit(1L) * lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Hamming distance between two simhash values (popcount of xor). */
-  def hamming60(a: Column, b: Column): Column = {
-    val x = a.bitwiseXOR(b)
-    (0 until 60).map(bit => shiftright(x, bit).bitwiseAND(lit(1L))).reduce(_ + _)
-  }
 
   /** Rolling polynomial fingerprint over words, mod 2^31-1:
     * h = fold(h*131 + (ascii(first)*31 + len(word))). Order-sensitive

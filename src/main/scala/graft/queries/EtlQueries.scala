@@ -611,15 +611,18 @@ object EtlQueries {
     // incremental writer fragments a table into tiny files and every
     // scan then pays one task + footer read per file — at 100 TB the
     // FILE COUNT, not the byte count, throttles the scheduler. The key
-    // runs the real lifecycle each pass: a 64-file fragmented store
-    // (built once per app+sf — the damage), `Compact.filesInPlace`
-    // (measured-bytes target sizing + the park-promote swap), then the
-    // result READ BACK FROM THE COMPACTED STORE — the oracle reads the
-    // original table, so the hash passes iff compaction was lossless
-    // row for row. File-count assertions live in EtlSpec (a file count
-    // isn't SQL-expressible)
+    // runs the real lifecycle each pass: a copy of the 64-file fragmented
+    // fixture (built once per app+sf — the damage — and never compacted
+    // itself, so every call starts from 64 files), `Compact.filesInPlace`
+    // on the copy (measured-bytes target sizing + the park-promote
+    // swap), then the result READ BACK FROM THE COMPACTED STORE — the
+    // oracle reads the original table, so the hash passes iff compaction
+    // was lossless row for row. File-count assertions live in SkylineSpec
+    // (a file count isn't SQL-expressible)
     "etl_compact_files" -> ((s, d) => {
-      val store = fragmentedDir(s, d) + "/orders"
+      val store = Scratch.lifecycle(s, d, "compact_files") + "/orders"
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(fragmentedDir(s, d) + "/orders"), new java.io.File(store))
       graft.sinks.Compact.filesInPlace(s, store, targetFileBytes = 4L << 20)
       s.read.parquet(store)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -739,10 +742,8 @@ object EtlQueries {
 
   /** Fragmented orders store for `etl_compact_files`, a kept dir written
     * once per (application, sf dir) — 64 deliberately tiny files, the
-    * shape an incremental writer leaves behind. Compaction then runs IN
-    * PLACE on it per invocation (pass 1 collapses 64 → few; later passes
-    * rewrite the already-compacted store at the same target — the result
-    * rows, which the oracle hashes, are pass-invariant either way). */
+    * shape an incremental writer leaves behind. Read-only: each call
+    * compacts a copy of it in a lifecycle dir. */
   private def fragmentedDir(s: org.apache.spark.sql.SparkSession, d: String): String =
     Scratch.kept(s, d, "frag") { dir =>
       t(s, d, "orders")

@@ -920,27 +920,6 @@ object RelationalQueries {
       .filter(col("sup") >= minSupport).select("u", "v")
   }
 
-  /** Query keys that read the bucketed tables — surfaced through
-    * `SparkEntry.memoizedQueries` so Bench clears the memo before every
-    * timed pass: the clear drops the managed bucketed tables, so the
-    * median measures the COLD build+join (the build IS that operator's
-    * point). The graph family is deliberately NOT here — see
-    * [[prepared]]. */
-  val memoized: Set[String] = Set("q_bucketed_join")
-
-  /** Query keys that consume the PREPARED co-purchase edge stores (see
-    * [[prepareShared]]) — surfaced through `SparkEntry.preparedQueries`.
-    * Bench still calls clearMemos before their timed passes (releasing
-    * the RESULT checkpoints Graph hands out, so passes don't warm each
-    * other), but the edge STORE survives by design: their medians
-    * measure re-read + algorithm, with the shared derivation billed
-    * once in `prepare_s`. Labeled separately from [[memoized]] (round-17
-    * advisory): calling them "memoized + memo_cleared" overstated what
-    * the clear drops, and their bench trend silently changed meaning at
-    * round 17 from cold build+consume to re-read+algorithm. */
-  val prepared: Set[String] =
-    Set("q_triangle_count", "q_pagerank", "q_node_jaccard")
-
   /** Bucketed `orders`/`lineitem` managed tables (8 buckets on the join
     * key), a [[Scratch]] memo written once per (application, sf dir) —
     * the ingest-time cost the co-located join amortizes. Managed tables

@@ -4,6 +4,7 @@ import java.io.File
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** The one owner of query-layer state and its lifetime. Every entry is
   * keyed by (application, sf dir, name), so a restarted session starts
@@ -22,14 +23,23 @@ import org.apache.spark.sql.SparkSession
   *
   * Every dir is a fresh temp dir under `java.io.tmpdir`, deleted by one
   * JVM-exit sweep. [[clear]] is for single-threaded callers: it must not
-  * race a query still reading a memo or a lifecycle dir. */
+  * race a query still reading a memo or a lifecycle dir.
+  *
+  * [[used]] records the memo tags and kept dirs read since the last
+  * [[clear]] (lifecycle dirs are per-call, so not recorded): Bench clears
+  * before every timed pass and labels each key from what the pass read. */
 private[graft] object Scratch {
   private final class Memo(val value: Any, val release: () => Unit)
+
+  /** One shared stage a call read: a memo tag (`memo = true`) or a kept
+    * dir name. */
+  final case class Use(memo: Boolean, tag: String)
 
   private val memos = new ConcurrentHashMap[String, Memo]()
   private val lifecycles = new ConcurrentHashMap[String, File]()
   private val keptDirs = new ConcurrentHashMap[String, String]()
   private val live = ConcurrentHashMap.newKeySet[File]()
+  private val uses = ConcurrentHashMap.newKeySet[Use]()
   private lazy val exitSweep: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => live.forEach(drop)))
 
@@ -57,11 +67,13 @@ private[graft] object Scratch {
 
   /** The memo `tag` for (app, sf dir), built on first use; [[clear]]
     * calls `release` on it. */
-  def memo[T](s: SparkSession, d: String, tag: String)(build: => T)(release: T => Unit): T =
+  def memo[T](s: SparkSession, d: String, tag: String)(build: => T)(release: T => Unit): T = {
+    uses.add(Use(memo = true, tag))
     memos.computeIfAbsent(key(s, d, tag), _ => {
       val v = build
       new Memo(v, () => release(v))
     }).value.asInstanceOf[T]
+  }
 
   /** A memo that is a store dir: `write` fills a fresh temp dir once per
     * key; [[clear]] deletes it. Returns the dir. */
@@ -78,14 +90,20 @@ private[graft] object Scratch {
 
   /** The kept dir `name` for (app, sf dir): `write` fills it on first
     * use only. Returns the dir. */
-  def kept(s: SparkSession, d: String, name: String)(write: String => Unit): String =
+  def kept(s: SparkSession, d: String, name: String)(write: String => Unit): String = {
+    uses.add(Use(memo = false, name))
     keptDirs.computeIfAbsent(key(s, d, name), _ => written(name)(write).getPath)
+  }
 
-  /** Release and forget every memo and empty every lifecycle dir; kept
-    * dirs stay. */
+  /** The memo tags and kept-dir names read since the last [[clear]]. */
+  def used: Set[Use] = uses.asScala.toSet
+
+  /** Release and forget every memo, empty every lifecycle dir and the
+    * [[used]] record; kept dirs stay. */
   def clear(): Unit = {
     memos.values.forEach(_.release())
     memos.clear()
     lifecycles.values.forEach(empty)
+    uses.clear()
   }
 }

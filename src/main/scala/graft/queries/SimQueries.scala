@@ -11,13 +11,6 @@ import Common._
   */
 object SimQueries {
 
-  /** Query keys that read the ANN or PQ store memo — the store is the
-    * production shape (assign once at ingest, query many). Bench clears
-    * the memos before each timed pass, so the artifact's median measures
-    * the full build+search cost; the warm (store-prebuilt) search time is
-    * recorded separately as a `warm` entry. */
-  val memoized: Set[String] = Set("sim_ann_pruned", "sim_ann_filtered", "sim_ivfpq_search")
-
   private def centroids(s: org.apache.spark.sql.SparkSession, d: String) =
     t(s, d, "embeddings").filter(col("vec_id") < 8).withColumnRenamed("vec_id", "cid")
 

@@ -17,17 +17,6 @@ object TextQueries {
     "proto-b" -> Seq("window", "stream", "batch"),
     "proto-c" -> Seq("vector", "hash", "merge"))
 
-  /** Query keys whose plans read the shared pair-graph labels or the
-    * LSH pair frame (both [[Scratch]] memos) — surfaced through
-    * `SparkEntry.memoizedQueries`. Bench clears the memos before each
-    * timed pass of these keys, so their bench medians measure the COLD
-    * shared-stage build; the warm re-read time (the production amortized
-    * shape) is recorded separately. */
-  val memoized: Set[String] =
-    Set("dedup_components", "dedup_keep_representatives",
-      "dedup_provenance_merge", "dedup_soft", "dedup_minhash_lsh",
-      "stream_dedup_near", "ta_contrastive_pairs")
-
   /** The k=128 LSH near-dup pair frame, built once per (application, sf
     * dir) and shared by its two consumers (`dedup_minhash_lsh`,
     * `stream_dedup_near`) — one stage, many consumers (round-3 verdict:
@@ -1333,8 +1322,8 @@ object TextQueries {
   private val duckShingles =
     "list_distinct(list_transform(range(1, len(text)-1), i -> substr(text, CAST(i AS INT), 3)))"
 
-  /** DuckDB: distinct 31-bit hashes of the shingle set (mirrors
-    * `TextFunctions.shingleHashes`). */
+  /** DuckDB: distinct 31-bit hashes of the shingle set (mirrors the
+    * native `ShingleHashes31`). */
   private val duckShingleHashes =
     s"list_distinct(list_transform($duckShingles, g -> CAST(concat('0x', substr(md5(g), 1, 8)) AS BIGINT) % 2147483647))"
 

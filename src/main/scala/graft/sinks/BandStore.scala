@@ -239,13 +239,10 @@ object BandStore {
   /** The store's pinned sketch parameters. `lean_sigs` reads tolerantly
     * (absent column = dense) so pre-lean stores stay readable. */
   def params(spark: SparkSession, path: String): Params = {
-    val df = spark.read.parquet(paramsDir(resolvedRoot(spark, path)))
-    val lean =
-      if (df.columns.contains("lean_sigs"))
-        df.select("lean_sigs").head().getBoolean(0)
-      else false
-    val r = df.select("k", "rows_per_band", "shingle_n", "buckets").head()
-    Params(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), lean)
+    val r = PartitionSwap.sidecar(spark, paramsDir(resolvedRoot(spark, path)),
+      "k INT, rows_per_band INT, shingle_n INT, buckets INT, lean_sigs BOOLEAN").head()
+    Params(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
+      !r.isNullAt(4) && r.getBoolean(4))
   }
 
   /** The persisted corpus sketch table — (idCol, hs), the STATIC side of

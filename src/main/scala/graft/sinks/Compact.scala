@@ -39,10 +39,6 @@ object Compact {
     walk(p)
   }
 
-  /** Total bytes of the parquet data files under `path`. */
-  def dataBytes(spark: SparkSession, path: String): Long =
-    dataFiles(spark, path).map(_.getLen).sum
-
   /** Number of parquet data files under `path`. */
   def dataFileCount(spark: SparkSession, path: String): Long =
     dataFiles(spark, path).size.toLong

@@ -24,8 +24,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *  - the TOMBSTONE sidecar ([[appendTombstones]], [[tombstones]],
   *    [[dropTombstones]], [[tombstoneDir]]) both partitioned stores
   *    delete through;
-  *  - the side-file rule ([[isSideFile]]), the file-level shard merge and
-  *    the writer fence.
+  *  - the side-file rule ([[isSideFile]]), the one-row parameter sidecar
+  *    read ([[sidecar]]), the file-level shard merge and the writer fence.
   * Recovery never deletes the only copy. */
 private[sinks] object PartitionSwap {
 
@@ -34,6 +34,19 @@ private[sinks] object PartitionSwap {
     * shadows RawLocalFileSystem writes) names are not data files. */
   def isSideFile(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
+
+  /** A store's one-row parameter sidecar (`_params`, `_zparams`), read
+    * with its declared DDL `schema`: no footer inference, so the caller's
+    * `head()` is the one Spark job. It reads the sidecar's data files by
+    * name, because Spark's path filter hides a `_`-prefixed dir read by
+    * name (it warns "All paths were ignored"). A column the file predates
+    * reads as null. */
+  def sidecar(spark: SparkSession, dir: String, schema: String): DataFrame = {
+    val p = new Path(dir)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).filter(isDataFile).map(_.getPath.toString)
+    spark.read.schema(schema).parquet(files.toIndexedSeq: _*)
+  }
 
   private def isDataFile(s: FileStatus): Boolean =
     s.isFile && !isSideFile(s.getPath.getName)

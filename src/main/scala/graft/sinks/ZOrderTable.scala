@@ -107,9 +107,9 @@ object ZOrderTable {
 
   /** The table's pinned layout parameters. */
   def params(spark: SparkSession, path: String): Params = {
-    val r = spark.read.parquet(paramsDir(path))
-      .select("x_col", "y_col", "bits", "rows_per_file",
-        "xmn", "xmx", "ymn", "ymx").head()
+    val r = PartitionSwap.sidecar(spark, paramsDir(path),
+      "x_col STRING, y_col STRING, bits INT, rows_per_file BIGINT, " +
+        "xmn BIGINT, xmx BIGINT, ymn BIGINT, ymx BIGINT").head()
     Params(r.getString(0), r.getString(1), r.getInt(2), r.getLong(3),
       r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))
   }

@@ -651,4 +651,29 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       .exists(p => p._1 == p._2 || p._3 == 1.0),
       "post-append probe sees the appended batch as history")
   }
+
+  test("params reads its sidecar in one Spark job, and a pre-lean sidecar as dense") {
+    val path = newPath()
+    BandStore.write(history, "text", "doc_id", path, leanSigs = true)
+    org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val p = try {
+      val p = BandStore.params(spark, path)
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+      p
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 1, "no footer inference, one head()")
+    assert(p.leanSigs)
+    // a _params written before lean_sigs existed: no such column
+    Seq((p.k, p.rowsPerBand, p.shingleN, p.buckets))
+      .toDF("k", "rows_per_band", "shingle_n", "buckets")
+      .write.mode("overwrite").parquet(path + "/_params")
+    assert(BandStore.params(spark, path) === p.copy(leanSigs = false))
+  }
 }

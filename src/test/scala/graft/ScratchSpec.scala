@@ -7,7 +7,8 @@ import graft.queries.Scratch
   * built once per (app, sf dir) and `clearMemos` releases it, deleting
   * its store dir; `clearMemos` empties every lifecycle dir and leaves the
   * kept dirs alone; a lifecycle key holds one store copy however often
-  * it runs. A lookup whose build fails the test proves an entry is live
+  * it runs; the `used` record names what a pass read, the labels Bench
+  * reads. A lookup whose build fails the test proves an entry is live
   * without rebuilding it. */
 class ScratchSpec extends SparkSpec {
   private def files(dir: String): Seq[String] =
@@ -52,5 +53,25 @@ class ScratchSpec extends SparkSpec {
       assert(runs.head._2.contains(store), key)
       assert(tempDirs === before, s"$key created a temp dir of its own")
     }
+  }
+
+  test("the used record names the memos and kept dirs a pass read; a clear empties it") {
+    SparkEntry.prepareShared(spark, sf)
+    def used(key: String): Set[Scratch.Use] = {
+      SparkEntry.clearMemos()
+      q(key).count()
+      Scratch.used
+    }
+    for (key <- Seq("dedup_minhash_lsh", "dedup_components", "sim_ann_pruned",
+        "sim_ivfpq_search", "q_bucketed_join"))
+      assert(used(key).exists(_.memo), s"$key reads a memo")
+    for (key <- Seq("q_triangle_count", "etl_jsonl_roundtrip")) {
+      val u = used(key)
+      assert(u.nonEmpty && !u.exists(_.memo), s"$key reads a kept dir only: $u")
+    }
+    for (key <- Seq("dedup_band_store", "dedup_exact_docs"))
+      assert(used(key) === Set.empty, s"$key reads no shared stage")
+    SparkEntry.clearMemos()
+    assert(Scratch.used === Set.empty)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.expressions.HashExpressions
 import graft.functions.TextFunctions
@@ -49,6 +50,17 @@ class SketchParitySpec extends SparkSpec {
   private val S2_SIG16 = Seq(1058445418L, 1382331690L, 159217974L, 966460623L, 365591626L, 459795574L, 115307456L, 686757475L, 721920485L, 1090362172L, 64171491L, 1287964823L, 1089474586L, 617327176L, 305317342L, 639638968L)
   private val S3_SIG16 = Seq(78365628L, 375229460L, 257064770L, 83187912L, 86563876L, 144703683L, 175951385L, 38683969L, 27422702L, 3577125L, 7254100L, 285301055L, 311080058L, 290146314L, 44321428L, 11303948L)
 
+  /** The composed form of the native `SimHash60`: bit b is set iff
+    * tokens with bit b set are the (weak) majority. */
+  private def simhash60(tokenHashes: Column): Column = {
+    val n = size(tokenHashes)
+    (0 until 60).map { b =>
+      val cnt = aggregate(tokenHashes, lit(0L),
+        (acc, h) => acc + shiftright(h, b).bitwiseAND(lit(1L)))
+      when(cnt * 2 >= n, lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_ + _)
+  }
+
   private def shingles(s: String): Seq[Long] =
     Seq(s).toDF("t")
       .select(HashExpressions.shingleHashes31Native(col("t"), 3).as("hs"))
@@ -85,11 +97,11 @@ class SketchParitySpec extends SparkSpec {
       267781288633574213L, 647465868329588333L, 72026031632204466L,
       30822519473747098L))
     val hb = Seq("the").toDF("w")
-      .select(TextFunctions.hash60b(col("w"))).as[Long].head()
+      .select(ComposedTwins.hash60b(col("w"))).as[Long].head()
     assert(hb == 809251451210892099L)
     // simhash over the tokenized sentence: one row, the production fold
     val sh = Seq(s1).toDF("t")
-      .select(TextFunctions.simhash60(
+      .select(simhash60(
         transform(TextFunctions.tokens(col("t")), w => TextFunctions.hash60(w))))
       .as[Long].head()
     assert(sh == 71287727808099948L)

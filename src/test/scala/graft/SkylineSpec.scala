@@ -309,9 +309,9 @@ class SkylineSpec extends SparkSpec {
     // below one 4 MB target file), never the 64 fragments
     val dirs = java.nio.file.Files.list(
       java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
-      .toArray.map(_.toString).filter(_.contains("graft_frag"))
+      .toArray.map(_.toString).filter(_.contains("graft_compact_files"))
     assert(dirs.nonEmpty)
-    // newest by mtime — stale graft_frag dirs from earlier JVMs linger
+    // newest by mtime — stale graft_compact_files dirs from earlier JVMs linger
     val n = graft.sinks.Compact.dataFileCount(spark,
       dirs.maxBy(p => new java.io.File(p).lastModified) + "/orders")
     assert(n >= 1 && n <= 4, s"expected a handful of compacted files, got $n")

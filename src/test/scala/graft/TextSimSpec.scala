@@ -1,11 +1,33 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Similarity}
 
 class TextSimSpec extends SparkSpec {
   import spark.implicits._
+
+  // composed twins of the native shingle-hash and minhash expressions,
+  // kept here as their oracles
+
+  /** Character n-gram shingles (positions 1..len-n+1); empty array below
+    * n; NULL text stays NULL (the native `ShingleHashes31`'s
+    * null-propagating semantics). */
+  private def charShingles(c: Column, n: Int): Column =
+    when(length(c) >= n,
+      transform(sequence(lit(1), length(c) - lit(n - 1)), i => c.substr(i, lit(n))))
+      .otherwise(when(c.isNotNull, array()))
+
+  /** Distinct 31-bit hashes of a shingle set. */
+  private def shingleHashes(shingles: Column): Column =
+    array_distinct(transform(shingles, graft.expressions.HashExpressions.md5prefix31(_)))
+
+  /** k-element MinHash signature: slot j is the min of the j-th universal
+    * hash over the shingle hashes. */
+  private def minhashSignature(hashes: Column, k: Int): Column =
+    array((0 until k).map(j => array_min(transform(hashes,
+      h => (lit(MinhashA(j)) * h + lit(MinhashB(j))) % lit(MinhashP)))): _*)
 
   test("charShingles/wordNgrams edge cases") {
     val df = Seq("abcd", "ab", "x y z w", "x").toDF("t")

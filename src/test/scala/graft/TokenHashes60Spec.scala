@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.ComposedTwins.hash60b
 
 /** Pins the round-20 fused token-hash expression (TokenHashes60Pair) to
   * the composed chains it replaced: per half,
