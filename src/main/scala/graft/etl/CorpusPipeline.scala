@@ -32,7 +32,6 @@ object CorpusPipeline {
       packBudget: Long = 2000,
       trainPct: Int = 80,
       validationPct: Int = 10,
-      sketchParallelism: Int = 0,
       // crawl corpora arrive as MARKUP: htmlInput prepends the
       // extraction stage (TextFunctions.extractHtmlText) so the pipeline
       // starts at the wire format, not at already-clean text. Spec-proven
@@ -61,7 +60,7 @@ object CorpusPipeline {
 
     // 2. near-dup pairs (LSH, exact-verified) → clusters → representatives
     val pairs = Dedup.minhashNearDups(exactKept, cfg.textCol, cfg.idCol,
-      cfg.jaccardThreshold, sketchParallelism = cfg.sketchParallelism)
+      cfg.jaccardThreshold)
     val reps = Components.keepRepresentatives(exactKept, cfg.idCol, pairs, "id_a", "id_b")
     // the fixpoint above materialized its labels; the eager pair frame's
     // checkpoint blocks have no further reader — release them now

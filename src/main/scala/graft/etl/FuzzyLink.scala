@@ -280,23 +280,18 @@ object FuzzyLink {
     * Records sharing the EXACT same name always cluster (distance 0 —
     * they share a name node); fuzzy edges extend those groups.
     *
-    * `segmentBlocking = true` swaps the pair stage to
-    * [[editNeighborsSeg]] — same pairs (spec-proven), blocking linear in
-    * name length: pick it when the key is a title/address-length string
-    * (the §5 length sweep: 92× at d = 2, 200 chars).
-    *
-    * Scale shape: the only non-keyed work is the priced blocking inside
-    * the pair stage; everything after is keyed joins and aggregates
+    * Scale shape: the only non-keyed work is the pair stage's deletion-
+    * neighborhood blocking (≈ C(|s|, d) variants per name — sized for
+    * name-length keys); everything after is keyed joins and aggregates
     * over (distinct names → min-id node, pairs → components, records →
     * cluster counts). The pair graph is near-dup-sized, not
     * corpus-sized, so Components' measured-small fast path usually
     * applies; `smallGraphLimit = 0` forces the distributed fixpoint. */
   def fuzzyDedup(df: DataFrame, idCol: String, nameCol: String,
                  maxDist: Int = 1, maxIter: Int = 64,
-                 smallGraphLimit: Long = 2000000L,
-                 segmentBlocking: Boolean = false): DataFrame = {
+                 smallGraphLimit: Long = 2000000L): DataFrame = {
     val labeled = clusterLabels(df, idCol, nameCol, maxDist, maxIter,
-      smallGraphLimit, segmentBlocking)
+      smallGraphLimit)
     val clusters = labeled.groupBy(col("__comp"))
       .agg(count(lit(1)).as("n_members"))
     // each cluster's label IS its surviving record's id (mins of mins),
@@ -312,8 +307,7 @@ object FuzzyLink {
     * The shared first stage of [[fuzzyDedup]] and [[goldenRecord]]. */
   private[graft] def clusterLabels(df: DataFrame, idCol: String,
                                    nameCol: String, maxDist: Int,
-                                   maxIter: Int, smallGraphLimit: Long,
-                                   segmentBlocking: Boolean): DataFrame = {
+                                   maxIter: Int, smallGraphLimit: Long): DataFrame = {
     val named = df
       .select(col(idCol).cast("long").as("__fid"),
         col(nameCol).cast("string").as("__fn"))
@@ -321,10 +315,7 @@ object FuzzyLink {
     // name node id = min record id bearing that name; comp values are
     // then mins of mins = the min record id in the entity cluster
     val nameRep = named.groupBy("__fn").agg(min(col("__fid")).as("__nid"))
-    val pairStage =
-      if (segmentBlocking) editNeighborsSeg(df, nameCol, maxDist)
-      else editNeighbors(df, nameCol, maxDist)
-    val edges = pairStage
+    val edges = editNeighbors(df, nameCol, maxDist)
       .join(nameRep.select(col("__fn").as("name_a"), col("__nid").as("__nida")),
         Seq("name_a"))
       .join(nameRep.select(col("__fn").as("name_b"), col("__nid").as("__nidb")),
@@ -356,11 +347,10 @@ object FuzzyLink {
     * rejoin on the cluster key. */
   def goldenRecord(df: DataFrame, idCol: String, nameCol: String,
                    attrs: Seq[String], maxDist: Int = 1, maxIter: Int = 64,
-                   smallGraphLimit: Long = 2000000L,
-                   segmentBlocking: Boolean = false): DataFrame = {
+                   smallGraphLimit: Long = 2000000L): DataFrame = {
     require(attrs.nonEmpty, "goldenRecord: attrs must be non-empty")
     val labeled = clusterLabels(df, idCol, nameCol, maxDist, maxIter,
-      smallGraphLimit, segmentBlocking)
+      smallGraphLimit)
     val base = labeled.groupBy(col("__comp"))
       .agg(count(lit(1)).as("n_members"))
     val w = org.apache.spark.sql.expressions.Window

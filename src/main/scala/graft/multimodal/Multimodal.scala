@@ -75,15 +75,18 @@ object Multimodal {
 
   private[multimodal] def syntheticPng(id: Long): Array[Byte] = pngBytes(id, 0L)
 
-  /** Encode one PNG per id — per-partition compute. `parallelism` fans a
-    * single-split local input out before the CPU-heavy codec work (0 =
-    * no-op for corpus-scale inputs that arrive already partitioned).
-    * Stands in for reading an image column off a lake table. */
-  def synthesizePngs(df: DataFrame, idCol: String, parallelism: Int = 0): Dataset[ImagePayload] = {
+  /** The ids as longs, fanned out to the session's parallelism before
+    * the CPU-heavy codec work ([[graft.operators.Dedup.fanOut]]). */
+  private def fannedIds(df: DataFrame, idCol: String): Dataset[Long] = {
     import df.sparkSession.implicits._
-    val ids = df.select(col(idCol).cast("long")).as[Long]
-    val fanned = if (parallelism > 0) ids.repartition(parallelism) else ids
-    fanned.mapPartitions(_.map(id => ImagePayload(id, syntheticPng(id))))
+    graft.operators.Dedup.fanOut(df.select(col(idCol).cast("long"))).as[Long]
+  }
+
+  /** Encode one PNG per id — per-partition compute over the fanned-out
+    * ids. Stands in for reading an image column off a lake table. */
+  def synthesizePngs(df: DataFrame, idCol: String): Dataset[ImagePayload] = {
+    import df.sparkSession.implicits._
+    fannedIds(df, idCol).mapPartitions(_.map(id => ImagePayload(id, syntheticPng(id))))
   }
 
   /** REAL codec: decode PNG payloads with `javax.imageio` and extract
@@ -146,12 +149,11 @@ object Multimodal {
     * `3 + id mod 5` PNG frames (4-byte big-endian frame length + frame
     * bytes — the same framing any packetized media container uses).
     * Frame f's pixel (x,y) = (id·31 + f·17 + y·7 + x·13) mod 256, so
-    * sampled-frame sums have an exact SQL oracle. */
-  def synthesizeVideos(df: DataFrame, idCol: String, parallelism: Int = 0): Dataset[VideoPayload] = {
+    * sampled-frame sums have an exact SQL oracle. Fans out like
+    * [[synthesizePngs]]. */
+  def synthesizeVideos(df: DataFrame, idCol: String): Dataset[VideoPayload] = {
     import df.sparkSession.implicits._
-    val ids = df.select(col(idCol).cast("long")).as[Long]
-    val fanned = if (parallelism > 0) ids.repartition(parallelism) else ids
-    fanned.mapPartitions(_.map { id =>
+    fannedIds(df, idCol).mapPartitions(_.map { id =>
       val n = 3 + java.lang.Math.floorMod(id, 5L).toInt
       val frames = (0 until n).map(f => pngBytes(id, f * 17L))
       val bos = new ByteArrayOutputStream()
@@ -311,12 +313,10 @@ object Multimodal {
     * `javax.sound.sampled` (no extra deps): 16-bit little-endian PCM mono
     * at 8 kHz, `100 + id mod 50` samples, sample i = (id·31 + i·13) mod
     * 65536 − 32768. Pure integer arithmetic ⇒ the decoded |sample| sum
-    * has an exact SQL oracle. */
-  def synthesizeWavs(df: DataFrame, idCol: String, parallelism: Int = 0): Dataset[AudioPayload] = {
+    * has an exact SQL oracle. Fans out like [[synthesizePngs]]. */
+  def synthesizeWavs(df: DataFrame, idCol: String): Dataset[AudioPayload] = {
     import df.sparkSession.implicits._
-    val ids = df.select(col(idCol).cast("long")).as[Long]
-    val fanned = if (parallelism > 0) ids.repartition(parallelism) else ids
-    fanned.mapPartitions(_.map { id =>
+    fannedIds(df, idCol).mapPartitions(_.map { id =>
       val n = 100 + java.lang.Math.floorMod(id, 50L).toInt
       val pcm = new Array[Byte](n * 2)
       var i = 0

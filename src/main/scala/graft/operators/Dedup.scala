@@ -17,13 +17,13 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
-  /** Fan a narrow input out to `n` partitions BEFORE a CPU-heavy per-row
-    * sketching stage. Local/bench inputs often arrive as one small parquet
-    * split, which would serialize the hashing on a single task; a
-    * corpus-scale input is already partitioned, so callers there leave
-    * n = 0 (no-op — no shuffle enters the plan). */
-  private def fanOut(df: DataFrame, n: Int): DataFrame =
-    if (n > 0) df.repartition(n) else df
+  /** Fan the input out to the session's parallelism BEFORE a CPU-heavy
+    * per-row stage (the sketch operators here, the media synthesizers in
+    * `graft.multimodal`). Inputs often arrive as one small parquet split,
+    * which would serialize the hashing or codec work on a single task;
+    * one round-robin exchange of the input rows keeps every core busy. */
+  private[graft] def fanOut(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Exact dedup: group by content digest, keep the smallest id.
     * Reference analog: `drop_duplicates` (Airbnb_Listings_ETL.py:47-49),
@@ -329,9 +329,8 @@ object Dedup {
 
   def minhashNearDups(df: DataFrame, textCol: String, idCol: String,
                       threshold: Double, k: Int = 128, rowsPerBand: Int = 8,
-                      shingleN: Int = 3, sketchParallelism: Int = 0,
-                      maxBandBucket: Int = 0): DataFrame = {
-    val m = minhashed(fanOut(df, sketchParallelism), textCol, idCol, k, rowsPerBand, shingleN)
+                      shingleN: Int = 3, maxBandBucket: Int = 0): DataFrame = {
+    val m = minhashed(fanOut(df), textCol, idCol, k, rowsPerBand, shingleN)
       .filter(size(col("hs")) > 0).cache()
     val candidates = minhashBandCandidates(m, idCol, threshold, maxBandBucket)
     // Verification is TWO-STAGE to keep the big exchange small. Stage 1
@@ -401,11 +400,11 @@ object Dedup {
 
   def minhashNearDupsAgainst(history: DataFrame, batch: DataFrame,
                              textCol: String, idCol: String, threshold: Double,
-                             k: Int = 128, rowsPerBand: Int = 8, shingleN: Int = 3,
-                             sketchParallelism: Int = 0): DataFrame = {
-    val mh = minhashed(fanOut(history, sketchParallelism), textCol, idCol, k, rowsPerBand, shingleN)
+                             k: Int = 128, rowsPerBand: Int = 8,
+                             shingleN: Int = 3): DataFrame = {
+    val mh = minhashed(fanOut(history), textCol, idCol, k, rowsPerBand, shingleN)
       .filter(size(col("hs")) > 0).cache()
-    val mb = minhashed(fanOut(batch, sketchParallelism), textCol, idCol, k, rowsPerBand, shingleN)
+    val mb = minhashed(fanOut(batch), textCol, idCol, k, rowsPerBand, shingleN)
       .filter(size(col("hs")) > 0).cache()
     val candidates = minhashCrossCandidates(mh, mb, idCol, threshold)
     val agree = graft.expressions.HashExpressions.positionalAgree(col("sig_a"), col("sig_b"))
@@ -428,9 +427,8 @@ object Dedup {
     * exploded *prefixes* on the gram value, then verified exactly.
     * Candidate volume scales with gram-frequency, not n². */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
-                        blockCol: String, threshold: Double, n: Int = 3,
-                        sketchParallelism: Int = 0): DataFrame = {
-    val in = fanOut(df, sketchParallelism)
+                        blockCol: String, threshold: Double, n: Int = 3): DataFrame = {
+    val in = fanOut(df)
     // Global gram order = (hash31(gram), gram): prefixes under a plain
     // lexicographic order all start with the same alphabetically-early
     // grams, so prefix buckets degenerate and the join tends to n²; a
@@ -766,10 +764,10 @@ object Dedup {
     * candidate — never all-pairs. Complete for maxHamming ≤ 8 (10 chunks,
     * 2-chunk agreement). */
   def simhashNearDups(df: DataFrame, textCol: String, idCol: String,
-                      maxHamming: Int = 6, sketchParallelism: Int = 0): DataFrame = {
+                      maxHamming: Int = 6): DataFrame = {
     require(maxHamming <= WideChunks - 2,
       s"2-of-$WideChunks chunk agreement is complete only for hamming <= ${WideChunks - 2}")
-    simhashCandidates(simhashedWide(fanOut(df, sketchParallelism), textCol, idCol), idCol)
+    simhashCandidates(simhashedWide(fanOut(df), textCol, idCol), idCol)
       .select(col("id_a"), col("id_b"),
         (bit_count(col("lo_a").bitwiseXOR(col("lo_b"))) +
           bit_count(col("hi_a").bitwiseXOR(col("hi_b")))).as("hamming"))

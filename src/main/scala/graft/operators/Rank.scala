@@ -56,29 +56,19 @@ object Rank {
     * `df`, without any per-group single-reducer sort. Nulls in
     * `valueCol` sort FIRST (Spark ascending-null ordering) — filter
     * them out beforehand if the engine-portable contract matters.
-    *
-    * `materializeInput`: `repartitionByRange` SAMPLES its input to pick
-    * range bounds, so `df`'s expressions evaluate twice (sampling pass +
-    * shuffle write). When the value column is expensive to compute (a
-    * regex money parse, a scored document), pass `true` to pin the input
-    * with an eager localCheckpoint first: one expensive evaluation, and
-    * both passes read cheap materialized rows. Leave `false` for cheap
-    * projections — the extra checkpoint round-trip would only add IO.
     */
   def withGroupRank(df: DataFrame, groupCols: Seq[String], valueCol: String,
                     tiebreakCols: Seq[String] = Nil,
-                    rankCol: String = "rank", nCol: String = "n",
-                    materializeInput: Boolean = false): DataFrame = {
+                    rankCol: String = "rank", nCol: String = "n"): DataFrame = {
     require(groupCols.nonEmpty, "withGroupRank: at least one group column")
     val reserved = Seq("__pid", "__pcnt", "__poff", "__lrn", rankCol, nCol)
     require(!reserved.exists(df.columns.contains),
       s"withGroupRank: input must not carry ${reserved.mkString("/")} columns")
     val orderCols = (groupCols :+ valueCol) ++ tiebreakCols
-    val in = if (materializeInput) df.localCheckpoint() else df
     // range partitions align pid order with (group, value, tiebreak)
     // order; the eager checkpoint pins ONE physical partitioning for
     // both consumers (see scaladoc)
-    val ranged = in
+    val ranged = df
       .repartitionByRange(orderCols.map(col): _*)
       .withColumn("__pid", spark_partition_id())
       .localCheckpoint()
@@ -128,14 +118,12 @@ object Rank {
     * `row_number` use in this repo); with ties the ids are a valid but
     * arbitrary permutation within each tie run. */
   def withGlobalIds(df: DataFrame, orderCols: Seq[String],
-                    idCol: String = "sid",
-                    materializeInput: Boolean = false): DataFrame = {
+                    idCol: String = "sid"): DataFrame = {
     require(orderCols.nonEmpty, "withGlobalIds: at least one order column")
     require(!df.columns.contains("__gall") && !df.columns.contains("__nall"),
       "withGlobalIds: input must not carry __gall/__nall columns")
     withGroupRank(df.withColumn("__gall", lit(0)), Seq("__gall"),
-        orderCols.head, orderCols.tail, rankCol = idCol, nCol = "__nall",
-        materializeInput = materializeInput)
+        orderCols.head, orderCols.tail, rankCol = idCol, nCol = "__nall")
       .drop("__gall", "__nall")
   }
 }

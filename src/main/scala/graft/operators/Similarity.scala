@@ -21,21 +21,27 @@ object Similarity {
 
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
 
+  /** The vector of a single-row `query` frame, fetched by the ONE bounded
+    * driver job that also enforces the single-row contract
+    * (`limit(2).collect()`); `msg` is the caller's contract violation. */
+  private def singleQuery(query: DataFrame, vecCol: String, msg: String): Seq[Double] = {
+    val rows = query.select(asDouble(col(vecCol)).as("q_v")).limit(2).collect()
+    require(rows.length == 1, msg)
+    rows(0).getSeq[Double](0)
+  }
+
   /** Brute-force top-k by cosine vs one query vector (scores rounded for
     * cross-engine-stable ordering; unique id tiebreak).
     *
-    * The single-query contract is enforced by ONE bounded driver job
-    * (`limit(2).collect()` — with several query rows the alternative
-    * crossJoin would rank all queries' scores in one combined top-k with
-    * no error; use [[topKBatch]] for batched queries), which also yields
-    * the vector itself — the plan then delegates to the typed overload
+    * The single-query contract is enforced by [[singleQuery]] (with
+    * several query rows the alternative crossJoin would rank all queries'
+    * scores in one combined top-k with no error; use [[topKBatch]] for
+    * batched queries); the plan then delegates to the typed overload
     * below, so no broadcast join appears in it. */
   def topK(df: DataFrame, vecCol: String, idCol: String,
            query: DataFrame, k: Int): DataFrame = {
-    val rows = query.select(asDouble(col(vecCol)).as("q_v")).limit(2).collect()
-    require(rows.length == 1,
-      "topK expects exactly one query row; use ivfSearchBatch for batched queries")
-    topK(df, vecCol, idCol, rows(0).getSeq[Double](0), k)
+    topK(df, vecCol, idCol, singleQuery(query, vecCol,
+      "topK expects exactly one query row; use ivfSearchBatch for batched queries"), k)
   }
 
   /** [[topK]] with an already-validated LOCAL query vector — the typed
@@ -120,10 +126,8 @@ object Similarity {
                  candidates: DataFrame, query: DataFrame, k: Int,
                  centroids: DataFrame, cIdCol: String, nProbe: Int,
                  bruteForceLimit: Long = 100000L): DataFrame = {
-    val rows = query.select(asDouble(col(vecCol)).as("q_v")).limit(2).collect()
-    require(rows.length == 1,
-      "hybridTopK expects exactly one query row; use ivfSearchBatch for batched queries")
-    hybridTopK(corpus, vecCol, idCol, candidates, rows(0).getSeq[Double](0),
+    hybridTopK(corpus, vecCol, idCol, candidates, singleQuery(query, vecCol,
+        "hybridTopK expects exactly one query row; use ivfSearchBatch for batched queries"),
       k, centroids, cIdCol, nProbe, bruteForceLimit)
   }
 
@@ -344,13 +348,10 @@ object Similarity {
                         query: DataFrame, k: Int, nProbe: Int = 1): DataFrame = {
     // single-query contract: the result schema carries no query id, so a
     // multi-row `query` would silently select nProbe probes across ALL
-    // queries combined — enforce it; the same bounded job fetches the
-    // vector, so the guard costs nothing extra
-    val rows = query.select(asDouble(col(vecCol)).as("q_v")).limit(2).collect()
-    require(rows.length == 1,
-      "ivfSearch expects exactly one query row; for batched queries carry a query id and rank per query")
-    ivfSearchAssigned(assigned, idCol, centroids, cIdCol, vecCol,
-      rows(0).getSeq[Double](0), k, nProbe)
+    // queries combined
+    ivfSearchAssigned(assigned, idCol, centroids, cIdCol, vecCol, singleQuery(query, vecCol,
+        "ivfSearch expects exactly one query row; for batched queries carry a query id and rank per query"),
+      k, nProbe)
   }
 
   /** [[ivfSearchAssigned]] with an already-validated LOCAL query vector —
@@ -405,11 +406,9 @@ object Similarity {
                      centroids: DataFrame, cIdCol: String, vecCol: String,
                      predicate: Column, query: DataFrame, k: Int,
                      nProbe: Int): DataFrame = {
-    val rows = query.select(asDouble(col(vecCol)).as("q_v")).limit(2).collect()
-    require(rows.length == 1,
-      "filteredSearch expects exactly one query row; for batched queries carry a query id and rank per query")
-    filteredSearch(assigned, idCol, centroids, cIdCol, vecCol, predicate,
-      rows(0).getSeq[Double](0), k, nProbe)
+    filteredSearch(assigned, idCol, centroids, cIdCol, vecCol, predicate, singleQuery(query, vecCol,
+        "filteredSearch expects exactly one query row; for batched queries carry a query id and rank per query"),
+      k, nProbe)
   }
 
   /** [[filteredSearch]] with an already-validated LOCAL query vector —
@@ -789,11 +788,8 @@ object Similarity {
   def rangeSearch(assigned: DataFrame, idCol: String,
                   centroids: DataFrame, cIdCol: String, vecCol: String,
                   query: DataFrame, minCosine: Double): DataFrame = {
-    val rows = query.select(asDouble(col(vecCol)).as("q_v")).limit(2).collect()
-    require(rows.length == 1,
-      "rangeSearch expects exactly one query row; range-search batches per query id")
-    rangeSearch(assigned, idCol, centroids, cIdCol, vecCol,
-      rows(0).getSeq[Double](0), minCosine)
+    rangeSearch(assigned, idCol, centroids, cIdCol, vecCol, singleQuery(query, vecCol,
+      "rangeSearch expects exactly one query row; range-search batches per query id"), minCosine)
   }
 
   /** [[rangeSearch]] with an already-validated LOCAL query vector. */
@@ -838,9 +834,7 @@ object Similarity {
                 lambda: Double, mu: Double): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val qrows = query.select(asDouble(col(vecCol)).as("q_v")).limit(2).collect()
-    require(qrows.length == 1, "mmrRerank expects exactly one query row")
-    val qv = qrows(0).getSeq[Double](0)
+    val qv = singleQuery(query, vecCol, "mmrRerank expects exactly one query row")
 
     val cand = df
       .select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))

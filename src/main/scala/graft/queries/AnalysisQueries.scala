@@ -91,8 +91,7 @@ object AnalysisQueries {
     // percentile_cont(0.5) = (v(r1) + v(r2)) / 2.0 over the identical
     // bigints — BIGINT sum then IEEE double ops, so the hash still
     // matches the oracle's percentile_cont to the bit (and the single
-    // aggregation pass evaluates the regex money parse exactly once, so
-    // the old materializeInput checkpoint is gone too).
+    // aggregation pass evaluates the regex money parse exactly once).
     "ana_median_by_group" -> ((s, d) => {
       val c0 = cents(col("l_extendedprice"))
       val moneyStr = concat(lit("$"),

@@ -26,8 +26,7 @@ object TextQueries {
     * `minhashNearDups`, and its checkpoint blocks are released on clear. */
   private[queries] def lshPairs(s: org.apache.spark.sql.SparkSession, d: String) =
     Scratch.memo(s, d, "lsh_pairs")(
-      Dedup.minhashNearDups(t(s, d, "documents"), "text", "doc_id", threshold = 0.8,
-        sketchParallelism = s.sparkContext.defaultParallelism))(
+      Dedup.minhashNearDups(t(s, d, "documents"), "text", "doc_id", threshold = 0.8))(
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(_))
 
   /** The shared component LABELS: `dedup_components` and
@@ -44,8 +43,7 @@ object TextQueries {
   private def preparedLabels(s: org.apache.spark.sql.SparkSession, d: String) =
     Scratch.memo(s, d, "pair_graph") {
       val pairs = Dedup.ngramJaccardPairs(t(s, d, "documents"), "text", "doc_id",
-        blockCol = "lang", threshold = 0.8,
-        sketchParallelism = s.sparkContext.defaultParallelism)
+        blockCol = "lang", threshold = 0.8)
       val run = graft.operators.Components.run(pairs, "id_a", "id_b")
       if (!run.converged)
         throw new IllegalStateException("near-dup component labeling did not converge")
@@ -103,9 +101,8 @@ object TextQueries {
       m.select(col("doc_id") +: (0 until 8).map(i => element_at(col("sig"), i + 1).as(s"m$i")): _*)
     }),
 
-    // sketchParallelism (inside lshPairs): the testdata parquet is one
-    // tiny split, which would serialize the per-row hashing on one core;
-    // corpus-scale inputs arrive pre-partitioned and would pass 0
+    // the sketch stage inside lshPairs fans the one-split testdata
+    // parquet out to every core (Dedup.fanOut)
     "dedup_minhash_lsh" -> ((s, d) => lshPairs(s, d)),
 
     // the fuzzy twin of dedup_incremental: batch docs that are
@@ -116,8 +113,7 @@ object TextQueries {
       val doc = t(s, d, "documents")
       Dedup.minhashNearDupsAgainst(
         doc.filter(col("doc_id") % 3 =!= 0), doc.filter(col("doc_id") % 3 === 0),
-        "text", "doc_id", threshold = 0.8,
-        sketchParallelism = s.sparkContext.defaultParallelism)
+        "text", "doc_id", threshold = 0.8)
     }),
 
     // the PERSISTED form of dedup_incremental_near — the store that makes
@@ -132,10 +128,7 @@ object TextQueries {
     "dedup_band_store" -> ((s, d) => {
       val doc = t(s, d, "documents")
       val path = Scratch.lifecycle(s, d, "band_store") + "/index"
-      // testdata arrives as one tiny split — fan the sketch out like the
-      // other LSH keys; corpus-scale inputs are already partitioned
-      val par = s.sparkContext.defaultParallelism
-      val hist = doc.filter(col("doc_id") % 3 =!= 0).repartition(par)
+      val hist = doc.filter(col("doc_id") % 3 =!= 0)
       // 16 buckets: the route bound should track corpus scale (like
       // IVF's K) — 64 dirs of per-task files on a 5k-doc corpus is
       // directory overhead, not pruning; buckets are layout, the oracle
@@ -146,7 +139,7 @@ object TextQueries {
         "text", "doc_id", path)
       graft.sinks.BandStore.compact(s, path)
       graft.sinks.BandStore.probe(s, path,
-        doc.filter(col("doc_id") % 3 === 0).repartition(par),
+        doc.filter(col("doc_id") % 3 === 0),
         "text", "doc_id", threshold = 0.8)
     }),
 
@@ -161,8 +154,7 @@ object TextQueries {
       val doc = t(s, d, "documents")
       val scratch = Scratch.lifecycle(s, d, "band_merge")
       val (dst, src) = (scratch + "/index_dst", scratch + "/index_src")
-      val par = s.sparkContext.defaultParallelism
-      val hist = doc.filter(col("doc_id") % 3 =!= 0).repartition(par)
+      val hist = doc.filter(col("doc_id") % 3 =!= 0)
       // the two crawl shards are independent store roots (each write
       // holds its own writer fence) — overlap their index builds
       // (guide §2.6; graft.etl.Concurrent), exactly the shape a real
@@ -174,7 +166,7 @@ object TextQueries {
           "text", "doc_id", src, buckets = 16)))
       graft.sinks.BandStore.merge(s, src, dst)
       graft.sinks.BandStore.probe(s, dst,
-        doc.filter(col("doc_id") % 3 === 0).repartition(par),
+        doc.filter(col("doc_id") % 3 === 0),
         "text", "doc_id", threshold = 0.8)
     }),
 
@@ -187,14 +179,13 @@ object TextQueries {
     "dedup_band_delete" -> ((s, d) => {
       val doc = t(s, d, "documents")
       val path = Scratch.lifecycle(s, d, "band_delete") + "/index"
-      val par = s.sparkContext.defaultParallelism
-      val hist = doc.filter(col("doc_id") % 3 =!= 0).repartition(par)
+      val hist = doc.filter(col("doc_id") % 3 =!= 0)
       graft.sinks.BandStore.write(hist, "text", "doc_id", path, buckets = 16)
       graft.sinks.BandStore.delete(
         hist.filter(col("doc_id") % 5 === 1).select("doc_id"), "doc_id", path)
       graft.sinks.BandStore.purge(s, path)
       graft.sinks.BandStore.probe(s, path,
-        doc.filter(col("doc_id") % 3 === 0).repartition(par),
+        doc.filter(col("doc_id") % 3 === 0),
         "text", "doc_id", threshold = 0.8)
     }),
 
@@ -207,19 +198,17 @@ object TextQueries {
     "dedup_band_rebucket" -> ((s, d) => {
       val doc = t(s, d, "documents")
       val path = Scratch.lifecycle(s, d, "band_rebucket") + "/index"
-      val par = s.sparkContext.defaultParallelism
-      val hist = doc.filter(col("doc_id") % 3 =!= 0).repartition(par)
+      val hist = doc.filter(col("doc_id") % 3 =!= 0)
       graft.sinks.BandStore.write(hist, "text", "doc_id", path, buckets = 4)
       graft.sinks.BandStore.rebucket(s, path, newBuckets = 16)
       graft.sinks.BandStore.probe(s, path,
-        doc.filter(col("doc_id") % 3 === 0).repartition(par),
+        doc.filter(col("doc_id") % 3 === 0),
         "text", "doc_id", threshold = 0.8)
     }),
 
     "dedup_ngram_jaccard" -> ((s, d) =>
       Dedup.ngramJaccardPairs(t(s, d, "documents"), "text", "doc_id",
-        blockCol = "lang", threshold = 0.8,
-        sketchParallelism = s.sparkContext.defaultParallelism)),
+        blockCol = "lang", threshold = 0.8)),
 
     // ASYMMETRIC containment dedup: 32-token windows probed against
     // whole docs — the quote/boilerplate-INCLUSION case symmetric
@@ -253,8 +242,7 @@ object TextQueries {
       Dedup.simhashed(t(s, d, "documents"), "text", "doc_id")),
 
     "dedup_simhash_pairs" -> ((s, d) =>
-      Dedup.simhashNearDups(t(s, d, "documents"), "text", "doc_id", maxHamming = 8,
-        sketchParallelism = s.sparkContext.defaultParallelism)),
+      Dedup.simhashNearDups(t(s, d, "documents"), "text", "doc_id", maxHamming = 8)),
 
     // transitive dup-cluster resolution: pairwise near-dups -> disjoint
     // clusters (min-label propagation); the step between "found pairs"
@@ -989,9 +977,7 @@ object TextQueries {
     // token-budget packing, all in ONE call; the result is summarized
     // per (lang, split) so the oracle can replay the whole composition
     "pipeline_corpus_prep" -> ((s, d) => {
-      val out = graft.etl.CorpusPipeline.prepare(t(s, d, "documents"),
-        graft.etl.CorpusPipeline.Config(
-          sketchParallelism = s.sparkContext.defaultParallelism))
+      val out = graft.etl.CorpusPipeline.prepare(t(s, d, "documents"))
       out.withColumn("tk", size(tokens(normalizeText(col("text")))))
         .groupBy("lang", "split")
         .agg(count(lit(1)).as("n_docs"),
@@ -1009,8 +995,7 @@ object TextQueries {
     // arithmetic oracle recomputes the decoded pixel sum exactly.
     "mm_decode" -> ((s, d) => {
       val m = graft.multimodal.Multimodal
-      m.decodePngs(m.synthesizePngs(t(s, d, "documents"), "doc_id",
-        parallelism = s.sparkContext.defaultParallelism)).toDF()
+      m.decodePngs(m.synthesizePngs(t(s, d, "documents"), "doc_id")).toDF()
     }),
 
     // REAL resize in the codec chain: encode -> decode -> nearest-neighbor
@@ -1018,16 +1003,15 @@ object TextQueries {
     // resized pixel sum arithmetically reproducible in SQL
     "mm_resize" -> ((s, d) => {
       val m = graft.multimodal.Multimodal
-      m.decodePngs(m.resizePngs(m.synthesizePngs(t(s, d, "documents"), "doc_id",
-        parallelism = s.sparkContext.defaultParallelism), tw = 8, th = 6)).toDF()
+      m.decodePngs(m.resizePngs(m.synthesizePngs(t(s, d, "documents"), "doc_id"),
+        tw = 8, th = 6)).toDF()
     }),
 
     // video-pipeline frame sampling: length-prefixed multi-frame container
     // -> decode every 2nd frame (skipped frames seeked past, not decoded)
     "mm_frame_sample" -> ((s, d) => {
       val m = graft.multimodal.Multimodal
-      m.sampleFrames(m.synthesizeVideos(t(s, d, "documents"), "doc_id",
-        parallelism = s.sparkContext.defaultParallelism), stride = 2).toDF()
+      m.sampleFrames(m.synthesizeVideos(t(s, d, "documents"), "doc_id"), stride = 2).toDF()
     }),
 
     // SCENE/shot-boundary detection over the frame container: every
@@ -1039,8 +1023,7 @@ object TextQueries {
     // the opening keyframe by definition and emits no row
     "mm_scene_detect" -> ((s, d) => {
       val m = graft.multimodal.Multimodal
-      val deltas = m.frameDeltas(m.synthesizeVideos(t(s, d, "documents"), "doc_id",
-        parallelism = s.sparkContext.defaultParallelism)).toDF()
+      val deltas = m.frameDeltas(m.synthesizeVideos(t(s, d, "documents"), "doc_id")).toDF()
       val stats = deltas.groupBy("doc_id")
         .agg(sum(col("delta_energy")).as("__s"), count(lit(1)).as("__c"))
       deltas.join(broadcast(stats), Seq("doc_id"))
@@ -1052,8 +1035,7 @@ object TextQueries {
     // decode (JDK javax.sound.sampled, no extra deps)
     "mm_audio_decode" -> ((s, d) => {
       val m = graft.multimodal.Multimodal
-      m.decodeWavs(m.synthesizeWavs(t(s, d, "documents"), "doc_id",
-        parallelism = s.sparkContext.defaultParallelism)).toDF()
+      m.decodeWavs(m.synthesizeWavs(t(s, d, "documents"), "doc_id")).toDF()
     }),
 
     // IMAGE near-dup dedup — the codec family meets the dedup family:
@@ -1066,8 +1048,7 @@ object TextQueries {
     // the grid, the bit rule, and the brute-force pair join exactly
     "dedup_image_phash" -> ((s, d) => {
       val m = graft.multimodal.Multimodal
-      val hashed = m.dHash(m.synthesizePngs(t(s, d, "documents"), "doc_id",
-        parallelism = s.sparkContext.defaultParallelism)).toDF()
+      val hashed = m.dHash(m.synthesizePngs(t(s, d, "documents"), "doc_id")).toDF()
       val reps = hashed.groupBy("phash").agg(min(col("doc_id")).as("doc_id"))
       graft.operators.Dedup.hammingPairs64(reps, "phash", "doc_id", maxHamming = 2)
     }),
@@ -1080,8 +1061,7 @@ object TextQueries {
     // -> frame energies -> bits -> brute-force pairs exactly
     "dedup_audio_fp" -> ((s, d) => {
       val m = graft.multimodal.Multimodal
-      val fps = m.audioFingerprint(m.synthesizeWavs(t(s, d, "documents"), "doc_id",
-        parallelism = s.sparkContext.defaultParallelism)).toDF()
+      val fps = m.audioFingerprint(m.synthesizeWavs(t(s, d, "documents"), "doc_id")).toDF()
       val reps = fps.groupBy("afp").agg(min(col("doc_id")).as("doc_id"))
       graft.operators.Dedup.hammingPairs64(reps, "afp", "doc_id", maxHamming = 2)
     }),
@@ -1097,8 +1077,7 @@ object TextQueries {
     // pair machinery
     "mm_image_dedup" -> ((s, d) => {
       val m = graft.multimodal.Multimodal
-      val hashed = m.dHash(m.synthesizePngs(t(s, d, "documents"), "doc_id",
-        parallelism = s.sparkContext.defaultParallelism)).toDF()
+      val hashed = m.dHash(m.synthesizePngs(t(s, d, "documents"), "doc_id")).toDF()
       val reps = hashed.groupBy("phash").agg(min(col("doc_id")).as("rep"))
       val pairs = graft.operators.Dedup.hammingPairs64(
         reps.select(col("phash"), col("rep").as("doc_id")), "phash", "doc_id",
@@ -1129,8 +1108,7 @@ object TextQueries {
     // brute-force Jaccard exactly
     "mm_video_dedup" -> ((s, d) => {
       val m = graft.multimodal.Multimodal
-      val fh = m.frameHashes(m.synthesizeVideos(t(s, d, "documents"), "doc_id",
-        parallelism = s.sparkContext.defaultParallelism), stride = 2).toDF()
+      val fh = m.frameHashes(m.synthesizeVideos(t(s, d, "documents"), "doc_id"), stride = 2).toDF()
       val sigs = fh.groupBy("doc_id").agg(array_sort(collect_set(col("fhash"))).as("sig"))
       val reps = sigs.groupBy("sig").agg(min(col("doc_id")).as("doc_id"))
       graft.operators.Dedup.setJaccardPairs(reps, "sig", "doc_id", threshold = 0.5)

@@ -33,29 +33,10 @@ import graft.operators.Dedup
   *    unbounded shingle arrays are fetched for candidate-scale rows,
   *    never corpus-scale.
   *  - `_params/` — the sketch parameters (k, rowsPerBand, shingleN,
-  *    buckets, leanSigs) pinned at [[write]] time: an append or probe
-  *    sketched under different parameters would be silently wrong
-  *    (signatures from different hash families never agree), so both
-  *    derive their parameters from the store, not the caller.
-  *
-  * TWO LAYOUTS, pinned at write time (`leanSigs`), identical semantics
-  * (spec-proven probe parity both ways):
-  *  - DENSE (default): the k-slot signature rides on every band row —
-  *    the sig-agreement prefilter runs map-side over the pruned bands/
-  *    scan with zero extra round trips. Lowest latency for the daily
-  *    small-batch probe, but a doc's ~1 KB signature is stored (and bulk-
-  *    scanned) once per band — ~16 KB/doc on the standard 16-band
-  *    config, comparable to re-reading the text.
-  *  - LEAN (`leanSigs = true`): bands/ carries only (band, id, n_sh)
-  *    (~450 B/doc with band keys) and the signature moves to ONE column
-  *    on the per-doc docs/ table — parquet's columnar layout means the
-  *    sig-agreement fetch reads only candidate buckets' sig bytes and
-  *    the exact verify only their hs bytes, never each other's. Costs
-  *    one extra bounded route collect + pruned read per probe; wins
-  *    ~16× stored sig bytes and the corresponding bulk-probe scan mass.
-  *    Pick lean when probes are bulk (batch ~ corpus scale, e.g.
-  *    backfills) or storage dominates; dense for latency-critical
-  *    small probes. Measured head-to-head by `tools.ScaleCurve band`.
+  *    buckets) pinned at [[write]] time: an append or probe sketched
+  *    under different parameters would be silently wrong (signatures
+  *    from different hash families never agree), so both derive their
+  *    parameters from the store, not the caller.
   *
   * Lifecycle mirrors [[AnnStore]] in full: write → append (new files
   * land only in their buckets; untouched partitions never rewritten) →
@@ -85,8 +66,7 @@ object BandStore {
     * committed by its `_params` marker. */
   private val Rebucket = PartitionSwap.RootSwap("rebucket", Some("_params/_SUCCESS"))
 
-  final case class Params(k: Int, rowsPerBand: Int, shingleN: Int, buckets: Int,
-                          leanSigs: Boolean)
+  final case class Params(k: Int, rowsPerBand: Int, shingleN: Int, buckets: Int)
 
   private def bandsDir(path: String) = path + "/bands"
   private def docsDir(path: String) = path + "/docs"
@@ -98,18 +78,21 @@ object BandStore {
     * touches every bucket still prunes nothing worse than a full scan. */
   def write(history: DataFrame, textCol: String, idCol: String, path: String,
             k: Int = 128, rowsPerBand: Int = 8, shingleN: Int = 3,
-            buckets: Int = 64, leanSigs: Boolean = false): Unit = {
+            buckets: Int = 64): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val spark = history.sparkSession
-    import spark.implicits._
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = Params(k, rowsPerBand, shingleN, buckets)
     PartitionSwap.withWriterLock(fs, path, "BandStore") {
-      Seq((k, rowsPerBand, shingleN, buckets, leanSigs))
-        .toDF("k", "rows_per_band", "shingle_n", "buckets", "lean_sigs")
-        .write.mode("overwrite").parquet(paramsDir(path))
-      writeSketched(history, textCol, idCol, path,
-        Params(k, rowsPerBand, shingleN, buckets, leanSigs), mode = "overwrite")
+      writeParams(spark, p, paramsDir(path))
+      writeSketched(history, textCol, idCol, path, p, mode = "overwrite")
     }
+  }
+
+  private def writeParams(spark: SparkSession, p: Params, dir: String): Unit = {
+    import spark.implicits._
+    Seq(p).toDF("k", "rows_per_band", "shingle_n", "buckets")
+      .write.mode("overwrite").parquet(dir)
   }
 
   /** Append a new accepted batch — the steady state: the batch is
@@ -202,47 +185,36 @@ object BandStore {
 
   private def writeSketched(df: DataFrame, textCol: String, idCol: String,
                             path: String, p: Params, mode: String): Unit = {
-    // one sketch pass feeds both tables: cache, write, release
-    val m = Dedup.minhashed(df, textCol, idCol, p.k, p.rowsPerBand, p.shingleN)
+    // one fanned-out sketch pass feeds both tables: cache, write, release
+    val m = Dedup.minhashed(Dedup.fanOut(df), textCol, idCol, p.k, p.rowsPerBand, p.shingleN)
       .filter(size(col("hs")) > 0).cache()
     try {
       // materialize the sketch ONCE before fanning out — the two
       // concurrent table writes below would otherwise race to compute
       // the same cached partitions and sketch every doc twice
       m.count()
-      val bandCols =
-        if (p.leanSigs) Seq(explode(col("bands")).as("band"), col(idCol),
-          size(col("hs")).as("n_sh"))
-        else Seq(explode(col("bands")).as("band"), col(idCol),
-          size(col("hs")).as("n_sh"), col("sig"))
-      // lean: the signature lives ONCE on the per-doc table — a parquet
-      // column sibling to hs, so each fetch prunes the other's bytes
-      val docCols =
-        if (p.leanSigs) Seq(col(idCol), col("hs"), col("sig"))
-        else Seq(col(idCol), col("hs"))
       // the two tables are independent dirs fed by the one cached sketch
       // — overlap their writes (guide §2.6; graft.etl.Concurrent)
       graft.etl.Concurrent.awaitAll(2)(Seq(
         () => bucketAligned(
-          m.select(bandCols: _*)
+          m.select(explode(col("bands")).as("band"), col(idCol),
+              size(col("hs")).as("n_sh"), col("sig"))
             .withColumn("bucket", pmod(xxhash64(col("band")), lit(p.buckets))),
           col(idCol), p.buckets)
           .write.mode(mode).partitionBy("bucket").parquet(bandsDir(path)),
         () => bucketAligned(
-          m.select(docCols: _*)
+          m.select(col(idCol), col("hs"))
             .withColumn("bucket", pmod(xxhash64(col(idCol)), lit(p.buckets))),
           col(idCol), p.buckets)
           .write.mode(mode).partitionBy("bucket").parquet(docsDir(path))))
     } finally { m.unpersist(); () }
   }
 
-  /** The store's pinned sketch parameters. `lean_sigs` reads tolerantly
-    * (absent column = dense) so pre-lean stores stay readable. */
+  /** The store's pinned sketch parameters. */
   def params(spark: SparkSession, path: String): Params = {
     val r = PartitionSwap.sidecar(spark, paramsDir(resolvedRoot(spark, path)),
-      "k INT, rows_per_band INT, shingle_n INT, buckets INT, lean_sigs BOOLEAN").head()
-    Params(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
-      !r.isNullAt(4) && r.getBoolean(4))
+      "k INT, rows_per_band INT, shingle_n INT, buckets INT").head()
+    Params(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
   }
 
   /** The persisted corpus sketch table — (idCol, hs), the STATIC side of
@@ -250,17 +222,16 @@ object BandStore {
     * join ("at scale, a persisted sketch table keyed by id" — this is
     * that table). Reads `docs/` behind the crashed-swap guard, MINUS
     * tombstoned docs (a deleted doc must stop verifying as a dup
-    * source on the online path exactly as on the batch path); the
-    * projection carries ONLY (id, hs), so a lean store's sig column (a
-    * parquet sibling) costs the join zero bytes. The streaming sketch
-    * stage must run under the store's pinned [[params]] — signatures
-    * from different hash families never agree — which is why this
-    * returns the table rather than hiding the params: the caller feeds
-    * `params(spark, path)` into `StreamDedup.banded` and the store into
-    * the verify, one source of truth for both. Rows replayed by an
-    * at-least-once [[ingest]] may appear until the next compact; they
-    * can only duplicate verified-pair emissions, which is already the
-    * streaming path's documented at-least-once delivery contract. */
+    * source on the online path exactly as on the batch path). The
+    * streaming sketch stage must run under the store's pinned
+    * [[params]] — signatures from different hash families never agree —
+    * which is why this returns the table rather than hiding the params:
+    * the caller feeds `params(spark, path)` into `StreamDedup.banded`
+    * and the store into the verify, one source of truth for both. Rows
+    * replayed by an at-least-once [[ingest]] may appear until the next
+    * compact; they can only duplicate verified-pair emissions, which is
+    * already the streaming path's documented at-least-once delivery
+    * contract. */
   def sketchTable(spark: SparkSession, path: String, idCol: String): DataFrame = {
     // one generation resolution for the whole call: data and tombstones
     // must come from the SAME committed generation
@@ -360,7 +331,8 @@ object BandStore {
     * value-identical to `minhashNearDupsAgainst(history, batch, ...)`
     * under the store's parameters (spec-proven), but the history side is
     * the PRE-STORED index:
-    *  1. the batch sketches once (it is batch-sized — cached);
+    *  1. the batch sketches once, fanned out like every sketch stage
+    *     ([[Dedup.fanOut]]) and cached (it is batch-sized);
     *  2. its band keys' distinct buckets collect driver-side (≤ B ints,
     *     routing metadata) → the bands/ scan prunes statically;
     *  3. band-collision + size-ratio prune + sig-agreement all run
@@ -383,7 +355,7 @@ object BandStore {
     // and tombstones must all come from the SAME committed generation
     val rpath = resolvedRoot(spark, path)
     val p = params(spark, rpath)
-    val mb = Dedup.minhashed(batch, textCol, idCol, p.k, p.rowsPerBand, p.shingleN)
+    val mb = Dedup.minhashed(Dedup.fanOut(batch), textCol, idCol, p.k, p.rowsPerBand, p.shingleN)
       .filter(size(col("hs")) > 0).cache()
     try {
       val plausibleAll = plausibleCandidates(spark, rpath, mb, idCol, threshold, p)
@@ -419,19 +391,14 @@ object BandStore {
   /** Stages 2–3 of [[probe]] (package-private so the pruning spec can
     * inspect the executed scans): band-collision + size-ratio +
     * sig-agreement candidates of an already-sketched batch `mb` against
-    * the stored index. Dense stores run all three map-side over the
-    * pruned bands/ scan as ONE lazy plan (the bucket route is the only
-    * eager work, ≤ `p.buckets` longs); lean stores split at the
-    * sig-agreement — band collisions materialize (batch-scale), their
-    * id buckets route a SECOND pruned scan fetching only the docs/
-    * table's sig column, and agreement filters map-side against the
-    * broadcast collision set. Either way the index never shuffles. */
+    * the stored index, all three map-side over the pruned bands/ scan as
+    * ONE lazy plan (the bucket route is the only eager work, ≤
+    * `p.buckets` longs) — the index never shuffles. */
   private[graft] def plausibleCandidates(spark: SparkSession, path: String,
                                          mb: DataFrame, idCol: String,
                                          threshold: Double, p: Params): DataFrame = {
-    val bb0 = mb.select(col(idCol).as("id_b"), size(col("hs")).as("nb"),
-      col("sig").as("sig_b"), explode(col("bands")).as("band"))
-    val bb = (if (p.leanSigs) bb0.drop("sig_b") else bb0)
+    val bb = mb.select(col(idCol).as("id_b"), size(col("hs")).as("nb"),
+        col("sig").as("sig_b"), explode(col("bands")).as("band"))
       .withColumn("bucket", pmod(xxhash64(col("band")), lit(p.buckets)))
     // probe route: ≤ buckets longs, bounded by construction
     val probeBuckets: Seq[Any] =
@@ -441,35 +408,13 @@ object BandStore {
     else {
       val agree = graft.expressions.HashExpressions
         .positionalAgree(col("sig"), col("sig_b"))
-      val collisions = readTable(spark, bandsDir(path))
+      readTable(spark, bandsDir(path))
         .filter(col("bucket").isin(probeBuckets: _*))
         .join(broadcast(bb), Seq("band", "bucket"))
         .filter(col("n_sh") >= col("nb") * threshold &&
           col("nb") >= col("n_sh") * threshold)
-      if (!p.leanSigs)
-        collisions
-          .filter(agree >= Dedup.minAgree(p.k, threshold))
-          .select(col(idCol).as("id_a"), col("id_b")).distinct()
-      else {
-        // band collisions are batch-scale (batch × collision rate) —
-        // materialize them, route the sig fetch, and keep them on the
-        // broadcast side so the index still never shuffles
-        val cands = collisions.select(col(idCol).as("id_a"), col("id_b"))
-          .distinct().localCheckpoint()
-        val sigBuckets: Seq[Any] = cands
-          .select(pmod(xxhash64(col("id_a")), lit(p.buckets)).as("bucket"))
-          .distinct().collect().map(_.get(0)).toIndexedSeq
-        val sigScan = readTable(spark, docsDir(path))
-          .filter(col("bucket").isin(sigBuckets: _*))
-          .select(col(idCol).as("id_a"), col("sig"))
-        val withBatchSig = cands
-          .join(mb.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-        sigScan.join(broadcast(withBatchSig), Seq("id_a"))
-          .filter(agree >= Dedup.minAgree(p.k, threshold))
-          // distinct mirrors the dense branch AND absorbs replayed docs/
-          // rows (the set contract) — candidate-scale, never corpus
-          .select(col("id_a"), col("id_b")).distinct()
-      }
+        .filter(agree >= Dedup.minAgree(p.k, threshold))
+        .select(col(idCol).as("id_a"), col("id_b")).distinct()
     }
   }
 
@@ -487,7 +432,7 @@ object BandStore {
     * per-bucket intermediate state is consistent. Pure layout: probe
     * results are identical before and after (spec-proven), tombstones
     * travel with the store, and the sketch parameters (k, bands,
-    * shingles, lean layout) never change — signatures are not
+    * shingles) never change — signatures are not
     * re-derived, so no text is needed.
     *
     * Crash windows: the swap is [[PartitionSwap.swapRoot]] with the
@@ -498,9 +443,8 @@ object BandStore {
     * the store-root writer fence.
     *
     * Scale shape: one distributed rewrite of the index tables —
-    * O(index), not O(corpus text): band rows are ~tens of bytes (lean)
-    * to ~1 KB (dense), so rebucketing a 100 TB corpus's index moves the
-    * index's bytes only. Run it on the compaction cadence when
+    * O(index), not O(corpus text): a band row is ~1 KB (its signature),
+    * so rebucketing a 100 TB corpus's index moves the index's bytes only. Run it on the compaction cadence when
     * per-bucket size (or probe-route selectivity) drifts past the
     * operator's floor. */
   def rebucket(spark: SparkSession, path: String, newBuckets: Int): Unit = {
@@ -513,10 +457,9 @@ object BandStore {
         val bands = spark.read.parquet(bandsDir(path)).drop("bucket")
           .withColumn("bucket", pmod(xxhash64(col("band")), lit(newBuckets)))
         // the doc table's id column is whatever the caller named it at
-        // write time — everything except (hs, sig, bucket) is the id
+        // write time — everything except (hs, bucket) is the id
         val docsDf = spark.read.parquet(docsDir(path))
-        val idCol = docsDf.columns
-          .filterNot(Set("hs", "sig", "bucket")).head
+        val idCol = docsDf.columns.filterNot(Set("hs", "bucket")).head
         // the two scratch-table rewrites are independent dirs under the
         // one held fence — overlap them (guide §2.6); the commit marker
         // below still lands strictly after BOTH complete, so the crash
@@ -533,10 +476,7 @@ object BandStore {
           _.write.parquet(PartitionSwap.tombstoneDir(tmpRoot.toString)))
         // COMMIT MARKER: _params lands last — recovery promotes the
         // scratch tree iff this write's _SUCCESS exists
-        import spark.implicits._
-        Seq((p.k, p.rowsPerBand, p.shingleN, newBuckets, p.leanSigs))
-          .toDF("k", "rows_per_band", "shingle_n", "buckets", "lean_sigs")
-          .write.parquet(paramsDir(tmpRoot.toString))
+        writeParams(spark, p.copy(buckets = newBuckets), paramsDir(tmpRoot.toString))
       }
     }
   }

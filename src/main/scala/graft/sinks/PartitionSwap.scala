@@ -2,7 +2,10 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error, when}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** The store commit protocol, defined once for every sink that swaps
   * state on disk. Rename must be atomic (local FS / HDFS); object stores
@@ -50,6 +53,23 @@ private[sinks] object PartitionSwap {
 
   private def isDataFile(s: FileStatus): Boolean =
     s.isFile && !isSideFile(s.getPath.getName)
+
+  /** The first data file under `dir`, descending into partition dirs and
+    * skipping side files and dirs. */
+  private def firstDataFile(fs: FileSystem, dir: Path): Option[FileStatus] = {
+    val (files, dirs) = fs.listStatus(dir)
+      .filterNot(s => isSideFile(s.getPath.getName)).partition(_.isFile)
+    files.headOption.orElse(dirs.iterator.flatMap(d => firstDataFile(fs, d.getPath)).nextOption())
+  }
+
+  /** One parquet file's Spark schema, read from its footer on the driver:
+    * `spark.read.parquet(dir)` would infer it with a Spark job. */
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    try org.apache.spark.sql.GraftShim.parquetSchema(spark, r.getFileMetaData.getSchema)
+    finally r.close()
+  }
 
   /** `<path>.<tag>_<kind>`, or `<path>.<kind>` for the untagged swap. */
   private def scratch(path: String, tag: String, kind: String): String =
@@ -143,7 +163,7 @@ private[sinks] object PartitionSwap {
 
   /** DELETE by id: append the batch's ids to the sidecar under the writer
     * fence, touching no data file. Ids are cast to the store's own id
-    * type, read from the footer of the parquet data at `typedBy` — two
+    * type, read from one footer of the parquet data at `typedBy` — two
     * batches with different caller types (INT then BIGINT) would
     * otherwise leave mixed-schema parquet in the sidecar. A null id
     * raises: a takedown that silently matches nothing is worse than a
@@ -153,14 +173,14 @@ private[sinks] object PartitionSwap {
   def appendTombstones(ids: DataFrame, idCol: String, path: String, typedBy: String,
                        store: String, fenceWaitMs: Long): Unit = {
     val spark = ids.sparkSession
-    val storeType = spark.read.parquet(typedBy).schema
-      .find(_.name == idCol)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val storeType = firstDataFile(fs, new Path(typedBy)).toSeq
+      .flatMap(footerSchema(spark, _).fields).find(_.name == idCol)
       .getOrElse(throw new IllegalArgumentException(
         s"$store.delete: store at $path has no column `$idCol` " +
           "(the id column name must be the store's id column)"))
       .dataType
     val id = col(idCol).cast(storeType)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLock(fs, path, store, fenceWaitMs) {
       ids.select(coalesce(
           when(id.isNull, raise_error(lit(s"$store.delete: null $idCol in the delete batch"))),
@@ -172,14 +192,15 @@ private[sinks] object PartitionSwap {
   /** Pending tombstones of the store at `path`, read from the SAME
     * generation [[resolveRoot]] serves data from (mid-swap, the parked
     * generation's sidecar masks ITS rows), or None when the sidecar holds
-    * no data file — an empty delete batch leaves only `_SUCCESS`, which
-    * would fail schema inference; callers skip the mask join entirely. */
+    * no data file (an empty delete batch leaves only `_SUCCESS`); callers
+    * skip the mask join entirely. No Spark job: the schema comes from one
+    * footer and the files are read by name, as [[sidecar]] does. */
   def tombstones(spark: SparkSession, path: String, s: RootSwap): Option[DataFrame] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(tombstoneDir(resolveRoot(fs, path, s)))
-    if (fs.exists(dir) && fs.listStatus(dir).exists(isDataFile))
-      Some(spark.read.parquet(dir.toString))
-    else None
+    val files = if (fs.exists(dir)) fs.listStatus(dir).filter(isDataFile).toSeq else Nil
+    files.headOption.map(f => spark.read.schema(footerSchema(spark, f))
+      .parquet(files.map(_.getPath.toString): _*))
   }
 
   /** Drop the sidecar — purge's LAST step, once every tombstoned row is

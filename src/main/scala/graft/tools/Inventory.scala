@@ -13,8 +13,9 @@ import scala.jdk.CollectionConverters._
   * runner writes the curve log, that no tool but `Profile` and
   * `ScaleCurve` keeps its own timer or listener, and that no file but
   * `sinks/PartitionSwap.scala` renames directories or names the
-  * tombstone sidecar, and that `SparkEntry` declares no public member
-  * beyond the driver contract. Any drift EXITS NONZERO — a stale doc
+  * tombstone sidecar, that no query or tool passes the session's
+  * parallelism as a named argument, and that `SparkEntry` declares no
+  * public member beyond the driver contract. Any drift EXITS NONZERO — a stale doc
   * is a build failure, not a printout to skim past (round-3 verdict: the
   * header was stale for two consecutive rounds; round-6 item #9 asked for
   * the hard failure) — and InventorySpec runs the same checks inside
@@ -137,6 +138,19 @@ object Inventory {
       check(copies.isEmpty,
         "sinks: only PartitionSwap.scala renames directories or names the tombstone sidecar",
         s"STORE-COMMIT COPIES (use graft.sinks.PartitionSwap): ${copies.mkString(", ")}")
+    }
+    // ONE FAN-OUT OWNER: how wide a sketch or codec stage runs is the
+    // operator's answer (Dedup.fanOut), not a named argument a query or
+    // tool repeats; a `val par = …` binding stays legal
+    locally {
+      val named = "(?<!val |var )\\b[A-Za-z]\\w*\\s*=\\s*[\\w.()]*sparkContext\\.defaultParallelism".r
+      val passes = (sources("src/main/scala/graft/queries") ++ toolSources).flatMap {
+        case (f, src) => named.findAllMatchIn(src)
+          .map(m => s"$f:${src.substring(0, m.start).count(_ == '\n') + 1}")
+      }
+      check(passes.isEmpty,
+        "fan-out: no query or tool passes defaultParallelism as a named argument",
+        s"FAN-OUT ARGUMENTS (the operator fans out itself): ${passes.mkString(", ")}")
     }
     // THE DRIVER CONTRACT: SparkEntry's public members are the five the
     // driver calls; a key set one harness treats specially lives beside

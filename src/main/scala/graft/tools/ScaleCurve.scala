@@ -88,15 +88,14 @@ object ScaleCurve {
       val (candLsh, _) = timed(Dedup.minhashBandCandidates(m, "doc_id", 0.8).count())
       m.unpersist()
       val (pairsLsh, tLsh) = timed(
-        Dedup.minhashNearDups(docs, "text", "doc_id", 0.8, sketchParallelism = par).count())
+        Dedup.minhashNearDups(docs, "text", "doc_id", 0.8).count())
 
       // ngram jaccard (PPJoin)
       val g = Dedup.ngramGramFrame(docs.repartition(par), "text", "doc_id", "lang").cache()
       val (candNg, _) = timed(Dedup.ngramPrefixCandidates(g, 0.8).count())
       g.unpersist()
       val (pairsNg, tNg) = timed(
-        Dedup.ngramJaccardPairs(docs, "text", "doc_id", "lang", 0.8,
-          sketchParallelism = par).count())
+        Dedup.ngramJaccardPairs(docs, "text", "doc_id", "lang", 0.8).count())
 
       // simhash (HmSearch chunks)
       val wide = Dedup.simhashedWide(docs.repartition(par), "text", "doc_id").cache()
@@ -104,8 +103,7 @@ object ScaleCurve {
         .select("id_a", "id_b").distinct().count())
       wide.unpersist()
       val (pairsSh, tSh) = timed(
-        Dedup.simhashNearDups(docs, "text", "doc_id", maxHamming = 8,
-          sketchParallelism = par).count())
+        Dedup.simhashNearDups(docs, "text", "doc_id", maxHamming = 8).count())
 
       // benchmark decontamination: "candidates" = distinct gram-hash
       // collisions (the join's output volume — the quantity that must

@@ -55,37 +55,13 @@ object ScaleCurveBand {
         BandStore.compact(spark, path)
       }
       val (probePairs, probeSec) = timed {
-        val out = BandStore.probe(spark, path, batch.repartition(par), "text", "doc_id", 0.8)
+        val out = BandStore.probe(spark, path, batch, "text", "doc_id", 0.8)
         val s = pairSet(out)
         org.apache.spark.sql.GraftShim.unpersistCheckpoint(out)
         s
       }
-      // the LEAN layout head-to-head: same history, sig column moved to
-      // docs/ — record its ingest/probe cost and the bands/ byte shrink
-      // (the stored-sig mass the dense layout pays 16x for)
-      val leanPath = s"$root/index_lean_x$f"
-      val (_, leanIngestSec) = timed {
-        BandStore.write(hist, "text", "doc_id", leanPath, leanSigs = true)
-        BandStore.compact(spark, leanPath)
-      }
-      val (leanPairs, leanProbeSec) = timed {
-        val out = BandStore.probe(spark, leanPath, batch.repartition(par), "text", "doc_id", 0.8)
-        val s = pairSet(out)
-        org.apache.spark.sql.GraftShim.unpersistCheckpoint(out)
-        s
-      }
-      require(leanPairs == probePairs,
-        s"x$f: lean probe produced ${leanPairs.size} pairs vs ${probePairs.size} dense")
-      def tableBytes(p: String, sub: String): Long = {
-        def walk(x: java.io.File): Long =
-          if (x.isDirectory) Option(x.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-          else if (x.getName.endsWith(".parquet")) x.length else 0L
-        walk(new java.io.File(p, sub))
-      }
-      val bandsShrink = tableBytes(path, "bands").toDouble / tableBytes(leanPath, "bands")
       val (directPairs, resketchSec) = timed {
-        val out = Dedup.minhashNearDupsAgainst(hist, batch, "text", "doc_id",
-          0.8, sketchParallelism = par)
+        val out = Dedup.minhashNearDupsAgainst(hist, batch, "text", "doc_id", 0.8)
         val s = pairSet(out)
         org.apache.spark.sql.GraftShim.unpersistCheckpoint(out)
         s
@@ -93,7 +69,7 @@ object ScaleCurveBand {
       require(probePairs == directPairs,
         s"x$f: probe produced ${probePairs.size} pairs vs ${directPairs.size} self-contained")
       probePts :+= ((nH, probeSec)); resketchPts :+= ((nH, resketchSec))
-      sc.emit(f"""{"dataset":"sf0.1x$f","op":"band_store","n_hist":$nH,"n_batch_fixed":true,"ingest_sec":$ingestSec%.2f,"probe_sec":$probeSec%.2f,"lean_ingest_sec":$leanIngestSec%.2f,"lean_probe_sec":$leanProbeSec%.2f,"lean_bands_shrink":$bandsShrink%.2f,"resketch_sec":$resketchSec%.2f,"pairs":${probePairs.size}}""")
+      sc.emit(f"""{"dataset":"sf0.1x$f","op":"band_store","n_hist":$nH,"n_batch_fixed":true,"ingest_sec":$ingestSec%.2f,"probe_sec":$probeSec%.2f,"resketch_sec":$resketchSec%.2f,"pairs":${probePairs.size}}""")
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(hist)
     }
     sc.emit(f"""{"op":"band_store","alpha_probe":${endpointAlpha(probePts)}%.3f,"alpha_resketch":${endpointAlpha(resketchPts)}%.3f,"fit_range":[${probePts.head._1},${probePts.last._1}]}""")

@@ -32,7 +32,6 @@ import ScaleCurve.{endpointAlpha, ladder, timed}
 object ScaleCurveHam {
   def run(sc: ScaleCurve.Run): Unit = {
     val spark = sc.spark
-    val par = spark.sparkContext.defaultParallelism
     val m = graft.multimodal.Multimodal
 
     // golden-ratio multiples: deterministic masks whose pairwise XORs
@@ -63,10 +62,10 @@ object ScaleCurveHam {
     // the same exact-collapse-to-representatives rule the query keys run
     // (identical hashes must not re-enter the chunk join)
     def imageReps(sf: String): DataFrame =
-      m.dHash(m.synthesizePngs(docs(sf), "doc_id", parallelism = par)).toDF()
+      m.dHash(m.synthesizePngs(docs(sf), "doc_id")).toDF()
         .groupBy("phash").agg(min(col("doc_id")).as("doc_id"))
     def audioReps(sf: String): DataFrame =
-      m.audioFingerprint(m.synthesizeWavs(docs(sf), "doc_id", parallelism = par)).toDF()
+      m.audioFingerprint(m.synthesizeWavs(docs(sf), "doc_id")).toDF()
         .groupBy("afp").agg(min(col("doc_id")).as("doc_id"))
 
     Seq(("image_phash", "phash", imageReps _), ("audio_fp", "afp", audioReps _))

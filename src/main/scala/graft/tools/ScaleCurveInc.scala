@@ -46,8 +46,7 @@ object ScaleCurveInc {
         Dedup.minhashCrossCandidates(mh, mb, "doc_id", 0.8).count())
       mh.unpersist(); mb.unpersist()
       val (pairs, t) = timed {
-        val out = Dedup.minhashNearDupsAgainst(hist, batch, "text", "doc_id",
-          0.8, sketchParallelism = par)
+        val out = Dedup.minhashNearDupsAgainst(hist, batch, "text", "doc_id", 0.8)
         val n = out.count()
         org.apache.spark.sql.GraftShim.unpersistCheckpoint(out)
         n

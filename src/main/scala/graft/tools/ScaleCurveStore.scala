@@ -86,7 +86,7 @@ object ScaleCurveStore {
       require(afterPurge == nHist + nApp - nDel,
         s"band x$f: purge accounting — $afterPurge rows vs ${nHist + nApp - nDel}")
       val (nPairs, wProbe) = timed {
-        val out = BandStore.probe(spark, path, probeBatch.repartition(par),
+        val out = BandStore.probe(spark, path, probeBatch,
           "text", "doc_id", 0.8)
         val n = out.count()
         org.apache.spark.sql.GraftShim.unpersistCheckpoint(out)

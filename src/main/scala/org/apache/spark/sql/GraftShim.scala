@@ -46,6 +46,13 @@ object GraftShim {
     leaves.foreach(_.unpersist(blocking = false))
   }
 
+  /** A parquet file schema as `spark.read.parquet` infers it, under the
+    * session's `private[sql]` SQL conf. */
+  def parquetSchema(spark: SparkSession,
+                    schema: org.apache.parquet.schema.MessageType): types.StructType =
+    new execution.datasources.parquet.ParquetToSparkSchemaConverter(
+      spark.asInstanceOf[classic.SparkSession].sessionState.conf).convert(schema)
+
   /** `df` without its join hints. A hint asks the planner how to join
     * the frame; a query that returns the frame as its result, with no
     * join, leaves the hint unused and Spark logs a `HintErrorLogger`

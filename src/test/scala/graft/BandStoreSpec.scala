@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -34,6 +35,21 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private def pairs(df: org.apache.spark.sql.DataFrame) =
     df.select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)].collect().toSet
+
+  /** `f`'s result and the start events of the Spark jobs it launched. */
+  private def jobsDuring[T](f: => T): (T, Seq[SparkListenerJobStart]) = {
+    org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.add(e); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+      (out, jobs.toArray(Array.empty[SparkListenerJobStart]).toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   test("probe equals the self-contained minhashNearDupsAgainst exactly") {
     val path = newPath()
@@ -278,72 +294,6 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(pairs(BandStore.probe(spark, path, batch, "text", "doc_id", 0.8)) === before)
   }
 
-  test("lean layout: probe parity with dense, bands/ sheds the 16x sig mass, appends stay lean") {
-    val dense = newPath(); val lean = newPath()
-    BandStore.write(history, "text", "doc_id", dense, buckets = 16)
-    BandStore.write(history, "text", "doc_id", lean, buckets = 16, leanSigs = true)
-    val pd = pairs(BandStore.probe(spark, dense, batch, "text", "doc_id", 0.8))
-    val pl = pairs(BandStore.probe(spark, lean, batch, "text", "doc_id", 0.8))
-    assert(pl === pd, "the layout flag must never change probe semantics")
-    assert(pl.nonEmpty, "fixture must exercise real cross-set near-dups")
-    def tableBytes(root: String, sub: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-        else if (f.getName.endsWith(".parquet")) f.length else 0L
-      walk(new java.io.File(root, sub))
-    }
-    // dense stores the k-slot sig on each of a doc's 16 band rows; lean
-    // stores it once on docs/ — bands/ must shed most of its bytes. The
-    // raw-width ratio is ~16x but parquet's encoding compresses the
-    // repetitive sig arrays and per-file footers dominate at spec scale,
-    // so the on-disk assertion is the conservative >3x (measured 3.9x
-    // here; `tools.ScaleCurve band` records the sf0.1 number)
-    val bandsShrink = tableBytes(dense, "bands").toDouble / tableBytes(lean, "bands")
-    assert(bandsShrink > 3.0,
-      f"lean bands/ should shed the per-band sig mass, shrank only $bandsShrink%.1fx")
-    assert(!spark.read.parquet(s"$lean/bands").columns.contains("sig"))
-    // append derives the layout from the pinned params, not the caller
-    BandStore.append(batch, "text", "doc_id", lean)
-    assert(!spark.read.parquet(s"$lean/bands").columns.contains("sig"),
-      "append to a lean store must stay lean")
-    assert(spark.read.parquet(s"$lean/docs").columns.contains("sig"))
-  }
-
-  test("lean probe's sig fetch prunes to candidate buckets and reads ONLY the sig column") {
-    val path = newPath()
-    BandStore.write(history, "text", "doc_id", path, buckets = 16, leanSigs = true)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val p = BandStore.params(spark, path)
-      val mb = Dedup.minhashed(batch.limit(3), "text", "doc_id",
-          p.k, p.rowsPerBand, p.shingleN)
-        .filter(size($"hs") > 0).cache()
-      try {
-        val plausible = BandStore.plausibleCandidates(spark, path, mb, "doc_id", 0.8, p)
-        plausible.collect()
-        // the returned stage is the sig-agreement join: its scan must be
-        // the docs/ table, bucket-routed by the candidates' ids, and —
-        // the columnar point of the lean layout — its ReadSchema must
-        // carry the sig column WITHOUT the (much larger) hs arrays
-        val scans = plausible.queryExecution.executedPlan.collect {
-          case f: FileSourceScanExec
-            if f.metadata.get("Location").exists(_.contains("/docs")) => f
-        }
-        assert(scans.nonEmpty, "expected a parquet scan of the docs table")
-        val scan = scans.head
-        assert(scan.partitionFilters.exists(_.toString.contains("bucket")),
-          s"candidate-id route should plan as a partition filter, scan:\n$scan")
-        val readSchema = scan.metadata("ReadSchema")
-        assert(readSchema.contains("sig") && !readSchema.contains("hs"),
-          s"sig fetch must not read the shingle arrays: $readSchema")
-        val plan = plausible.queryExecution.executedPlan.toString
-        assert(plan.contains("BroadcastHashJoin"),
-          s"candidates should broadcast over the pruned sig scan:\n$plan")
-      } finally { mb.unpersist(); () }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
-
   test("delete masks a dup source everywhere; purge reclaims it; untouched buckets byte-identical") {
     val path = newPath()
     BandStore.write(history, "text", "doc_id", path, buckets = 16)
@@ -570,7 +520,7 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val path = newPath()
     BandStore.write(history, "text", "doc_id", path, k = 16, rowsPerBand = 4, buckets = 8)
     val p = BandStore.params(spark, path)
-    assert(p === BandStore.Params(16, 4, 3, 8, leanSigs = false))
+    assert(p === BandStore.Params(16, 4, 3, 8))
     // a probe under the stored k=16 family must equal the self-contained
     // operator under the SAME parameters — the store decides, silently
     // probing under the default k=128 would report garbage
@@ -652,28 +602,30 @@ class BandStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "post-append probe sees the appended batch as history")
   }
 
-  test("params reads its sidecar in one Spark job, and a pre-lean sidecar as dense") {
+  test("params reads its sidecar in one Spark job") {
     val path = newPath()
-    BandStore.write(history, "text", "doc_id", path, leanSigs = true)
-    org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val p = try {
-      val p = BandStore.params(spark, path)
-      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-      p
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get === 1, "no footer inference, one head()")
-    assert(p.leanSigs)
-    // a _params written before lean_sigs existed: no such column
-    Seq((p.k, p.rowsPerBand, p.shingleN, p.buckets))
-      .toDF("k", "rows_per_band", "shingle_n", "buckets")
-      .write.mode("overwrite").parquet(path + "/_params")
-    assert(BandStore.params(spark, path) === p.copy(leanSigs = false))
+    BandStore.write(history, "text", "doc_id", path)
+    val (p, jobs) = jobsDuring(BandStore.params(spark, path))
+    assert(jobs.size === 1, "no footer inference, one head()")
+    assert(p === BandStore.Params(128, 8, 3, 64))
+  }
+
+  test("tombstones and delete type the sidecar from a footer, with no inference job") {
+    val path = newPath()
+    BandStore.write(history, "text", "doc_id", path, buckets = 8)
+    // schema inference runs as a job outside any SQL execution; the
+    // delete's own tombstone write runs inside one
+    def inference(jobs: Seq[SparkListenerJobStart]) =
+      jobs.count(j => j.properties == null ||
+        j.properties.getProperty("spark.sql.execution.id") == null)
+    // INT ids against the store's BIGINT id column: the cast still applies
+    val (_, deleteJobs) = jobsDuring(
+      BandStore.delete(Seq(1, 2).toDF("doc_id"), "doc_id", path))
+    assert(deleteJobs.nonEmpty, "the tombstone write is a job")
+    assert(inference(deleteJobs) === 0, "delete types its ids without an inference job")
+    val (ts, readJobs) = jobsDuring(BandStore.tombstones(spark, path))
+    assert(readJobs.isEmpty, "tombstones builds its frame without any job")
+    assert(ts.get.schema("doc_id").dataType === history.schema("doc_id").dataType)
+    assert(ts.get.as[Long].collect().toSet === Set(1L, 2L))
   }
 }

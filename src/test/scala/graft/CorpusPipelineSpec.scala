@@ -10,8 +10,7 @@ class CorpusPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val docs = spark.read.parquet(s"$sf/documents.parquet")
-  private lazy val out = CorpusPipeline.prepare(docs,
-    CorpusPipeline.Config(sketchParallelism = 4)).cache()
+  private lazy val out = CorpusPipeline.prepare(docs).cache()
 
   test("prepared corpus is a subset with split and pack columns attached") {
     assert(out.count() > 0 && out.count() <= docs.count())
@@ -24,7 +23,7 @@ class CorpusPipelineSpec extends SparkSpec {
       .groupBy("h").count().filter($"count" > 1)
     assert(normDups.isEmpty, "exact dedup must hold on the output")
     val residualPairs = graft.operators.Dedup
-      .minhashNearDups(out, "text", "doc_id", 0.8, sketchParallelism = 4)
+      .minhashNearDups(out, "text", "doc_id", 0.8)
     // representatives of different clusters can't be >= tau similar unless
     // LSH missed the pair in the FIRST pass too; identical parameters mean
     // any pair found now would have been found then — so none remain
@@ -53,10 +52,9 @@ class CorpusPipelineSpec extends SparkSpec {
       lit("<html><head><style>p{}</style><script>1<2</script></head><body><p>"),
       $"text", lit("</p><!-- c --></body></html>")))
     val viaFlag = CorpusPipeline.prepare(markup,
-      CorpusPipeline.Config(sketchParallelism = 4, htmlInput = true))
+      CorpusPipeline.Config(htmlInput = true))
     val viaPre = CorpusPipeline.prepare(
-      markup.withColumn("text", extractHtmlText($"text")),
-      CorpusPipeline.Config(sketchParallelism = 4))
+      markup.withColumn("text", extractHtmlText($"text")))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id", $"text", $"split", $"pack_id")
         .as[(Long, String, String, Long)].collect().toSet
@@ -67,7 +65,7 @@ class CorpusPipelineSpec extends SparkSpec {
   }
 
   test("pipeline is deterministic across reruns") {
-    val again = CorpusPipeline.prepare(docs, CorpusPipeline.Config(sketchParallelism = 4))
+    val again = CorpusPipeline.prepare(docs)
       .select($"doc_id", $"split", $"pack_id")
     val first = out.select($"doc_id", $"split", $"pack_id")
     assert(first.exceptAll(again).isEmpty && again.exceptAll(first).isEmpty)

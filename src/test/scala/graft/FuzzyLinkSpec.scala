@@ -322,13 +322,4 @@ class FuzzyLinkSpec extends SparkSpec {
     assert(got(51L) === ((1L, null, None)))
     assert(got.size === 5)
   }
-
-  test("fuzzyDedup under segment blocking emits identical clusters") {
-    val df = fuzzyRecs.toDF("id", "name")
-    val neigh = FuzzyLink.fuzzyDedup(df, "id", "name")
-      .select("id", "n_members").as[(Long, Long)].collect().toSet
-    val seg = FuzzyLink.fuzzyDedup(df, "id", "name", segmentBlocking = true)
-      .select("id", "n_members").as[(Long, Long)].collect().toSet
-    assert(seg === neigh)
-  }
 }

@@ -27,6 +27,16 @@ class MultimodalSpec extends SparkSpec {
     assert(f1.map(_.feature.toSeq).toSeq === f2.map(_.feature.toSeq).toSeq)
   }
 
+  test("codec and sketch stages fan a one-split input out to the session's parallelism") {
+    val par = spark.sparkContext.defaultParallelism
+    val oneSplit = spark.read.parquet(s"$sf/documents.parquet").coalesce(1)
+    assert(oneSplit.rdd.getNumPartitions === 1)
+    assert(Multimodal.synthesizePngs(oneSplit, "doc_id").rdd.getNumPartitions === par)
+    val plan = graft.operators.Dedup.simhashNearDups(oneSplit, "text", "doc_id")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains(s"RoundRobinPartitioning($par)"), plan)
+  }
+
   test("resize to an image's own dimensions is the identity; downsize samples exactly") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(20)
     val pngs = Multimodal.synthesizePngs(docs, "doc_id")

@@ -118,19 +118,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("rank selection is invariant to input materialization (both plans, same ranks)") {
-    import graft.operators.Rank
-    val rnd = new scala.util.Random(11)
-    val rows = (0 until 500).map(i => (s"g${i % 3}", rnd.nextInt(50).toLong, i.toLong))
-      .toDF("g", "v", "tb")
-    def ranks(mat: Boolean) =
-      Rank.withGroupRank(rows, Seq("g"), "v", tiebreakCols = Seq("tb"),
-          materializeInput = mat)
-        .collect().map(_.toString).sorted.toSeq
-    assert(ranks(mat = false) === ranks(mat = true),
-      "materializeInput is a pure evaluation-count optimization")
-  }
-
   test("removeBoilerplateLines is identity when no line crosses the threshold (5 seeds)") {
     for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(seed * 13)

@@ -22,7 +22,7 @@ class StreamDedupSpec extends SparkSpec {
     .select($"doc_id", $"text")
 
   private def batchPairs = Dedup.minhashNearDups(corpus, "text", "doc_id",
-    threshold = tau, k = K, rowsPerBand = RPB, sketchParallelism = 4)
+    threshold = tau, k = K, rowsPerBand = RPB)
     .as[(Long, Long, Double)].collect().toSet
 
   test("streamed pair set equals the batch operator's, across micro-batches") {
@@ -58,7 +58,7 @@ class StreamDedupSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft_sdn_store")
       .toString + "/index"
     graft.sinks.BandStore.write(corpus, "text", "doc_id", path,
-      k = K, rowsPerBand = RPB, buckets = 8, leanSigs = true)
+      k = K, rowsPerBand = RPB, buckets = 8)
     val p = graft.sinks.BandStore.params(spark, path)
     val docs = corpus.as[(Long, String)].collect().sortBy(_._1)
     val ms = MemoryStream[(Long, String)]
@@ -67,8 +67,7 @@ class StreamDedupSpec extends SparkSpec {
       k = p.k, rowsPerBand = p.rowsPerBand, shingleN = p.shingleN)
     val cands = StreamDedup.candidates(banded, tau)
     val sketch = graft.sinks.BandStore.sketchTable(spark, path, "doc_id")
-    // a lean store carries sig beside hs in docs/ — the sketch-table
-    // projection must exclude it so the verify join reads zero sig bytes
+    // the sketch table is exactly the verify join's static side
     assert(sketch.columns.toSeq === Seq("doc_id", "hs"))
     val verified = StreamDedup.verify(cands.toDF, sketch, "doc_id", tau)
     val q = verified.writeStream.format("memory").queryName("sdn_store_out")

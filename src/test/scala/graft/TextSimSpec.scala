@@ -310,7 +310,7 @@ class TextSimSpec extends SparkSpec {
     // positives ARE the verified near-dup pairs, nothing more or less
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val truePos = graft.operators.Dedup.minhashNearDups(docs, "text", "doc_id",
-        threshold = 0.8, sketchParallelism = 4)
+        threshold = 0.8)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(pos === truePos)
     assert(neg.forall { case (a, b) => a < b }, "negatives are (min,max)-oriented")
