@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Centroid-partitioned ANN corpus store — the storage layout that turns
   * IVF's "search only the probed clusters" filter into PARTITION PRUNING:
@@ -15,8 +15,20 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * executed probe plan carries a STATIC `centroid_id IN (...)` partition
   * filter — `ivfSearchAssigned` routes probe ids driver-side — and reads
   * only the probed partitions' files).
+  *
+  * Lifecycle: write → append → compact → delete → purge → merge, plus
+  * [[recluster]] for centroid drift. Everything but the layout is
+  * [[PartitionSwap]]'s lifecycle core, driven by this store's one
+  * [[PartitionSwap.Store]] value.
   */
 object AnnStore {
+
+  /** Recluster's whole-store swap: `.recluster_tmp`/`.recluster_old`,
+    * committed by its `_centroids` marker. */
+  private val Recluster = PartitionSwap.RootSwap("recluster", Some("_centroids/_SUCCESS"))
+
+  private val Store = PartitionSwap.Store("AnnStore", Seq(""), "centroid_id", Recluster,
+    mergeCheck = mergeable)
 
   /** Align the assignment with the store's cluster layout before a
     * `partitionBy("centroid_id")` write: without it every upstream task
@@ -40,16 +52,13 @@ object AnnStore {
     * cluster. One directory per centroid; vectors round-trip parquet
     * exactly (binary doubles), so search over the store is value-identical
     * to search over the in-memory assignment. */
-  def write(assigned: DataFrame, path: String): Unit = {
+  def write(assigned: DataFrame, path: String): Unit =
     // fenced like append: a full overwrite racing a swap-performing op
     // interleaves renames unpredictably; loud beats lost
-    val fs = new Path(path).getFileSystem(
-      assigned.sparkSession.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "AnnStore") {
+    PartitionSwap.fenced(assigned.sparkSession, path, Store) { _ =>
       clusterAligned(assigned).write.mode("overwrite")
         .partitionBy("centroid_id").parquet(path)
     }
-  }
 
   /** APPEND a new assigned batch into an existing store — the ingest
     * path's steady state: arriving vectors are coarse-assigned against
@@ -63,7 +72,7 @@ object AnnStore {
     * degrades recall, never correctness, since search scans whatever
     * partitions the probe names. */
   def append(assigned: DataFrame, path: String,
-             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit = {
+             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit =
     // fenced (round-13 advice; the shared PartitionSwap fence): an append racing
     // compact/purge could land files in a cluster dir the swap parks and
     // deletes, and one racing recluster writes into a tree about to be
@@ -71,13 +80,10 @@ object AnnStore {
     // Round 15: the batch QUEUES (bounded) behind a maintenance-held
     // fence instead of failing — append-vs-compact serializes; only a
     // fence still held past fenceWaitMs raises.
-    val fs = new Path(path).getFileSystem(
-      assigned.sparkSession.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "AnnStore", fenceWaitMs) {
+    PartitionSwap.fenced(assigned.sparkSession, path, Store, fenceWaitMs) { _ =>
       clusterAligned(assigned).write.mode("append")
         .partitionBy("centroid_id").parquet(path)
     }
-  }
 
   /** Read the store back. `centroid_id` returns as a partition column —
     * a foldable filter on it prunes directories at planning time instead
@@ -87,49 +93,26 @@ object AnnStore {
     * raise-on-crashed-swap guard): readers resolve the newest COMMITTED
     * generation, so a read concurrent with compact/purge/recluster — or
     * after a writer crash — never raises and never serves a partial
-    * store. Per-cluster swaps: clusters parked without a live twin are
-    * their own last committed copy and union in via
-    * [[PartitionSwap.resolvedRead]] (the live side keeps the pruned
-    * scan). Whole-store recluster: the generation root resolves through
-    * [[PartitionSwap.resolveRoot]] (between the two renames the parked
-    * previous generation is served as-is; the new tree only becomes
-    * readable when the promote rename lands). Readers stay readers —
-    * recovery is still owned by [[recover]] / the next writer op. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = PartitionSwap.resolveRoot(fs, path, Recluster)
-    // Serving the parked `.recluster_old` generation: a per-cluster swap
-    // that crashed BEFORE the recluster started left its scratch beside
-    // the then-live root (`path.swap_old` etc.) — the whole-store rename
-    // doesn't carry sibling scratch along, so probe the original base too
-    // (round-15 ADVICE: the doubly-crashed store keeps its parked
-    // clusters). The `.recluster_tmp` defense path stays single-layer: an
-    // orphaned sibling scratch there has no owning generation to pair
-    // with — run [[recover]] first.
-    val extraBases = if (root == Recluster.old(path)) Seq(path) else Nil
-    PartitionSwap.resolvedRead(spark, root, Prefix, "centroid_id", Tags,
-      extraBases)
-  }
+    * store: [[PartitionSwap.read]]'s one read rule — clusters parked
+    * without a live twin are their own last committed copy and union in
+    * (the live side keeps the pruned scan), and mid-recluster the parked
+    * previous generation is served as-is. On a healthy store it is a
+    * plain `spark.read.parquet(path)`. Readers stay readers — recovery is
+    * still owned by [[recover]] / the next writer op. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    PartitionSwap.read(spark, path, Store)
 
   /** Heal a store whose writer crashed mid-swap (per-cluster compact/
-    * purge swaps AND whole-store recluster swaps): promote each committed
-    * tmp if present, else restore the original — the same recovery the
-    * swap-performing ops run on entry, callable by an operator who owns
-    * the writer role (it takes the writer fence). Idempotent; a no-op on
-    * a healthy store. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "AnnStore") {
-      recoverSwaps(fs, path)
-    }
-  }
+    * purge swaps AND whole-store recluster swaps) — see
+    * [[PartitionSwap.recover]]. Idempotent; a no-op on a healthy store. */
+  def recover(spark: SparkSession, path: String): Unit =
+    PartitionSwap.recover(spark, path, Store)
 
   /** Clear a stale writer fence left by a crashed compact/purge/
     * recluster — see [[PartitionSwap.breakLock]]'s caveat: the caller
     * asserts the crashed owner is dead. */
   def breakLock(spark: SparkSession, path: String): Boolean =
-    PartitionSwap.breakLock(
-      new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+    PartitionSwap.breakLock(spark, path)
 
   /** Persist PQ CODES partitioned by their IVF cluster — the IVF+PQ
     * serving layout: `codes` ([[graft.operators.ProductQuant.encode]]'s
@@ -160,48 +143,16 @@ object AnnStore {
     * byte-identical (spec-asserted), and search over the compacted store
     * equals search over the fragmented one (files are layout, never
     * semantics — spec-asserted for both the float and the PQ layout).
-    *
-    * Scale shape: one distributed job over ONLY the fragmented clusters
-    * (the `centroid_id IN (...)` filter is partition pruning, so
-    * already-compact clusters are never read), repartitioned by cluster
-    * so each cluster's rows land in one task → one output file per
-    * cluster dir. No driver-side row movement; the driver handles only
-    * directory names (≤ K entries of metadata, same scale as the probe
-    * route).
-    *
-    * Promotion is a per-cluster atomic swap through scratch dirs OUTSIDE
-    * the store root (a `centroid_id=3.old` dir inside it would corrupt
-    * partition discovery): mv(dst→old), mv(tmp→dst), delete old — the
-    * [[ParquetSink.swapWrite]] rename discipline, recovered on entry
-    * (a crash mid-swap leaves old + a fully-written tmp; renames start
-    * only after the write commits, so tmp is trustworthy and promoted,
-    * else old is restored). Same atomicity scope as swapWrite: rename
-    * must be atomic (local FS / HDFS); object stores need a table
-    * format on top.
-    *
-    * Returns the compacted cluster ids (empty = store already compact —
-    * the call is idempotent). */
-  def compact(spark: SparkSession, path: String, maxFiles: Int = 1): Seq[Long] = {
-    require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "AnnStore") {
-      recoverSwaps(fs, path)
-      val targets = PartitionSwap.fragmented(fs, path, Prefix, maxFiles)
-        .map(clusterId).sorted
-      if (targets.isEmpty) Seq.empty
-      else {
-        swapRewrite(spark, fs, path, targets,
-          read(spark, path).filter(col("centroid_id").isin(targets: _*)))
-        targets
-      }
-    }
-  }
+    * See [[PartitionSwap.compact]]. Returns the compacted cluster ids
+    * (empty = store already compact — the call is idempotent). */
+  def compact(spark: SparkSession, path: String, maxFiles: Int = 1): Seq[Long] =
+    PartitionSwap.compact(spark, path, Store, maxFiles).map(_._2)
 
   // ---- tombstone deletes (the lifecycle's fourth stage) ----
 
   /** DELETE by id — the store lifecycle's fourth stage (write → append →
     * compact → delete): appends the batch's ids as 8-byte TOMBSTONE rows
-    * to the hidden sidecar ([[PartitionSwap.appendTombstones]]: cast to
+    * to the hidden sidecar ([[PartitionSwap.delete]]: cast to
     * the store's id type, a null id raises, fenced) and touches NO data
     * file — at 100 TB a delete costs O(deleted ids), never a cluster
     * rewrite (the Delta/Iceberg delete-vector shape). Readers mask
@@ -212,14 +163,14 @@ object AnnStore {
     * is idempotent and order-free across batches. */
   def delete(ids: DataFrame, idCol: String, path: String,
              fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit =
-    PartitionSwap.appendTombstones(ids, idCol, path, path, "AnnStore", fenceWaitMs)
+    PartitionSwap.delete(ids, idCol, path, Store, fenceWaitMs)
 
   /** Pending tombstone ids of the generation [[read]] serves, or None
     * when no delete has been recorded since the last [[purge]] (callers
     * skip the mask join entirely — zero plan cost on a tombstone-free
     * store). */
   def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    PartitionSwap.tombstones(spark, path, Recluster)
+    PartitionSwap.tombstones(spark, path, Store)
 
   /** Read the store MINUS tombstoned rows — the serving view after
     * deletes: the base scan keeps its partition-pruning contract (a
@@ -238,44 +189,18 @@ object AnnStore {
   }
 
   /** PURGE — physically reclaim tombstoned rows, on the compaction
-    * cadence: (1) one id-column-pruned scan (a few bytes/row — the
+    * cadence: one id-column-pruned scan (a few bytes/row — the
     * column-store win) finds the clusters actually holding tombstoned
-    * rows, (2) exactly those clusters rewrite minus the tombstone set
-    * through [[compact]]'s atomic per-cluster swap (untouched partitions'
-    * files stay byte-identical), (3) the sidecar drops LAST — a crash at
-    * any point leaves tombstones that still mask correctly (rows already
-    * purged just anti-join to nothing), so the call is idempotent and
-    * [[readLive]] never serves a deleted row through any crash window. A
-    * cluster whose every row is tombstoned disappears (no empty dir).
-    * Returns the rewritten cluster ids (empty = nothing pending, and any
-    * stale fully-purged sidecar is cleared). Like compact, serialized
-    * against other swap-performing writers by the writer fence. */
-  def purge(spark: SparkSession, path: String, idCol: String): Seq[Long] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "AnnStore") {
-      recoverSwaps(fs, path)
-      tombstones(spark, path) match {
-        case None => Seq.empty
-        case Some(ts) =>
-          val tsb = org.apache.spark.sql.functions.broadcast(ts.select(col(idCol)))
-          // pruned scan: only (idCol, centroid_id) are read to route the purge
-          // partition discovery may type centroid_id INT or BIGINT depending
-          // on the ingested values — canonicalize before collecting the route
-          val targets = read(spark, path).select(col(idCol), col("centroid_id"))
-            .join(tsb, Seq(idCol), "left_semi")
-            .select(col("centroid_id").cast("long")).distinct()
-            .collect().map(_.getLong(0)).toSeq.sorted
-          if (targets.nonEmpty)
-            swapRewrite(spark, fs, path, targets,
-              read(spark, path).filter(col("centroid_id").isin(targets: _*))
-                .join(tsb, Seq(idCol), "left_anti"))
-          // drop the sidecar last: every earlier crash leaves a consistent
-          // (masked) store; reaching here means the rows are gone for real
-          PartitionSwap.dropTombstones(fs, path)
-          targets
-      }
-    }
-  }
+    * rows, exactly those clusters rewrite minus the tombstone set through
+    * the per-cluster swap (untouched partitions' files stay
+    * byte-identical), and the sidecar drops LAST — see
+    * [[PartitionSwap.purge]]: idempotent, and [[readLive]] never serves a
+    * deleted row through any crash window. A cluster whose every row is
+    * tombstoned disappears (no empty dir). `idCol` is the store's id
+    * column, the one the tombstones carry. Returns the rewritten cluster
+    * ids (empty = nothing pending). */
+  def purge(spark: SparkSession, path: String, idCol: String): Seq[Long] =
+    PartitionSwap.purge(spark, path, Store).map(_._2)
 
   // ---- merge (shard consolidation) ----
 
@@ -288,68 +213,43 @@ object AnnStore {
     * merge is pure FILE-SYSTEM METADATA: each src cluster's files rename
     * into dst's matching directory (created if dst lacked the cluster),
     * tombstone sidecars union the same way, and the src root drops last.
-    * O(files) namenode ops, zero data bytes read or written — at 100 TB
-    * a merge costs the same as at 100 MB.
+    * O(files) namenode ops, zero data bytes read or written; crash
+    * windows and fencing are [[PartitionSwap.merge]]'s.
     *
-    * Contract: same centroids (enforced when BOTH stores carry a
-    * `_centroids` sidecar — they must agree exactly; a store without one
-    * keeps its centroids externally and the caller owns the assertion)
-    * and same data schema (enforced — one footer read per store; the
-    * partition column is excluded, its type is discovery-time inference
-    * over values, not storage). Duplicate ids across the two stores
-    * behave exactly as duplicate rows do under [[append]]. Src's own
-    * `_centroids` sidecar, when present, drops with the src root — dst's
-    * index metadata governs the merged store.
-    *
-    * Visibility and crash windows: [[append]]'s contract, not a swap —
-    * dst only GAINS complete immutable files, so a concurrent reader
-    * sees some prefix of the merge and every row it reads is valid; a
-    * crash mid-merge leaves each file at exactly one of the two roots
-    * (rename is atomic), no row lost or duplicated, and re-running the
-    * merge completes it (idempotent — already-moved files are simply no
-    * longer at src). Serialized against other writers by BOTH stores'
-    * writer fences (dst's taken first — callers running merges
-    * concurrently must order paths the same way or one raises).
+    * Contract ([[mergeable]]): same centroids (enforced when BOTH stores
+    * carry a `_centroids` sidecar — a store without one keeps its
+    * centroids externally and the caller owns the assertion) and same
+    * data schema. Duplicate ids across the two stores behave exactly as
+    * duplicate rows do under [[append]]. Src's own `_centroids` sidecar,
+    * when present, drops with the src root — dst's index metadata governs
+    * the merged store.
     *
     * @return the cluster ids that received files, sorted */
-  def merge(spark: SparkSession, srcPath: String, dstPath: String): Seq[Long] = {
-    require(new Path(srcPath) != new Path(dstPath),
-      s"AnnStore.merge: src and dst are the same store ($srcPath)")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dfs = new Path(dstPath).getFileSystem(conf)
-    val sfs = new Path(srcPath).getFileSystem(conf)
-    PartitionSwap.withWriterLock(dfs, dstPath, "AnnStore") {
-      PartitionSwap.withWriterLock(sfs, srcPath, "AnnStore") {
-        recoverSwaps(dfs, dstPath); recoverSwaps(sfs, srcPath)
-        require(sfs.exists(new Path(srcPath)), s"AnnStore.merge: no store at $srcPath")
-        require(dfs.exists(new Path(dstPath)), s"AnnStore.merge: no store at $dstPath")
-        def sig(p: String) = spark.read.parquet(p).schema
-          .filterNot(_.name == "centroid_id").map(f => (f.name, f.dataType))
-        val (ss, ds) = (sig(srcPath), sig(dstPath))
-        if (ss != ds)
-          throw new IllegalArgumentException(
-            s"AnnStore.merge: schema mismatch — src $ss vs dst $ds; a merged " +
-              "store would fail (or silently widen) at read time")
-        val sCents = new Path(srcPath + "/_centroids")
-        val dCents = new Path(dstPath + "/_centroids")
-        if (sfs.exists(sCents) && dfs.exists(dCents)) {
-          def rows(p: String) = spark.read.parquet(p)
-            .collect().map(r => (r.getAs[Any](0), r.getSeq[Double](1))).sortBy(_._1.toString)
-          if (!rows(sCents.toString).sameElements(rows(dCents.toString)))
-            throw new IllegalArgumentException(
-              "AnnStore.merge: the two stores' _centroids sidecars differ — " +
-                "stores assigned against different centroids cannot file-merge; " +
-                "recluster one side (or re-ingest) first")
-        }
-        val moved = PartitionSwap.mergePartitionDirs(sfs, new Path(srcPath),
-          dfs, new Path(dstPath), Prefix, "AnnStore")
-        PartitionSwap.mergeSidecar(sfs, new Path(PartitionSwap.tombstoneDir(srcPath)),
-          dfs, new Path(PartitionSwap.tombstoneDir(dstPath)), "AnnStore")
-        // src drops LAST: a crash anywhere above leaves every file at
-        // exactly one root and a re-run completes the move
-        sfs.delete(new Path(srcPath), true)
-        moved.map(n => n.stripPrefix(Prefix).toLong).sorted
-      }
+  def merge(spark: SparkSession, srcPath: String, dstPath: String): Seq[Long] =
+    PartitionSwap.merge(spark, srcPath, dstPath, Store).map(_._2).sorted
+
+  /** [[merge]]'s contract check: the same data schema (the partition
+    * column is excluded — its type is discovery-time inference over
+    * values, not storage) and, when both stores carry a `_centroids`
+    * sidecar, the same centroids. */
+  private def mergeable(spark: SparkSession, src: String, dst: String): Unit = {
+    def sig(p: String) = spark.read.parquet(p).schema
+      .filterNot(_.name == "centroid_id").map(f => (f.name, f.dataType))
+    val (ss, ds) = (sig(src), sig(dst))
+    if (ss != ds)
+      throw new IllegalArgumentException(
+        s"AnnStore.merge: schema mismatch — src $ss vs dst $ds; a merged " +
+          "store would fail (or silently widen) at read time")
+    val (sCents, dCents) = (src + "/_centroids", dst + "/_centroids")
+    def exists(p: String) = PartitionSwap.fsOf(spark, p).exists(new Path(p))
+    if (exists(sCents) && exists(dCents)) {
+      def rows(p: String) = spark.read.parquet(p)
+        .collect().map(r => (r.getAs[Any](0), r.getSeq[Double](1))).sortBy(_._1.toString)
+      if (!rows(sCents).sameElements(rows(dCents)))
+        throw new IllegalArgumentException(
+          "AnnStore.merge: the two stores' _centroids sidecars differ — " +
+            "stores assigned against different centroids cannot file-merge; " +
+            "recluster one side (or re-ingest) first")
     }
   }
 
@@ -361,10 +261,8 @@ object AnnStore {
     * an underscore name parquet discovery ignores. (Stores built by
     * [[write]] from an external centroid frame don't carry one — their
     * centroids live wherever the caller keeps them.) */
-  def centroids(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(PartitionSwap.resolveRoot(fs, path, Recluster) + "/_centroids")
-  }
+  def centroids(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(PartitionSwap.root(spark, path, Store) + "/_centroids")
 
   /** RE-CLUSTER the store — the committed remedy for centroid drift that
     * [[append]]'s contract points at ("appending against drifted
@@ -396,10 +294,8 @@ object AnnStore {
     * @return the new centroids (centroid_id, c_v), also persisted as the
     *         store's `_centroids` sidecar */
   def recluster(spark: SparkSession, path: String, idCol: String,
-                k: Int, iters: Int = 2): DataFrame = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "AnnStore") {
-      recoverSwaps(fs, path)
+                k: Int, iters: Int = 2): DataFrame =
+    PartitionSwap.fenced(spark, path, Store) { fs =>
       PartitionSwap.swapRoot(fs, path, Recluster) { tmpRoot =>
         // carry EVERY non-derived column through the rewrite (round-13
         // advice): metadata ingested via `ivfAssign(metaCols = …)` —
@@ -426,32 +322,4 @@ object AnnStore {
         cents
       }
     }
-  }
-
-  // ---- swap machinery: the per-cluster swap (compact + purge) and the
-  // whole-store swap (recluster), both defined once in [[PartitionSwap]]
-
-  private val Prefix = "centroid_id="
-  // "compact" is the pre-delete-era scratch naming: a store that crashed
-  // mid-compact under it must still recover, or its parked cluster stays
-  // orphaned forever
-  private val Tags = Seq("swap", "compact")
-
-  private def clusterId(p: Path): Long = p.getName.stripPrefix(Prefix).toLong
-
-  /** Recluster's whole-store swap: `.recluster_tmp`/`.recluster_old`,
-    * committed by its `_centroids` marker. */
-  private val Recluster = PartitionSwap.RootSwap("recluster", Some("_centroids/_SUCCESS"))
-
-  /** Heal both swap kinds, whole-store first: a per-cluster swap's
-    * scratch sits beside the root the whole-store recovery restores. */
-  private def recoverSwaps(fs: FileSystem, path: String): Unit = {
-    PartitionSwap.recoverRoot(fs, path, Recluster)
-    PartitionSwap.recoverSwap(fs, path, Prefix, Tags)
-  }
-
-  private def swapRewrite(spark: SparkSession, fs: FileSystem, path: String,
-                          targets: Seq[Long], replacement: DataFrame): Unit =
-    PartitionSwap.swapRewrite(spark, fs, path, "centroid_id",
-      targets.map(c => s"$Prefix$c"), replacement)
 }

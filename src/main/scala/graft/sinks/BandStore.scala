@@ -2,7 +2,6 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 
 import graft.operators.Dedup
 
@@ -38,20 +37,22 @@ import graft.operators.Dedup
   *    from different hash families never agree), so both derive their
   *    parameters from the store, not the caller.
   *
-  * Lifecycle mirrors [[AnnStore]] in full: write → append (new files
-  * land only in their buckets; untouched partitions never rewritten) →
-  * compact (per-bucket atomic swap via [[PartitionSwap]], layout never
-  * semantics) → delete (O(ids) tombstone sidecar; probes and the
-  * streaming sketch table mask deleted docs immediately) → purge
-  * (physically reclaims exactly the affected buckets in both tables on
-  * the compaction cadence). Reads are GENERATION-CONSISTENT: a probe
-  * concurrent with any swap-performing op — or after a writer crash —
-  * resolves the last committed generation and never raises, never sees
-  * a partial table ([[PartitionSwap.resolvedRead]] /
-  * [[PartitionSwap.resolveRoot]];
+  * Lifecycle: write → append (new files land only in their buckets;
+  * untouched partitions never rewritten) → compact → delete (O(ids)
+  * tombstone sidecar; probes and the streaming sketch table mask deleted
+  * docs immediately) → purge → merge, plus [[rebucket]]. Everything but
+  * the layout is [[PartitionSwap]]'s lifecycle core, the same one
+  * [[AnnStore]] runs on, driven by this store's one
+  * [[PartitionSwap.Store]] value: purge routes `docs` from the tombstone
+  * ids alone (the write-time `xxhash64(id) mod B` — zero reads) and
+  * `bands` by a pruned scan (a doc's band buckets depend on its
+  * long-gone text). Reads are
+  * GENERATION-CONSISTENT: a probe concurrent with any swap-performing op
+  * — or after a writer crash — resolves the last committed generation
+  * and never raises, never sees a partial table ([[PartitionSwap.read]];
   * [[recover]] still heals crashed state). Writers — including
-  * append/ingest/delete — are serialized by the store-root writer
-  * fence ([[PartitionSwap.withWriterLock]]).
+  * append/ingest/delete — are serialized by the store-root writer fence
+  * ([[PartitionSwap.fenced]]).
   *
   * Reference scope: the reference engine has no incremental index at all
   * (its dedup is a whole-corpus pandas `drop_duplicates`,
@@ -60,11 +61,26 @@ import graft.operators.Dedup
   */
 object BandStore {
 
-  private val Prefix = "bucket="
-  private val Tags = Seq("swap")
   /** Rebucket's whole-store swap: `.rebucket_tmp`/`.rebucket_old`,
     * committed by its `_params` marker. */
   private val Rebucket = PartitionSwap.RootSwap("rebucket", Some("_params/_SUCCESS"))
+
+  private val Store = PartitionSwap.Store("BandStore", Seq("bands", "docs"), "bucket",
+    Rebucket, distinctRows = true,
+    idRoute = Map("docs" -> ((spark: SparkSession, path: String, id: Column) =>
+      docBucket(id, params(spark, path).buckets))),
+    mergeCheck = (spark, src, dst) => {
+      val (sp, dp) = (params(spark, src), params(spark, dst))
+      if (sp != dp)
+        throw new IllegalArgumentException(
+          s"BandStore.merge: pinned params differ — src $sp vs dst $dp; " +
+            "signatures from different hash families never agree, and a " +
+            "bucket-count mismatch mis-routes probes — rebucket or " +
+            "re-sketch one side first")
+    })
+
+  /** A doc row's bucket — the docs table's partition, derived from the id. */
+  private def docBucket(id: Column, buckets: Int): Column = pmod(xxhash64(id), lit(buckets))
 
   final case class Params(k: Int, rowsPerBand: Int, shingleN: Int, buckets: Int)
 
@@ -81,9 +97,8 @@ object BandStore {
             buckets: Int = 64): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val spark = history.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = Params(k, rowsPerBand, shingleN, buckets)
-    PartitionSwap.withWriterLock(fs, path, "BandStore") {
+    PartitionSwap.fenced(spark, path, Store) { _ =>
       writeParams(spark, p, paramsDir(path))
       writeSketched(history, textCol, idCol, path, p, mode = "overwrite")
     }
@@ -112,16 +127,13 @@ object BandStore {
     * deadline (a crashed holder, or maintenance overrunning the bound)
     * raises. Maintenance ops stay exclusive and fail-fast. */
   def append(batch: DataFrame, textCol: String, idCol: String, path: String,
-             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit = {
-    val fs = new Path(path).getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "BandStore", fenceWaitMs) {
+             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit =
+    PartitionSwap.fenced(batch.sparkSession, path, Store, fenceWaitMs) { _ =>
       // params read INSIDE the fence: a rebucket committing while we
       // queued must not leave us sketching under the superseded layout
       writeSketched(batch, textCol, idCol, path, params(batch.sparkSession, path),
         mode = "append")
     }
-  }
 
   /** STREAMING ingest — pass to
     * `stream.writeStream.foreachBatch(BandStore.ingest(path, textCol, idCol))`:
@@ -204,7 +216,7 @@ object BandStore {
           .write.mode(mode).partitionBy("bucket").parquet(bandsDir(path)),
         () => bucketAligned(
           m.select(col(idCol), col("hs"))
-            .withColumn("bucket", pmod(xxhash64(col(idCol)), lit(p.buckets))),
+            .withColumn("bucket", docBucket(col(idCol), p.buckets)),
           col(idCol), p.buckets)
           .write.mode(mode).partitionBy("bucket").parquet(docsDir(path))))
     } finally { m.unpersist(); () }
@@ -212,7 +224,7 @@ object BandStore {
 
   /** The store's pinned sketch parameters. */
   def params(spark: SparkSession, path: String): Params = {
-    val r = PartitionSwap.sidecar(spark, paramsDir(resolvedRoot(spark, path)),
+    val r = PartitionSwap.sidecar(spark, paramsDir(PartitionSwap.root(spark, path, Store)),
       "k INT, rows_per_band INT, shingle_n INT, buckets INT").head()
     Params(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
   }
@@ -235,8 +247,8 @@ object BandStore {
   def sketchTable(spark: SparkSession, path: String, idCol: String): DataFrame = {
     // one generation resolution for the whole call: data and tombstones
     // must come from the SAME committed generation
-    val rpath = resolvedRoot(spark, path)
-    val base = readTable(spark, docsDir(rpath)).select(col(idCol), col("hs"))
+    val rpath = PartitionSwap.root(spark, path, Store)
+    val base = PartitionSwap.read(spark, rpath, Store, "docs").select(col(idCol), col("hs"))
     tombstones(spark, rpath) match {
       case Some(ts) => base.join(broadcast(ts), Seq(idCol), "left_anti")
       case None => base
@@ -246,8 +258,8 @@ object BandStore {
   // ---- tombstone deletes (the lifecycle's delete stage) ----
 
   /** DELETE docs by id — the takedown path: appends the ids as tombstone
-    * rows to the hidden sidecar ([[PartitionSwap.appendTombstones]]: cast
-    * to the docs table's id type, a null id raises, fenced) and touches NO
+    * rows to the hidden sidecar ([[PartitionSwap.delete]]: cast to the
+    * store's id type, a null id raises, fenced) and touches NO
     * data file, so a delete costs O(deleted ids) regardless of store size.
     * A tombstoned doc stops being a dup source everywhere the store
     * serves: [[probe]] masks its candidates before the sig/shingle
@@ -255,76 +267,24 @@ object BandStore {
     * [[purge]] reclaims the bytes on the compaction cadence. */
   def delete(ids: DataFrame, idCol: String, path: String,
              fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit =
-    PartitionSwap.appendTombstones(ids, idCol, path, docsDir(path), "BandStore",
-      fenceWaitMs)
+    PartitionSwap.delete(ids, idCol, path, Store, fenceWaitMs)
 
   /** Pending tombstone ids of the generation probes serve, or None when
     * nothing has been deleted since the last [[purge]] — callers skip the
     * mask join entirely (zero plan cost on a tombstone-free store). */
   def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    PartitionSwap.tombstones(spark, path, Rebucket)
+    PartitionSwap.tombstones(spark, path, Store)
 
   /** PURGE — physically remove tombstoned docs from BOTH tables, on the
-    * compaction cadence. Routing is asymmetric because only one side is
-    * derivable: docs/ buckets compute straight from the tombstone ids
-    * (the write-time `xxhash64(id) mod B` — zero reads), while a doc's
-    * bands/ buckets depend on its band keys, which depend on its TEXT
-    * (long gone at purge time) — so bands/ routes via a column-pruned
-    * scan of (id, bucket) only (a few bytes/row, the column-store win)
-    * semi-joined against the broadcast tombstones. Exactly the affected
-    * buckets rewrite minus the tombstone set through the shared
-    * per-partition atomic swap; the sidecar drops LAST, so a crash at
-    * any point leaves tombstones that still mask correctly — idempotent,
-    * and no deleted doc is ever served through any crash window. Returns
+    * compaction cadence ([[PartitionSwap.purge]]): docs/ routes straight
+    * from the tombstone ids, bands/ by a column-pruned (id, bucket) scan
+    * semi-joined against the broadcast tombstones; exactly the affected
+    * buckets rewrite minus the tombstone set, and the sidecar drops LAST,
+    * so no deleted doc is ever served through any crash window. Returns
     * the rewritten (table, bucket) pairs; serialized by the store-root
     * writer fence. */
-  def purge(spark: SparkSession, path: String): Seq[(String, Long)] = {
-    val rootFs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(rootFs, path, "BandStore") {
-      recoverSwaps(rootFs, path)
-      tombstones(spark, path) match {
-        case None => Seq.empty
-        case Some(ts) =>
-          val p = params(spark, path)
-          val idCol = ts.columns.head
-          val tsb = broadcast(ts)
-          val docTargets: Seq[Long] = ts
-            .select(pmod(xxhash64(col(idCol)), lit(p.buckets)).as("bucket"))
-            .distinct().collect().map(_.getLong(0)).toIndexedSeq
-          // the two table purges are independent dirs under the one held
-          // fence — overlap route + rewrite per table (guide §2.6);
-          // results keep the fixed bands-then-docs order
-          val branches = Seq("bands" -> bandsDir(path), "docs" -> docsDir(path))
-          val rewritten = graft.etl.Concurrent.awaitAll(2)(branches.map {
-            case (table, dir) => () => {
-              val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-              val targets: Seq[Long] =
-                if (table == "docs") {
-                  // derived route — intersect with the dirs that exist
-                  // (a tombstone for an id never stored routes nowhere)
-                  val live = PartitionSwap.partitionDirs(fs, new Path(dir), Prefix)
-                    .map(_.getName.stripPrefix(Prefix).toLong).toSet
-                  docTargets.filter(live).sorted
-                } else
-                  spark.read.parquet(dir).select(col(idCol), col("bucket"))
-                    .join(tsb, Seq(idCol), "left_semi")
-                    .select(col("bucket").cast("long")).distinct()
-                    .collect().map(_.getLong(0)).toIndexedSeq.sorted
-              if (targets.nonEmpty)
-                PartitionSwap.swapRewrite(spark, fs, dir, "bucket",
-                  targets.map(b => s"$Prefix$b"),
-                  spark.read.parquet(dir).filter(col("bucket").isin(targets: _*))
-                    .join(tsb, Seq(idCol), "left_anti"))
-              targets.map(table -> _)
-            }
-          }).flatten
-          // the sidecar drops last: every earlier crash leaves a masked,
-          // consistent store; reaching here means the rows are gone
-          PartitionSwap.dropTombstones(rootFs, path)
-          rewritten
-      }
-    }
-  }
+  def purge(spark: SparkSession, path: String): Seq[(String, Long)] =
+    PartitionSwap.purge(spark, path, Store)
 
   /** PROBE: near-dup pairs (id_a = history doc, id_b = batch doc,
     * jaccard ≥ threshold) of a new batch against the indexed history —
@@ -353,7 +313,7 @@ object BandStore {
             textCol: String, idCol: String, threshold: Double): DataFrame = {
     // one generation resolution for the whole probe: params, bands, docs,
     // and tombstones must all come from the SAME committed generation
-    val rpath = resolvedRoot(spark, path)
+    val rpath = PartitionSwap.root(spark, path, Store)
     val p = params(spark, rpath)
     val mb = Dedup.minhashed(Dedup.fanOut(batch), textCol, idCol, p.k, p.rowsPerBand, p.shingleN)
       .filter(size(col("hs")) > 0).cache()
@@ -367,7 +327,7 @@ object BandStore {
       // candidate ids' buckets: ≤ buckets longs again — candidate-driven
       // static pruning of the shingle-array fetch
       val candBuckets: Seq[Any] = plausible
-        .select(pmod(xxhash64(col("id_a")), lit(p.buckets)).as("bucket"))
+        .select(docBucket(col("id_a"), p.buckets).as("bucket"))
         .distinct().collect().map(_.get(0)).toIndexedSeq
       val out =
         if (candBuckets.isEmpty)
@@ -377,7 +337,7 @@ object BandStore {
           // dropDuplicates: the tables are SETS (at-least-once streaming
           // ingest may replay rows); the dedup runs over candidate-scale
           // pruned rows, never the corpus
-          val hsDocs = readTable(spark, docsDir(rpath))
+          val hsDocs = PartitionSwap.read(spark, rpath, Store, "docs")
             .filter(col("bucket").isin(candBuckets: _*))
             .select(col(idCol), col("hs"))
             .dropDuplicates(idCol)
@@ -408,7 +368,7 @@ object BandStore {
     else {
       val agree = graft.expressions.HashExpressions
         .positionalAgree(col("sig"), col("sig_b"))
-      readTable(spark, bandsDir(path))
+      PartitionSwap.read(spark, path, Store, "bands")
         .filter(col("bucket").isin(probeBuckets: _*))
         .join(broadcast(bb), Seq("band", "bucket"))
         .filter(col("n_sh") >= col("nb") * threshold &&
@@ -449,9 +409,7 @@ object BandStore {
     * operator's floor. */
   def rebucket(spark: SparkSession, path: String, newBuckets: Int): Unit = {
     require(newBuckets >= 1, s"newBuckets must be >= 1, got $newBuckets")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(fs, path, "BandStore") {
-      recoverSwaps(fs, path)
+    PartitionSwap.fenced(spark, path, Store) { fs =>
       PartitionSwap.swapRoot(fs, path, Rebucket) { tmpRoot =>
         val p = params(spark, path)
         val bands = spark.read.parquet(bandsDir(path)).drop("bucket")
@@ -468,7 +426,7 @@ object BandStore {
           () => bands.repartition(newBuckets, col("bucket"))
             .write.partitionBy("bucket").parquet(bandsDir(tmpRoot.toString)),
           () => docsDf.drop("bucket")
-            .withColumn("bucket", pmod(xxhash64(col(idCol)), lit(newBuckets)))
+            .withColumn("bucket", docBucket(col(idCol), newBuckets))
             .repartition(newBuckets, col("bucket"))
             .write.partitionBy("bucket").parquet(docsDir(tmpRoot.toString))))
         // pending tombstones are store state — they travel with the tree
@@ -481,134 +439,43 @@ object BandStore {
     }
   }
 
-  /** COMPACT fragmented band/doc buckets back to one file each — the
-    * [[AnnStore.compact]] discipline on both tables: every append adds
-    * files to its target buckets, so steady ingest grows per-partition
-    * file counts without bound; compact rewrites ONLY the >maxFiles
-    * buckets through [[PartitionSwap]]'s per-partition atomic swap
-    * (untouched partitions byte-identical, layout never semantics).
-    * Returns the compacted (table, bucket) pairs; idempotent. */
-  def compact(spark: SparkSession, path: String, maxFiles: Int = 1): Seq[(String, Long)] = {
-    require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
-    val rootFs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // one fence at the store root serializes writers across BOTH tables
-    PartitionSwap.withWriterLock(rootFs, path, "BandStore") {
-      recoverSwaps(rootFs, path)
-      // independent dirs under the one held fence — overlap the two
-      // table compactions (guide §2.6); fixed bands-then-docs order out
-      val branches = Seq("bands" -> bandsDir(path), "docs" -> docsDir(path))
-      graft.etl.Concurrent.awaitAll(2)(branches.map {
-        case (table, dir) => () => {
-          val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val targets = PartitionSwap.fragmented(fs, dir, Prefix, maxFiles)
-            .map(_.getName.stripPrefix(Prefix).toLong).sorted
-          if (targets.nonEmpty)
-            PartitionSwap.swapRewrite(spark, fs, dir, "bucket",
-              targets.map(b => s"$Prefix$b"),
-              // .distinct(): the tables are SETS — an at-least-once
-              // streaming replay ([[ingest]]) re-appends identical rows;
-              // compaction is where their bytes are reclaimed (probe was
-              // never fooled — it is duplicate-blind by construction)
-              spark.read.parquet(dir).filter(col("bucket").isin(targets: _*))
-                .distinct())
-          targets.map(table -> _)
-        }
-      }).flatten
-    }
-  }
+  /** COMPACT fragmented band/doc buckets back to one file each
+    * ([[PartitionSwap.compact]] on both tables): only the >maxFiles
+    * buckets rewrite, untouched partitions stay byte-identical. The
+    * tables are SETS — an at-least-once streaming replay ([[ingest]])
+    * re-appends identical rows, and compaction is where their bytes are
+    * reclaimed (probe is duplicate-blind by construction). Returns the
+    * compacted (table, bucket) pairs; idempotent. */
+  def compact(spark: SparkSession, path: String, maxFiles: Int = 1): Seq[(String, Long)] =
+    PartitionSwap.compact(spark, path, Store, maxFiles)
 
   /** MERGE the store at `srcPath` INTO the one at `dstPath` — shard
     * consolidation for the band index: N crawl shards each sketched
     * their slice under the SAME pinned parameters, probing wants ONE
     * history. Because identical params mean identical hash families AND
     * identical bucket routing (`xxhash64 mod B` with the same B), both
-    * tables merge by pure FILE-SYSTEM METADATA — src's `bands/` and
-    * `docs/` bucket files rename into dst's matching dirs, tombstone
-    * sidecars union, src root drops last ([[AnnStore.merge]]'s
-    * discipline through the shared [[PartitionSwap]] machinery):
-    * O(files) namenode ops, zero data bytes, at any corpus scale.
-    *
+    * tables merge by pure FILE-SYSTEM METADATA ([[PartitionSwap.merge]]).
     * Param equality is ENFORCED (one bounded `_params` read per side):
-    * signatures from different hash families never agree — a probe of a
-    * mixed store would silently miss every cross-family pair — and a
+    * signatures from different hash families never agree and a
     * bucket-count mismatch mis-routes probes; `rebucket`/re-sketch
     * before merging such stores. Shards that ingested OVERLAPPING doc
-    * sets are safe: the tables are sets under the streaming-ingest
-    * contract (probe is duplicate-blind; the next [[compact]]
-    * canonicalizes), so overlap costs bytes, never pairs. Visibility
-    * and crash windows are [[append]]'s: dst only gains complete
-    * immutable files; a crash mid-merge leaves each file at exactly one
-    * root and a re-run completes it. Serialized by BOTH stores' writer
-    * fences (dst's first).
+    * sets are safe: the tables are sets (probe is duplicate-blind; the
+    * next [[compact]] canonicalizes), so overlap costs bytes, never
+    * pairs.
     *
     * @return the (table, bucket) pairs that received files */
   def merge(spark: SparkSession, srcPath: String,
-            dstPath: String): Seq[(String, Long)] = {
-    require(new Path(srcPath) != new Path(dstPath),
-      s"BandStore.merge: src and dst are the same store ($srcPath)")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dfs = new Path(dstPath).getFileSystem(conf)
-    val sfs = new Path(srcPath).getFileSystem(conf)
-    PartitionSwap.withWriterLock(dfs, dstPath, "BandStore") {
-      PartitionSwap.withWriterLock(sfs, srcPath, "BandStore") {
-        recoverSwaps(dfs, dstPath); recoverSwaps(sfs, srcPath)
-        val (sp, dp) = (params(spark, srcPath), params(spark, dstPath))
-        if (sp != dp)
-          throw new IllegalArgumentException(
-            s"BandStore.merge: pinned params differ — src $sp vs dst $dp; " +
-              "signatures from different hash families never agree, and a " +
-              "bucket-count mismatch mis-routes probes — rebucket or " +
-              "re-sketch one side first")
-        val moved = Seq("bands" -> (bandsDir(srcPath), bandsDir(dstPath)),
-          "docs" -> (docsDir(srcPath), docsDir(dstPath))).flatMap {
-          case (table, (s0, d0)) =>
-            PartitionSwap.mergePartitionDirs(sfs, new Path(s0),
-                dfs, new Path(d0), Prefix, "BandStore")
-              .map(n => table -> n.stripPrefix(Prefix).toLong)
-        }
-        PartitionSwap.mergeSidecar(sfs, new Path(PartitionSwap.tombstoneDir(srcPath)),
-          dfs, new Path(PartitionSwap.tombstoneDir(dstPath)), "BandStore")
-        // src drops LAST — every earlier crash point re-runs to completion
-        sfs.delete(new Path(srcPath), true)
-        moved
-      }
-    }
-  }
+            dstPath: String): Seq[(String, Long)] =
+    PartitionSwap.merge(spark, srcPath, dstPath, Store)
 
   /** Heal a store whose writer crashed mid-swap — a per-bucket
-    * compact/purge swap or a whole-store rebucket: the recovery every
-    * swap-performing op runs on entry, callable on its own (takes the
-    * writer fence). Idempotent; a no-op on a healthy store. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val rootFs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PartitionSwap.withWriterLock(rootFs, path, "BandStore") {
-      recoverSwaps(rootFs, path)
-    }
-  }
-
-  /** Both swap kinds, whole-store first: the per-bucket scratch sits
-    * beside the tables of the root the whole-store recovery restores. */
-  private def recoverSwaps(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    PartitionSwap.recoverRoot(fs, path, Rebucket)
-    Seq(bandsDir(path), docsDir(path)).foreach(PartitionSwap.recoverSwap(fs, _, Prefix, Tags))
-  }
+    * compact/purge swap or a whole-store rebucket ([[PartitionSwap.recover]]).
+    * Idempotent; a no-op on a healthy store. */
+  def recover(spark: SparkSession, path: String): Unit =
+    PartitionSwap.recover(spark, path, Store)
 
   /** Clear a stale writer fence left by a crashed compact — see
     * [[PartitionSwap.breakLock]]'s caveat. */
   def breakLock(spark: SparkSession, path: String): Boolean =
-    PartitionSwap.breakLock(
-      new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-
-  /** The generation root every read resolves once and reads everything
-    * from ([[PartitionSwap.resolveRoot]] under the rebucket swap). */
-  private def resolvedRoot(spark: SparkSession, path: String): String =
-    PartitionSwap.resolveRoot(
-      new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), path, Rebucket)
-
-  /** [[PartitionSwap.resolvedRead]] over one of the store's bucketed
-    * tables: the last committed generation of every bucket — a probe
-    * concurrent with compact/purge never raises and never sees a partial
-    * table; the live side keeps the pruned scan. */
-  private def readTable(spark: SparkSession, dir: String): DataFrame =
-    PartitionSwap.resolvedRead(spark, dir, Prefix, "bucket", Tags)
+    PartitionSwap.breakLock(spark, path)
 }

@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.etl.ZOrder
 
@@ -28,9 +28,9 @@ import graft.etl.ZOrder
   *    generation prunes like the original write and a query touches
   *    ~touched-fraction × files PER GENERATION. Generations are the
   *    compaction ladder: re-optimizing tails into new generations keeps
-  *    optimize cost TAIL-SIZED, amortized O(1) per appended row, while a
-  *    full rewrite (re-[[write]] of [[read]]) stays available when the
-  *    generation count itself needs collapsing.
+  *    optimize cost TAIL-SIZED, amortized O(1) per appended row, while
+  *    [[compact]] collapses the ladder when the generation count itself
+  *    decays the layout.
   *  - `tail/` — the raw landing zone: [[append]] writes batches here
   *    as-delivered (no shuffle, no stats pass — the cheapest durable
   *    ingest), where they are readable immediately and cluster-less
@@ -39,19 +39,25 @@ import graft.etl.ZOrder
   *    [[write]]: optimize derives everything from the store so two
   *    maintenance runs can never grid differently.
   *
-  * Crash safety (same park-promote discipline as [[PartitionSwap]]):
-  * optimize writes the new generation to `<path>.zopt_tmp/gen=<k>`,
-  * PARKS the consumed tail at `<path>.zopt_old/tail_g<k>`, promotes the
-  * tmp generation, then deletes the park. Every writer op first runs
-  * [[recover]]: a crash before the park loses nothing (tail still
-  * live; tmp is garbage); a crash after the park promotes the
-  * fully-written tmp if its `_SUCCESS` commit marker exists, else
-  * restores the parked tail — in every window exactly one committed copy
-  * of each row survives. [[read]] serves a parked tail that has no
-  * promoted twin, so readers never see a partial table mid-swap
-  * (the same may-raise-on-overlap contract as `PartitionSwap
-  * .resolvedRead`). Appends queue (bounded) behind a maintenance-held
-  * fence; maintenance ops are exclusive and fail-fast.
+  * Crash safety: the lifecycle is [[PartitionSwap]]'s, the same core
+  * the other two stores run on — every writer op holds the writer fence
+  * and first heals any crashed swap, and no op here renames on its own.
+  * [[optimize]] SEALS the tail ([[PartitionSwap.seal]]): the z-ordered
+  * rows replace `tail/` in place through the per-partition swap (park
+  * the tail in `<path>.swap_old`, promote `<path>.swap_tmp/tail`, drop
+  * the park), then one atomic rename makes it `gen=<k>`. A crash before
+  * the promote restores the parked tail unless the scratch root is
+  * committed; a crash before the rename leaves a z-ordered live tail
+  * that the next optimize seals again. [[compact]] rewrites the whole
+  * table through [[PartitionSwap.swapRoot]] (`<path>.collapse_tmp` /
+  * `<path>.collapse_old`), `_zparams` written last as its commit
+  * marker. In every window exactly one committed copy of each row
+  * survives, and [[read]] serves it through the core's read rule (the
+  * parked generation root mid-compact, a parked tail with no live twin
+  * mid-optimize), never a partial table — with the same
+  * may-raise-on-overlap contract as the other stores' reads. Appends
+  * queue (bounded) behind a maintenance-held fence; maintenance ops are
+  * exclusive and fail-fast.
   *
   * Reference scope: the reference rewrites its whole store per DAG run
   * (Airbnb_Listings_ETL.py:143-151) — layout maintenance is the
@@ -65,12 +71,14 @@ object ZOrderTable {
 
   private def paramsDir(path: String) = path + "/_zparams"
   private def tailDir(path: String) = path + "/tail"
-  private def tmpRoot(path: String) = path + ".zopt_tmp"
-  private def oldRoot(path: String) = path + ".zopt_old"
   private def genDir(path: String, k: Int) = s"$path/gen=$k"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Compact's whole-table swap: `.collapse_tmp`/`.collapse_old`,
+    * committed by its `_zparams` marker. */
+  private val Collapse = PartitionSwap.RootSwap("collapse", Some("_zparams/_SUCCESS"))
+
+  /** One table of plain-named dirs (`gen=<k>`, `tail`) under the root. */
+  private val Store = PartitionSwap.Store("ZOrderTable", Seq(""), "", Collapse)
 
   /** Create the table: bounds measured once and PINNED, the base laid
     * out as generation 0. `numFiles` sets the target file grain —
@@ -80,10 +88,7 @@ object ZOrderTable {
             bits: Int, numFiles: Int): Unit = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val spark = df.sparkSession
-    import spark.implicits._
-    val fs = fsOf(spark, path)
-    PartitionSwap.withWriterLock(fs, path, "ZOrderTable") {
-      recoverLocked(fs, path)
+    PartitionSwap.fenced(spark, path, Store) { fs =>
       val b = df.agg(
         min(col(xCol)).cast("long"), max(col(xCol)).cast("long"),
         min(col(yCol)).cast("long"), max(col(yCol)).cast("long"),
@@ -98,16 +103,20 @@ object ZOrderTable {
       ZOrder.layoutPinned(df, xCol, yCol, bits, numFiles, xmn, xmx, ymn, ymx)
         .drop("z")
         .write.mode("overwrite").parquet(genDir(path, 0))
-      Seq((xCol, yCol, bits, rowsPerFile, xmn, xmx, ymn, ymx))
-        .toDF("x_col", "y_col", "bits", "rows_per_file",
-          "xmn", "xmx", "ymn", "ymx")
-        .write.mode("overwrite").parquet(paramsDir(path))
+      writeParams(spark, Params(xCol, yCol, bits, rowsPerFile, xmn, xmx, ymn, ymx), path)
     }
   }
 
-  /** The table's pinned layout parameters. */
+  private def writeParams(spark: SparkSession, p: Params, root: String): Unit = {
+    import spark.implicits._
+    Seq(p).toDF("x_col", "y_col", "bits", "rows_per_file", "xmn", "xmx", "ymn", "ymx")
+      .write.mode("overwrite").parquet(paramsDir(root))
+  }
+
+  /** The table's pinned layout parameters, from its newest committed
+    * generation root. */
   def params(spark: SparkSession, path: String): Params = {
-    val r = PartitionSwap.sidecar(spark, paramsDir(path),
+    val r = PartitionSwap.sidecar(spark, paramsDir(PartitionSwap.root(spark, path, Store)),
       "x_col STRING, y_col STRING, bits INT, rows_per_file BIGINT, " +
         "xmn BIGINT, xmx BIGINT, ymn BIGINT, ymx BIGINT").head()
     Params(r.getString(0), r.getString(1), r.getInt(2), r.getLong(3),
@@ -120,120 +129,55 @@ object ZOrderTable {
     * (bounded) behind a maintenance-held fence like every batch-class
     * writer. */
   def append(batch: DataFrame, path: String,
-             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit = {
-    val fs = fsOf(batch.sparkSession, path)
-    PartitionSwap.withWriterLock(fs, path, "ZOrderTable", fenceWaitMs) {
-      recoverLocked(fs, path)
+             fenceWaitMs: Long = PartitionSwap.DefaultBatchFenceWaitMs): Unit =
+    PartitionSwap.fenced(batch.sparkSession, path, Store, fenceWaitMs) { _ =>
       batch.write.mode("append").parquet(tailDir(path))
     }
-  }
 
   /** Committed generation dirs (gen=<k>), by number. */
-  private def gens(fs: org.apache.hadoop.fs.FileSystem, path: String): Seq[Int] =
+  private def gens(fs: FileSystem, path: String): Seq[Int] =
     PartitionSwap.partitionDirs(fs, new Path(path), "gen=")
       .map(_.getName.stripPrefix("gen=").toInt).sorted
 
-  /** Read the whole table: every committed generation plus the live
-    * tail, plus any tail PARKED by an in-flight/crashed optimize whose
-    * generation never promoted (that park is the only committed copy of
-    * its rows). Same consistency contract as the other stores' resolved
-    * reads: a read overlapping a commit may raise on vanished files,
-    * never silently lose or double rows. */
+  /** Read the whole table: every committed generation plus the tail of
+    * the newest committed generation root, plus any dir parked by an
+    * in-flight/crashed optimize with no live twin (that park is the only
+    * committed copy of its rows) — [[PartitionSwap.committedDirs]]. One
+    * scan, typed from a footer. A read overlapping a commit may raise on
+    * vanished files, never silently lose or double rows. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = fsOf(spark, path)
-    val liveGens = gens(fs, path).toSet
-    val live = liveGens.toSeq.sorted.map(k => genDir(path, k)) ++
-      (if (nonEmptyDir(fs, tailDir(path))) Seq(tailDir(path)) else Nil)
-    // a park whose superseding generation never promoted is the last
-    // committed copy of its rows (optimize parks the tail; compact also
-    // parks whole generations) — serve it, but never beside a live twin
-    val parked = parkedTails(fs, path).collect {
-      case (k, p) if !liveGens.contains(k) => p.toString
-    } ++ parkedGens(fs, path).collect {
-      case (g, k, p) if !liveGens.contains(k) && !liveGens.contains(g) =>
-        p.toString
-    }
-    val dirs = live ++ parked
+    val dirs = PartitionSwap.committedDirs(spark, path, Store)
     require(dirs.nonEmpty, s"ZOrderTable at $path holds no data")
-    dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    PartitionSwap.readDirs(spark, dirs)
   }
 
-  private def nonEmptyDir(fs: org.apache.hadoop.fs.FileSystem, d: String): Boolean = {
-    val p = new Path(d)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isFile && s.getPath.getName.endsWith(".parquet"))
+  /** The rows of `df` laid out z-ordered under the pinned bounds, in as
+    * many files as `n` rows fill at the pinned rows/file grain. */
+  private def layout(df: DataFrame, p: Params, n: Long): DataFrame = {
+    val numFiles = math.max(1L, (n + p.rowsPerFile - 1) / p.rowsPerFile).toInt
+    ZOrder.layoutPinned(df, p.xCol, p.yCol, p.bits, numFiles, p.xmn, p.xmx, p.ymn, p.ymx)
+      .drop("z")
   }
-
-  /** Exact row count of the parquet files under `dirs`, from the file
-    * FOOTERS — O(files) metadata reads instead of the O(rows) cluster
-    * scan a `df.count()` pays. Every file here is parquet we wrote
-    * ourselves (append batches, committed generations), so the footer
-    * record counts are exact by format contract. Footers are read on the
-    * driver through the common pool: at the pinned grain the file count
-    * stays proportional to rows/rowsPerFile, and a metadata read per
-    * file is still orders of magnitude cheaper than re-scanning the
-    * data (guide §1.2: remove whole passes first). */
-  private def footerRowCount(fs: org.apache.hadoop.fs.FileSystem,
-                             conf: org.apache.hadoop.conf.Configuration,
-                             dirs: Seq[String]): Long = {
-    import scala.jdk.CollectionConverters._
-    val files = dirs.flatMap { d =>
-      val p = new Path(d)
-      if (fs.exists(p))
-        fs.listStatus(p).toSeq.filter(s =>
-          s.isFile && s.getPath.getName.endsWith(".parquet"))
-      else Nil
-    }
-    files.asJava.parallelStream().mapToLong { st =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromStatus(st, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum()
-  }
-
-  /** Parked tails under `.zopt_old`, as (generation they were consumed
-    * into, path). */
-  private def parkedTails(fs: org.apache.hadoop.fs.FileSystem,
-                          path: String): Seq[(Int, Path)] =
-    PartitionSwap.partitionDirs(fs, new Path(oldRoot(path)), "tail_g")
-      .map(p => (p.getName.stripPrefix("tail_g").toInt, p))
 
   /** Re-optimize: lay out the unclustered tail as the next z-ordered
     * generation — tail-sized work, the `OPTIMIZE` half of
-    * `OPTIMIZE ZORDER BY`. File count follows the pinned rows/file
-    * grain. No-op on an empty tail. Exclusive (fail-fast fence), like
-    * compact on the other stores. */
-  def optimize(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    PartitionSwap.withWriterLock(fs, path, "ZOrderTable") {
-      recoverLocked(fs, path)
-      if (nonEmptyDir(fs, tailDir(path))) {
+    * `OPTIMIZE ZORDER BY`. File count follows the pinned rows/file grain,
+    * sized from the tail's parquet footers (no count pass over the data).
+    * No-op on an empty tail. Exclusive (fail-fast fence), like compact on
+    * the other stores. */
+  def optimize(spark: SparkSession, path: String): Unit =
+    PartitionSwap.fenced(spark, path, Store) { fs =>
+      val tail = tailDir(path)
+      if (PartitionSwap.hasData(fs, tail)) {
         val p = params(spark, path)
-        val tail = spark.read.parquet(tailDir(path))
-        // file-grain sizing from the parquet footers: the count job this
-        // replaces was a second full read of the tail before the layout
-        // pass (round-20, guide §1.2) — same n, zero data scanned
-        val n = footerRowCount(fs, spark.sparkContext.hadoopConfiguration,
-          Seq(tailDir(path)))
-        val numFiles = math.max(1L, (n + p.rowsPerFile - 1) / p.rowsPerFile).toInt
+        val n = PartitionSwap.rowCount(spark, Seq(tail))
         val k = gens(fs, path).max + 1
-        ZOrder.layoutPinned(tail, p.xCol, p.yCol, p.bits, numFiles,
-            p.xmn, p.xmx, p.ymn, p.ymx)
-          .drop("z")
-          .write.mode("overwrite").parquet(s"${tmpRoot(path)}/gen=$k")
-        // park -> promote -> clean: every crash window leaves exactly one
-        // committed copy (see recoverLocked)
-        fs.mkdirs(new Path(oldRoot(path)))
-        PartitionSwap.mv(fs, new Path(tailDir(path)),
-          new Path(oldRoot(path) + s"/tail_g$k"))
-        PartitionSwap.mv(fs, new Path(s"${tmpRoot(path)}/gen=$k"),
-          new Path(genDir(path, k)))
-        fs.delete(new Path(oldRoot(path)), true)
-        fs.delete(new Path(tmpRoot(path)), true)
+        PartitionSwap.seal(fs, path, "tail", s"gen=$k") { tmp =>
+          layout(PartitionSwap.readDirs(spark, Seq(tail)), p, n)
+            .write.mode("overwrite").parquet(tmp.toString)
+        }
       }
     }
-  }
 
   /** COLLAPSE the generation ladder: rewrite every committed generation
     * plus the tail as ONE fresh z-ordered generation. [[optimize]] keeps
@@ -241,120 +185,35 @@ object ZOrderTable {
     * query touches ~fraction × files PER GENERATION — after enough
     * optimizes the ladder itself is the decay. This is the store-compact
     * analog: table-sized work, run on the maintenance cadence (e.g.
-    * every N optimizes), restoring files_total to the pinned grain.
-    *
-    * Crash safety extends the same park-promote discipline: the new
-    * generation k is written to scratch from a snapshot of the live
-    * dirs, every consumed dir is parked SUFFIXED `.g<k>` (so recovery
-    * knows which promote supersedes it), the tmp generation promotes,
-    * parks drop. [[recoverLocked]] heals all windows: gen k live → drop
-    * parks; committed tmp → finish promote; else restore every park —
-    * exactly one committed copy of each row in every window. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    PartitionSwap.withWriterLock(fs, path, "ZOrderTable") {
-      recoverLocked(fs, path)
+    * every N optimizes), restoring files_total to the pinned grain. The
+    * new table is written to the collapse scratch root from the live
+    * dirs, `_zparams` last as its commit marker, then swapped in whole. */
+  def compact(spark: SparkSession, path: String): Unit =
+    PartitionSwap.fenced(spark, path, Store) { fs =>
       val genIds = gens(fs, path)
-      val hasTail = nonEmptyDir(fs, tailDir(path))
+      val hasTail = PartitionSwap.hasData(fs, tailDir(path))
       if (genIds.size > 1 || hasTail) {
         val p = params(spark, path)
         val dirs = genIds.map(k => genDir(path, k)) ++
           (if (hasTail) Seq(tailDir(path)) else Nil)
-        val all = dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
-        // table-sized count pass removed (round-20): compact re-reads the
-        // whole table once for the layout write; the sizing count now
-        // rides the footers instead of a second full read
-        val n = footerRowCount(fs, spark.sparkContext.hadoopConfiguration, dirs)
-        val numFiles = math.max(1L, (n + p.rowsPerFile - 1) / p.rowsPerFile).toInt
+        val n = PartitionSwap.rowCount(spark, dirs)
         val k = genIds.max + 1
-        ZOrder.layoutPinned(all, p.xCol, p.yCol, p.bits, numFiles,
-            p.xmn, p.xmx, p.ymn, p.ymx)
-          .drop("z")
-          .write.mode("overwrite").parquet(s"${tmpRoot(path)}/gen=$k")
-        fs.mkdirs(new Path(oldRoot(path)))
-        genIds.foreach { g =>
-          PartitionSwap.mv(fs, new Path(genDir(path, g)),
-            new Path(oldRoot(path) + s"/gen=$g.g$k"))
+        PartitionSwap.swapRoot(fs, path, Collapse) { tmp =>
+          layout(PartitionSwap.readDirs(spark, dirs), p, n)
+            .write.mode("overwrite").parquet(genDir(tmp.toString, k))
+          writeParams(spark, p, tmp.toString)
         }
-        if (hasTail)
-          PartitionSwap.mv(fs, new Path(tailDir(path)),
-            new Path(oldRoot(path) + s"/tail_g$k"))
-        PartitionSwap.mv(fs, new Path(s"${tmpRoot(path)}/gen=$k"),
-          new Path(genDir(path, k)))
-        fs.delete(new Path(oldRoot(path)), true)
-        fs.delete(new Path(tmpRoot(path)), true)
       }
     }
-  }
 
-  /** Parked GENERATIONS under `.zopt_old` (compact's parks), as
-    * (original gen number, superseding gen number, path). */
-  private def parkedGens(fs: org.apache.hadoop.fs.FileSystem,
-                         path: String): Seq[(Int, Int, Path)] =
-    PartitionSwap.partitionDirs(fs, new Path(oldRoot(path)), "gen=")
-      .flatMap { d =>
-        d.getName.stripPrefix("gen=").split("\\.g") match {
-          case Array(g, k) => Some((g.toInt, k.toInt, d))
-          case _ => None
-        }
-      }
-
-  /** Heal a crashed optimize. For each parked tail `tail_g<k>`:
-    * generation k live → the promote committed, drop the park;
-    * else a COMMITTED tmp generation (its `_SUCCESS` marker exists) →
-    * finish the promote, then drop the park; else the crash predates a
-    * complete tmp → restore the park as the live tail (file-level moves:
-    * appends may have landed since). Uncommitted tmp garbage is swept
-    * last. Runs under every writer op's fence; callers may also invoke
+  /** Heal a crashed optimize or compact ([[PartitionSwap.recover]]) —
+    * the recovery every writer op runs on entry; callers may also invoke
     * it directly after `breakLock`. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    PartitionSwap.withWriterLock(fs, path, "ZOrderTable") {
-      recoverLocked(fs, path)
-    }
-  }
-
-  private def recoverLocked(fs: org.apache.hadoop.fs.FileSystem,
-                            path: String): Unit = {
-    // every park is tagged with the generation whose promote supersedes
-    // it; group by that tag so one committed tmp promotes ONCE and then
-    // releases all of its parks (a compact parks many dirs under one tag)
-    val parks: Seq[(Int, (String, Int, Path))] =
-      parkedTails(fs, path).map { case (k, p) => (k, ("tail", 0, p)) } ++
-        parkedGens(fs, path).map { case (g, k, p) => (k, ("gen", g, p)) }
-    parks.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (k, ps) =>
-      val gen = new Path(genDir(path, k))
-      val tmp = new Path(s"${tmpRoot(path)}/gen=$k")
-      val committed = fs.exists(gen) || (
-        if (fs.exists(new Path(tmp, "_SUCCESS"))) {
-          PartitionSwap.mv(fs, tmp, gen); true
-        } else false)
-      ps.map(_._2).foreach { case (kind, g, park) =>
-        if (committed) fs.delete(park, true)
-        else if (kind == "gen") {
-          // the park IS generation g's committed copy — restore it
-          val dst = new Path(genDir(path, g))
-          if (!fs.exists(dst)) PartitionSwap.mv(fs, park, dst)
-          else fs.delete(park, true)
-        } else {
-          // restore the only tail copy; merge file-level in case
-          // appends landed since
-          val tl = new Path(tailDir(path))
-          fs.mkdirs(tl)
-          fs.listStatus(park).filter(_.isFile).foreach { st =>
-            val dst = new Path(tl, st.getPath.getName)
-            if (!fs.exists(dst)) PartitionSwap.mv(fs, st.getPath, dst)
-          }
-          fs.delete(park, true)
-        }
-      }
-    }
-    if (fs.exists(new Path(oldRoot(path)))) fs.delete(new Path(oldRoot(path)), true)
-    if (fs.exists(new Path(tmpRoot(path)))) fs.delete(new Path(tmpRoot(path)), true)
-  }
+  def recover(spark: SparkSession, path: String): Unit =
+    PartitionSwap.recover(spark, path, Store)
 
   /** Clear a stale writer fence left by a crashed holder (human
     * decision — see [[PartitionSwap.breakLock]]). */
   def breakLock(spark: SparkSession, path: String): Boolean =
-    PartitionSwap.breakLock(fsOf(spark, path), path)
+    PartitionSwap.breakLock(spark, path)
 }

@@ -6,9 +6,9 @@ import graft.sinks.ZOrderTable
 
 /** The maintained z-order table's lifecycle and crash contract:
   * write/append/optimize round-trip fidelity, generation structure,
-  * pinned-bounds clamping, every optimize crash window (staged on disk,
-  * like ParquetSink's in RecoverySpec), reader behavior mid-swap, and
-  * the writer fence. The LAYOUT PAYOFF (decay under raw appends,
+  * pinned-bounds clamping, every crash window of optimize's seal and of
+  * compact's whole-table swap (staged on disk, like ParquetSink's in
+  * RecoverySpec), reader behavior mid-swap, and the writer fence. The LAYOUT PAYOFF (decay under raw appends,
   * restoration after optimize) is measured, not asserted here —
   * `tools.ScaleCurve z` prices it through real parquet footers. */
 class ZOrderTableSpec extends SparkSpec {
@@ -78,67 +78,122 @@ class ZOrderTableSpec extends SparkSpec {
 
   // ---- crash windows (staged on disk, then recovered) ----
 
-  test("crash window A: tmp written, tail still live — tmp is garbage") {
+  /** Every id read, sorted — equal to the want list iff each row is read
+    * exactly once (a set would hide a doubled row). */
+  private def rows(path: String): Seq[Long] =
+    ZOrderTable.read(spark, path).select("id").as[Long].collect().toSeq.sorted
+
+  private def dataFiles(dir: String): Set[String] = {
+    val fs = fsOf(dir)
+    fs.listStatus(new Path(dir)).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet")).toSet
+  }
+
+  /** A base generation plus a 50-row live tail: the state every optimize
+    * window starts from. */
+  private def withTail(): String = {
     val path = freshDir()
-    val fs = fsOf(path)
     ZOrderTable.write(mk(100), path, "x", "y", bits = 6, numFiles = 2)
     ZOrderTable.append(mk(50, 1000), path)
-    // stage: a completed tmp generation but no park, no promote
-    spark.read.parquet(s"$path/tail").write.parquet(s"$path.zopt_tmp/gen=1")
+    path
+  }
+
+  /** Stage the seal's scratch replacement of the tail under
+    * `<path>.swap_tmp`, marking the scratch root committed or not. */
+  private def stageReplacement(path: String, committed: Boolean): Unit = {
+    val fs = fsOf(path)
+    spark.read.parquet(s"$path/tail").write.parquet(s"$path.swap_tmp/tail")
+    if (committed) fs.create(new Path(s"$path.swap_tmp/_SUCCESS")).close()
+    else fs.delete(new Path(s"$path.swap_tmp/tail/_SUCCESS"), false)
+  }
+
+  test("crash window A: tmp written, tail still live — tmp is garbage") {
+    val path = withTail()
+    val fs = fsOf(path)
+    val want = rows(path)
+    // stage: the seal's committed replacement written, nothing parked yet
+    stageReplacement(path, committed = true)
+    assert(rows(path) === want, "scratch must never be read")
     ZOrderTable.recover(spark, path)
-    assert(!fs.exists(new Path(s"$path.zopt_tmp")), "tmp must be swept")
+    assert(!fs.exists(new Path(s"$path.swap_tmp")), "tmp must be swept")
     assert(!fs.exists(new Path(s"$path/gen=1")), "nothing promoted")
-    assert(ids(path) === ((0L until 100L) ++ (1000L until 1050L)).toSet)
+    assert(rows(path) === want)
   }
 
   test("crash window B: tail parked, committed tmp not yet promoted — promote") {
-    val path = freshDir()
+    val path = withTail()
     val fs = fsOf(path)
-    ZOrderTable.write(mk(100), path, "x", "y", bits = 6, numFiles = 2)
-    ZOrderTable.append(mk(50, 1000), path)
-    // stage: tmp committed (_SUCCESS from a real write), tail parked
-    spark.read.parquet(s"$path/tail").write.parquet(s"$path.zopt_tmp/gen=1")
-    fs.mkdirs(new Path(s"$path.zopt_old"))
-    assert(fs.rename(new Path(s"$path/tail"), new Path(s"$path.zopt_old/tail_g1")))
-    // reader mid-crash: the parked tail has no promoted twin → served
-    assert(ids(path) === ((0L until 100L) ++ (1000L until 1050L)).toSet,
-      "read must serve the parked tail while gen=1 is not live")
+    val want = rows(path)
+    // stage: committed replacement, the tail parked in .swap_old
+    stageReplacement(path, committed = true)
+    val replacement = dataFiles(s"$path.swap_tmp/tail")
+    fs.mkdirs(new Path(s"$path.swap_old"))
+    assert(fs.rename(new Path(s"$path/tail"), new Path(s"$path.swap_old/tail")))
+    // reader mid-crash: the parked tail has no live twin → served
+    assert(rows(path) === want, "read must serve the parked tail while its replacement is not live")
     ZOrderTable.recover(spark, path)
-    assert(fs.exists(new Path(s"$path/gen=1")), "committed tmp must promote")
-    assert(!fs.exists(new Path(s"$path.zopt_old")) &&
-      !fs.exists(new Path(s"$path.zopt_tmp")))
-    assert(ids(path) === ((0L until 100L) ++ (1000L until 1050L)).toSet)
+    assert(dataFiles(s"$path/tail") === replacement, "committed tmp must promote")
+    assert(!fs.exists(new Path(s"$path.swap_old")) &&
+      !fs.exists(new Path(s"$path.swap_tmp")))
+    assert(rows(path) === want)
+    // the next optimize seals the promoted tail
+    ZOrderTable.optimize(spark, path)
+    assert(fs.exists(new Path(s"$path/gen=1")) && !fs.exists(new Path(s"$path/tail")))
+    assert(rows(path) === want)
   }
 
   test("crash window B': tail parked, tmp UNCOMMITTED — restore the tail") {
-    val path = freshDir()
+    val path = withTail()
     val fs = fsOf(path)
-    ZOrderTable.write(mk(100), path, "x", "y", bits = 6, numFiles = 2)
-    ZOrderTable.append(mk(50, 1000), path)
-    // stage: park the tail; tmp exists but has no _SUCCESS (torn write)
-    spark.read.parquet(s"$path/tail").write.parquet(s"$path.zopt_tmp/gen=1")
-    fs.delete(new Path(s"$path.zopt_tmp/gen=1/_SUCCESS"), false)
-    fs.mkdirs(new Path(s"$path.zopt_old"))
-    assert(fs.rename(new Path(s"$path/tail"), new Path(s"$path.zopt_old/tail_g1")))
+    val want = rows(path)
+    val original = dataFiles(s"$path/tail")
+    // stage: park the tail; the scratch root has no _SUCCESS (torn write)
+    stageReplacement(path, committed = false)
+    fs.mkdirs(new Path(s"$path.swap_old"))
+    assert(fs.rename(new Path(s"$path/tail"), new Path(s"$path.swap_old/tail")))
+    assert(rows(path) === want, "read must serve the parked tail")
     ZOrderTable.recover(spark, path)
-    assert(!fs.exists(new Path(s"$path/gen=1")), "torn tmp must NOT promote")
-    assert(ids(path) === ((0L until 100L) ++ (1000L until 1050L)).toSet,
+    assert(dataFiles(s"$path/tail") === original,
       "parked tail must be restored — it is the only committed copy")
+    assert(!fs.exists(new Path(s"$path/gen=1")), "torn tmp must NOT promote")
+    assert(!fs.exists(new Path(s"$path.swap_tmp")))
+    assert(rows(path) === want)
   }
 
   test("crash window C: promoted but park not cleaned — drop the park, no doubles") {
-    val path = freshDir()
+    val path = withTail()
     val fs = fsOf(path)
-    ZOrderTable.write(mk(100), path, "x", "y", bits = 6, numFiles = 2)
-    ZOrderTable.append(mk(50, 1000), path)
-    ZOrderTable.optimize(spark, path)
-    // stage: re-park a COPY of gen=1's rows as if cleanup never ran
-    spark.read.parquet(s"$path/gen=1").write.parquet(s"$path.zopt_old/tail_g1")
+    val want = rows(path)
+    // stage: the replacement is live as tail/, the original still parked
+    // (a COPY of the tail's rows, as if cleanup never ran)
+    spark.read.parquet(s"$path/tail").write.parquet(s"$path.swap_old/tail")
     // reader: live twin exists → the park must be ignored (no doubling)
-    assert(ZOrderTable.read(spark, path).count() === 150)
+    assert(rows(path) === want)
     ZOrderTable.recover(spark, path)
-    assert(!fs.exists(new Path(s"$path.zopt_old")))
-    assert(ids(path) === ((0L until 100L) ++ (1000L until 1050L)).toSet)
+    assert(!fs.exists(new Path(s"$path.swap_old")))
+    assert(rows(path) === want)
+  }
+
+  test("crash window D: tail rewritten in place, not yet sealed as gen=<k> — optimize seals it") {
+    val path = withTail()
+    val fs = fsOf(path)
+    val want = rows(path)
+    // stage: the swap completed (the tail holds its z-ordered replacement,
+    // no scratch left), the rename to gen=1 never ran
+    val p = ZOrderTable.params(spark, path)
+    graft.etl.ZOrder.layoutPinned(spark.read.parquet(s"$path/tail"), p.xCol, p.yCol,
+        p.bits, 1, p.xmn, p.xmx, p.ymn, p.ymx).drop("z")
+      .write.parquet(s"$path.staged")
+    assert(fs.delete(new Path(s"$path/tail"), true))
+    assert(fs.rename(new Path(s"$path.staged"), new Path(s"$path/tail")))
+    val zordered = dataFiles(s"$path/tail")
+    assert(rows(path) === want)
+    ZOrderTable.recover(spark, path)
+    assert(dataFiles(s"$path/tail") === zordered, "a live tail is never moved by recovery")
+    assert(rows(path) === want)
+    ZOrderTable.optimize(spark, path)
+    assert(fs.exists(new Path(s"$path/gen=1")) && !fs.exists(new Path(s"$path/tail")))
+    assert(rows(path) === want)
   }
 
   test("compact collapses the generation ladder to one generation, losslessly") {
@@ -167,48 +222,76 @@ class ZOrderTableSpec extends SparkSpec {
     assert(!fs.exists(new Path(s"$path/gen=5")))
   }
 
-  test("compact crash: all dirs parked, committed tmp — recovery finishes the promote") {
-    val path = freshDir()
-    val fs = fsOf(path)
-    ZOrderTable.write(mk(100), path, "x", "y", bits = 6, numFiles = 2)
-    ZOrderTable.append(mk(50, 1000), path)
+  /** Gens 0 and 1 plus a 25-row live tail — the state a compact
+    * collapses. */
+  private def ladder(): String = {
+    val path = withTail()
     ZOrderTable.optimize(spark, path) // gens 0,1
     ZOrderTable.append(mk(25, 2000), path)
-    val want = ids(path)
-    // stage the window between park and promote: tmp gen=2 committed,
-    // gens 0,1 and the tail all parked under the .g2 tag
-    ZOrderTable.read(spark, path).write.parquet(s"$path.zopt_tmp/gen=2")
-    fs.mkdirs(new Path(s"$path.zopt_old"))
-    assert(fs.rename(new Path(s"$path/gen=0"), new Path(s"$path.zopt_old/gen=0.g2")))
-    assert(fs.rename(new Path(s"$path/gen=1"), new Path(s"$path.zopt_old/gen=1.g2")))
-    assert(fs.rename(new Path(s"$path/tail"), new Path(s"$path.zopt_old/tail_g2")))
-    // reader mid-crash: nothing live, every park is the committed copy
-    assert(ids(path) === want, "read must serve the parked dirs mid-swap")
+    path
+  }
+
+  /** Stage the collapse's scratch table under `<path>.collapse_tmp`:
+    * gen=2 holding every row, plus `_zparams` — the commit marker — when
+    * `committed`. */
+  private def stageCollapse(path: String, committed: Boolean): Unit = {
+    ZOrderTable.read(spark, path).write.parquet(s"$path.collapse_tmp/gen=2")
+    if (committed)
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$path/_zparams"),
+        new java.io.File(s"$path.collapse_tmp/_zparams"))
+  }
+
+  test("compact crash: all dirs parked, committed tmp — recovery finishes the promote") {
+    val path = ladder()
+    val fs = fsOf(path)
+    val want = rows(path)
+    // stage the window between the collapse's two renames: the committed
+    // scratch table written, the whole live root parked
+    stageCollapse(path, committed = true)
+    assert(fs.rename(new Path(path), new Path(s"$path.collapse_old")))
+    // reader mid-crash: the parked root is the last committed generation
+    assert(rows(path) === want, "read must serve the parked root mid-swap")
     ZOrderTable.recover(spark, path)
     assert(fs.exists(new Path(s"$path/gen=2")), "committed tmp must promote")
-    assert(!fs.exists(new Path(s"$path.zopt_old")))
-    assert(ids(path) === want)
+    assert(!fs.exists(new Path(s"$path/gen=0")) && !fs.exists(new Path(s"$path/tail")))
+    assert(!fs.exists(new Path(s"$path.collapse_old")) &&
+      !fs.exists(new Path(s"$path.collapse_tmp")))
+    assert(rows(path) === want)
   }
 
   test("compact crash: parked with a TORN tmp — every dir restores") {
-    val path = freshDir()
+    val path = ladder()
     val fs = fsOf(path)
-    ZOrderTable.write(mk(100), path, "x", "y", bits = 6, numFiles = 2)
-    ZOrderTable.append(mk(50, 1000), path)
-    ZOrderTable.optimize(spark, path)
-    ZOrderTable.append(mk(25, 2000), path)
-    val want = ids(path)
-    ZOrderTable.read(spark, path).write.parquet(s"$path.zopt_tmp/gen=2")
-    fs.delete(new Path(s"$path.zopt_tmp/gen=2/_SUCCESS"), false)
-    fs.mkdirs(new Path(s"$path.zopt_old"))
-    assert(fs.rename(new Path(s"$path/gen=0"), new Path(s"$path.zopt_old/gen=0.g2")))
-    assert(fs.rename(new Path(s"$path/gen=1"), new Path(s"$path.zopt_old/gen=1.g2")))
-    assert(fs.rename(new Path(s"$path/tail"), new Path(s"$path.zopt_old/tail_g2")))
+    val want = rows(path)
+    stageCollapse(path, committed = false)
+    assert(fs.rename(new Path(path), new Path(s"$path.collapse_old")))
+    assert(rows(path) === want, "read must serve the parked root mid-swap")
     ZOrderTable.recover(spark, path)
     assert(!fs.exists(new Path(s"$path/gen=2")), "torn tmp must NOT promote")
-    assert(fs.exists(new Path(s"$path/gen=0")) && fs.exists(new Path(s"$path/gen=1")),
-      "parked generations must restore")
-    assert(ids(path) === want)
+    assert(fs.exists(new Path(s"$path/gen=0")) && fs.exists(new Path(s"$path/gen=1")) &&
+      fs.exists(new Path(s"$path/tail")), "parked generations and tail must restore")
+    assert(!fs.exists(new Path(s"$path.collapse_tmp")))
+    assert(rows(path) === want)
+  }
+
+  test("doubly-crashed table: a tail parked by optimize under a compact-parked root still reads once") {
+    // an optimize crashes with the tail parked beside the then-live root,
+    // then a compact crashes with the whole root parked; the whole-root
+    // rename does not carry the sibling scratch along, so the read must
+    // probe the original path's scratch while serving `.collapse_old`
+    val path = ladder()
+    val fs = fsOf(path)
+    val want = rows(path)
+    fs.mkdirs(new Path(s"$path.swap_old"))
+    assert(fs.rename(new Path(s"$path/tail"), new Path(s"$path.swap_old/tail")))
+    assert(fs.rename(new Path(path), new Path(s"$path.collapse_old")))
+    assert(rows(path) === want, "the parked tail must resolve with the parked root")
+    // recover heals both layers: the root first, then the tail
+    ZOrderTable.recover(spark, path)
+    assert(fs.exists(new Path(s"$path/tail")) && fs.exists(new Path(s"$path/gen=1")))
+    assert(!fs.exists(new Path(s"$path.swap_old")) &&
+      !fs.exists(new Path(s"$path.collapse_old")))
+    assert(rows(path) === want)
   }
 
   test("a second writer raises against the fence; append waits it out") {
