@@ -4,6 +4,8 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.GraftShim
+
 /** Run INDEPENDENT Spark actions from a small driver-side pool
   * (optimization guide §2.6: actions are only sequential because the
   * driver calls them sequentially — Spark's scheduler happily runs
@@ -25,11 +27,23 @@ import scala.jdk.CollectionConverters._
   * throws; if any failed, the first failure (in input order) is rethrown
   * with every later one attached via `addSuppressed`, so no error is
   * silently dropped. The sequential path (`parallelism == 1` or a single
-  * action) runs in input order and stops at the first failure. */
+  * action) runs in input order and stops at the first failure.
+  *
+  * A Spark job launched by a pooled action keeps its caller: its long
+  * call site is the pool thread's frames followed by the frames of the
+  * thread that called awaitAll (and, for a nested call, of the threads
+  * that called it), so `tools.Profile` names the store op that asked for
+  * the job, not only the closure that ran it. */
 object Concurrent {
 
   /** How long cleanup waits for in-flight actions after an interrupt. */
   private val drainSeconds = 60L
+
+  /** On a pool thread, the frames of the threads that submitted the
+    * running action, innermost first. */
+  private val submitters = new ThreadLocal[Seq[String]] {
+    override def initialValue(): Seq[String] = Nil
+  }
 
   def awaitAll[T](parallelism: Int)(actions: Seq[() => T]): Seq[T] = {
     require(parallelism >= 1, "parallelism must be >= 1")
@@ -37,7 +51,14 @@ object Concurrent {
     else {
       val pool = Executors.newFixedThreadPool(math.min(parallelism, actions.size))
       try {
-        val tasks = actions.map(a => new Callable[T] { def call(): T = a() })
+        // drop the getStackTrace frame itself
+        val caller = Thread.currentThread.getStackTrace.toSeq.drop(1).map(_.toString) ++ submitters.get
+        val tasks = actions.map(a => new Callable[T] {
+          def call(): T = {
+            submitters.set(caller)
+            GraftShim.withCallerFrames(caller)(a())
+          }
+        })
         // invokeAll waits for every task, so each outcome below is final
         val outcomes = pool.invokeAll(tasks.asJava).asScala.toSeq.map { f =>
           try Right(f.get())

@@ -3,30 +3,28 @@ package graft.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static helpers callable from generated code. */
 object HashUtil {
-  private val md5Pool = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** First 32 bits of md5 (== parsing the first 8 hex chars) mod 2^31-1 —
     * value-identical to `conv(substr(md5(s),1,8),16,10) % 2147483647` and
     * to DuckDB `CAST('0x'||substr(md5(g),1,8) AS BIGINT) % 2147483647`,
     * without materializing the hex string. */
   def md5Prefix31(s: UTF8String): Long = {
-    val d = md5Pool.get()
-    d.reset()
-    val b = d.digest(s.getBytes)
-    val u = ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) | ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
-    u % 2147483647L
+    val b = s.getBytes
+    hash31(b, 0, b.length)
   }
+
+  /** [[md5Prefix31]] of the bytes `m(off until off + len)`. */
+  private def hash31(m: Array[Byte], off: Int, len: Int): Long =
+    Md5.prefix32(m, off, len) % P
 
   // unboxed copies of the universal-hash parameters: the k×|shingles| inner
   // loop must not pay Vector boxing per access
@@ -44,6 +42,41 @@ object HashUtil {
     if (y >= P) y - P else y
   }
 
+  // the 16-byte digest of the kernels that read past its 32-bit prefix
+  private val digestBuf = new ThreadLocal[Array[Byte]] {
+    override def initialValue(): Array[Byte] = new Array[Byte](16)
+  }
+
+  /** The first `n` longs of `hs` as an `UnsafeArrayData`. */
+  private def longArray(hs: Array[Long], n: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(hs, Platform.LONG_ARRAY_OFFSET, n, 8)
+
+  /** True when `a` is an `UnsafeArrayData` whose null bitmap is all zero,
+    * so its longs can be read in place from [[valuesOffset]]; the kernels
+    * keep their `ArrayData` loop for every other array. */
+  private def denseUnsafe(a: ArrayData): Boolean = a match {
+    case u: UnsafeArrayData =>
+      val base = u.getBaseObject
+      var off = u.getBaseOffset + 8
+      val end = off + ((u.numElements + 63) / 64) * 8L
+      while (off < end) {
+        if (Platform.getLong(base, off) != 0L) return false
+        off += 8
+      }
+      true
+    case _ => false
+  }
+
+  /** Address of the first value of `u`, relative to its base object. */
+  private def valuesOffset(u: UnsafeArrayData): Long =
+    u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(u.numElements)
+
+  /** UTF-8 length of the code point starting at `b(i)` — delegated to
+    * Spark's own table so char stepping is bit-identical to `substring`'s
+    * (including its treatment of invalid lead bytes). */
+  @inline private def cpLen(b: Array[Byte], i: Int): Int =
+    UTF8String.numBytesForFirstByte(b(i))
+
   /** Fused char-n-gram shingle → 31-bit-hash set: one pass over the text,
     * one md5 per position, dedup + ascending sort — replaces the four-op
     * HOF pipeline (substring transform, distinct, hash transform, sort)
@@ -53,23 +86,15 @@ object HashUtil {
     * form).
     *
     * Allocation profile (this sits under ~10M calls per 5k docs): the
-    * text's bytes are materialized ONCE, each shingle is digested straight
-    * from that buffer via (offset, length) — no per-shingle UTF8String or
-    * byte[] — the 16-byte digest lands in a reused thread-local buffer,
-    * and dedup+sort runs on a primitive long[] (sort + unique scan)
-    * instead of a boxing TreeSet. Shingle positions step CODE POINTS (the
-    * same positions `substring` would produce): for pure-ASCII text byte
-    * offsets are char offsets; multi-byte text walks UTF-8 lead bytes. */
-  private val digestBuf = new ThreadLocal[Array[Byte]] {
-    override def initialValue(): Array[Byte] = new Array[Byte](16)
-  }
-
-  /** UTF-8 length of the code point starting at `b(i)` — delegated to
-    * Spark's own table so char stepping is bit-identical to `substring`'s
-    * (including its treatment of invalid lead bytes). */
-  @inline private def cpLen(b: Array[Byte], i: Int): Int =
-    UTF8String.numBytesForFirstByte(b(i))
-
+    * text's bytes are materialized ONCE and each shingle is digested
+    * where it lies in that buffer by [[Md5.prefix32]] over (offset,
+    * length) — no per-shingle UTF8String or byte[], no digest object and
+    * no digest buffer. Dedup+sort runs on a primitive long[] (sort +
+    * unique scan) instead of a boxing TreeSet, and the set is returned
+    * as an `UnsafeArrayData` copied from that long[], with no boxed
+    * element. Shingle positions step CODE POINTS (the same positions
+    * `substring` would produce): for pure-ASCII text byte offsets are
+    * char offsets; multi-byte text walks UTF-8 lead bytes. */
   def shingleHashes31(s: UTF8String, n: Int): ArrayData = {
     val bytes = s.getBytes
     // char starts: for ASCII, identity; else walk UTF-8 lead bytes once
@@ -82,20 +107,13 @@ object HashUtil {
       i += step
       nChars += 1
     }
-    if (nChars < n) return new GenericArrayData(Array.empty[Any])
+    if (nChars < n) return longArray(Array.emptyLongArray, 0)
     val nOut = nChars - n + 1
     val hs = new Array[Long](nOut)
-    val md = md5Pool.get()
-    val out16 = digestBuf.get()
     if (ascii) {
       var p = 0
       while (p < nOut) {
-        md.reset()
-        md.update(bytes, p, n)
-        md.digest(out16, 0, 16)
-        val u = ((out16(0) & 0xffL) << 24) | ((out16(1) & 0xffL) << 16) |
-          ((out16(2) & 0xffL) << 8) | (out16(3) & 0xffL)
-        hs(p) = u % 2147483647L
+        hs(p) = hash31(bytes, p, n)
         p += 1
       }
     } else {
@@ -108,27 +126,24 @@ object HashUtil {
       starts(nChars) = bytes.length
       var p = 0
       while (p < nOut) {
-        md.reset()
-        md.update(bytes, starts(p), starts(p + n) - starts(p))
-        md.digest(out16, 0, 16)
-        val u = ((out16(0) & 0xffL) << 24) | ((out16(1) & 0xffL) << 16) |
-          ((out16(2) & 0xffL) << 8) | (out16(3) & 0xffL)
-        hs(p) = u % 2147483647L
+        hs(p) = hash31(bytes, starts(p), starts(p + n) - starts(p))
         p += 1
       }
     }
+    sortedDistinct(hs)
+  }
+
+  /** `hs` sorted ascending with duplicates dropped (sorted in place, then
+    * a unique scan), as an `UnsafeArrayData`. */
+  private def sortedDistinct(hs: Array[Long]): ArrayData = {
     java.util.Arrays.sort(hs)
-    // in-place unique scan over the sorted primitives
     var w = 0
     var r = 0
-    while (r < nOut) {
+    while (r < hs.length) {
       if (w == 0 || hs(r) != hs(w - 1)) { hs(w) = hs(r); w += 1 }
       r += 1
     }
-    val boxed = new Array[Any](w)
-    var j = 0
-    while (j < w) { boxed(j) = hs(j); j += 1 }
-    new GenericArrayData(boxed)
+    longArray(hs, w)
   }
 
   /** Intersection size of two SORTED long arrays by linear merge — no
@@ -141,12 +156,28 @@ object HashUtil {
     var i = 0
     var j = 0
     var c = 0L
-    while (i < na && j < nb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { c += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
+    if (denseUnsafe(a) && denseUnsafe(b)) {
+      val ua = a.asInstanceOf[UnsafeArrayData]
+      val ub = b.asInstanceOf[UnsafeArrayData]
+      val baseA = ua.getBaseObject
+      val baseB = ub.getBaseObject
+      val offA = valuesOffset(ua)
+      val offB = valuesOffset(ub)
+      while (i < na && j < nb) {
+        val x = Platform.getLong(baseA, offA + 8L * i)
+        val y = Platform.getLong(baseB, offB + 8L * j)
+        if (x == y) { c += 1; i += 1; j += 1 }
+        else if (x < y) i += 1
+        else j += 1
+      }
+    } else {
+      while (i < na && j < nb) {
+        val x = a.getLong(i)
+        val y = b.getLong(j)
+        if (x == y) { c += 1; i += 1; j += 1 }
+        else if (x < y) i += 1
+        else j += 1
+      }
     }
     c
   }
@@ -154,14 +185,29 @@ object HashUtil {
   /** Count of positions where two equal-length long arrays agree —
     * the minhash-signature agreement statistic (agree/k is an unbiased
     * jaccard estimator with sd sqrt(j(1-j)/k)). Null elements never
-    * match. */
+    * match. Two null-free `UnsafeArrayData` signatures (what a shuffle or
+    * join hands over) are compared in place, one long read per side per
+    * slot; any other pair goes through the `ArrayData` accessors. */
   def positionalAgree(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var i = 0
     var c = 0L
-    while (i < n) {
-      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) c += 1
-      i += 1
+    if (denseUnsafe(a) && denseUnsafe(b)) {
+      val ua = a.asInstanceOf[UnsafeArrayData]
+      val ub = b.asInstanceOf[UnsafeArrayData]
+      val baseA = ua.getBaseObject
+      val baseB = ub.getBaseObject
+      val offA = valuesOffset(ua)
+      val offB = valuesOffset(ub)
+      while (i < n) {
+        if (Platform.getLong(baseA, offA + 8L * i) == Platform.getLong(baseB, offB + 8L * i)) c += 1
+        i += 1
+      }
+    } else {
+      while (i < n) {
+        if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) c += 1
+        i += 1
+      }
     }
     c
   }
@@ -220,18 +266,11 @@ object HashUtil {
       if (seen.add(u)) grams.add(u)
       p += 1
     }
-    val md = md5Pool.get()
-    val out16 = digestBuf.get()
     val hs = new Array[Long](grams.size)
     var j = 0
     while (j < grams.size) {
-      md.reset()
       val gb = grams.get(j).getBytes
-      md.update(gb, 0, gb.length)
-      md.digest(out16, 0, 16)
-      val u = ((out16(0) & 0xffL) << 24) | ((out16(1) & 0xffL) << 16) |
-        ((out16(2) & 0xffL) << 8) | (out16(3) & 0xffL)
-      hs(j) = u % 2147483647L
+      hs(j) = hash31(gb, 0, gb.length)
       j += 1
     }
     // sort by (h, g-binary) — the exact array_sort order on struct(h, g):
@@ -259,45 +298,29 @@ object HashUtil {
     * word-level analog of [[shingleHashes31]]; value-identical AS A SET
     * to `array_distinct(transform(array_distinct(wordNgrams(s, n)), hash31))`
     * (sorted order instead of first-occurrence order — callers explode
-    * into aggregates, where element order is immaterial). Grams are
-    * digested in place (word bytes + '_' separators fed to md5
-    * incrementally) — zero per-gram allocation. */
+    * into aggregates, where element order is immaterial). The text is
+    * copied once with every 0x20 turned into '_', so each gram is one
+    * contiguous slice of that buffer ([[hashOrderedGrams]]' byte trick)
+    * and is digested where it lies — zero per-gram allocation. */
   def wordNgramHashes31(s: UTF8String, n: Int): ArrayData = {
     val bytes = s.getBytes
     val (starts, ends) = wordBounds(bytes)
     val nWords = starts.length
-    if (nWords < n) return new GenericArrayData(Array.empty[Any])
+    if (nWords < n) return longArray(Array.emptyLongArray, 0)
     val nOut = nWords - n + 1
-    val md = md5Pool.get()
-    val out16 = digestBuf.get()
+    val joined = new Array[Byte](bytes.length)
+    var q = 0
+    while (q < bytes.length) {
+      joined(q) = if (bytes(q) == 0x20) '_' else bytes(q)
+      q += 1
+    }
     val hs = new Array[Long](nOut)
-    val sep = Array[Byte]('_')
     var p = 0
     while (p < nOut) {
-      md.reset()
-      var w = p
-      while (w < p + n) {
-        if (w > p) md.update(sep, 0, 1)
-        md.update(bytes, starts(w), ends(w) - starts(w))
-        w += 1
-      }
-      md.digest(out16, 0, 16)
-      val u = ((out16(0) & 0xffL) << 24) | ((out16(1) & 0xffL) << 16) |
-        ((out16(2) & 0xffL) << 8) | (out16(3) & 0xffL)
-      hs(p) = u % 2147483647L
+      hs(p) = hash31(joined, starts(p), ends(p + n - 1) - starts(p))
       p += 1
     }
-    java.util.Arrays.sort(hs)
-    var wIdx = 0
-    var r = 0
-    while (r < nOut) {
-      if (wIdx == 0 || hs(r) != hs(wIdx - 1)) { hs(wIdx) = hs(r); wIdx += 1 }
-      r += 1
-    }
-    val boxedOut = new Array[Any](wIdx)
-    var j = 0
-    while (j < wIdx) { boxedOut(j) = hs(j); j += 1 }
-    new GenericArrayData(boxedOut)
+    sortedDistinct(hs)
   }
 
   /** Fused lexicographically-sorted distinct word-n-gram set — the
@@ -393,7 +416,7 @@ object HashUtil {
       i += 1
     }
     if (n == 0) new GenericArrayData(Array.fill[Any](k)(null))
-    else new GenericArrayData(mins.map(Long.box(_): Any))
+    else longArray(mins, k)
   }
 
   // scratch for one band's "#"-joined decimal rendering (≤ 21 bytes per
@@ -442,16 +465,13 @@ object HashUtil {
     while (i < bytes.length) { if (bytes(i) == 0x20) nTok += 1; i += 1 }
     val lo = new Array[Long](nTok)
     val hi = new Array[Long](nTok)
-    val md = md5Pool.get()
     val d16 = digestBuf.get()
     var start = 0
     var t = 0
     i = 0
     while (i <= bytes.length) {
       if (i == bytes.length || bytes(i) == 0x20) {
-        md.reset()
-        md.update(bytes, start, i - start)
-        md.digest(d16, 0, 16)
+        Md5.digest(bytes, start, i - start, d16, 0)
         // nibble k of the digest: even k = high nibble of byte k/2
         var vLo = 0L
         var k = 0
@@ -475,8 +495,7 @@ object HashUtil {
       i += 1
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](new GenericArrayData(lo.map(Long.box(_): Any)),
-        new GenericArrayData(hi.map(Long.box(_): Any))))
+      Array[Any](longArray(lo, nTok), longArray(hi, nTok)))
   }
 
   /** All k/rowsPerBand LSH band keys of a minhash signature in ONE pass —
@@ -490,7 +509,6 @@ object HashUtil {
   def lshBandKeys(sig: ArrayData, k: Int, rowsPerBand: Int): ArrayData = {
     val nBands = k / rowsPerBand
     val out = new Array[Any](nBands)
-    val md = md5Pool.get()
     val d16 = digestBuf.get()
     var buf = bandBuf.get()
     val need = rowsPerBand * 21
@@ -509,9 +527,7 @@ object HashUtil {
         }
         r += 1
       }
-      md.reset()
-      md.update(buf, 0, len)
-      md.digest(d16, 0, 16)
+      Md5.digest(buf, 0, len, d16, 0)
       val hex = new Array[Byte](32)
       var i = 0
       while (i < 16) {

@@ -35,11 +35,11 @@ object RandomProjection {
   def signMasks(bits: Int, dims: Int): Seq[Long] = {
     require(dims >= 1 && dims <= 64, s"signMasks: dims must be in [1,64], got $dims")
     require(bits >= 1, s"signMasks: bits must be positive, got $bits")
-    val md = java.security.MessageDigest.getInstance("MD5")
     (0 until bits).map { b =>
       (0 until dims).foldLeft(0L) { (m, d) =>
         // low bit of the first 8 md5 hex chars = low bit of byte 3
-        if ((md.digest(s"${b}_${d}".getBytes("UTF-8"))(3) & 1) == 1) m | (1L << d)
+        val name = s"${b}_${d}".getBytes("UTF-8")
+        if ((graft.expressions.Md5.prefix32(name, 0, name.length) & 1) == 1) m | (1L << d)
         else m
       }
     }

@@ -448,7 +448,7 @@ object SimQueries {
         Similarity.ivfAssign(e, "embedding", "vec_id", cents, "cid", keepVec = true), path)
       graft.sinks.AnnStore.delete(
         e.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"), "vec_id", path)
-      graft.sinks.AnnStore.purge(s, path, "vec_id")
+      graft.sinks.AnnStore.purge(s, path)
       Similarity.ivfSearchAssigned(
         graft.sinks.AnnStore.readLive(s, path, "vec_id"), "vec_id", cents, "cid", "embedding",
         query = e.filter(col("vec_id") === 1), k = 10, nProbe = 2)

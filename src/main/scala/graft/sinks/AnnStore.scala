@@ -196,10 +196,10 @@ object AnnStore {
     * byte-identical), and the sidecar drops LAST — see
     * [[PartitionSwap.purge]]: idempotent, and [[readLive]] never serves a
     * deleted row through any crash window. A cluster whose every row is
-    * tombstoned disappears (no empty dir). `idCol` is the store's id
-    * column, the one the tombstones carry. Returns the rewritten cluster
-    * ids (empty = nothing pending). */
-  def purge(spark: SparkSession, path: String, idCol: String): Seq[Long] =
+    * tombstoned disappears (no empty dir). The id column is the one the
+    * tombstone sidecar carries. Returns the rewritten cluster ids (empty =
+    * nothing pending). */
+  def purge(spark: SparkSession, path: String): Seq[Long] =
     PartitionSwap.purge(spark, path, Store).map(_._2)
 
   // ---- merge (shard consolidation) ----

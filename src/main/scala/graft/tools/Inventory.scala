@@ -14,6 +14,7 @@ import scala.jdk.CollectionConverters._
   * `ScaleCurve` keeps its own timer or listener, and that no file but
   * `sinks/PartitionSwap.scala` renames directories, names the
   * tombstone sidecar or calls the store lifecycle's internals, that no
+  * file but `expressions/Md5.scala` uses `MessageDigest`, that no
   * query or tool passes the session's parallelism as a named argument,
   * and that `SparkEntry` declares no
   * public member beyond the driver contract. Any drift EXITS NONZERO — a stale doc
@@ -51,6 +52,19 @@ object Inventory {
       "swapRewrite|mergePartitionDirs|mergeSidecar|dropTombstones)\\b").r
     files.collect {
       case (f, src) if !allowed(f) && commitProtocol.findFirstIn(src).nonEmpty => f.toString
+    }
+  }
+
+  /** ONE MD5: every MD5 in the engine is `expressions/Md5.scala`'s — a
+    * `java.security.MessageDigest` beside it is a second implementation
+    * that the parity spec does not cover and that C1 compiles badly (the
+    * hash kernels' per-row cost). Returns the `files` under the main tree
+    * that name it; this file names the pattern, so it is skipped. */
+  private[graft] def md5Copies(files: Seq[(Path, String)]): Seq[String] = {
+    val allowed = Set(Main.resolve("expressions/Md5.scala"), Main.resolve("tools/Inventory.scala"))
+    val digest = "\\bMessageDigest\\b".r
+    files.collect {
+      case (f, src) if !allowed(f) && digest.findFirstIn(src).nonEmpty => f.toString
     }
   }
 
@@ -149,6 +163,11 @@ object Inventory {
       check(copies.isEmpty,
         "sinks: only PartitionSwap.scala renames directories, names the tombstone sidecar or runs the store lifecycle",
         s"STORE-COMMIT COPIES (use graft.sinks.PartitionSwap): ${copies.mkString(", ")}")
+    }
+    locally {
+      val copies = md5Copies(sources(Main.toString))
+      check(copies.isEmpty, "expressions: every MD5 goes through Md5.scala",
+        s"MESSAGEDIGEST OUTSIDE Md5.scala (use graft.expressions.Md5): ${copies.mkString(", ")}")
     }
     // ONE FAN-OUT OWNER: how wide a sketch or codec stage runs is the
     // operator's answer (Dedup.fanOut), not a named argument a query or

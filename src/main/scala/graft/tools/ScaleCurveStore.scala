@@ -141,7 +141,7 @@ object ScaleCurveStore {
       val del = corpus.select(col("vec_id")).filter(col("vec_id") % 97 === 0)
       val nDel = del.count()
       val (_, wDelete) = timed(AnnStore.delete(del, "vec_id", path))
-      val (_, wPurge) = timed { AnnStore.purge(spark, path, "vec_id"); () }
+      val (_, wPurge) = timed { AnnStore.purge(spark, path); () }
       require(AnnStore.read(spark, path).count() == nMain + nApp - nDel,
         s"ann x$f: purge accounting")
       val (nHits, wSearch) = timed {

@@ -53,6 +53,40 @@ object GraftShim {
     new execution.datasources.parquet.ParquetToSparkSchemaConverter(
       spark.asInstanceOf[classic.SparkSession].sessionState.conf).convert(schema)
 
+  /** Runs `f` so that each Spark job it launches from this thread has,
+    * as its long call site, this thread's own frames followed by `caller`:
+    * the frames of the thread that handed `f` over. A pool thread's own
+    * stack ends at the pool, so without them a job's call site loses the
+    * engine method that asked for it. The frames are read when Spark asks
+    * for the call site (job submission, RDD creation, SQL execution
+    * start), so the innermost frame is the one Spark would have read; the
+    * whole list keeps to `spark.callstack.depth` frames. A call site the
+    * thread sets itself wins. With no active SparkContext `f` just runs. */
+  def withCallerFrames[T](caller: Seq[String])(f: => T): T =
+    org.apache.spark.SparkContext.getActive match {
+      case None => f
+      case Some(sc) =>
+        val own = sc.getLocalProperties
+        sc.setLocalProperties(new CallerFrames(own, caller))
+        try f finally sc.setLocalProperties(own)
+    }
+
+  /** Local properties whose unset long call site reads live. */
+  private final class CallerFrames(from: java.util.Properties, caller: Seq[String])
+      extends java.util.Properties {
+    if (from != null) from.forEach((k, v) => put(k, v))
+
+    override def getProperty(key: String): String = {
+      val set = super.getProperty(key)
+      if (set != null || key != org.apache.spark.util.CallSite.LONG_FORM) set
+      else {
+        val depth = System.getProperty("spark.callstack.depth", "20").toInt
+        (org.apache.spark.util.Utils.getCallSite().longForm.linesIterator.toSeq ++ caller)
+          .take(depth).mkString("\n")
+      }
+    }
+  }
+
   /** `df` without its join hints. A hint asks the planner how to join
     * the frame; a query that returns the frame as its result, with no
     * join, leaves the hint unused and Spark logs a `HintErrorLogger`

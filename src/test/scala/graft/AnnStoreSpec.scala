@@ -346,7 +346,7 @@ class AnnStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val affected = AnnStore.read(spark, path)
       .filter($"vec_id".isin(deletedIds.toSeq: _*))
       .select($"centroid_id".cast("long")).distinct().as[Long].collect().toSet
-    val purged = AnnStore.purge(spark, path, "vec_id")
+    val purged = AnnStore.purge(spark, path)
     assert(purged.toSet === affected, "purge must rewrite exactly the affected clusters")
     (cids.toSet -- affected).foreach(c => assert(dirState(path, c) === stateAtWrite(c),
       s"cluster $c holds no tombstoned row and must stay byte-identical"))
@@ -358,7 +358,7 @@ class AnnStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(searchOver(AnnStore.readLive(spark, path, "vec_id")) === maskedSearch,
       "tombstone masking and physical purge must serve identical results")
     // idempotent: nothing pending
-    assert(AnnStore.purge(spark, path, "vec_id") === Seq.empty)
+    assert(AnnStore.purge(spark, path) === Seq.empty)
     // no scratch dirs left behind
     assert(!new java.io.File(path + ".swap_tmp").exists())
     assert(!new java.io.File(path + ".swap_old").exists())
@@ -441,7 +441,7 @@ class AnnStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "fixture: simulate another writer's fence")
     Seq(
       () => AnnStore.compact(spark, path),
-      () => AnnStore.purge(spark, path, "vec_id"),
+      () => AnnStore.purge(spark, path),
       () => AnnStore.recluster(spark, path, "vec_id", k = 8),
       // round-13 advice: append/delete are fenced too — an append racing
       // a swap would land rows in a dir the swap deletes; a delete racing
@@ -698,7 +698,7 @@ class AnnStoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       .select("vec_id").as[Long].collect().toSet
     AnnStore.delete(store.filter($"centroid_id" === victim).select("vec_id"), "vec_id", path)
     AnnStore.delete(Seq(999999999L).toDF("vec_id"), "vec_id", path)
-    val purged = AnnStore.purge(spark, path, "vec_id")
+    val purged = AnnStore.purge(spark, path)
     assert(purged === Seq(victim), "only the victim cluster holds tombstoned rows")
     assert(!new java.io.File(path, s"centroid_id=$victim").exists(),
       "a fully-purged cluster's directory must disappear, not linger empty")

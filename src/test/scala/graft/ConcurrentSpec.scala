@@ -1,4 +1,4 @@
-package graft
+package graft {
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,4 +84,56 @@ class ConcurrentSpec extends AnyFunSuite {
     assert(graft.etl.Concurrent.cause(
       new java.util.concurrent.ExecutionException(boom)) eq boom)
   }
+
+  test("a pooled Spark job keeps its caller: Profile reads the store op, not only the closure") {
+    val spark = SparkSpec.spark
+    // what Profile reads: a job's own stage call site, and, for a job
+    // adaptive execution submits from its own threads, its SQL execution's
+    val details = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private def keep(d: String): Unit = if (d.contains("graft.PooledStore")) details.add(d)
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(s => keep(s.details))
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart => keep(s.details)
+        case _ =>
+      }
+    }
+    val depth = sys.props.get("spark.callstack.depth")
+    sys.props("spark.callstack.depth") = "200"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(graft.queries.PooledQuery.run(spark) === Seq(10L, 11L))
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      depth.fold(sys.props.remove("spark.callstack.depth"))(sys.props.put("spark.callstack.depth", _))
+    }
+    // one SQL execution per pooled count, at least
+    assert(details.size >= 2)
+    // innermost engine frame: the closure's method; entry: the op that called awaitAll
+    details.forEach(d => assert(graft.tools.Profile.engineFrame(d) ===
+      Some("PooledStore.rewrite via PooledStore.compact"), d))
+  }
+}
+
+/** Stands in for a store whose op overlaps its table rewrites through
+  * `Concurrent.awaitAll`: the closures are built in `rewrites`, so the
+  * pool thread's own frames never name `compact`. */
+object PooledStore {
+  def compact(spark: org.apache.spark.sql.SparkSession): Seq[Long] =
+    graft.etl.Concurrent.awaitAll(2)(rewrites(spark))
+  def rewrites(spark: org.apache.spark.sql.SparkSession): Seq[() => Long] =
+    Seq(10, 11).map(n => () => rewrite(spark, n))
+  def rewrite(spark: org.apache.spark.sql.SparkSession, n: Int): Long =
+    spark.range(0, n, 1, 2).count()
+}
+}
+
+package graft.queries {
+
+/** The query boundary `Profile.engineFrame` stops its entry search at. */
+object PooledQuery {
+  def run(spark: org.apache.spark.sql.SparkSession): Seq[Long] = graft.PooledStore.compact(spark)
+}
 }

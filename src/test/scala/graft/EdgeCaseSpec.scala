@@ -219,10 +219,10 @@ class EdgeCaseSpec extends SparkSpec {
       assert(graft.sinks.AnnStore.tombstones(spark, path).isEmpty)
       assert(graft.sinks.AnnStore.readLive(spark, path, "vec_id")
         .select("vec_id").as[Long].collect().toSet === Set(1L, 2L))
-      assert(graft.sinks.AnnStore.purge(spark, path, "vec_id") === Seq.empty)
+      assert(graft.sinks.AnnStore.purge(spark, path) === Seq.empty)
       graft.sinks.AnnStore.delete(noIds.withColumnRenamed("doc_id", "vec_id"),
         "vec_id", path)
-      assert(graft.sinks.AnnStore.purge(spark, path, "vec_id") === Seq.empty,
+      assert(graft.sinks.AnnStore.purge(spark, path) === Seq.empty,
         "an empty tombstone batch purges to nothing")
       assert(graft.sinks.AnnStore.tombstones(spark, path).isEmpty,
         "purge clears even an all-noop sidecar")

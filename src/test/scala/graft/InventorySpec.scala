@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * README headline must match `SparkEntry`, the spec count must match the
   * tree, and the newest plan audit must cover the live key set — so doc
   * drift fails the suite instead of waiting for someone to run the tool;
-  * the store-lifecycle rule is also checked against a planted call. */
+  * the store-lifecycle and one-MD5 rules are also checked against a
+  * planted violation. */
 class InventorySpec extends AnyFunSuite {
 
   test("docs, spec count and plan audit agree with the code") {
@@ -27,5 +28,18 @@ class InventorySpec extends AnyFunSuite {
     val rootSwap = clean.map { case (f, b) =>
       f -> (if (f == zt) body + "\nPartitionSwap.swapRoot(fs, p, s)(w)\n" else b) }
     assert(graft.tools.Inventory.storeCommitCopies(rootSwap) === Nil)
+  }
+
+  test("every MD5 goes through expressions/Md5.scala: a planted MessageDigest is named") {
+    val main = java.nio.file.Paths.get("src/main/scala/graft")
+    def src(f: String) = main.resolve(f) -> new String(
+      java.nio.file.Files.readAllBytes(main.resolve(f)), "UTF-8")
+    val clean = Seq("expressions/Md5.scala", "expressions/HashExpressions.scala",
+      "operators/RandomProjection.scala").map(src)
+    assert(graft.tools.Inventory.md5Copies(clean) === Nil)
+    val (rp, body) = src("operators/RandomProjection.scala")
+    val planted = clean.map { case (f, b) =>
+      f -> (if (f == rp) body + "\nobject Planted { java.security.MessageDigest.getInstance(\"MD5\") }\n" else b) }
+    assert(graft.tools.Inventory.md5Copies(planted) === Seq(rp.toString))
   }
 }
